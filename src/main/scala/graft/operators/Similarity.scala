@@ -2254,10 +2254,10 @@ object Similarity {
   def hybridServePqStream(newQueries: DataFrame, dir: String)(
       sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     val spark0 = newQueries.sparkSession
-    serveQueryFramePin(spark0, dir) // one corpus tokenize per stream, not per batch
+    val pin = serveQueryFramePin(spark0, dir) // one corpus tokenize per stream, not per batch
     val coarse = Clustering.loadCentroids(spark0, PqHyCoarse)
     val books = loadPqBooks(spark0, PqHyBooks)
-    newQueries.writeStream
+    unpinOnTermination(pin, newQueries.writeStream
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         if (!batch.isEmpty) {
@@ -2265,7 +2265,7 @@ object Similarity {
             batch.toDF().select("vec_id"), coarse, books))
         }
       }
-      .start()
+      .start())
   }
 
   // -------------------------------------------------------------------------
@@ -2366,8 +2366,8 @@ object Similarity {
       sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     // the query frame is generation-INdependent (only the models/tables
     // re-resolve per batch), so the one-per-stream pin applies here too
-    serveQueryFramePin(newQueries.sparkSession, dir)
-    newQueries.writeStream
+    val pin = serveQueryFramePin(newQueries.sparkSession, dir)
+    unpinOnTermination(pin, newQueries.writeStream
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         if (!batch.isEmpty) {
@@ -2377,7 +2377,7 @@ object Similarity {
             Clustering.loadCentroids(s, c), loadPqBooks(s, b), table = t))
         }
       }
-      .start()
+      .start())
   }
 
   /** Oracle for `stream_hybrid_serve_refresh`: the lexical leg is
@@ -2526,15 +2526,15 @@ object Similarity {
     */
   def hybridServeStream(newQueries: DataFrame, dir: String)(
       sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    serveQueryFramePin(newQueries.sparkSession, dir)
-    newQueries.writeStream
+    val pin = serveQueryFramePin(newQueries.sparkSession, dir)
+    unpinOnTermination(pin, newQueries.writeStream
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         if (!batch.isEmpty) {
           sink(hybridServeBatch(batch.sparkSession, dir, batch.toDF().select("vec_id")))
         }
       }
-      .start()
+      .start())
   }
 
   /** Persist the standard lexical query frame ONCE at serve-stream start:
@@ -2545,15 +2545,36 @@ object Similarity {
     * session-shared CacheManager substitutes the one materialization into
     * every batch's plan (cloned foreachBatch sessions share the cache at
     * the SharedState level). Query-set-scale (corpus/stride × ≤8 terms),
-    * never corpus-scale. CACHE-LIFETIME CONTRACT: like bm25Topk's tf, the
-    * pin outlives this call; Bench/Verify clear the session cache between
-    * queries, and a long-lived deployment drops it when the serve stream
-    * is retired.
+    * never corpus-scale. Returns the persisted frame; each serve-stream
+    * starter hands it to [[unpinOnTermination]], so the pin lives exactly
+    * as long as its stream. Concurrent serve streams over one dir share the
+    * cache entry: the first to stop releases it, and the others recompute
+    * the frame per batch (same rows, the unpinned cost).
     */
-  private def serveQueryFramePin(spark: SparkSession, dir: String): Unit = {
+  private def serveQueryFramePin(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.TextAnalysis
     TextAnalysis.bm25QueriesOf(TextAnalysis.bm25Corpus(spark, dir)).persist()
-    ()
+  }
+
+  /** Unpersist `pin` when `q` terminates (stop or failure): a listener
+    * matching q's id releases it and removes itself. A query that ended
+    * before the listener registered fires no event, so that case releases
+    * here.
+    */
+  private def unpinOnTermination(pin: DataFrame,
+      q: org.apache.spark.sql.streaming.StreamingQuery): org.apache.spark.sql.streaming.StreamingQuery = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val streams = q.sparkSession.streams
+    val release = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (e.id == q.id) { pin.unpersist(); streams.removeListener(this) }
+    }
+    streams.addListener(release)
+    if (!q.isActive) { pin.unpersist(); streams.removeListener(release) }
+    q
   }
 
   /** The lexical leg both hybrid forms share: the BM25 top-k ranking. */

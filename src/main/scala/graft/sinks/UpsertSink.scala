@@ -308,6 +308,17 @@ class ParquetUpsertSink(val path: String, val keyFields: Seq[String],
     fs.delete(tmpRoot, true) // leftovers of a crashed previous attempt
     afterDeletes.write.partitionBy("bucket").mode("overwrite")
       .parquet(tmpRoot.toString)
+    // only touched buckets publish: a staged bucket outside that set (a
+    // caller's `touched` missing one of the batch's buckets) would vanish
+    // with the tmp root. Refuse before the first publish, lake unchanged.
+    val stray = fs.listStatus(tmpRoot).map(_.getPath.getName)
+      .collect { case n if n.startsWith("bucket=") => n.stripPrefix("bucket=").toInt }
+      .filterNot(touched.contains).sorted
+    if (stray.nonEmpty)
+      throw new IllegalStateException(
+        s"upsert into $path staged bucket(s) ${stray.mkString(",")} outside the " +
+          s"touched set ${touched.sorted.mkString(",")}: refusing to publish, " +
+          "their rows would be lost")
     touched.foreach { bk =>
       val src = new org.apache.hadoop.fs.Path(tmpRoot, s"bucket=$bk")
       // a bucket emptied by deletes writes no partition dir: publish an

@@ -373,21 +373,20 @@ object StreamGate {
 
   /** Run `body` with the RocksDB state-store provider set on the session
     * (transformWithState's backing store), restoring the prior provider —
-    * same single-query assumption as [[withGateParallelism]].
+    * same single-query assumption as [[withGateParallelism]]. Its users
+    * are the token-budget gates ([[tokenBudget]], [[tokenBudgetRestart]],
+    * [[tokenBudgetEvolve]]), which run
+    * [[graft.operators.Pipeline.TokenBudgetStream]].
     */
   private def withRocksDb[T](spark: SparkSession)(body: => T): T = {
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     // Changelog checkpointing: commit the per-batch DELTA instead of a
-    // full RocksDB snapshot per store per batch. Probed on this box
-    // (stream_ttl_count_v2, sf0.1 steady runs): 5.5 s -> 5.3 s — within
-    // the noise band, because local-FS snapshot uploads of a few-MB store
-    // are nearly free. Kept anyway: against a REMOTE checkpoint store
-    // (the deployment shape) the full-snapshot upload is the dominant
-    // per-batch cost and the delta log is the accepted fix, so the gates
-    // should exercise the configuration the cluster would run. Partition
-    // width was probed the same session (explicit-4 gates at 2:
-    // cascade_v2 5.8 -> 8.5 s, ttl_v2 flat) — 4 stands. Scoped and
-    // restored like the provider itself.
+    // full RocksDB snapshot per store per batch. On the local FS a few-MB
+    // store's snapshot upload is nearly free, so this moves little here;
+    // against a REMOTE checkpoint store (the deployment shape) the
+    // full-snapshot upload is the dominant per-batch cost and the delta
+    // log is the accepted fix, so the gates exercise the configuration the
+    // cluster would run. Scoped and restored like the provider itself.
     val clKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
     val prev = spark.conf.getOption(provKey)
     val prevCl = spark.conf.getOption(clKey)
@@ -1023,40 +1022,6 @@ object StreamGate {
     import scala.jdk.CollectionConverters._
     spark.createDataFrame(acc.values.toList.asJava, schema)
       .orderBy("user_id", "version_no")
-  }
-
-  /** The incremental SCD2 build again, through `transformWithState`
-    * ([[Scd2StreamV2]], RocksDB-backed) — the LAST
-    * flatMapGroupsWithState-only stateful operator migrated to the modern
-    * API, gated against the SAME rel_scd2_build oracle as [[scd2Build]]:
-    * same fold cursor, same upsert-changelog contract, same final fold.
-    */
-  def scd2BuildV2(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Relational
-    val stream = replayCached(spark, s"evnonpurch|$dir")(
-      (Tables.load(spark, dir, "events").filter(col("event_type") =!= "purchase"),
-        unix_micros(col("ts"))))
-    val schema = Relational.scd2Build(spark, dir).schema
-    val ck = gateTmp("graft-gate-scd2v2-ck")
-    val acc = scala.collection.concurrent.TrieMap.empty[(Long, Int), Row]
-    try {
-      withRocksDb(spark) {
-        withGateParallelism(spark, GateStatePartitions) {
-          val q = Scd2StreamV2.scd2Stream(stream).toDF().writeStream
-            .outputMode("update")
-            .option("checkpointLocation", ck.toString)
-            .foreachBatch { (b: Dataset[Row], _: Long) =>
-              b.collect().foreach(r => acc((r.getLong(0), r.getInt(4))) = r)
-              ()
-            }
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        }
-      }
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(acc.values.toList.asJava, schema)
-        .orderBy("user_id", "version_no")
-    } finally rmrf(ck)
   }
 
   /** CONTINUOUS CORPUS-DRIFT MONITORING under the hard gate: the
@@ -2560,88 +2525,6 @@ object StreamGate {
     } finally rmrf(ck)
   }
 
-  /** The idle-state TTL count again, but through Spark 4's
-    * `transformWithState` ([[TtlContinuousCountV2]], RocksDB-backed) —
-    * gated against the SAME eviction-semantics oracle as the
-    * flatMapGroupsWithState form, proving the modern stateful API
-    * preserves the V1 semantics before future state work migrates to it.
-    */
-  def ttlCountV2(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.TaxiQueries
-    val sink = new MemoryUpsertSink(Seq("cell"))
-    val ck = gateTmp("graft-gate-ttlv2-ck")
-    val stream = ridesReplay(spark, dir)
-    try {
-      // transformWithState requires the RocksDB provider; scoped to this
-      // gate and restored, like the parallelism override below
-      withRocksDb(spark) {
-        withGateParallelism(spark, 4) {
-          val q = TtlContinuousCountV2.query(stream, ttlMs = TaxiQueries.TtlGateMs).toDF()
-            .writeStream.outputMode("update")
-            .option("checkpointLocation", ck.toString)
-            .foreachBatch { (b: Dataset[Row], _: Long) => sink.upsertBatch(b.toDF()) }
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        }
-      }
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(sink.snapshot.values.toSeq.asJava,
-          Encoders.product[TtlContinuousCount.CellCount].schema)
-        .orderBy("cell")
-    } finally rmrf(ck)
-  }
-
-  /** The Q3 OVER window again, through `transformWithState`
-    * ([[OverWindowStateV2]] — ListState-buffered, RocksDB-backed), gated
-    * against the SAME batch oracle as [[q3Over]]: the modern stateful API
-    * must reproduce the emit-once trailing counts exactly.
-    */
-  def q3OverV2(spark: SparkSession, dir: String): DataFrame = {
-    val stream = ridesReplay(spark, dir)
-    withRocksDb(spark) {
-      runToMemory(OverWindowStateV2.q3Streaming(stream,
-            windowMs = graft.operators.TaxiQueries.RecentFrameMs).toDF(),
-          "append")
-        .filter(col("dept_cnt") > 1)
-        .select("ride_id", "cell", "dept_time", "dept_cnt")
-        .orderBy("ride_id")
-    }
-  }
-
-  /** The per-user funnel again, through `transformWithState`
-    * ([[FunnelStreamV2]] — explicit event-time timers), gated against the
-    * SAME batch oracle as [[funnel]].
-    */
-  def funnelV2(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ev = Tables.load(spark, dir, "events")
-      .select(col("user_id"), col("ts"), col("event_type"))
-    val maxMs = ev.agg(max(unix_millis(col("ts")))).head().getLong(0)
-    val sentinel = Seq((-1L, new Timestamp(maxMs + 600000L), "gate_sentinel"))
-      .toDF("user_id", "ts", "event_type")
-    val sink = new MemoryUpsertSink(Seq("user_id"))
-    val ck = gateTmp("graft-gate-funnelv2-ck")
-    val stream = replayCached(spark, s"eventsfunnel|$dir")(
-      (ev.unionByName(sentinel), unix_millis(col("ts"))))
-    try {
-      withRocksDb(spark) {
-        withGateParallelism(spark, GateStatePartitions) {
-          val q = FunnelStreamV2.funnelStream(stream).toDF()
-            .writeStream.outputMode("update")
-            .option("checkpointLocation", ck.toString)
-            .foreachBatch { (b: Dataset[Row], _: Long) => sink.upsertBatch(b.toDF()) }
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        }
-      }
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(sink.snapshot.values.toSeq.asJava,
-          Encoders.product[FunnelStream.FunnelUpdate].schema)
-        .filter(col("t_view").isNotNull)
-        .orderBy("user_id")
-    } finally rmrf(ck)
-  }
-
   /** The full Q4 cascade with its level-2 changelog ALSO shipped through
     * the network document-store contract ([[NetworkUpsertSink]] — the
     * reference's actual sink target, ElasticUpsertTableSink.scala:116-148)
@@ -2670,26 +2553,6 @@ object StreamGate {
         .toDF("dept_cnt", "cnt_freq")
         .orderBy("dept_cnt")
     } finally { rmrf(tmp); MemoryDocStore.clear(storeId) }
-  }
-
-  /** The full Q4 cascade again, with level-1 on `transformWithState`
-    * ([[Q4Level1V2]] feeding [[CascadeQ4.startToParquetFrom]]), gated
-    * against the SAME batch oracle as [[q4Cascade]] — the lake-merge
-    * layers are untouched; only the level-1 state engine changes.
-    */
-  def q4CascadeV2(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = gateTmp("graft-gate-q4v2")
-    val sink = new ParquetUpsertSink(tmp.resolve("level2").toString, Seq("dept_cnt"), 4)
-    val stream = ridesReplay(spark, dir, chunks = 3)
-    try withRocksDb(spark) {
-      withGateParallelism(spark, 4) {
-        val q = CascadeQ4.startToParquetFrom(Q4Level1V2.query(stream).toDF(),
-          sink, tmp.resolve("ck").toString)
-        q.awaitTermination()
-        materialize(sink.snapshot(spark).select(col("dept_cnt"), col("cnt_freq")))
-          .orderBy("dept_cnt")
-      }
-    } finally rmrf(tmp)
   }
 
   /** The stream-static dimension join under the hard gate: the ride

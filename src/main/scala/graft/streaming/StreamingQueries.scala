@@ -805,7 +805,11 @@ object CascadeQ4 {
       //    A changed cell's old count lives ONLY in the level-1 state bucket
       //    the cell hashes to, so the probe reads the TOUCHED buckets, never
       //    the whole lake — and the same pre-mutation read feeds step 2's
-      //    merge, so those buckets are read once per batch, not twice.
+      //    merge. The limit sits after the distinct's shuffle, whose map
+      //    stage runs one task per l1Before partition, so the probe caches
+      //    ALL of l1Before before the limit applies (checked: an 8-task map
+      //    stage over 4 l1Before + 4 batch partitions, 4/4 cached) and step
+      //    2 reads these buckets from that cache, not from disk again.
       val touchedBk = level1.bucketIdsOf(changed)
       val l1Before = level1.readBuckets(spark, touchedBk, Level1Schema).persist()
       val touched: Option[Seq[Long]] =
@@ -877,10 +881,9 @@ object CascadeQ4 {
     startToParquetFrom(StreamingQueries.q4Level1(rides), sink, checkpoint)
 
   /** [[startToParquet]] with the level-1 update changelog supplied by the
-    * caller (columns cell, dept_cnt) — the seam that lets the cascade run
-    * its level-1 on either the built-in streaming aggregation or the
-    * [[Q4Level1V2]] transformWithState processor; the lake-merge layers
-    * are identical either way.
+    * caller (columns cell, dept_cnt — [[StreamingQueries.q4Level1]] over the
+    * caller's ride stream) and the optional consumers of the level-2
+    * changelog: a document-store `mirror` and a `retract` stream.
     */
   def startToParquetFrom(level1Changelog: DataFrame, sink: ParquetUpsertSink,
                      checkpoint: String,
@@ -960,70 +963,6 @@ object TtlContinuousCount {
   }
 }
 
-/** The same idle-state-TTL continuous count as [[TtlContinuousCount]], on
-  * Spark 4's `transformWithState` — the modern arbitrary-state API
-  * (typed ValueState handles, explicit event-time timers, RocksDB-backed
-  * state at scale). Kept alongside the flatMapGroupsWithState form to
-  * cover both stateful seams the engine exposes; semantics are identical:
-  * eviction fires when the watermark passes the key's last activity + TTL.
-  */
-object TtlContinuousCountV2 {
-  import TtlContinuousCount.{Keyed, CountState, CellCount}
-  import org.apache.spark.sql.Encoders
-  import org.apache.spark.sql.streaming.{StatefulProcessor, TimeMode, TimerValues, ExpiredTimerInfo, TTLConfig, ValueState}
-
-  class Processor(ttlMs: Long) extends StatefulProcessor[Int, Keyed, CellCount] {
-    @transient private var state: ValueState[CountState] = _
-    @transient private var armed: ValueState[Long] = _ // exact armed-timer ts
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      state = getHandle.getValueState[CountState]("cnt", Encoders.product[CountState], TTLConfig.NONE)
-      armed = getHandle.getValueState[Long]("armed", Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    override def handleInputRows(key: Int, rows: Iterator[Keyed],
-                                 timers: TimerValues): Iterator[CellCount] = {
-      val prev = if (state.exists()) state.get() else CountState(0L, Long.MinValue)
-      val batch = rows.toSeq
-      val cnt = prev.cnt + batch.size
-      val maxRowtimeMs = (prev.maxRowtimeMs +: batch.map(_.rowtime.getTime)).max
-      state.update(CountState(cnt, maxRowtimeMs))
-      // re-arm: drop the stale timer (its exact — possibly clamped — ts is
-      // tracked in `armed`), set one at last-activity + TTL, clamped above
-      // the watermark as in the V1 operator
-      if (armed.exists()) getHandle.deleteTimer(armed.get())
-      val at = math.max(maxRowtimeMs + ttlMs, timers.getCurrentWatermarkInMs() + 1)
-      getHandle.registerTimer(at)
-      armed.update(at)
-      Iterator.single(CellCount(key, cnt))
-    }
-
-    override def handleExpiredTimer(key: Int, timers: TimerValues,
-                                    expired: ExpiredTimerInfo): Iterator[CellCount] = {
-      state.clear()
-      armed.clear()
-      Iterator.empty
-    }
-  }
-
-  /** rides stream -> per-cell running counts with idle TTL (update mode).
-    * Requires the RocksDB state-store provider (transformWithState's
-    * backing store) on the session.
-    */
-  def query(rides: DataFrame, ttlMs: Long = 60L * 60 * 1000,
-            watermark: String = "61 seconds"): Dataset[CellCount] = {
-    val spark = rides.sparkSession
-    import spark.implicits._
-    rides
-      .filter(col("isStart") && Taxi.inNyc(col("startLon"), col("startLat")))
-      .withWatermark("rowtime", watermark)
-      .select(Taxi.toCellId(col("startLon"), col("startLat")).as("cell"), col("rowtime"))
-      .as[Keyed]
-      .groupByKey(_.cell)
-      .transformWithState(new Processor(ttlMs), TimeMode.EventTime(), OutputMode.Update())
-  }
-}
-
 /** Streaming OVER-window state for Q3 (TaxiRideQueries.scala:130-146):
   * per cell, a time-ordered buffer of departure timestamps; each arriving
   * departure is annotated with the count of same-cell departures in the
@@ -1044,15 +983,9 @@ object OverWindowState {
   /** Counts are over data seen so far (rows sorted by event time within a
     * batch); a straggler crossing a batch boundary gets a correct count for
     * its own timestamp but already-emitted rows are not retro-updated —
-    * the same emit-once contract as Flink's append OVER output.
-    */
-  def annotate(key: Int, rows: Iterator[Departure],
-               state: GroupState[CellBuffer]): Iterator[Annotated] =
-    annotateWith(WindowMs)(key, rows, state)
-
-  /** [[annotate]] with the trailing frame as a parameter — the same
-    * operator at any RANGE width (the q3_over_recent 7-day form runs
-    * through this in the stream gate).
+    * the same emit-once contract as Flink's append OVER output. The
+    * trailing frame is a parameter — the same operator at any RANGE width
+    * (the q3_over_recent 7-day form runs through this in the stream gate).
     */
   def annotateWith(windowMs: Long)(key: Int, rows: Iterator[Departure],
                state: GroupState[CellBuffer]): Iterator[Annotated] = {
@@ -1124,7 +1057,7 @@ object FunnelStream {
   case class FunnelUpdate(user_id: Long, t_view: Option[Long],
       t_click: Option[Long], t_purchase: Option[Long], funnel_depth: Int)
 
-  private[streaming] def foldReady(st: FunnelState, wmMs: Long): FunnelState = {
+  private def foldReady(st: FunnelState, wmMs: Long): FunnelState = {
     val (ready, still) = st.pending.partition(_._1 <= wmMs)
     var (tv, tc, tp) = (st.tView, st.tClick, st.tPurchase)
     ready.sortBy(e => (e._1, e._2)).foreach { case (ts, tpe) =>
@@ -1135,7 +1068,7 @@ object FunnelStream {
     FunnelState(still, math.max(st.foldedUpTo, wmMs), tv, tc, tp)
   }
 
-  private[streaming] def snapshot(userId: Long, st: FunnelState): FunnelUpdate = {
+  private def snapshot(userId: Long, st: FunnelState): FunnelUpdate = {
     def opt(v: Long) = if (v >= 0) Some(v) else None
     FunnelUpdate(userId, opt(st.tView), opt(st.tClick), opt(st.tPurchase),
       if (st.tPurchase >= 0) 3 else if (st.tClick >= 0) 2 else if (st.tView >= 0) 1 else 0)
@@ -1181,198 +1114,6 @@ object FunnelStream {
   }
 }
 
-/** The streaming OVER window again, on Spark 4's `transformWithState` —
-  * same emit-once per-departure trailing counts as [[OverWindowState]],
-  * with the time buffer held in a `ListState[Long]` instead of one
-  * serialized blob: RocksDB lays list elements out individually, so the
-  * steady-state batch APPENDS its new timestamps (`appendList`) and only a
-  * prune rewrites the list — at a real per-key buffer size (the window's
-  * event capacity, not the micro-batch's) that is the difference between
-  * O(batch) and O(window) state IO per key per batch.
-  */
-object OverWindowStateV2 {
-  import OverWindowState.{Departure, Annotated, MaxLatenessMs}
-  import org.apache.spark.sql.Encoders
-  import org.apache.spark.sql.streaming.{StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState, ListState}
-
-  class Processor(windowMs: Long) extends StatefulProcessor[Int, Departure, Annotated] {
-    @transient private var times: ListState[Long] = _
-    @transient private var maxSeenState: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      times = getHandle.getListState[Long]("times", Encoders.scalaLong, TTLConfig.NONE)
-      maxSeenState = getHandle.getValueState[Long]("maxSeen", Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    override def handleInputRows(key: Int, rows: Iterator[Departure],
-                                 timers: TimerValues): Iterator[Annotated] = {
-      val prev: List[Long] = times.get().toList
-      var buf = prev
-      var maxSeen = if (maxSeenState.exists()) maxSeenState.get() else Long.MinValue
-      val added = scala.collection.mutable.ArrayBuffer.empty[Long]
-      // identical peer semantics to OverWindowState.annotateWith: process
-      // per distinct timestamp so equal-timestamp RANGE peers count each other
-      val out = rows.toSeq.sortBy(d => (d.deptTimeMs, d.rideId))
-        .groupBy(_.deptTimeMs).toSeq.sortBy(_._1)
-        .flatMap { case (ts, peers) =>
-          peers.foreach { _ => buf = ts :: buf; added += ts }
-          maxSeen = math.max(maxSeen, ts)
-          val cnt = buf.count(t => t >= ts - windowMs && t <= ts)
-          peers.sortBy(_.rideId).map(d => Annotated(d.rideId, key, ts, cnt))
-        }
-      val horizon = maxSeen - windowMs - MaxLatenessMs
-      val kept = buf.filter(_ >= horizon)
-      if (kept.length == buf.length) times.appendList(added.toArray)
-      else { times.clear(); times.put(kept.toArray) }
-      maxSeenState.update(maxSeen)
-      out.iterator
-    }
-  }
-
-  /** rides stream -> per-departure trailing counts (append), V2 API.
-    * Requires the RocksDB state-store provider on the session.
-    */
-  def q3Streaming(rides: DataFrame, windowMs: Long = OverWindowState.WindowMs): Dataset[Annotated] = {
-    val spark = rides.sparkSession
-    import spark.implicits._
-    rides
-      .filter(col("isStart") && Taxi.inNyc(col("startLon"), col("startLat")))
-      .select(col("rideId").as("rideId"),
-        Taxi.toCellId(col("startLon"), col("startLat")).as("cell"),
-        unix_millis(col("rowtime")).as("deptTimeMs"))
-      .as[Departure]
-      .groupByKey(_.cell)
-      .transformWithState(new Processor(windowMs), TimeMode.None(), OutputMode.Append())
-  }
-}
-
-/** The streaming funnel again, on `transformWithState` — identical
-  * watermark-fold semantics to [[FunnelStream]] (events at or below the
-  * watermark fold in event-time order; pending events buffer; an event-time
-  * TIMER re-fires the fold when the watermark passes the oldest pending
-  * event), expressed with explicit `registerTimer`/`deleteTimer` instead of
-  * the single implicit `setTimeoutTimestamp` slot. The armed-timer
-  * timestamp is tracked in its own ValueState so re-arming can delete the
-  * exact prior timer (the V2 API allows many timers per key; this operator
-  * wants at most one).
-  */
-object FunnelStreamV2 {
-  import FunnelStream.{FunnelEvent, FunnelState, FunnelUpdate, foldReady, snapshot}
-  import org.apache.spark.sql.Encoders
-  import org.apache.spark.sql.streaming.{StatefulProcessor, TimeMode, TimerValues, ExpiredTimerInfo, TTLConfig, ValueState}
-
-  class Processor extends StatefulProcessor[Long, FunnelEvent, FunnelUpdate] {
-    @transient private var state: ValueState[FunnelState] = _
-    @transient private var armed: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      state = getHandle.getValueState[FunnelState]("funnel", Encoders.product[FunnelState], TTLConfig.NONE)
-      armed = getHandle.getValueState[Long]("armed", Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    // after foldReady every remaining pending ts is > wm (ready ones folded),
-    // so the wanted timer is simply the min pending ts, or none
-    private def manageTimer(st: FunnelState): Unit = {
-      val cur = if (armed.exists()) Some(armed.get()) else None
-      val want = if (st.pending.nonEmpty) Some(st.pending.map(_._1).min) else None
-      if (cur != want) {
-        cur.foreach(getHandle.deleteTimer)
-        want match {
-          case Some(w) => getHandle.registerTimer(w); armed.update(w)
-          case None => armed.clear()
-        }
-      }
-    }
-
-    override def handleInputRows(key: Long, rows: Iterator[FunnelEvent],
-                                 timers: TimerValues): Iterator[FunnelUpdate] = {
-      val prev = if (state.exists()) state.get()
-        else FunnelState(Nil, Long.MinValue, -1L, -1L, -1L)
-      val wm = timers.getCurrentWatermarkInMs()
-      val fresh = rows.map(e => (e.ts.getTime, e.eventType))
-        .filter(_._1 > prev.foldedUpTo).toList
-      val st = foldReady(prev.copy(pending = fresh ::: prev.pending), wm)
-      state.update(st)
-      manageTimer(st)
-      val changed = (st.tView, st.tClick, st.tPurchase) !=
-        ((prev.tView, prev.tClick, prev.tPurchase))
-      if (changed || fresh.nonEmpty) Iterator.single(snapshot(key, st)) else Iterator.empty
-    }
-
-    override def handleExpiredTimer(key: Long, timers: TimerValues,
-                                    expired: ExpiredTimerInfo): Iterator[FunnelUpdate] = {
-      armed.clear() // the fired timer was the one we armed
-      if (!state.exists()) Iterator.empty
-      else {
-        val prev = state.get()
-        val st = foldReady(prev, timers.getCurrentWatermarkInMs())
-        state.update(st)
-        manageTimer(st)
-        val changed = (st.tView, st.tClick, st.tPurchase) !=
-          ((prev.tView, prev.tClick, prev.tPurchase))
-        if (changed) Iterator.single(snapshot(key, st)) else Iterator.empty
-      }
-    }
-  }
-
-  /** events stream -> per-user funnel snapshots (update mode), V2 API.
-    * Requires the RocksDB state-store provider on the session.
-    */
-  def funnelStream(events: DataFrame, delay: String = "61 seconds"): Dataset[FunnelUpdate] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .withWatermark("ts", delay)
-      .filter(col("event_type").isin("view", "click", "purchase"))
-      .select(col("user_id").as("userId"), col("ts"),
-        col("event_type").as("eventType"))
-      .as[FunnelEvent]
-      .groupByKey(_.userId)
-      .transformWithState(new Processor, TimeMode.EventTime(), OutputMode.Update())
-  }
-}
-
-/** Q4's level-1 continuous per-cell count on `transformWithState` — the
-  * built-in update-mode streaming aggregation re-expressed as an explicit
-  * keyed processor (one long of state per live cell, changed keys emitted
-  * per batch), so the full cascade can run level-1 on the modern stateful
-  * API. Semantically q4Level1's changelog exactly: same changed-keys-only
-  * update stream, same final counts.
-  */
-object Q4Level1V2 {
-  import TtlContinuousCount.CellCount
-  import org.apache.spark.sql.Encoders
-  import org.apache.spark.sql.streaming.{StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-
-  class Processor extends StatefulProcessor[Int, Int, CellCount] {
-    @transient private var cnt: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      cnt = getHandle.getValueState[Long]("cnt", Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(key: Int, rows: Iterator[Int],
-                                 timers: TimerValues): Iterator[CellCount] = {
-      val n = (if (cnt.exists()) cnt.get() else 0L) + rows.size
-      cnt.update(n)
-      Iterator.single(CellCount(key, n))
-    }
-  }
-
-  /** rides stream -> per-cell running departure counts (update changelog,
-    * columns cell / dept_cnt like q4Level1). Requires the RocksDB provider.
-    */
-  def query(rides: DataFrame): Dataset[CellCount] = {
-    val spark = rides.sparkSession
-    import spark.implicits._
-    rides
-      .filter(col("isStart") && Taxi.inNyc(col("startLon"), col("startLat")))
-      .select(Taxi.toCellId(col("startLon"), col("startLat")).as("cell"))
-      .as[Int]
-      .groupByKey(identity)
-      .transformWithState(new Processor, TimeMode.None(), OutputMode.Update())
-  }
-}
-
 /** STREAMING SCD2 BUILD — the slowly-changing dimension maintained
   * INCREMENTALLY as its changelog arrives: the continuous form of
   * [[graft.operators.Relational.scd2Versions]], and the missing half of a
@@ -1409,24 +1150,21 @@ object Scd2Stream {
   case class Scd2Version(user_id: Long, seg: String, valid_from_us: Long,
       valid_to_us: Long, version_no: Int)
 
-  /** The per-batch fold cursor, shared verbatim by the V1
-    * (flatMapGroupsWithState) and V2 (transformWithState) forms: change
-    * detection against the previous EVENT in (ts, id) order,
-    * same-microsecond changes collapsed to the last event (the batch
-    * build's uniq step), upserts keyed by version_no (each key at most
-    * once per batch). Returns (next state, emissions).
+  /** The per-batch fold cursor: change detection against the previous
+    * EVENT in (ts, id) order, same-microsecond changes collapsed to the
+    * last event (the batch build's uniq step), upserts keyed by version_no
+    * (each key at most once per batch).
     */
-  private[streaming] def fold(key: Long, rows: Iterator[Scd2Event],
-      prev: Scd2State): (Scd2State, List[Scd2Version]) = {
-    // change detection runs against the previous EVENT in (ts, id) order
+  private def update(key: Long, rows: Iterator[Scd2Event],
+      state: GroupState[Scd2State]): Iterator[Scd2Version] = {
+    val prev = state.getOption.getOrElse(Scd2State(null, null, 0L, 0))
     var prevSeg = prev.prevSeg
     val changes = scala.collection.mutable.ArrayBuffer.empty[Scd2Event]
     rows.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
       if (prevSeg == null || prevSeg != e.seg) changes += e
       prevSeg = e.seg
     }
-    // same-microsecond changes collapse to the last event (the batch
-    // build's uniq step); sorted order makes that the group's last entry
+    // sorted order makes the same-microsecond group's last entry the survivor
     val collapsed = changes.toSeq.groupBy(_.ts_us).toSeq.sortBy(_._1).map(_._2.last)
     val out = scala.collection.mutable.LinkedHashMap.empty[Int, Scd2Version]
     var (openSeg, openFrom, openVer) = (prev.openSeg, prev.openFrom, prev.openVer)
@@ -1436,27 +1174,12 @@ object Scd2Stream {
       openVer += 1; openSeg = c.seg; openFrom = c.ts_us
       out(openVer) = Scd2Version(key, openSeg, openFrom, Scd2OpenUs, openVer)
     }
-    (Scd2State(prevSeg, openSeg, openFrom, openVer), out.valuesIterator.toList)
-  }
-
-  private def update(key: Long, rows: Iterator[Scd2Event],
-      state: GroupState[Scd2State]): Iterator[Scd2Version] = {
-    val (next, out) = fold(key, rows,
-      state.getOption.getOrElse(Scd2State(null, null, 0L, 0)))
-    state.update(next)
-    out.iterator
+    state.update(Scd2State(prevSeg, openSeg, openFrom, openVer))
+    out.valuesIterator
   }
 
   /** Non-purchase events stream (raw rows) -> SCD2 upsert changelog. */
   def scd2Stream(events: DataFrame): Dataset[Scd2Version] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    scd2Events(events)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout())(update)
-  }
-
-  private[streaming] def scd2Events(events: DataFrame): Dataset[Scd2Event] = {
     val spark = events.sparkSession
     import spark.implicits._
     events
@@ -1464,47 +1187,7 @@ object Scd2Stream {
       .select(col("user_id"), col("event_type").as("seg"),
         unix_micros(col("ts")).as("ts_us"), col("event_id"))
       .as[Scd2Event]
-  }
-}
-
-/** [[Scd2Stream]] again, on Spark 4's `transformWithState` — the last
-  * flatMapGroupsWithState-only stateful operator migrated to the modern
-  * arbitrary-state API (RocksDB-backed, like the TTL/Q3/funnel/cascade V2
-  * twins): the SAME per-key fold cursor ([[Scd2Stream.fold]] — previous
-  * event's seg + the open version, 2 strings + 2 longs per key) and the
-  * same upsert-changelog emission contract, so it gates against the same
-  * rel_scd2_build oracle as the V1 form. No timers: the SCD2 maintainer
-  * reacts only to arriving change rows, never to time passing.
-  */
-object Scd2StreamV2 {
-  import Scd2Stream.{Scd2Event, Scd2State, Scd2Version, fold, scd2Events}
-  import org.apache.spark.sql.Encoders
-  import org.apache.spark.sql.streaming.{StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-
-  class Processor extends StatefulProcessor[Long, Scd2Event, Scd2Version] {
-    @transient private var state: ValueState[Scd2State] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[Scd2State]("scd2",
-        Encoders.product[Scd2State], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[Scd2Event],
-        timers: TimerValues): Iterator[Scd2Version] = {
-      val (next, out) = fold(key, rows,
-        if (state.exists()) state.get() else Scd2State(null, null, 0L, 0))
-      state.update(next)
-      out.iterator
-    }
-  }
-
-  /** Non-purchase events stream -> SCD2 upsert changelog (update mode),
-    * V2 API. Requires the RocksDB state-store provider on the session.
-    */
-  def scd2Stream(events: DataFrame): Dataset[Scd2Version] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    scd2Events(events)
       .groupByKey(_.user_id)
-      .transformWithState(new Processor, TimeMode.None(), OutputMode.Update())
+      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout())(update)
   }
 }

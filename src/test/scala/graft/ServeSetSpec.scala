@@ -158,4 +158,28 @@ class ServeSetSpec extends SparkSpec {
     assert(out.last === want1,
       "batch 2 must serve the re-trained generation — the stream did not re-resolve")
   }
+
+  test("hybrid serve streams release their query-frame pin when they stop") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.StreamingQuery
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val s2 = spark.newSession()
+    import s2.implicits._
+    val frame = TextAnalysis.bm25QueriesOf(TextAnalysis.bm25Corpus(s2, Sf0001))
+    def pinned: Boolean = s2.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+      .lookupCachedData(frame.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).nonEmpty
+    val starters: Seq[DataFrame => StreamingQuery] = Seq(
+      df => Similarity.hybridServeStream(df, Sf0001)(_ => ()),
+      df => Similarity.hybridServePqStreamRefreshing(df, Sf0001)(_ => ()))
+    starters.foreach { start =>
+      val q = start(MemoryStream[Long](s2).toDF().select(col("value").as("vec_id")))
+      try assert(pinned, "a running serve stream must hold its query-frame pin")
+      finally q.stop()
+      eventually(timeout(30.seconds), interval(100.millis)) {
+        assert(!pinned, "the query-frame pin outlived its stream")
+      }
+    }
+  }
 }

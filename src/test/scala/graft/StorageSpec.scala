@@ -382,6 +382,25 @@ class StorageSpec extends SparkSpec {
     assert(fresh.readBuckets(spark, Seq(0, 1), batch.schema).count() === 0L)
   }
 
+  test("prepared upsert with a touched set missing a batch bucket fails and leaves the lake unchanged") {
+    import spark.implicits._
+    import graft.sinks.ParquetUpsertSink
+    val path = Files.createTempDirectory("pqsinkstray").toString + "/store"
+    val sink = new ParquetUpsertSink(path, Seq("cell"), nBuckets = 8)
+    sink.upsert((0 until 64).map(i => (i, i.toLong)).toDF("cell", "cnt"))
+    val before = sink.snapshot(spark).as[(Int, Long)].collect().toSet
+
+    val batch = Seq((1, 101L), (2, 102L), (3, 103L)).toDF("cell", "cnt")
+    val bks = sink.bucketIdsOf(batch)
+    assert(bks.size > 1, s"fixture vacuous: $bks")
+    val short = bks.tail
+    val e = intercept[IllegalStateException] {
+      sink.upsertPrepared(batch, null, short, sink.readBuckets(spark, short, batch.schema))
+    }
+    assert(e.getMessage.contains(s"bucket(s) ${bks.head} outside"), e.getMessage)
+    assert(sink.snapshot(spark).as[(Int, Long)].collect().toSet === before)
+  }
+
   test("binaryFile source ingests raw media dirs into the decode seam") {
     import graft.operators.{Multimodal, DeterministicFakeDecoder}
     val dir = Files.createTempDirectory("media")

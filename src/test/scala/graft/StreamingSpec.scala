@@ -6,7 +6,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
-import graft.sinks.{MemoryUpsertSink, UpsertKeys}
+import graft.sinks.UpsertKeys
 import graft.streaming.{CascadeQ4, OverWindowState, StreamingQueries}
 import graft.operators.TaxiQueries
 import graft.sources.Rides
@@ -389,20 +389,17 @@ class StreamingSpec extends SparkSpec {
     assert(counts === List(2L, 3L), s"key idle < TTL must keep its count: $counts")
   }
 
-  test("transformWithState TTL (V2): evicts idle keys, keeps active ones (RocksDB store)") {
-    import graft.streaming.TtlContinuousCountV2
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+  test("idle-state TTL keeps a key idle under the TTL, then evicts it past the TTL") {
+    import graft.streaming.TtlContinuousCount
+    val input = MemoryStream[(Long, Boolean, Timestamp, Timestamp, Float, Float, Float, Float, Short)](spark)
+    val rides = input.toDF().toDF("rideId", "isStart", "startTime", "endTime",
+        "startLon", "startLat", "endLon", "endLat", "passengerCnt")
+      .withColumn("rowtime", when(col("isStart"), col("startTime")).otherwise(col("endTime")))
+    val q = TtlContinuousCount.query(rides, ttlMs = 60L * 60 * 1000).writeStream
+      .format("memory").queryName("ttl_keep_evict").outputMode(OutputMode.Update())
+      .option("checkpointLocation", Files.createTempDirectory("ttlck3").toString)
+      .start()
     try {
-      val input = MemoryStream[(Long, Boolean, Timestamp, Timestamp, Float, Float, Float, Float, Short)](spark)
-      val rides = input.toDF().toDF("rideId", "isStart", "startTime", "endTime",
-          "startLon", "startLat", "endLon", "endLat", "passengerCnt")
-        .withColumn("rowtime", when(col("isStart"), col("startTime")).otherwise(col("endTime")))
-      val q = TtlContinuousCountV2.query(rides, ttlMs = 60L * 60 * 1000).writeStream
-        .format("memory").queryName("ttl_v2").outputMode(OutputMode.Update())
-        .option("checkpointLocation", Files.createTempDirectory("ttlv2ck").toString)
-        .start()
       // count 2, then idle 43 min (< TTL, must survive), then idle 6 h (> TTL, must reset)
       input.addData(ride(1, "2013-01-01 00:01:00"), ride(2, "2013-01-01 00:02:00"))
       q.processAllAvailable()
@@ -414,15 +411,11 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       input.addData(ride(6, "2013-01-01 07:01:00")) // > TTL idle -> reset to 1
       q.processAllAvailable()
-      q.stop()
-      val mainCell = graft.functions.Taxi.toCellIdScalar(-73.99f, 40.75f)
-      val counts = spark.table("ttl_v2").select("cell", "dept_cnt")
-        .as[(Int, Long)].collect().filter(_._1 == mainCell).map(_._2).toList
-      assert(counts === List(2L, 3L, 1L), s"V2 TTL contract violated: $counts")
-    } finally prevProvider match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    } finally q.stop()
+    val mainCell = graft.functions.Taxi.toCellIdScalar(-73.99f, 40.75f)
+    val counts = spark.table("ttl_keep_evict").select("cell", "dept_cnt")
+      .as[(Int, Long)].collect().filter(_._1 == mainCell).map(_._2).toList
+    assert(counts === List(2L, 3L, 1L), s"TTL keep-then-evict contract violated: $counts")
   }
 
   test("Q4 cascade recovers level-2 state across a restart from the same checkpoint") {
@@ -655,6 +648,31 @@ class StreamingSpec extends SparkSpec {
     assert(cnts === Map(1L -> 1L, 2L -> 2L, 3L -> 2L, 4L -> 1L))
   }
 
+  test("streaming OVER window restarts the trailing count after a pruning batch") {
+    val input = MemoryStream[(Long, Boolean, Timestamp, Timestamp, Float, Float, Float, Float, Short)](spark)
+    val rides = input.toDF().toDF("rideId", "isStart", "startTime", "endTime",
+        "startLon", "startLat", "endLon", "endLat", "passengerCnt")
+      .withColumn("rowtime", when(col("isStart"), col("startTime")).otherwise(col("endTime")))
+    val q = OverWindowState.q3Streaming(rides).writeStream
+      .format("memory").queryName("q3_stream_prune").outputMode(OutputMode.Append())
+      .option("checkpointLocation", Files.createTempDirectory("q3pruneck").toString)
+      .start()
+    try {
+      input.addData(
+        ride(1, "2013-01-01 00:01:00"), ride(2, "2013-01-01 00:05:00"),
+        ride(3, "2013-01-01 00:12:00"),
+        ride(4, "2013-01-01 00:30:00"))
+      q.processAllAvailable()
+      // second batch far past the prune horizon: the buffer is pruned, and
+      // the trailing count must restart at 1
+      input.addData(ride(5, "2013-01-01 03:00:00"), ride(6, "2013-01-01 03:06:00"))
+      q.processAllAvailable()
+    } finally q.stop()
+    val cnts = spark.table("q3_stream_prune").select("ride_id", "dept_cnt")
+      .as[(Long, Long)].collect().toMap
+    assert(cnts === Map(1L -> 1L, 2L -> 2L, 3L -> 2L, 4L -> 1L, 5L -> 1L, 6L -> 2L))
+  }
+
   test("streaming funnel converges to the batch funnel on the full event history") {
     import graft.streaming.FunnelStream
     val all = graft.core.Tables.load(spark, Sf0001, "events")
@@ -693,107 +711,6 @@ class StreamingSpec extends SparkSpec {
     }
     // no user with a view is missing from the stream, and depths split
     assert(batch.map(_._5).distinct.length > 1)
-  }
-
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  test("transformWithState OVER window (V2) matches V1 counts across a pruning batch") {
-    import graft.streaming.OverWindowStateV2
-    withRocksDb {
-      val input = MemoryStream[(Long, Boolean, Timestamp, Timestamp, Float, Float, Float, Float, Short)](spark)
-      val rides = input.toDF().toDF("rideId", "isStart", "startTime", "endTime",
-          "startLon", "startLat", "endLon", "endLat", "passengerCnt")
-        .withColumn("rowtime", when(col("isStart"), col("startTime")).otherwise(col("endTime")))
-      val q = OverWindowStateV2.q3Streaming(rides).writeStream
-        .format("memory").queryName("q3_stream_v2").outputMode(OutputMode.Append())
-        .option("checkpointLocation", Files.createTempDirectory("q3v2ck").toString)
-        .start()
-      try {
-        input.addData(
-          ride(1, "2013-01-01 00:01:00"), ride(2, "2013-01-01 00:05:00"),
-          ride(3, "2013-01-01 00:12:00"),
-          ride(4, "2013-01-01 00:30:00"))
-        q.processAllAvailable()
-        // second batch far past the prune horizon: forces the ListState
-        // rewrite path, and the trailing count must restart at 1
-        input.addData(ride(5, "2013-01-01 03:00:00"), ride(6, "2013-01-01 03:06:00"))
-        q.processAllAvailable()
-      } finally q.stop()
-      val cnts = spark.table("q3_stream_v2").select("ride_id", "dept_cnt")
-        .as[(Long, Long)].collect().toMap
-      assert(cnts === Map(1L -> 1L, 2L -> 2L, 3L -> 2L, 4L -> 1L, 5L -> 1L, 6L -> 2L))
-    }
-  }
-
-  test("transformWithState funnel (V2) converges to the batch funnel") {
-    import graft.streaming.FunnelStreamV2
-    val all = graft.core.Tables.load(spark, Sf0001, "events")
-      .select("user_id", "ts", "event_type")
-      .as[(Long, Timestamp, String)].collect().sortBy(_._2.getTime)
-    assert(all.nonEmpty)
-    val (first, second) = all.splitAt(all.length / 3)
-    val sentinel = (-1L,
-      new Timestamp(all.map(_._2.getTime).max + 10L * 60 * 1000 + 61000), "signup")
-    withRocksDb {
-      val input = MemoryStream[(Long, Timestamp, String)](spark)
-      val q = FunnelStreamV2.funnelStream(
-        input.toDF().toDF("user_id", "ts", "event_type")).writeStream
-        .format("memory").queryName("funnel_stream_v2").outputMode(OutputMode.Update())
-        .option("checkpointLocation", Files.createTempDirectory("fnv2ck").toString)
-        .start()
-      try {
-        input.addData(first.toSeq); q.processAllAvailable()
-        input.addData(second.toSeq); q.processAllAvailable()
-        input.addData(sentinel); q.processAllAvailable()
-      } finally q.stop()
-      val got = spark.table("funnel_stream_v2").distinct()
-        .as[(Long, Option[Long], Option[Long], Option[Long], Int)].collect()
-        .groupBy(_._1).map { case (u, rs) => u -> rs.maxBy(_._5) }
-      val batch = graft.operators.Relational.funnel(spark, Sf0001)
-        .as[(Long, Long, Option[Long], Option[Long], Int)].collect()
-      assert(batch.nonEmpty)
-      batch.foreach { case (u, tv, tc, tp, depth) =>
-        val s = got(u)
-        assert((s._2, s._3, s._4, s._5) === ((Some(tv), tc, tp, depth)),
-          s"user $u: V2 stream ${s} vs batch ${(tv, tc, tp, depth)}")
-      }
-    }
-  }
-
-  test("transformWithState level-1 (V2) emits the same final per-cell counts as the built-in agg") {
-    import graft.streaming.Q4Level1V2
-    withRocksDb {
-      val input = MemoryStream[(Long, Boolean, Timestamp, Timestamp, Float, Float, Float, Float, Short)](spark)
-      val rides = input.toDF().toDF("rideId", "isStart", "startTime", "endTime",
-          "startLon", "startLat", "endLon", "endLat", "passengerCnt")
-        .withColumn("rowtime", when(col("isStart"), col("startTime")).otherwise(col("endTime")))
-      val sink = new MemoryUpsertSink(Seq("cell"))
-      val q = Q4Level1V2.query(rides).toDF().writeStream
-        .outputMode(OutputMode.Update())
-        .option("checkpointLocation", Files.createTempDirectory("q4l1v2ck").toString)
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row], _: Long) => sink.upsertBatch(b.toDF()) }
-        .start()
-      try {
-        input.addData(ride(1, "2013-01-01 00:01:00"), ride(2, "2013-01-01 00:02:00"),
-          ride(3, "2013-01-01 00:03:00", lon = -73.90f))
-        q.processAllAvailable()
-        input.addData(ride(4, "2013-01-01 00:10:00")) // main cell -> 3
-        q.processAllAvailable()
-      } finally q.stop()
-      val mainCell = graft.functions.Taxi.toCellIdScalar(-73.99f, 40.75f)
-      val otherCell = graft.functions.Taxi.toCellIdScalar(-73.90f, 40.75f)
-      val got = sink.snapshot.values.map(r => (r.getInt(0), r.getLong(1))).toMap
-      assert(got === Map(mainCell -> 3L, otherCell -> 1L))
-    }
   }
 
   test("incremental SCD2: upsert-fold across micro-batches equals the batch build") {

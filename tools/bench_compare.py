@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
 """Compare two Bench artifacts: median per-query ratio over shared queries,
-common-query totals, and the outliers in both directions.
+common-query totals, the outliers in both directions, and the queries
+present in only one artifact.
 
 Usage: python3 tools/bench_compare.py <new.json> <old.json> [ratio_floor]
 """
@@ -17,18 +18,22 @@ def medians(path):
     # r21 renamed subsecond_runs -> subsecond_extra_runs (old: total runs;
     # new: cohort-only passes). Accept both so pre-r21 artifacts compare
     # cleanly (r21 ADVICE), and surface the cohort caveat either way.
+    # The cohort size is printed only when the artifact lists the cohort.
     extra = d.get("subsecond_extra_runs", d.get("subsecond_runs", 0))
     if extra:
-        cohort = d.get("subsecond_cohort", [])
-        print(f"note: {path} mixes sample profiles for "
-              f"{len(cohort) or 'its sub-second'} cohort queries "
-              f"({extra} extra runs)", file=sys.stderr)
-    return {k: v for k, v in med.items() if isinstance(v, (int, float)) and v > 0}
+        cohort = d.get("subsecond_cohort")
+        size = f"{len(cohort)} " if cohort else ""
+        print(f"note: {path} mixes sample profiles for its {size}sub-second "
+              f"cohort queries ({extra} extra runs)", file=sys.stderr)
+    # a failed query reports -1: kept here so it never reads as retired
+    return {k: v for k, v in med.items() if isinstance(v, (int, float))}
 
 
 def main():
-    new, old = medians(sys.argv[1]), medians(sys.argv[2])
+    new_all, old_all = medians(sys.argv[1]), medians(sys.argv[2])
     floor = float(sys.argv[3]) if len(sys.argv) > 3 else 1.5
+    new = {k: v for k, v in new_all.items() if v > 0}
+    old = {k: v for k, v in old_all.items() if v > 0}
     shared = sorted(set(new) & set(old))
     if not shared:
         sys.exit(f"no shared queries between {sys.argv[1]} and {sys.argv[2]} "
@@ -47,11 +52,14 @@ def main():
     print(f"\n< {1/floor:.2f}x ({len(lo)}):")
     for r, q in lo:
         print(f"  {q}: {old[q]:.2f} -> {new[q]:.2f} s ({r:.2f}x)")
-    only_new = sorted(set(new) - set(old))
-    if only_new:
-        print(f"\nnew-only ({len(only_new)}):")
-        for q in only_new:
-            print(f"  {q}: {new[q]:.2f} s")
+    # ids present in one artifact only: added queries, and retired ones
+    # that would otherwise leave the shared set without a trace
+    for title, ids, times in (("new-only", set(new_all) - set(old_all), new_all),
+                              ("old-only", set(old_all) - set(new_all), old_all)):
+        if ids:
+            print(f"\n{title} ({len(ids)}):")
+            for q in sorted(ids):
+                print(f"  {q}: {times[q]:.2f} s" if times[q] > 0 else f"  {q}: failed")
 
 
 if __name__ == "__main__":

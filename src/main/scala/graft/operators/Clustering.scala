@@ -235,7 +235,8 @@ object Clustering {
     * matching [[fitCentroidsOn]] (c3 is the returned model, a3 the
     * assignment against it). Parameterized so product quantization
     * ([[Similarity]]) can replay one independent fit per subvector slice
-    * in a single oracle query.
+    * in a single oracle query. MATERIALIZED evaluates each CTE once instead
+    * of per reference (inlined, the nested PQ oracles exhaust DuckDB memory).
     */
   private[graft] def lloydCtes(src: String, pfx: String, dim: Int, k: Int): String = {
     // one assignment CTE against a centroid CTE named $c, producing (vec_id, cluster_id, sq_dist)
@@ -259,15 +260,15 @@ object Clustering {
          |    GROUP BY a.cluster_id, t.i
          |  ) GROUP BY cluster_id
          |) u ON u.cid = p.cid""".stripMargin
-    s"""${pfx}seeds AS (
+    s"""${pfx}seeds AS MATERIALIZED (
        |  SELECT CAST(row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS INTEGER) AS cid, q AS c
        |  FROM (SELECT vec_id, q FROM $src ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT $k)
        |),
-       |${pfx}a1 AS (${assignSql(s"${pfx}seeds")}),
-       |${pfx}c2 AS (${updateSql(s"${pfx}a1", s"${pfx}seeds")}),
-       |${pfx}a2 AS (${assignSql(s"${pfx}c2")}),
-       |${pfx}c3 AS (${updateSql(s"${pfx}a2", s"${pfx}c2")}),
-       |${pfx}a3 AS (${assignSql(s"${pfx}c3")})""".stripMargin
+       |${pfx}a1 AS MATERIALIZED (${assignSql(s"${pfx}seeds")}),
+       |${pfx}c2 AS MATERIALIZED (${updateSql(s"${pfx}a1", s"${pfx}seeds")}),
+       |${pfx}a2 AS MATERIALIZED (${assignSql(s"${pfx}c2")}),
+       |${pfx}c3 AS MATERIALIZED (${updateSql(s"${pfx}a2", s"${pfx}c2")}),
+       |${pfx}a3 AS MATERIALIZED (${assignSql(s"${pfx}c3")})""".stripMargin
   }
 
   /** One assignment of an arbitrary (vec_id, q) CTE against a centroid

@@ -206,8 +206,7 @@ object ForgetWave {
       "query_id", "doc_id", col("rk"), col("score_micro"))
     val dd = norm("dedup", Dedup.incrementalAgainst(spark, dir, dedupTable),
       "doc_id", "match_doc", keep01, col("match_sim"))
-    val iv = norm("ivf", Similarity.ivfAgainstCore(spark, dir, ivfTable,
-        Similarity.NProbe, queryStride = 20, includeSelf = false),
+    val iv = norm("ivf", Similarity.ivfTopkAgainst(spark, dir, ivfTable),
       "q_id", "neighbor_id", col("rank"), col("cosine"))
     val ph = norm("phash", Multimodal.phashVerdictsAgainst(spark, dir, phashTable),
       "doc_id", "match_id", keep01, col("match_ham"))

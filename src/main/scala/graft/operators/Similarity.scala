@@ -78,7 +78,8 @@ object Similarity {
     rankTopK(scored)
   }
 
-  /** (q_id, vec_id, cosine) -> per-query ranked top-k rows.
+  /** (q_id, id, score) -> per-query ranked top-k rows (q_id, rank,
+    * neighbor_id, score), cosine by default.
     *
     * Performance note: ObjectHashAggregate (which executes the udaf) falls
     * back to SORT-based aggregation after 128 distinct keys, re-creating
@@ -88,13 +89,15 @@ object Similarity {
     * than a hidden mutation here, so other object aggregates in the same
     * session keep their spill safety net semantics visible in one place.
     */
-  private def rankTopK(scored: DataFrame): DataFrame = {
+  private def rankTopK(scored: DataFrame, id: String = "vec_id",
+      score: Column = col("cosine"),
+      scoreOut: Column => Column = _.as("cosine")): DataFrame = {
     scored
       .groupBy("q_id")
-      .agg(graft.functions.TopK.topk(TopK)(col("vec_id"), col("cosine")).as("top"))
+      .agg(graft.functions.TopK.topk(TopK)(col(id), score).as("top"))
       .select(col("q_id"), posexplode(col("top")))
       .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
-        col("col.id").as("neighbor_id"), col("col.score").as("cosine"))
+        col("col.id").as("neighbor_id"), scoreOut(col("col.score")))
       .orderBy("q_id", "rank")
   }
 
@@ -195,33 +198,111 @@ object Similarity {
 
   /** [[ivfTopk]] with an explicit probe width. */
   def ivfTopkProbe(spark: SparkSession, dir: String, nprobe: Int): DataFrame =
-    ivfTopkProbeSet(spark, dir, nprobe, None)
+    ivfLabelSearch(spark, dir, withNorm(spark, dir), nprobe, strided(20),
+      includeSelf = false)
 
-  /** [[ivfTopkProbe]] with the query side restricted to a set frame (see
-    * [[semiOnVecId]]).
+  // -------------------------------------------------------------------------
+  // The staged search every IVF family runs: (1) query set, (2) coarse
+  // lists, (3) probe, (4) score the probed lists — flat cosine or ADC over
+  // `rec`, (5) finish — [[rankTopK]] or the PQ [[refineExact]]. Stages 1-3
+  // prune partitions and 4-5 refine, REPOSE's (ICDE 2021) split of
+  // distributed top-k.
+  // -------------------------------------------------------------------------
+
+  /** Stage 1's query predicate: every `n`-th vec_id; the stage may also
+    * restrict to an arriving id set ([[semiOnVecId]]).
     */
-  private[graft] def ivfTopkProbeSet(spark: SparkSession, dir: String,
-      nprobe: Int, querySet: Option[DataFrame]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val e = withNorm(spark, dir)
-    val pivotIds = e.groupBy("label").agg(min("vec_id").as("vec_id"))
-    val pivots = e.join(pivotIds, Seq("label", "vec_id"))
+  private def strided(n: Int): Column = col("vec_id") % n === 0
+
+  /** Stage 2: a coarse-list frame keyed by `key` (matched against the
+    * corpus column `listCol`), the ascending order that ranks a query's
+    * closest list first, and which lists a query may probe at all.
+    */
+  private final case class CoarseLists(frame: DataFrame, key: String,
+      listCol: String, closer: Column, admit: Column = lit(true))
+
+  /** Label pivots: the min-vec_id member of each label in `corpus`,
+    * ranked by cosine to the query (tie-break on label). Pivots derive
+    * from the corpus they partition, so a forgotten pivot hands its label
+    * to the next survivor. `excludeOwnLabel` keeps a query off its own
+    * label's list (needs `q_label` on the query rows).
+    */
+  private def labelPivots(corpus: DataFrame, excludeOwnLabel: Boolean): CoarseLists = {
+    val pivotIds = corpus.groupBy("label").agg(min("vec_id").as("vec_id"))
+    val pivots = corpus.join(pivotIds, Seq("label", "vec_id"))
       .select(col("label").as("p_label"), col("embedding").as("p_emb"), col("nrm").as("p_nrm"))
-    val q = semiOnVecId(e.filter(col("vec_id") % 20 === 0), querySet)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"), col("label").as("q_label"))
-    // rank labels per query by pivot cosine (tie-break on label)
-    val probeW = Window.partitionBy("q_id")
-      .orderBy(col("p_cos").desc, col("p_label"))
-    val probed = q.crossJoin(broadcast(pivots))
-      .withColumn("p_cos", dot(col("q_emb"), col("p_emb")) / (col("q_nrm") * col("p_nrm")))
-      .withColumn("p_rank", row_number().over(probeW))
+    CoarseLists(pivots, "p_label", "label",
+      (dot(col("q_emb"), col("p_emb")) / (col("q_nrm") * col("p_nrm"))).desc,
+      if (excludeOwnLabel) col("p_label") =!= col("q_label") else lit(true))
+  }
+
+  /** K-means centroids, ranked by the fit's exact integer distance to the
+    * quantized query `q_q` (tie-break on cid).
+    */
+  private def centroidLists(spark: SparkSession, cents: Seq[(Int, Seq[Long])]): CoarseLists = {
+    import spark.implicits._
+    CoarseLists(cents.sortBy(_._1).toDF("cid", "c"), "cid", "cluster_id",
+      expr(sqL2("q_q", "c")))
+  }
+
+  /** Exact integer squared L2 between two quantized array columns. */
+  private def sqL2(a: String, b: String): String =
+    s"aggregate(zip_with($a, $b, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"
+
+  /** Stage 3, the one probe ranking: each query row (keyed by q_id) keeps
+    * its `nprobe` closest lists. The list frame is K rows, so the cross
+    * join is a broadcast nested loop over queries only.
+    */
+  private def probe(q: DataFrame, lists: CoarseLists, nprobe: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("q_id").orderBy(lists.closer, col(lists.key))
+    q.crossJoin(broadcast(lists.frame))
+      .filter(lists.admit)
+      .withColumn("p_rank", row_number().over(w))
       .filter(col("p_rank") <= nprobe)
-      .select(col("q_id"), col("q_emb"), col("q_nrm"), col("p_label"))
-    // brute-force only the probed partitions; bounded top-k agg as above
-    val scored = probed.join(e, e("label") === probed("p_label") && col("vec_id") =!= col("q_id"))
-      .withColumn("cosine", dot(col("embedding"), col("q_emb")) / (col("nrm") * col("q_nrm")))
-    rankTopK(scored)
+      .select((q.columns :+ lists.key).map(col): _*)
+  }
+
+  /** Stage 4's join: a corpus row belongs to a probed list, and is not
+    * the query itself unless `includeSelf` (hybrid fusion keeps self
+    * because the BM25 leg ranks the query's own document too).
+    */
+  private def onProbedList(corpus: DataFrame, probed: DataFrame,
+      lists: CoarseLists, includeSelf: Boolean): Column = {
+    val on = corpus(lists.listCol) === probed(lists.key)
+    if (includeSelf) on else on && col("vec_id") =!= col("q_id")
+  }
+
+  /** Stages 3-5, flat: probe, then brute-force cosine over the probed
+    * lists of `corpus` (vec_id, embedding, nrm, listCol). The candidate set
+    * shrinks by ~nprobe/nlists, and over a corpus bucketed by its list
+    * column the join reads it in place: only queries move.
+    */
+  private def flatSearch(q: DataFrame, corpus: DataFrame, lists: CoarseLists,
+      nprobe: Int, includeSelf: Boolean): DataFrame = {
+    val probed = probe(q, lists, nprobe)
+    cosineTopK(probed, corpus, onProbedList(corpus, probed, lists, includeSelf))
+  }
+
+  /** Stages 4-5, flat: cosine of every (probed query, corpus row) pair
+    * matching `on`, then the bounded top-k.
+    */
+  private def cosineTopK(probed: DataFrame, corpus: DataFrame, on: Column): DataFrame =
+    rankTopK(probed.join(corpus, on)
+      .withColumn("cosine", dot(col("embedding"), col("q_emb")) / (col("nrm") * col("q_nrm"))))
+
+  /** Label-IVF over `corpus` (label, vec_id, embedding, nrm): the corpus
+    * dir itself or a persisted index bucketed by label. Queries are the
+    * `queryPred` rows of the corpus dir.
+    */
+  private def ivfLabelSearch(spark: SparkSession, dir: String,
+      corpus: DataFrame, nprobe: Int, queryPred: Column, includeSelf: Boolean,
+      querySet: Option[DataFrame] = None, excludeOwnLabel: Boolean = false): DataFrame = {
+    val q = semiOnVecId(withNorm(spark, dir).filter(queryPred), querySet)
+      .select(Seq(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+        col("nrm").as("q_nrm")) ++
+        (if (excludeOwnLabel) Seq(col("label").as("q_label")) else Nil): _*)
+    flatSearch(q, corpus, labelPivots(corpus, excludeOwnLabel), nprobe, includeSelf)
   }
 
   /** Persist the IVF index — the corpus with its norms, BUCKETED by the
@@ -310,26 +391,11 @@ object Similarity {
     */
   def ivfForgetStream(forgetIds: DataFrame,
       table: String): org.apache.spark.sql.streaming.StreamingQuery =
-    forgetIds.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          forgetIvfVectors(batch.sparkSession, table, batch.toDF())
-          ()
-        }
-      }
-      .start()
+    eachBatch(forgetIds) { b => forgetIvfVectors(b.sparkSession, table, b); () }
 
-  /** `sim_ivf_forget`: build the dedicated index, forget the deletion
-    * set, then run the standard IVF search against it. The result must
-    * equal a search against an index built WITHOUT the forgotten vectors
-    * (the oracle replays exactly that, pivot shift included). Build +
-    * forget run under the build-then-mutate staleness gate, so
-    * steady-state calls pay only the search.
-    */
   /** The plain bucketed IVF index build over a corpus dir — the shared
-    * write behind the forget-family gates (`sim_ivf_forget` and the
-    * unified wave's ivf member).
+    * write behind [[persistIvfIndexIfStale]] and the forget-family gates
+    * (`sim_ivf_forget` and the unified wave's ivf member).
     */
   private[graft] def ivfIndexWriteFor(spark: SparkSession, dir: String,
       table: String): Unit =
@@ -346,13 +412,19 @@ object Similarity {
     buildPqIndex(spark, emb(spark, dir).select("vec_id", "embedding"),
       table, coarseTable, booksTable)
 
+  /** `sim_ivf_forget`: build the dedicated index, forget the deletion
+    * set, then run the standard IVF search against it. The result must
+    * equal a search against an index built WITHOUT the forgotten vectors
+    * (the oracle replays exactly that, pivot shift included). Build +
+    * forget run under the build-then-mutate staleness gate, so
+    * steady-state calls pay only the search.
+    */
   def ivfForget(spark: SparkSession, dir: String): DataFrame = {
     graft.core.ModelTables.persistGroupMutatedIfStale(spark, dir,
       "ivf-forget:v1")(
       IvfFgTable -> (() => ivfIndexWriteFor(spark, dir, IvfFgTable)))(
       () => { forgetIvfVectors(spark, IvfFgTable, forgetVecIds(spark, dir)); () })
-    ivfAgainstCore(spark, dir, IvfFgTable, NProbe, queryStride = 20,
-      includeSelf = false)
+    ivfTopkAgainst(spark, dir, IvfFgTable)
   }
 
   /** Continuous index build: every micro-batch of arriving vectors is
@@ -364,12 +436,20 @@ object Similarity {
     */
   def ivfIngestStream(newVectors: DataFrame, table: String)(
       ): org.apache.spark.sql.streaming.StreamingQuery =
-    newVectors.writeStream
+    eachBatch(newVectors)(ivfAdmitVectors(_, table))
+
+  /** Run `f` on every non-empty micro-batch of `arriving` — the append
+    * skeleton behind every continuous admit/forget/serve loop here.
+    */
+  private def eachBatch(arriving: DataFrame, checkpoint: Option[String] = None)(
+      f: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+    val w = arriving.writeStream
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) ivfAdmitVectors(batch.toDF(), table)
+        if (!batch.isEmpty) f(batch.toDF())
       }
-      .start()
+    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
+  }
 
   // -------------------------------------------------------------------------
   // IVF rebalance / re-train (closing the index lifecycle)
@@ -491,19 +571,24 @@ object Similarity {
     */
   def rebalanceIfSkewed(spark: SparkSession, table: String,
       modelTable: String, maxSkew: Double = 2.0): (Double, Boolean) = {
-    // the policy reads a LIVE index between admit appends: drop any
-    // cached file listing first, or every window after the first would
-    // re-measure the first window's generation (streaming foreachBatch
-    // appends do not invalidate the catalog's relation cache)
+    val skew = listSkew(spark, table)
+    val run = skew > maxSkew
+    if (run) { rebalanceIvfIndex(spark, table, modelTable); () }
+    (skew, run)
+  }
+
+  /** Largest cluster_id list over the balanced ideal n/K (0 when empty).
+    * The policies read a LIVE index between admit appends: the cached
+    * file listing is dropped first, or every window after the first would
+    * re-measure the first window's generation (streaming foreachBatch
+    * appends do not invalidate the catalog's relation cache).
+    */
+  private def listSkew(spark: SparkSession, table: String): Double = {
     spark.catalog.refreshTable(table)
     val sizes = spark.table(table).groupBy("cluster_id").count()
       .collect().map(_.getLong(1))
     val n = sizes.sum
-    val skew = if (n == 0L) 0.0
-      else sizes.max * Clustering.K.toDouble / n
-    val run = skew > maxSkew
-    if (run) { rebalanceIvfIndex(spark, table, modelTable); () }
-    (skew, run)
+    if (n == 0L) 0.0 else sizes.max * Clustering.K.toDouble / n
   }
 
   /** Serve a persisted kmeans-IVF index: queries (every 20th surviving
@@ -514,28 +599,9 @@ object Similarity {
     * bucketed cluster_id — only queries move.
     */
   def ivfKmeansServe(spark: SparkSession, table: String, modelTable: String,
-      nprobe: Int = NProbe): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import spark.implicits._
-    val centDF = Clustering.loadCentroids(spark, modelTable)
-      .sortBy(_._1).toDF("cid", "c")
-    val e = spark.table(table)
-    val q = e.filter(col("vec_id") % 20 === 0)
-      .selectExpr("vec_id", "embedding", "nrm", Clustering.quantizeSql)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"), col("q").as("q_q"))
-    val probeW = Window.partitionBy("q_id").orderBy(col("p_dist"), col("cid"))
-    val probed = q.crossJoin(broadcast(centDF))
-      .withColumn("p_dist", expr(
-        "aggregate(zip_with(q_q, c, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"))
-      .withColumn("p_rank", row_number().over(probeW))
-      .filter(col("p_rank") <= nprobe)
-      .select(col("q_id"), col("q_emb"), col("q_nrm"), col("cid"))
-    val scored = probed
-      .join(e, e("cluster_id") === probed("cid") && col("vec_id") =!= col("q_id"))
-      .withColumn("cosine", dot(col("embedding"), col("q_emb")) / (col("nrm") * col("q_nrm")))
-    rankTopK(scored)
-  }
+      nprobe: Int = NProbe): DataFrame =
+    ivfKmeansSearch(spark, spark.table(table),
+      Clustering.loadCentroids(spark, modelTable), nprobe)
 
   /** Continuous admission under the frozen model — the kmeans sibling of
     * [[ivfIngestStream]]: each arriving micro-batch is assigned against
@@ -546,12 +612,7 @@ object Similarity {
     */
   def ivfKmeansAdmitStream(newVectors: DataFrame, table: String,
       modelTable: String): org.apache.spark.sql.streaming.StreamingQuery =
-    newVectors.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) ivfKmeansAdmit(batch.toDF(), table, modelTable)
-      }
-      .start()
+    eachBatch(newVectors)(ivfKmeansAdmit(_, table, modelTable))
 
   /** `sim_ivf_rebalance`: the FULL lifecycle, end to end — train + build
     * on two-thirds of the corpus, ingest the remaining third under the
@@ -730,11 +791,7 @@ object Similarity {
 
   def persistIvfIndexIfStale(spark: SparkSession, dir: String): Unit =
     graft.core.ModelTables.persistIfStale(spark, dir, IvfIndexTable,
-      IvfIndexFingerprint) {
-      withNorm(spark, dir)
-        .select("label", "vec_id", "embedding", "nrm")
-        .write.bucketBy(8, "label").saveAsTable(IvfIndexTable)
-    }
+      IvfIndexFingerprint)(ivfIndexWriteFor(spark, dir, IvfIndexTable))
 
   /** [[ivfTopk]] against a pre-built index table: identical results, but
     * the corpus is never re-normed or re-shuffled — pivots come from a
@@ -742,39 +799,8 @@ object Similarity {
     * reads the corpus in place.
     */
   def ivfTopkAgainst(spark: SparkSession, dir: String, table: String): DataFrame =
-    ivfAgainstCore(spark, dir, table, NProbe, queryStride = 20, includeSelf = false)
-
-  /** The shared apply path behind [[ivfTopkAgainst]] and the hybrid
-    * retrieval semantic leg: IVF probe search against a persisted index
-    * with a caller-chosen query stride and self-match policy (the eval
-    * family excludes the query vector itself; hybrid fusion keeps it
-    * because the BM25 leg ranks the query's own document too).
-    */
-  private[graft] def ivfAgainstCore(spark: SparkSession, dir: String,
-      table: String, nprobe: Int, queryStride: Int,
-      includeSelf: Boolean, querySet: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val e = spark.table(table)
-    val pivotIds = e.groupBy("label").agg(min("vec_id").as("vec_id"))
-    val pivots = e.join(pivotIds, Seq("label", "vec_id"))
-      .select(col("label").as("p_label"), col("embedding").as("p_emb"), col("nrm").as("p_nrm"))
-    val q = semiOnVecId(
-        withNorm(spark, dir).filter(col("vec_id") % queryStride === 0), querySet)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"))
-    val probeW = Window.partitionBy("q_id")
-      .orderBy(col("p_cos").desc, col("p_label"))
-    val probed = q.crossJoin(broadcast(pivots))
-      .withColumn("p_cos", dot(col("q_emb"), col("p_emb")) / (col("q_nrm") * col("p_nrm")))
-      .withColumn("p_rank", row_number().over(probeW))
-      .filter(col("p_rank") <= nprobe)
-      .select(col("q_id"), col("q_emb"), col("q_nrm"), col("p_label"))
-    val listJoin = e("label") === probed("p_label")
-    val cond = if (includeSelf) listJoin else listJoin && col("vec_id") =!= col("q_id")
-    val scored = probed.join(e, cond)
-      .withColumn("cosine", dot(col("embedding"), col("q_emb")) / (col("nrm") * col("q_nrm")))
-    rankTopK(scored)
-  }
+    ivfLabelSearch(spark, dir, spark.table(table), NProbe, strided(20),
+      includeSelf = false)
 
   // -------------------------------------------------------------------------
   // IVF over LEARNED k-means centroids (the trained-quantizer recall path)
@@ -797,13 +823,9 @@ object Similarity {
     * set hash-matches an oracle that replays Lloyd's and the probe in
     * SQL.
     *
-    * Scale shape: ONE map-only pass attaches quantization, norm, and
-    * nearest-centroid list id to the corpus (centroids travel as a
-    * K-struct literal — no join); queries rank the same K-struct
-    * broadcast and explode to nprobe rows; then ONE equi-join on
-    * cluster_id brute-forces only the probed lists. Over a corpus
-    * bucketed by cluster_id (the [[persistIvfIndex]] discipline) only
-    * queries move.
+    * Scale shape: ONE map-only pass attaches the list id to the corpus
+    * ([[kmeansAssigned]] — centroids travel as a K-struct literal), then
+    * [[flatSearch]]; over an index bucketed by cluster_id only queries move.
     */
   def ivfKmeansTopk(spark: SparkSession, dir: String): DataFrame =
     ivfKmeansTopkProbe(spark, dir, NProbe)
@@ -836,30 +858,25 @@ object Similarity {
       nprobe: Int): DataFrame =
     ivfKmeansTopkWith(spark, dir, nprobe, Clustering.fitCentroids(spark, dir))
 
-  /** The shared search plan over an in-hand centroid set. */
+  /** The search over an in-hand centroid set, lists assigned inline. */
   private def ivfKmeansTopkWith(spark: SparkSession, dir: String, nprobe: Int,
-      cents: Seq[(Int, Seq[Long])]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import spark.implicits._
-    val e = Clustering.withAssignment(
-        withNorm(spark, dir).selectExpr("vec_id", "embedding", "nrm", Clustering.quantizeSql),
-        cents)
-      .selectExpr("vec_id", "embedding", "nrm", "q", "best.cid AS cluster_id")
-    val centDF = cents.sortBy(_._1).toDF("cid", "c")
-    val q = e.filter(col("vec_id") % 20 === 0)
+      cents: Seq[(Int, Seq[Long])]): DataFrame =
+    ivfKmeansSearch(spark,
+      kmeansAssigned(emb(spark, dir).select("vec_id", "embedding"), cents),
+      cents, nprobe)
+
+  /** Kmeans-IVF over `corpus` (cluster_id, vec_id, embedding, nrm): a
+    * persisted index bucketed by cluster_id, or the corpus dir assigned
+    * inline. Queries are its every-20th rows, quantized like the fit, so
+    * the probe ranks centroids in the fit's exact integer space.
+    */
+  private def ivfKmeansSearch(spark: SparkSession, corpus: DataFrame,
+      cents: Seq[(Int, Seq[Long])], nprobe: Int): DataFrame = {
+    val q = corpus.filter(strided(20))
+      .selectExpr("vec_id", "embedding", "nrm", Clustering.quantizeSql)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("nrm").as("q_nrm"), col("q").as("q_q"))
-    val probeW = Window.partitionBy("q_id").orderBy(col("p_dist"), col("cid"))
-    val probed = q.crossJoin(broadcast(centDF))
-      .withColumn("p_dist", expr(
-        "aggregate(zip_with(q_q, c, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"))
-      .withColumn("p_rank", row_number().over(probeW))
-      .filter(col("p_rank") <= nprobe)
-      .select(col("q_id"), col("q_emb"), col("q_nrm"), col("cid"))
-    val scored = probed
-      .join(e, e("cluster_id") === probed("cid") && col("vec_id") =!= col("q_id"))
-      .withColumn("cosine", dot(col("embedding"), col("q_emb")) / (col("nrm") * col("q_nrm")))
-    rankTopK(scored)
+    flatSearch(q, corpus, centroidLists(spark, cents), nprobe, includeSelf = false)
   }
 
   /** The oracle replays the k-means fit (shared CTE chain — identical
@@ -953,10 +970,6 @@ object Similarity {
            |  best.cid + 1).c, (a, b) -> a - b)""".stripMargin))
       .selectExpr("vec_id", "q", "best.cid AS cluster_id", "r")
 
-  private def pqResiduals(spark: SparkSession, dir: String,
-      coarse: Seq[(Int, Seq[Long])]): DataFrame =
-    pqResidualsOn(emb(spark, dir), coarse)
-
   /** FIT: one independent integer-Lloyd per slice over the residual
     * slices of `content` — same seeds/update/tie-break contract as the
     * coarse fit ([[Clustering.fitCentroidsOn]]), so the whole model is
@@ -1033,20 +1046,6 @@ object Similarity {
   private def groupBooks(rows: Seq[(Int, Int, Seq[Long])]): Seq[Seq[(Int, Seq[Long])]] =
     (0 until PqM).map(m => rows.filter(_._1 == m).map(t => t._2 -> t._3))
 
-  /** Per-slice code expressions over a residual column `r`: argmin over
-    * each slice codebook with the fit's (dist, cid) tie-break — shared by
-    * the inline search ([[pqTopkWhere]]) and the persisted-index encode
-    * ([[encodePq]]) so stored codes are bit-identical to computed ones.
-    */
-  private def pqCodeExprs(bookLits: Seq[String]): Seq[String] =
-    (0 until PqM).map { m =>
-      s"""array_min(transform(${bookLits(m)}, s -> named_struct(
-         |  'dist', aggregate(zip_with(slice(r, ${m * PqSliceDim + 1}, $PqSliceDim),
-         |                             s.c, (a, b) -> (a - b) * (a - b)),
-         |          0L, (acc, x) -> acc + x),
-         |  'cid', s.cid))).cid AS code$m""".stripMargin
-    }
-
   /** Persist the PQ model (PqM×PqKc rows of (m, cid, c)) through the
     * fit/apply discipline; gates the coarse centroid model first, so one
     * call stands up the full IVF-PQ index. Re-calls against a current
@@ -1075,32 +1074,16 @@ object Similarity {
     pqTopkAgainst(spark, dir, Clustering.KmeansModelTable, PqModelTable, NProbe)
   }
 
-  /** The APPLY path. Scale shape (the reason PQ exists at 100 TB):
-    *   - corpus pass is MAP-ONLY — coarse centroids and all PqM codebooks
-    *     travel as literals; each row gets its coarse list id, per-slice
-    *     codes (argmin over PqKc structs), and the reconstructed vector
-    *     rec = c_list + concat(codewords). At scale only (vec_id,
-    *     cluster_id, code) persists — 4 small ints per vector instead of
-    *     64 floats, which is what lets the index live in executor RAM;
-    *   - queries (the small side) rank the K-struct coarse literal,
-    *     explode to nprobe rows, and are BROADCAST to the corpus — the
-    *     corpus never shuffles;
-    *   - ADC scoring is exact integer L2 between the query's quantized
-    *     vector and the reconstruction (algebraically identical to
-    *     per-slice lookup-table ADC, since rec is sliced from the same
-    *     codewords), bounded to a PqRefine-wide candidate pool per query;
-    *   - exact re-rank (FAISS IndexRefine): only the pool's original
-    *     vectors are scored with exact integer L2 — at 100 TB the ADC
-    *     scan touches codes (bytes/vector), and full vectors are read
-    *     for just queries × PqRefine rows, again via a broadcast join
-    *     that never shuffles the corpus.
+  /** The APPLY path against the stored models: [[pqSearch]] over the
+    * corpus encoded inline ([[encodePq]], map-only — the models travel as
+    * literals and the corpus never shuffles). `refine` is the ADC pool
+    * width, the recall knob that binds once the probed lists cover the
+    * truth (tools.RecallReport).
     */
   def pqTopkAgainst(spark: SparkSession, dir: String, coarseTable: String,
-      pqTable: String, nprobe: Int = NProbe, refine: Int = PqRefine): DataFrame = {
-    val coarse = Clustering.loadCentroids(spark, coarseTable)
-    val books = loadPqBooks(spark, pqTable)
-    pqTopkWith(spark, dir, nprobe, coarse, books, refine)
-  }
+      pqTable: String, nprobe: Int = NProbe, refine: Int = PqRefine): DataFrame =
+    pqTopkWith(spark, dir, Clustering.loadCentroids(spark, coarseTable),
+      loadPqBooks(spark, pqTable), strided(20), nprobe, refine)
 
   /** [[pqTopkAgainst]] with an explicit query-set predicate (the
     * fixed-query scale-probe seam, `tools.FixedQueryStress`).
@@ -1108,89 +1091,22 @@ object Similarity {
   private[graft] def pqTopkAgainstWhere(spark: SparkSession, dir: String,
       coarseTable: String, pqTable: String, nprobe: Int,
       queryPred: Column): DataFrame =
-    pqTopkWhere(spark, dir, nprobe, Clustering.loadCentroids(spark, coarseTable),
-      loadPqBooks(spark, pqTable), queryPred)
+    pqTopkWith(spark, dir, Clustering.loadCentroids(spark, coarseTable),
+      loadPqBooks(spark, pqTable), queryPred, nprobe)
 
   /** The fit-inline form — the spec's reference for fit/apply equality. */
   private[graft] def pqTopkInline(spark: SparkSession, dir: String,
       nprobe: Int): DataFrame = {
     val coarse = Clustering.fitCentroids(spark, dir)
-    pqTopkWith(spark, dir, nprobe, coarse,
-      groupBooks(fitPqCodebooks(spark, dir, coarse)))
+    pqTopkWith(spark, dir, coarse,
+      groupBooks(fitPqCodebooks(spark, dir, coarse)), strided(20), nprobe)
   }
 
-  private def pqTopkWith(spark: SparkSession, dir: String, nprobe: Int,
+  /** The search with the corpus dir encoded inline under in-hand models. */
+  private def pqTopkWith(spark: SparkSession, dir: String,
       coarse: Seq[(Int, Seq[Long])], books: Seq[Seq[(Int, Seq[Long])]],
-      refine: Int = PqRefine): DataFrame =
-    pqTopkWhere(spark, dir, nprobe, coarse, books, col("vec_id") % 20 === 0, refine)
-
-  /** [[pqTopkWith]] with an explicit query-set predicate (see
-    * [[multiprobeTopkRadiusWhere]] — same fixed-query scale-probe seam)
-    * and ADC pool width (`refine` — the recall knob that binds once the
-    * probed lists cover the truth, see tools.RecallReport).
-    */
-  private[graft] def pqTopkWhere(spark: SparkSession, dir: String, nprobe: Int,
-      coarse: Seq[(Int, Seq[Long])], books: Seq[Seq[(Int, Seq[Long])]],
-      queryPred: Column, refine: Int = PqRefine): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import spark.implicits._
-    // corpus: residual -> per-slice code -> reconstruction, all map-only
-    val bookLits = books.map(Clustering.centroidExpr)
-    val codeCols = pqCodeExprs(bookLits)
-    val wordExprs = (0 until PqM)
-      .map(m => s"element_at(${bookLits(m)}, code$m + 1).c")
-    val e = pqResiduals(spark, dir, coarse)
-      .selectExpr(Seq("vec_id", "q", "cluster_id", "r") ++ codeCols: _*)
-      .withColumn("rec", expr(
-        s"""zip_with(element_at(${Clustering.centroidExpr(coarse)}, cluster_id + 1).c,
-           |  concat(${wordExprs.mkString(", ")}), (a, b) -> a + b)""".stripMargin))
-    val centDF = coarse.sortBy(_._1).toDF("cid", "c")
-    val q = e.filter(queryPred)
-      .select(col("vec_id").as("q_id"), col("q").as("q_q"))
-    val probeW = Window.partitionBy("q_id").orderBy(col("p_dist"), col("cid"))
-    val probed = q.crossJoin(broadcast(centDF))
-      .withColumn("p_dist", expr(
-        "aggregate(zip_with(q_q, c, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"))
-      .withColumn("p_rank", row_number().over(probeW))
-      .filter(col("p_rank") <= nprobe)
-      .select(col("q_id"), col("q_q"), col("cid"))
-    // queries are the small side — broadcast them; the encoded corpus
-    // never shuffles (same discipline as the IVF family)
-    val scored = e.join(broadcast(probed),
-        e("cluster_id") === probed("cid") && col("vec_id") =!= col("q_id"))
-      .withColumn("adc_dist", expr(
-        "aggregate(zip_with(q_q, rec, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"))
-    // ADC nomination: bounded top-PqRefine per query. TopK orders
-    // (score DESC, id ASC); each operand is a quantized vector with
-    // coords of magnitude <= 2^21, so a per-dim difference is <= 2^22
-    // (two coords at opposite extremes), its square <= 2^44, and the
-    // dim-64 sum <= 2^6 * 2^44 = 2^50 — three bits under the 2^53
-    // double-exact ceiling, so -dist is a safe descending key. The bound
-    // scales linearly with dim: every integer <= 2^53 is exactly
-    // representable, so exactness holds through dim = 2^9 (sum <= 2^53)
-    // and fails one doubling later; a larger dim or coarser quantization
-    // bump must revisit this arithmetic.
-    val pool = scored
-      .groupBy("q_id")
-      .agg(graft.functions.TopK.topk(refine)(col("vec_id"), -col("adc_dist").cast("double")).as("top"))
-      .select(col("q_id"), explode(col("top.id")).as("neighbor_id"))
-    // exact re-rank: ONLY pool rows' original (quantized) vectors are
-    // scored exactly — the pool (queries × PqRefine ids) broadcasts, the
-    // corpus again never shuffles
-    val exact = e.select(col("vec_id"), col("q"))
-      .join(broadcast(pool), col("vec_id") === col("neighbor_id"))
-      .join(broadcast(q), "q_id")
-      .withColumn("dist", expr(
-        "aggregate(zip_with(q_q, q, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"))
-    exact
-      .groupBy("q_id")
-      .agg(graft.functions.TopK.topk(TopK)(col("neighbor_id"), -col("dist").cast("double")).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
-        col("col.id").as("neighbor_id"),
-        (-col("col.score")).cast("long").as("dist"))
-      .orderBy("q_id", "rank")
-  }
+      queryPred: Column, nprobe: Int, refine: Int = PqRefine): DataFrame =
+    pqSearch(spark, dir, None, coarse, books, queryPred, nprobe, refine)
 
   /** The oracle replays the coarse fit (shared CTE chain), the residuals,
     * all PqM slice fits, the encode, and the ADC search — exact integer
@@ -1273,11 +1189,16 @@ object Similarity {
     */
   private def encodePq(content: DataFrame, coarse: Seq[(Int, Seq[Long])],
       books: Seq[Seq[(Int, Seq[Long])]]): DataFrame = {
-    val codeCols = pqCodeExprs(books.map(Clustering.centroidExpr))
+    // code m: argmin over slice m's codebook of the residual `r`, with the
+    // fit's (dist, cid) tie-break
+    val codes = books.map(Clustering.centroidExpr).zipWithIndex.map { case (book, m) =>
+      s"""array_min(transform($book, s -> named_struct(
+         |  'dist', ${sqL2(s"slice(r, ${m * PqSliceDim + 1}, $PqSliceDim)", "s.c")},
+         |  'cid', s.cid))).cid""".stripMargin
+    }
     pqResidualsOn(content, coarse)
-      .selectExpr(Seq("vec_id", "cluster_id", "r") ++ codeCols: _*)
       .selectExpr("CAST(cluster_id AS INT) AS cluster_id", "vec_id",
-        s"array(${(0 until PqM).map(m => s"code$m").mkString(", ")}) AS code")
+        codes.mkString("array(", ", ", ") AS code"))
   }
 
   /** TRAIN + BUILD the persisted IVF-PQ index: fit the coarse quantizer
@@ -1331,14 +1252,8 @@ object Similarity {
     */
   def pqAdmitStream(newVectors: DataFrame, table: String, coarseTable: String,
       booksTable: String, checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = newVectors.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) pqAdmit(batch.toDF(), table, coarseTable, booksTable)
-      }
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    eachBatch(newVectors, checkpoint)(pqAdmit(_, table, coarseTable, booksTable))
 
   /** Replay repair for continuous PQ admission — [[compactIvfIndex]]'s
     * sibling on the code index: an at-least-once source re-delivering a
@@ -1413,63 +1328,66 @@ object Similarity {
     files
   }
 
-  /** Serve a persisted PQ index — the apply path over STORED codes:
-    *   - reconstruction is map-only over the bucketed index (models as
-    *     literals: rec = c_list + concat(codewords[code]));
-    *   - queries (index members matching `queryPred`, so forgotten
-    *     vectors neither answer nor ask) take their raw vectors from the
-    *     base table via a broadcast join, rank the K-row coarse literal,
-    *     and are BROADCAST to the corpus — the code index never shuffles;
-    *   - ADC nomination and the exact re-rank are [[pqTopkWhere]]'s
-    *     discipline verbatim: ADC bounds a PqRefine pool per query, then
-    *     ONLY pool rows' original vectors are read back from the base
-    *     table (broadcast pool join) for exact integer scoring.
-    */
+  /** Serve a persisted PQ index — [[pqSearch]] over the STORED codes. */
   def pqServe(spark: SparkSession, dir: String, table: String,
       coarseTable: String, booksTable: String, nprobe: Int = NProbe,
       refine: Int = PqRefine): DataFrame =
-    pqServeWhere(spark, dir, table,
+    pqSearch(spark, dir, Some(table),
       Clustering.loadCentroids(spark, coarseTable),
-      loadPqBooks(spark, booksTable),
-      col("vec_id") % 20 === 0, nprobe, refine)
+      loadPqBooks(spark, booksTable), strided(20), nprobe, refine)
 
-  private def pqServeWhere(spark: SparkSession, dir: String, table: String,
+  /** IVF-PQ over the code frame (cluster_id, vec_id, code) of a persisted
+    * `index`, or of the corpus dir encoded inline ([[encodePq]]) when
+    * there is none. Reconstruction is map-only (rec = c_list +
+    * concat(codewords[code]), models as literals). Queries are the
+    * `queryPred` rows of the dir — of those, only the index's members, so
+    * forgotten vectors neither answer nor ask; they are BROADCAST to the
+    * codes, which never shuffle. ADC is exact integer L2 to rec
+    * (identical to per-slice lookup-table ADC, since rec is sliced from
+    * the same codewords).
+    */
+  private def pqSearch(spark: SparkSession, dir: String, index: Option[String],
       coarse: Seq[(Int, Seq[Long])], books: Seq[Seq[(Int, Seq[Long])]],
-      queryPred: Column, nprobe: Int, refine: Int,
-      includeSelf: Boolean = false,
+      queryPred: Column, nprobe: Int, refine: Int, includeSelf: Boolean = false,
       querySet: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import spark.implicits._
+    val codes = index.fold(encodePq(emb(spark, dir), coarse, books))(spark.table)
     val bookLits = books.map(Clustering.centroidExpr)
     val wordExprs = (0 until PqM)
       .map(m => s"element_at(${bookLits(m)}, code[$m] + 1).c")
-    val rec = spark.table(table).withColumn("rec", expr(
+    val rec = codes.withColumn("rec", expr(
       s"""zip_with(element_at(${Clustering.centroidExpr(coarse)}, cluster_id + 1).c,
          |  concat(${wordExprs.mkString(", ")}), (a, b) -> a + b)""".stripMargin))
-    // an arriving query-id set restricts by broadcast SEMI-JOIN — ids
-    // never collect to the driver (the ServeSetSpec discipline)
-    val qbase0 = emb(spark, dir).filter(queryPred)
-      .selectExpr("vec_id", Clustering.quantizeSql)
-    val qbase = querySet.fold(qbase0)(qs =>
-      qbase0.join(broadcast(qs.select("vec_id").distinct()),
-        Seq("vec_id"), "left_semi"))
-    val q = spark.table(table).select("vec_id")
-      .join(broadcast(qbase), Seq("vec_id"))
+    val qbase = semiOnVecId(
+      emb(spark, dir).filter(queryPred).selectExpr("vec_id", Clustering.quantizeSql),
+      querySet)
+    val q = index.fold(qbase)(spark.table(_).select("vec_id")
+        .join(broadcast(qbase), Seq("vec_id")))
       .select(col("vec_id").as("q_id"), col("q").as("q_q"))
-    val centDF = coarse.sortBy(_._1).toDF("cid", "c")
-    val probeW = Window.partitionBy("q_id").orderBy(col("p_dist"), col("cid"))
-    val probed = q.crossJoin(broadcast(centDF))
-      .withColumn("p_dist", expr(
-        "aggregate(zip_with(q_q, c, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"))
-      .withColumn("p_rank", row_number().over(probeW))
-      .filter(col("p_rank") <= nprobe)
-      .select(col("q_id"), col("q_q"), col("cid"))
-    val selfCond =
-      if (includeSelf) lit(true) else col("vec_id") =!= col("q_id")
-    val scored = rec.join(broadcast(probed),
-        rec("cluster_id") === probed("cid") && selfCond)
-      .withColumn("adc_dist", expr(
-        "aggregate(zip_with(q_q, rec, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"))
+    val lists = centroidLists(spark, coarse)
+    val probed = probe(q, lists, nprobe)
+    val scored = rec.join(broadcast(probed), onProbedList(rec, probed, lists, includeSelf))
+      .withColumn("adc_dist", expr(sqL2("q_q", "rec")))
+    refineExact(spark, dir, scored, q, refine)
+  }
+
+  /** Stage 5, PQ: ADC nominates a bounded top-`refine` pool per query,
+    * then ONLY the pool rows' original (quantized) vectors are read back
+    * from the base table and scored exactly (FAISS IndexRefine). At 100 TB
+    * the ADC scan touches codes (bytes/vector) and full vectors are read
+    * for just queries × refine rows; the pool and the queries broadcast,
+    * so the corpus never shuffles.
+    */
+  private def refineExact(spark: SparkSession, dir: String,
+      scored: DataFrame, q: DataFrame, refine: Int): DataFrame = {
+    // TopK orders (score DESC, id ASC); each operand is a quantized
+    // vector with coords of magnitude <= 2^21, so a per-dim difference is
+    // <= 2^22 (two coords at opposite extremes), its square <= 2^44, and
+    // the dim-64 sum <= 2^6 * 2^44 = 2^50 — three bits under the 2^53
+    // double-exact ceiling, so -dist is a safe descending key. The bound
+    // scales linearly with dim: every integer <= 2^53 is exactly
+    // representable, so exactness holds through dim = 2^9 (sum <= 2^53)
+    // and fails one doubling later; a larger dim or coarser quantization
+    // bump must revisit this arithmetic.
     val pool = scored
       .groupBy("q_id")
       .agg(graft.functions.TopK.topk(refine)(col("vec_id"), -col("adc_dist").cast("double")).as("top"))
@@ -1477,16 +1395,9 @@ object Similarity {
     val exact = emb(spark, dir).selectExpr("vec_id", Clustering.quantizeSql)
       .join(broadcast(pool), col("vec_id") === col("neighbor_id"))
       .join(broadcast(q), "q_id")
-      .withColumn("dist", expr(
-        "aggregate(zip_with(q_q, q, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"))
-    exact
-      .groupBy("q_id")
-      .agg(graft.functions.TopK.topk(TopK)(col("neighbor_id"), -col("dist").cast("double")).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
-        col("col.id").as("neighbor_id"),
-        (-col("col.score")).cast("long").as("dist"))
-      .orderBy("q_id", "rank")
+      .withColumn("dist", expr(sqL2("q_q", "q")))
+    rankTopK(exact, "neighbor_id", -col("dist").cast("double"),
+      s => (-s).cast("long").as("dist"))
   }
 
   private[graft] val PqFgTable = "pq_fg_index"
@@ -1666,12 +1577,7 @@ object Similarity {
   def retrainPqIfSkewed(spark: SparkSession, dir: String, table: String,
       coarseTable: String, booksTable: String,
       maxSkew: Double = IvfPolicySkewMax): (Double, Boolean) = {
-    spark.catalog.refreshTable(table)
-    val sizes = spark.table(table).groupBy("cluster_id").count()
-      .collect().map(_.getLong(1))
-    val n = sizes.sum
-    val skew = if (n == 0L) 0.0
-      else sizes.max * Clustering.K.toDouble / n
+    val skew = listSkew(spark, table)
     val run = skew > maxSkew
     if (run) { retrainPq(spark, dir, table, coarseTable, booksTable); () }
     (skew, run)
@@ -1770,13 +1676,11 @@ object Similarity {
         col("q_bucket").bitwiseXOR(col("mask")).as("p_bucket"))
     // each corpus vector matches exactly one mask per query (the XOR is a
     // bijection), so the candidate stream needs no dedup
-    val scored = q.join(s, s("bucket") === q("p_bucket") && s("vec_id") =!= q("q_id"))
-      .withColumn("cosine", dot(col("embedding"), col("q_emb")) / (col("nrm") * col("q_nrm")))
-    rankTopK(scored)
+    cosineTopK(q, s, s("bucket") === q("p_bucket") && s("vec_id") =!= q("q_id"))
   }
 
   /** The IVF probe-search CTE chain, parameterized the same way
-    * [[ivfAgainstCore]] is (query stride, self-match policy) plus a CTE
+    * [[ivfLabelSearch]] is (query stride, self-match policy) plus a CTE
     * name prefix so the chain can be composed next to CTE sets that
     * already define `q`/`e` (the hybrid oracle composes it with the BM25
     * score chain).
@@ -1835,12 +1739,6 @@ object Similarity {
        |SELECT q_id, rank, neighbor_id, cosine FROM ivf_ranked
        |ORDER BY q_id, rank""".stripMargin
 
-  /** The IVF forget equality: the identical probe search replayed over
-    * the corpus MINUS the forgotten vectors — including the pivot shift
-    * (a forgotten min-vec_id member hands its label's pivot to the next
-    * survivor, which the implementation reproduces because pivots derive
-    * from the rewritten index).
-    */
   /** HARD-NEGATIVE MINING for contrastive training: per query vector,
     * the top-k most-similar vectors with a DIFFERENT label — the
     * highest-loss negatives a triplet/InfoNCE batch builder wants —
@@ -1859,27 +1757,9 @@ object Similarity {
     */
   private[graft] def hardNegativesWhere(spark: SparkSession, dir: String,
       queryWhere: Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     persistIvfIndexIfStale(spark, dir)
-    val e = spark.table(IvfIndexTable)
-    val pivotIds = e.groupBy("label").agg(min("vec_id").as("vec_id"))
-    val pivots = e.join(pivotIds, Seq("label", "vec_id"))
-      .select(col("label").as("p_label"), col("embedding").as("p_emb"),
-        col("nrm").as("p_nrm"))
-    val q = withNorm(spark, dir).filter(col("vec_id") % 20 === 0 && queryWhere)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"), col("label").as("q_label"))
-    val probeW = Window.partitionBy("q_id")
-      .orderBy(col("p_cos").desc, col("p_label"))
-    val probed = q.crossJoin(broadcast(pivots))
-      .filter(col("p_label") =!= col("q_label"))
-      .withColumn("p_cos", dot(col("q_emb"), col("p_emb")) / (col("q_nrm") * col("p_nrm")))
-      .withColumn("p_rank", row_number().over(probeW))
-      .filter(col("p_rank") <= NProbe)
-      .select(col("q_id"), col("q_emb"), col("q_nrm"), col("p_label"))
-    val scored = probed.join(e, e("label") === probed("p_label"))
-      .withColumn("cosine", dot(col("embedding"), col("q_emb")) / (col("nrm") * col("q_nrm")))
-    rankTopK(scored)
+    ivfLabelSearch(spark, dir, spark.table(IvfIndexTable), NProbe,
+      strided(20) && queryWhere, includeSelf = true, excludeOwnLabel = true)
   }
 
   val hardNegativesOracle: String =
@@ -1888,6 +1768,12 @@ object Similarity {
        |SELECT q_id, rank, neighbor_id, cosine FROM ivf_ranked
        |ORDER BY q_id, rank""".stripMargin
 
+  /** The IVF forget equality: the identical probe search replayed over
+    * the corpus MINUS the forgotten vectors — including the pivot shift
+    * (a forgotten min-vec_id member hands its label's pivot to the next
+    * survivor, which the implementation reproduces because pivots derive
+    * from the rewritten index).
+    */
   val ivfForgetOracle: String =
     s"""WITH ${ivfChainFor(stride = 20, includeSelf = false, p = "",
            eWhere = s"vec_id % $IvfForgetMod <> $IvfForgetRem")}
@@ -2128,7 +2014,7 @@ object Similarity {
 
   /** HYBRID SEARCH ON THE INDEX — the same RRF fusion with its semantic
     * leg served from the persisted bucketed IVF index
-    * ([[persistIvfIndexIfStale]] + [[ivfAgainstCore]]) instead of the
+    * ([[persistIvfIndexIfStale]] + [[ivfLabelSearch]]) instead of the
     * brute-force corpus scan. This is the 100x-scale form: the exact leg
     * scans corpus x queries every time, while here the corpus is read in
     * place (bucketed by list, probe join co-located) and only the probed
@@ -2144,17 +2030,25 @@ object Similarity {
   def hybridRrfIvfProbe(spark: SparkSession, dir: String,
       nprobe: Int): DataFrame = {
     persistIvfIndexIfStale(spark, dir)
-    val sem = ivfAgainstCore(spark, dir, IvfIndexTable, nprobe,
-        queryStride = graft.operators.TextAnalysis.Bm25QueryStride,
-        includeSelf = true) // BM25 ranks self too — keep parity with hybridRrf
-      .select(col("q_id").as("query_id"), col("neighbor_id").as("doc_id"),
-        col("rank").as("rk_sem"))
-    rrfFuse(bm25Leg(spark, dir), sem)
+    val sem = ivfLabelSearch(spark, dir, spark.table(IvfIndexTable), nprobe,
+      strided(TextAnalysis.Bm25QueryStride),
+      includeSelf = true) // BM25 ranks self too — keep parity with hybridRrf
+    rrfFuse(bm25Leg(spark, dir), semLeg(sem))
   }
 
   private[graft] val PqHyTable = "pq_hy_index"
   private[graft] val PqHyCoarse = "pq_hy_coarse"
   private[graft] val PqHyBooks = "pq_hy_books"
+
+  private[graft] def persistPqHybridIfStale(spark: SparkSession,
+      dir: String): Unit = {
+    val all = emb(spark, dir).select("vec_id", "embedding")
+    graft.core.ModelTables.persistGroupIfStale(spark, dir, "pq-hybrid:v1")(
+      PqHyCoarse -> (() => ()),
+      PqHyBooks -> (() => ()),
+      PqHyTable -> (() => buildPqIndex(spark, all, PqHyTable, PqHyCoarse,
+        PqHyBooks)))
+  }
 
   /** HYBRID SEARCH ON THE COMPRESSED INDEX — [[hybridRrfIvf]] with its
     * semantic leg served from the persisted IVF-PQ index instead of
@@ -2168,42 +2062,24 @@ object Similarity {
     * Models + index build once behind the staleness gate; steady-state
     * calls pay the two index-served legs and the metadata-scale fusion.
     */
-  private[graft] def persistPqHybridIfStale(spark: SparkSession,
-      dir: String): Unit = {
-    val all = emb(spark, dir).select("vec_id", "embedding")
-    graft.core.ModelTables.persistGroupIfStale(spark, dir, "pq-hybrid:v1")(
-      PqHyCoarse -> (() => ()),
-      PqHyBooks -> (() => ()),
-      PqHyTable -> (() => buildPqIndex(spark, all, PqHyTable, PqHyCoarse,
-        PqHyBooks)))
-  }
+  def hybridRrfPq(spark: SparkSession, dir: String): DataFrame =
+    rrfFuse(bm25Leg(spark, dir), semLeg(pqHybridSemLegStride(spark, dir,
+      graft.operators.TextAnalysis.Bm25QueryStride)))
 
-  def hybridRrfPq(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.TextAnalysis
-    persistPqHybridIfStale(spark, dir)
-    val sem = pqServeWhere(spark, dir, PqHyTable,
-        Clustering.loadCentroids(spark, PqHyCoarse),
-        loadPqBooks(spark, PqHyBooks),
-        col("vec_id") % TextAnalysis.Bm25QueryStride === 0,
-        NProbe, PqRefine, includeSelf = true)
-      .select(col("q_id").as("query_id"), col("neighbor_id").as("doc_id"),
-        col("rank").as("rk_sem"))
-    rrfFuse(bm25Leg(spark, dir), sem)
-  }
-
-  /** The PQ semantic leg with the query stride overridden — the fixed-q
-    * scale probe's knob (probing a 20x corpus at 20x the stride holds
-    * the query COUNT constant, isolating per-query corpus cost — the
-    * ADC pool of ~corpus x nprobe / K candidates — from query-set
-    * growth, the same discipline as the other fixed-q rows in SCALE.md).
+  /** The PQ semantic leg at a given query stride: [[hybridRrfPq]]'s leg
+    * at the BM25 stride, and the fixed-q scale probe's knob (probing a
+    * 20x corpus at 20x the stride holds the query COUNT constant,
+    * isolating per-query corpus cost — the ADC pool of
+    * ~corpus x nprobe / K candidates — from query-set growth, the same
+    * discipline as the other fixed-q rows in SCALE.md).
     */
   private[graft] def pqHybridSemLegStride(spark: SparkSession, dir: String,
       stride: Int): DataFrame = {
     persistPqHybridIfStale(spark, dir)
-    pqServeWhere(spark, dir, PqHyTable,
+    pqSearch(spark, dir, Some(PqHyTable),
       Clustering.loadCentroids(spark, PqHyCoarse),
-      loadPqBooks(spark, PqHyBooks),
-      col("vec_id") % stride === 0, NProbe, PqRefine, includeSelf = true)
+      loadPqBooks(spark, PqHyBooks), strided(stride), NProbe, PqRefine,
+      includeSelf = true)
   }
 
   /** [[hybridServeBatch]] with the semantic leg on the COMPRESSED index:
@@ -2212,36 +2088,20 @@ object Similarity {
     * broadcast semi-joins — a corpus-derived query stream never
     * materializes driver-side. Per-query stateless + frozen models, so
     * the union of batch emissions equals the batch [[hybridRrfPq]] table
-    * for any chunking of the query set.
-    */
-  private[graft] def hybridServePqBatch(spark: SparkSession, dir: String,
-      querySet: DataFrame): DataFrame =
-    hybridServePqBatchWith(spark, dir, querySet,
-      Clustering.loadCentroids(spark, PqHyCoarse),
-      loadPqBooks(spark, PqHyBooks))
-
-  /** The per-batch serving plan GIVEN frozen models — the K-row coarse
-    * centroids + codebooks load once at stream start (the frozen-model
-    * inference discipline TokenBudgetStream uses for its budget map),
-    * not per micro-batch; with them in hand, per-batch plan construction
-    * reads zero rows (ServeSetSpec meters it).
+    * for any chunking of the query set. The models are GIVEN: the K-row
+    * coarse centroids + codebooks load once at stream start (the
+    * frozen-model inference discipline TokenBudgetStream uses for its
+    * budget map), not per micro-batch; with them in hand, per-batch plan
+    * construction reads zero rows (ServeSetSpec meters it).
     */
   private[graft] def hybridServePqBatchWith(spark: SparkSession, dir: String,
       querySet: DataFrame, coarse: Seq[(Int, Seq[Long])],
       books: Seq[Seq[(Int, Seq[Long])]],
       table: String = PqHyTable): DataFrame = {
-    import graft.operators.TextAnalysis
-    val lexQueries = TextAnalysis.bm25QueriesOf(TextAnalysis.bm25Corpus(spark, dir))
-      .join(broadcast(querySet.select(col("vec_id").as("query_id")).distinct()),
-        Seq("query_id"), "left_semi")
-    val lex = TextAnalysis.bm25SearchAgainstDf(spark, lexQueries)
-      .select(col("query_id"), col("doc_id"), col("rk").as("rk_lex"))
-    val sem = pqServeWhere(spark, dir, table, coarse, books,
-        col("vec_id") % TextAnalysis.Bm25QueryStride === 0,
-        NProbe, PqRefine, includeSelf = true, querySet = Some(querySet))
-      .select(col("q_id").as("query_id"), col("neighbor_id").as("doc_id"),
-        col("rank").as("rk_sem"))
-    rrfFuse(lex, sem)
+    val sem = pqSearch(spark, dir, Some(table), coarse, books,
+      strided(TextAnalysis.Bm25QueryStride), NProbe, PqRefine,
+      includeSelf = true, querySet = Some(querySet))
+    rrfFuse(lexLegFor(spark, dir, querySet), semLeg(sem))
   }
 
   /** Continuous hybrid serving from the compressed index — the PQ twin
@@ -2253,19 +2113,12 @@ object Similarity {
     */
   def hybridServePqStream(newQueries: DataFrame, dir: String)(
       sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark0 = newQueries.sparkSession
-    val pin = serveQueryFramePin(spark0, dir) // one corpus tokenize per stream, not per batch
-    val coarse = Clustering.loadCentroids(spark0, PqHyCoarse)
-    val books = loadPqBooks(spark0, PqHyBooks)
-    unpinOnTermination(pin, newQueries.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          sink(hybridServePqBatchWith(batch.sparkSession, dir,
-            batch.toDF().select("vec_id"), coarse, books))
-        }
-      }
-      .start())
+    val coarse = Clustering.loadCentroids(newQueries.sparkSession, PqHyCoarse)
+    val books = loadPqBooks(newQueries.sparkSession, PqHyBooks)
+    serveEachBatch(newQueries, dir) { b =>
+      sink(hybridServePqBatchWith(b.sparkSession, dir, b.select("vec_id"),
+        coarse, books))
+    }
   }
 
   // -------------------------------------------------------------------------
@@ -2366,18 +2219,12 @@ object Similarity {
       sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     // the query frame is generation-INdependent (only the models/tables
     // re-resolve per batch), so the one-per-stream pin applies here too
-    val pin = serveQueryFramePin(newQueries.sparkSession, dir)
-    unpinOnTermination(pin, newQueries.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val (t, c, b) = srTables(pqServeGenCurrent(s))
-          sink(hybridServePqBatchWith(s, dir, batch.toDF().select("vec_id"),
-            Clustering.loadCentroids(s, c), loadPqBooks(s, b), table = t))
-        }
-      }
-      .start())
+    serveEachBatch(newQueries, dir) { batch =>
+      val s = batch.sparkSession
+      val (t, c, b) = srTables(pqServeGenCurrent(s))
+      sink(hybridServePqBatchWith(s, dir, batch.select("vec_id"),
+        Clustering.loadCentroids(s, c), loadPqBooks(s, b), table = t))
+    }
   }
 
   /** Oracle for `stream_hybrid_serve_refresh`: the lexical leg is
@@ -2498,22 +2345,10 @@ object Similarity {
     */
   private[graft] def hybridServeBatch(spark: SparkSession, dir: String,
       querySet: DataFrame): DataFrame = {
-    import graft.operators.TextAnalysis
-    // lexical leg through the mass-query (DataFrame-native) index search:
-    // the arriving id set restricts the standard query frame by broadcast
-    // semi-join — identical rows to the literal-IN form by the
-    // txt_bm25_mass pin, with no driver round-trip on the id set
-    val lexQueries = TextAnalysis.bm25QueriesOf(TextAnalysis.bm25Corpus(spark, dir))
-      .join(broadcast(querySet.select(col("vec_id").as("query_id")).distinct()),
-        Seq("query_id"), "left_semi")
-    val lex = TextAnalysis.bm25SearchAgainstDf(spark, lexQueries)
-      .select(col("query_id"), col("doc_id"), col("rk").as("rk_lex"))
-    val sem = ivfAgainstCore(spark, dir, IvfIndexTable, NProbe,
-        queryStride = graft.operators.TextAnalysis.Bm25QueryStride,
-        includeSelf = true, querySet = Some(querySet))
-      .select(col("q_id").as("query_id"), col("neighbor_id").as("doc_id"),
-        col("rank").as("rk_sem"))
-    rrfFuse(lex, sem)
+    val sem = ivfLabelSearch(spark, dir, spark.table(IvfIndexTable), NProbe,
+      strided(TextAnalysis.Bm25QueryStride), includeSelf = true,
+      querySet = Some(querySet))
+    rrfFuse(lexLegFor(spark, dir, querySet), semLeg(sem))
   }
 
   /** Continuous hybrid serving: each micro-batch of arriving query ids
@@ -2525,35 +2360,29 @@ object Similarity {
     * [[graft.operators.TextAnalysis.perplexityStream]].
     */
   def hybridServeStream(newQueries: DataFrame, dir: String)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val pin = serveQueryFramePin(newQueries.sparkSession, dir)
-    unpinOnTermination(pin, newQueries.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          sink(hybridServeBatch(batch.sparkSession, dir, batch.toDF().select("vec_id")))
-        }
-      }
-      .start())
-  }
+      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+    serveEachBatch(newQueries, dir)(b =>
+      sink(hybridServeBatch(b.sparkSession, dir, b.select("vec_id"))))
 
-  /** Persist the standard lexical query frame ONCE at serve-stream start:
-    * it is corpus-derived but FROZEN for the stream's lifetime (the same
-    * frozen-input discipline as the model loads), and each micro-batch's
-    * lexical leg re-derives the identical subtree — without the pin every
+  /** A serve stream's [[eachBatch]] loop with the standard lexical query
+    * frame persisted ONCE at stream start: it is corpus-derived but FROZEN
+    * for the stream's lifetime (the same frozen-input discipline as the
+    * model loads), and each micro-batch's lexical leg re-derives the
+    * identical subtree — without the pin every
     * batch re-runs the strided corpus tokenize+explode; with it the
     * session-shared CacheManager substitutes the one materialization into
     * every batch's plan (cloned foreachBatch sessions share the cache at
     * the SharedState level). Query-set-scale (corpus/stride × ≤8 terms),
-    * never corpus-scale. Returns the persisted frame; each serve-stream
-    * starter hands it to [[unpinOnTermination]], so the pin lives exactly
-    * as long as its stream. Concurrent serve streams over one dir share the
-    * cache entry: the first to stop releases it, and the others recompute
-    * the frame per batch (same rows, the unpinned cost).
+    * never corpus-scale. [[unpinOnTermination]] releases the pin, so it
+    * lives exactly as long as its stream. Concurrent serve streams over one
+    * dir share the cache entry: the first to stop releases it, and the
+    * others recompute the frame per batch (same rows, the unpinned cost).
     */
-  private def serveQueryFramePin(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.TextAnalysis
-    TextAnalysis.bm25QueriesOf(TextAnalysis.bm25Corpus(spark, dir)).persist()
+  private def serveEachBatch(newQueries: DataFrame, dir: String)(
+      f: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+    val pin = TextAnalysis.bm25QueriesOf(
+      TextAnalysis.bm25Corpus(newQueries.sparkSession, dir)).persist()
+    unpinOnTermination(pin, eachBatch(newQueries)(f))
   }
 
   /** Unpersist `pin` when `q` terminates (stop or failure): a listener
@@ -2588,6 +2417,26 @@ object Similarity {
     // exactly like the IVF/PQ legs these fusions already ride.
     graft.operators.TextAnalysis.bm25Indexed(spark, dir)
       .select(col("query_id"), col("doc_id"), col("rk").as("rk_lex"))
+
+  /** The lexical leg for one arriving query batch, through the mass-query
+    * (DataFrame-native) index search: the id set restricts the standard
+    * query frame by broadcast semi-join — identical rows to the
+    * literal-IN form by the txt_bm25_mass pin, with no driver round-trip
+    * on the id set.
+    */
+  private def lexLegFor(spark: SparkSession, dir: String,
+      querySet: DataFrame): DataFrame = {
+    val lexQueries = TextAnalysis.bm25QueriesOf(TextAnalysis.bm25Corpus(spark, dir))
+      .join(broadcast(querySet.select(col("vec_id").as("query_id")).distinct()),
+        Seq("query_id"), "left_semi")
+    TextAnalysis.bm25SearchAgainstDf(spark, lexQueries)
+      .select(col("query_id"), col("doc_id"), col("rk").as("rk_lex"))
+  }
+
+  /** A (q_id, rank, neighbor_id) ranking as the fusion's semantic leg. */
+  private def semLeg(ranked: DataFrame): DataFrame =
+    ranked.select(col("q_id").as("query_id"), col("neighbor_id").as("doc_id"),
+      col("rank").as("rk_sem"))
 
   /** Reciprocal-rank fusion of two (query_id, doc_id, rank) tables —
     * parameterized over the semantic ranking so any ANN family member
@@ -2725,12 +2574,17 @@ object Similarity {
     * Both rankings are O(queries x k); the harness is the same generic
     * metric core every ANN family member evaluates through.
     */
-  def evalHybrid(spark: SparkSession, dir: String): DataFrame = {
+  def evalHybrid(spark: SparkSession, dir: String): DataFrame =
+    evalFused(spark, dir, hybridRrfIvf(spark, dir))
+
+  /** Recall@k / MRR of a fused (query_id, rk, doc_id) ranking against the
+    * exact fusion.
+    */
+  private def evalFused(spark: SparkSession, dir: String, fused: DataFrame): DataFrame = {
     def asRanking(df: DataFrame): DataFrame =
       df.select(col("query_id").as("q_id"), col("rk").as("rank"),
         col("doc_id").as("neighbor_id"))
-    evalCore(asRanking(hybridRrfIvf(spark, dir)),
-      asRanking(hybridRrf(spark, dir)))
+    evalCore(asRanking(fused), asRanking(hybridRrf(spark, dir)))
   }
 
   private[graft] def evalAgainstExact(spark: SparkSession, dir: String,
@@ -2745,7 +2599,8 @@ object Similarity {
   private[graft] def evalBatch(spark: SparkSession, dir: String,
       querySet: DataFrame): DataFrame = {
     val qs = Some(querySet)
-    evalCore(ivfTopkProbeSet(spark, dir, NProbe, qs),
+    evalCore(ivfLabelSearch(spark, dir, withNorm(spark, dir), NProbe,
+        strided(20), includeSelf = false, querySet = qs),
       topkBruteforceSet(spark, dir, qs))
   }
 
@@ -2756,14 +2611,7 @@ object Similarity {
     */
   def evalStream(newQueries: DataFrame, dir: String)(
       sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    newQueries.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          sink(evalBatch(batch.sparkSession, dir, batch.toDF().select("vec_id")))
-        }
-      }
-      .start()
+    eachBatch(newQueries)(b => sink(evalBatch(b.sparkSession, dir, b.select("vec_id"))))
 
   private def evalCore(approxDf: DataFrame, exactDf: DataFrame): DataFrame = {
     val approx = approxDf.select("q_id", "rank", "neighbor_id")
@@ -2843,13 +2691,8 @@ object Similarity {
     * the certification a deployment reads before swapping the flat
     * index out for the RAM-bounded one.
     */
-  def evalHybridPq(spark: SparkSession, dir: String): DataFrame = {
-    def asRanking(df: DataFrame): DataFrame =
-      df.select(col("query_id").as("q_id"), col("rk").as("rank"),
-        col("doc_id").as("neighbor_id"))
-    evalCore(asRanking(hybridRrfPq(spark, dir)),
-      asRanking(hybridRrf(spark, dir)))
-  }
+  def evalHybridPq(spark: SparkSession, dir: String): DataFrame =
+    evalFused(spark, dir, hybridRrfPq(spark, dir))
 
   /** [[evalHybridOracle]] with the approx leg replaced by the full PQ
     * fusion replay ([[hybridRrfPqOracle]] riding as a nested WITH — its

@@ -1420,7 +1420,7 @@ object StreamGate {
 
   /** [[hybridServe]] on the COMPRESSED index: each arriving query batch
     * is answered from the frozen BM25 postings + the PQ code index
-    * ([[graft.operators.Similarity.hybridServePqBatch]] — ADC + bounded
+    * ([[graft.operators.Similarity.hybridServePqBatchWith]] — ADC + bounded
     * exact re-rank, both query restrictions broadcast semi-joins).
     * Per-query stateless + frozen models, so the emission union must
     * equal the batch PQ-served fusion (oracle: hybridRrfPqOracle) — the

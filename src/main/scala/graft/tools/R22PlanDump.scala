@@ -42,8 +42,8 @@ object R22PlanDump {
 
       // serve-stream lexical query frame: the per-batch subtree BEFORE the
       // pin re-runs the strided corpus tokenize (documents scan + explode);
-      // AFTER serveQueryFramePin the same subtree resolves to the one
-      // InMemoryRelation for every batch
+      // AFTER the serve loop pins it (Similarity.serveEachBatch) the same
+      // subtree resolves to the one InMemoryRelation for every batch
       val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
       import graft.operators.TextAnalysis
       def lexQueries() =

@@ -1125,6 +1125,22 @@ class OperatorsSpec extends SparkSpec {
     } finally { s2.sql("DROP TABLE IF EXISTS ivfkm_model_t"); () }
   }
 
+  test("IVF-kmeans serve over a fresh full-corpus index equals the search against its model") {
+    // stored list ids (the index) and inline assignment (the corpus dir)
+    // under one model must probe, score and rank identically
+    val (table, model) = ("ivfkm_serve_t", "ivfkm_serve_model_t")
+    dropTables(table, model)
+    try {
+      Similarity.buildKmeansIvf(spark,
+        graft.core.Tables.load(spark, Sf0001, "embeddings").select("vec_id", "embedding"),
+        table, model)
+      val served = Similarity.ivfKmeansServe(spark, table, model).collect()
+      val searched = Similarity.ivfKmeansTopkAgainst(spark, Sf0001, model).collect()
+      assert(served.nonEmpty)
+      assert(served.toSeq === searched.toSeq)
+    } finally dropTables(table, model)
+  }
+
   test("NB fit/apply: classify against the persisted model equals inline training; re-persist is free") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val s2 = spark.newSession()

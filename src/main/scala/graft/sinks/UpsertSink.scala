@@ -164,7 +164,8 @@ class ParquetUpsertSink(val path: String, val keyFields: Seq[String],
 
   private def keyCol(df: DataFrame) = KeyCodec.column(df, keyFields)
 
-  private def bucketed(df: DataFrame): DataFrame =
+  /** `df` with the `bucket` column this sink places each row under. */
+  private[graft] def bucketed(df: DataFrame): DataFrame =
     df.withColumn("bucket", pmod(hash(keyCol(df)), lit(nBuckets)))
 
   /** Bucket ids the rows of `keyed` hash into — the ONLY lake buckets an
@@ -188,6 +189,14 @@ class ParquetUpsertSink(val path: String, val keyFields: Seq[String],
     // the lake is rewritten by directory rename under the same paths —
     // drop any cached listing before re-listing (snapshot's contract)
     spark.catalog.refreshByPath(path)
+    readDirs(spark, ids, dataSchema)
+  }
+
+  // live (or bak) dirs of the given buckets, read as one scan with the
+  // schema declared explicitly — no footer inference, so a previously-
+  // emptied bucket's file-less dir reads as zero rows
+  private def readDirs(spark: org.apache.spark.sql.SparkSession, ids: Seq[Int],
+      dataSchema: org.apache.spark.sql.types.StructType): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dirs =
@@ -207,18 +216,12 @@ class ParquetUpsertSink(val path: String, val keyFields: Seq[String],
     * rows of every touched bucket are read in a single multi-dir scan, the
     * replace/delete anti-joins run on the KEY alone (equivalent to
     * per-bucket joins — a key's rows only ever live in the bucket the key
-    * hashes to), and one partitionBy("bucket") write stages every rewritten
-    * bucket under a tmp root. Only then does each bucket publish with pure
-    * filesystem renames. The per-bucket loop of read+merge+write jobs this
-    * replaces cost O(touched buckets) fixed job overheads per micro-batch —
-    * the dominant term of the streaming-gate wall clock at verify SF.
-    *
-    * Crash/retry safety per bucket is unchanged: the old contents are
-    * renamed ASIDE (`.bak-`) before the new dir renames in, and the read
-    * path consults the bak when the live dir is missing — so a crash or
-    * failed rename at ANY point leaves at least one complete copy of the
-    * previous rows, and a Spark batch retry reconverges. (Delete-then-
-    * rename would lose the bucket if the rename failed after the delete.)
+    * hashes to), and [[replaceBuckets]] stages every rewritten bucket
+    * under a tmp root in one write, then publishes each bucket with pure
+    * filesystem renames (crash-safe per bucket). The per-bucket loop of
+    * read+merge+write jobs this replaces cost O(touched buckets) fixed job
+    * overheads per micro-batch — the dominant term of the streaming-gate
+    * wall clock at verify SF.
     */
   def upsert(batch: DataFrame, deletes: DataFrame = null): Unit = {
     // persist: the touched-bucket collects and the merge job both read
@@ -268,35 +271,23 @@ class ParquetUpsertSink(val path: String, val keyFields: Seq[String],
   }
 
   /** Shared merge core: anti-join the touched buckets' current rows
-    * against the batch's keys, union the batch, drop deletes, stage under
-    * a tmp root, publish per bucket with crash-safe renames. `old = None`
-    * reads the touched buckets here (the plain-[[upsert]] path);
-    * `Some(rows)` reuses a caller-provided (persisted) read.
+    * against the batch's keys, union the batch, drop deletes, and
+    * [[replaceBuckets]] with the result. `old = None` reads the touched
+    * buckets here (the plain-[[upsert]] path); `Some(rows)` reuses a
+    * caller-provided (persisted) read.
     */
   private def mergeInto(b: DataFrame, delKeys: Option[DataFrame],
       touched: Seq[Int], old: Option[DataFrame]): Unit = {
     if (touched.isEmpty) return
-    val spark = b.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dataSchema = org.apache.spark.sql.types.StructType(
       b.schema.fields.filterNot(_.name == "bucket"))
-    // live (or bak) dirs of the touched buckets, read as one scan with
-    // the batch's schema declared explicitly — no footer inference, so
-    // a previously-emptied bucket's file-less dir reads as zero rows
-    val oldRows = old.getOrElse {
-      val dirs = touched.flatMap(bk =>
-        DirPublish.readable(fs, new org.apache.hadoop.fs.Path(root, s"bucket=$bk"))
-          .map(_.toString))
-      if (dirs.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], dataSchema)
-      else spark.read.schema(dataSchema).parquet(dirs: _*)
-    }
+    val oldRows = old.getOrElse(readDirs(b.sparkSession, touched, dataSchema))
     // bucket is recomputed from the key — the same pmod(hash) that
-    // placed the row at write time, so placement never drifts
+    // placed the row at write time, so placement never drifts. The
+    // anti-join's result does not depend on duplicate keys on its right
+    // side, so the batch's keys need no distinct (and no shuffle for it).
     val oldB = bucketed(oldRows).select(b.columns.map(col).toIndexedSeq: _*)
-    val replaced = b.select(keyCol(b).as("_k")).distinct()
-    val merged = oldB.join(replaced, keyCol(oldB) === col("_k"), "left_anti")
+    val merged = oldB.join(b.select(keyCol(b).as("_k")), keyCol(oldB) === col("_k"), "left_anti")
       .unionByName(b)
     val afterDeletes = delKeys match {
       case Some(dk) =>
@@ -304,12 +295,37 @@ class ParquetUpsertSink(val path: String, val keyFields: Seq[String],
           keyCol(merged) === col("_del_key"), "left_anti")
       case None => merged
     }
+    replaceBuckets(afterDeletes.drop("bucket"), touched)
+  }
+
+  /** Replace the whole contents of the `touched` buckets with `rows`
+    * (data columns only; each row goes to the bucket its key hashes to).
+    * A touched bucket no row hashes to is published empty — the delete
+    * path of a bucket whose last key leaves.
+    *
+    * One job stages every bucket under a tmp root through a hash
+    * repartition on the bucket, so each bucket is written by ONE task as
+    * ONE file, whatever the core count (a plain partitioned write stages
+    * a file per write task per bucket). Only then does each bucket
+    * publish with pure filesystem renames. Crash/retry safety per bucket:
+    * the old contents are renamed ASIDE (`.bak-`) before the new dir
+    * renames in, and the read path consults the bak when the live dir is
+    * missing — so a crash or failed rename at ANY point leaves at least
+    * one complete copy of the previous rows, and a retry reconverges.
+    * (Delete-then-rename would lose the bucket if the rename failed after
+    * the delete.)
+    */
+  private[graft] def replaceBuckets(rows: DataFrame, touched: Seq[Int]): Unit = {
+    if (touched.isEmpty) return
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration)
     val tmpRoot = new org.apache.hadoop.fs.Path(root, ".tmp-upsert")
     fs.delete(tmpRoot, true) // leftovers of a crashed previous attempt
-    afterDeletes.write.partitionBy("bucket").mode("overwrite")
+    bucketed(rows).repartition(col("bucket"))
+      .write.partitionBy("bucket").mode("overwrite")
       .parquet(tmpRoot.toString)
     // only touched buckets publish: a staged bucket outside that set (a
-    // caller's `touched` missing one of the batch's buckets) would vanish
+    // caller's `touched` missing one of the rows' buckets) would vanish
     // with the tmp root. Refuse before the first publish, lake unchanged.
     val stray = fs.listStatus(tmpRoot).map(_.getPath.getName)
       .collect { case n if n.startsWith("bucket=") => n.stripPrefix("bucket=").toInt }

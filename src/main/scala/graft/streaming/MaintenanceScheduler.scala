@@ -79,6 +79,13 @@ final class MaintenanceScheduler {
     * entry that processed rows between the quiesce and the end of the
     * triggers fails the window loudly rather than letting a racing batch
     * silently interleave with a DROP+RENAME.
+    *
+    * An ABORTED window keeps what it logged. A tripped fence throws after
+    * all of the window's decisions are logged; a throwing policy aborts
+    * before the window logs anything, so that window has no decisions.
+    * The window number is spent either way, so a caller that retries logs
+    * the retry's decisions under the NEXT window number — after a tripped
+    * fence, [[decisions]] holds both attempts, told apart by `window`.
     */
   def maintenanceWindow(writers: StreamingQuery*): Seq[Decision] =
     synchronized {
@@ -111,6 +118,10 @@ final class MaintenanceScheduler {
       ds
     }
 
-  /** Every decision taken so far, in execution order. */
+  /** Every decision logged so far, in execution order — including those of
+    * windows aborted by a tripped fence; a retried window's decisions
+    * appear once per logged attempt, each under its own window number
+    * (see [[maintenanceWindow]]).
+    */
   def decisions: Seq[Decision] = synchronized { log.toList }
 }

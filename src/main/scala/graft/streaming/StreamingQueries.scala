@@ -663,51 +663,48 @@ class LakeRetractStream(root: String, keyFields: Seq[String],
   * Level 1 (cell -> dept_cnt) is materialized in a [[graft.sinks.ParquetUpsertSink]]
   * lake under the checkpoint; level 2 (dept_cnt -> cnt_freq) lands in the
   * caller's sink. Each update-mode micro-batch delivers the changed
-  * (cell, dept_cnt) pairs as a DataFrame; the batch path is three
-  * declarative steps, every one a distributed plan:
+  * (cell, dept_cnt) pairs as a DataFrame, and the steady-state batch is a
+  * RETRACTION DELTA, the Flink cascade's own update rule
+  * (ElasticUpsertTableSink.scala:144-146):
   *
-  *  1. join the batch against the level-1 lake to find each changed cell's
-  *     OLD count — the union of old and new counts is the set of histogram
-  *     buckets this batch can touch (the Flink retraction targets,
-  *     ElasticUpsertTableSink.scala:144-146);
-  *  2. upsert the batch into the level-1 lake (touched-bucket parquet merge);
-  *  3. recompute cnt_freq for the touched buckets from the NEW level-1
-  *     lake (groupBy(dept_cnt).count restricted to touched) and upsert the
-  *     results; a touched bucket with no remaining cells becomes a delete —
-  *     the (false, row) path of the reference sink contract.
+  *  1. one full-outer join of the touched level-1 buckets with the batch
+  *     on `cell` gives every changed cell's OLD and NEW count;
+  *  2. the histogram delta — -1 at each old count, +1 at each new count,
+  *     summed by dept_cnt — is the only driver collect besides the bucket
+  *     probe: at most [[TouchedCap]] + 1 (dept_cnt, delta, level-2 bucket)
+  *     rows, keyed by COUNT VALUES (the histogram's domain, concentrated
+  *     small integers), never by cells;
+  *  3. the same join rewrites the touched level-1 buckets
+  *     (`coalesce(new, old)`);
+  *  4. one full-outer join of the touched level-2 buckets with the delta
+  *     rewrites those buckets; the delta's keys are the changelog: upserts
+  *     where the new frequency is above 0, deletes — the (false, row) path
+  *     of the reference sink contract — where it is 0. A frequency that
+  *     would go negative fails the batch loudly before the level-2 publish.
   *
-  * Recomputing touched buckets from level-1 truth (instead of applying
-  * +/-1 deltas to the stored histogram) is what makes replay after ANY
-  * crash converge: a torn attempt leaves the lakes in some intermediate
-  * state, and the retry re-derives every possibly-affected bucket from the
-  * current level-1 lake, which the idempotent level-1 upsert first brings
-  * up to date. Delta-apply would double-count on exactly those replays
-  * without a transactional table format underneath. The price is one extra
-  * distributed scan of the level-1 lake per batch — bounded by live-cell
-  * cardinality (the 250x400 NYC grid), not by data volume, and embarrassingly
-  * parallel; at 1000 executors it is noise next to the level-1 agg itself.
+  * Neither lake is ever scanned whole on this path. The level-2 histogram
+  * is RECOMPUTED from the level-1 lake (groupBy(dept_cnt).count over the
+  * touched keys, or everything) only to recover: when a replay marker
+  * survives, or when the delta has more than [[TouchedCap]] keys.
   *
-  * The only driver-side values are the touched bucket IDS — distinct COUNT
-  * VALUES (the histogram's domain, concentrated small integers), not
-  * changed cells — and above [[TouchedCap]] even those stay distributed:
-  * the batch falls back to recomputing the full histogram with deletes
-  * derived by anti-join (still no driver materialization).
-  *
-  * Crash protocol: the touched-bucket set is published to a marker file
-  * BEFORE any lake mutation; a replayed batch unions all surviving markers
-  * into its own touched set (a marker is only deleted after the level-2
-  * recompute for its buckets completed, at which point lakes agree with
-  * level-1 truth). The window this closes: level-1 already upserted, crash
-  * before level-2 recompute — on replay old == new, so the batch alone
-  * would never revisit the OLD bucket, and its frequency would stay stale
-  * forever.
+  * Crash protocol: the touched key set is published to a marker file
+  * BEFORE any lake mutation, and markers are deleted only after the
+  * level-2 publish for their keys completed — so with no surviving marker
+  * the two lakes agree. That is why the delta is idempotent: a batch
+  * replayed after the markers were cleared reads old == new for every
+  * changed cell, gets an all-zero delta and rewrites the same rows. A
+  * torn attempt (say, level 1 upserted, crash before level 2) leaves its
+  * marker behind; the retry then unions all surviving markers into its
+  * own touched set and re-derives those keys from level-1 truth — on
+  * replay old == new, so the batch alone would never revisit the OLD key,
+  * and its frequency would stay stale forever.
   */
 object CascadeQ4 {
   import graft.sinks.ParquetUpsertSink
 
   /** Reference single-update merge semantics (retract old bucket, add new),
-    * exposed for the changelog-replay spec; the distributed path achieves
-    * the same result by recomputation.
+    * exposed for the changelog-replay spec; [[applyBatch]] applies the same
+    * rule to a whole micro-batch at once.
     */
   def applyUpdate(cellCounts: TrieMap[Int, Long], histogram: TrieMap[Long, Long],
                   cell: Int, newCnt: Long): Unit = {
@@ -720,14 +717,19 @@ object CascadeQ4 {
     histogram.put(newCnt, histogram.getOrElse(newCnt, 0L) + 1L)
   }
 
-  /** Driver-side cap on the touched-bucket ID list; beyond it the batch
-    * recomputes the whole histogram distributively instead.
+  /** Driver-side cap on the collected histogram delta (one row per touched
+    * dept_cnt); beyond it the batch recomputes the whole histogram
+    * distributively instead.
     */
   private[streaming] val TouchedCap = 10000
 
   private val Level1Schema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("cell", org.apache.spark.sql.types.IntegerType),
     org.apache.spark.sql.types.StructField("dept_cnt", org.apache.spark.sql.types.LongType)))
+
+  private val Level2Schema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("dept_cnt", org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("cnt_freq", org.apache.spark.sql.types.LongType)))
 
   private def markerDir(checkpoint: String) =
     new org.apache.hadoop.fs.Path(checkpoint, "graft-cascade-markers")
@@ -745,7 +747,7 @@ object CascadeQ4 {
   // marker in place (delete + rename) would open a window with NO marker on
   // disk, and a crash there permanently reopens the stale-bucket divergence
   // this protocol exists to close. Attempts accumulate only until the
-  // batch's level-2 recompute completes (clearMarkers); readMarkers unions
+  // batch's level-2 publish completes (clearMarkers); readMarkers unions
   // whatever survives.
 
   private[graft] def writeMarker(fs: org.apache.hadoop.fs.FileSystem,
@@ -786,7 +788,12 @@ object CascadeQ4 {
     }
 
   /** One micro-batch of the distributed cascade (factored out for direct
-    * spec coverage of the crash/replay protocol).
+    * spec coverage of the crash/replay protocol). `batch` holds one
+    * (cell, dept_cnt) row per changed cell, as the update-mode level-1
+    * aggregation emits. The steady state applies the histogram delta to
+    * the touched level-2 buckets; a surviving marker or a delta over
+    * [[TouchedCap]] keys recomputes from the level-1 lake instead (see the
+    * object doc for why the delta is idempotent).
     */
   private[graft] def applyBatch(level1: ParquetUpsertSink, level2: ParquetUpsertSink,
                                     markers: org.apache.hadoop.fs.Path,
@@ -796,76 +803,125 @@ object CascadeQ4 {
     val spark = batch.sparkSession
     import spark.implicits._
     val fs = markers.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // every plan below references this cache ONCE: a plan that references
+    // a cached frame twice (a self-union or self-join) recomputes one leg
+    // from its source although the cache is full — here, re-running the
+    // level-1 aggregation and its state commit
     val changed = batch
-      .select(col("cell").cast("int").as("cell"), col("dept_cnt").cast("long").as("dept_cnt"))
+      .select(col("cell").cast("int").as("cell"), col("dept_cnt").cast("long").as("new_cnt"))
       .persist()
     try {
-      // 1. touched buckets = old counts of changed cells (pre-mutation lake)
-      //    UNION new counts UNION any surviving marker's buckets (torn attempt).
-      //    A changed cell's old count lives ONLY in the level-1 state bucket
-      //    the cell hashes to, so the probe reads the TOUCHED buckets, never
-      //    the whole lake — and the same pre-mutation read feeds step 2's
-      //    merge. The limit sits after the distinct's shuffle, whose map
-      //    stage runs one task per l1Before partition, so the probe caches
-      //    ALL of l1Before before the limit applies (checked: an 8-task map
-      //    stage over 4 l1Before + 4 batch partitions, 4/4 cached) and step
-      //    2 reads these buckets from that cache, not from disk again.
+      // A changed cell's old count lives ONLY in the level-1 bucket the
+      // cell hashes to, so one join of the TOUCHED buckets with the batch
+      // gives each cell's old and new count — never a whole-lake scan.
       val touchedBk = level1.bucketIdsOf(changed)
-      val l1Before = level1.readBuckets(spark, touchedBk, Level1Schema).persist()
-      val touched: Option[Seq[Long]] =
-        try {
-          val fromBatch = l1Before.join(changed.select("cell"), "cell")
-            .select(col("dept_cnt"))
-            .union(changed.select(col("dept_cnt")))
-            .distinct()
-            .limit(TouchedCap + 1)
-            .as[Long].collect().toSeq
-          val t: Option[Seq[Long]] =
-            if (fromBatch.length > TouchedCap) None
-            else readMarkers(fs, markers).map(m => (fromBatch ++ m).distinct)
-          writeMarker(fs, markers, batchId, t) // BEFORE any lake mutation
-          // 2. level-1 lake absorbs the batch (idempotent on replay)
-          level1.upsertPrepared(changed, null, touchedBk, l1Before)
-          t
-        } finally { l1Before.unpersist(); () }
-      // 3. recompute touched buckets from the new level-1 truth
-      val freshAll = level1Snapshot(spark, level1, fs)
-        .groupBy("dept_cnt").agg(count(lit(1)).as("cnt_freq"))
-      touched match {
-        case Some(buckets) =>
-          val touchedDf = buckets.toDF("dept_cnt")
-          val fresh = freshAll.join(broadcast(touchedDf), "dept_cnt").persist()
-          val dels = touchedDf.join(fresh.select("dept_cnt"), Seq("dept_cnt"), "left_anti")
-            .withColumn("cnt_freq", lit(0L))
-          try {
-            level2.upsert(fresh, dels)
-            // the same (fresh, dels) changelog IS the reference's Elastic
-            // upsert/delete stream; replay after a crash re-sends full
-            // documents, which the keyed store absorbs idempotently
-            if (mirror != null) mirror.applyChangelog(fresh, dels)
-            // ... and the same changelog retract-encodes: delete =
-            // retract-without-add (the mirror's own (false, row) path)
-            if (retract != null) retract.onChangelog(fresh, dels, batchId)
-          } finally { fresh.unpersist(); () }
-        case None =>
-          // histogram domain too wide for a driver-side id list: recompute
-          // everything; deletes = lake keys with no surviving bucket
-          val existing =
-            if (fs.exists(new org.apache.hadoop.fs.Path(level2.path))) level2.snapshot(spark)
-            else null
-          val dels = Option(existing).map(_.select("dept_cnt")
-            .join(freshAll.select("dept_cnt"), Seq("dept_cnt"), "left_anti")
-            .withColumn("cnt_freq", lit(0L))).orNull
-          level2.upsert(freshAll, dels)
-          if (mirror != null) mirror.applyChangelog(freshAll, dels)
-          if (retract != null) retract.onChangelog(freshAll, dels, batchId)
-      }
-      // lakes now agree with level-1 truth for every marked bucket
+      val cells = level1.readBuckets(spark, touchedBk, Level1Schema)
+        .withColumnRenamed("dept_cnt", "old_cnt")
+        .join(changed, Seq("cell"), "full_outer")
+        .persist()
+      try {
+        // histogram delta: -1 at each changed cell's old count, +1 at its
+        // new one; its keys are the touched level-2 keys (old UNION new)
+        val moves = cells.where(col("new_cnt").isNotNull)
+          .select(explode(array(
+            struct(col("old_cnt").as("dept_cnt"), lit(-1L).as("d")),
+            struct(col("new_cnt").as("dept_cnt"), lit(1L).as("d")))).as("m"))
+          .where(col("m.dept_cnt").isNotNull)
+          .groupBy(col("m.dept_cnt").as("dept_cnt")).agg(sum(col("m.d")).as("d"))
+        val delta = level2.bucketed(moves).limit(TouchedCap + 1)
+          .as[(Long, Long, Int)].collect().toSeq
+        val surviving = readMarkers(fs, markers)
+        val touched: Option[Seq[Long]] =
+          if (delta.length > TouchedCap) None
+          else surviving.map(m => (delta.map(_._1) ++ m).distinct)
+        writeMarker(fs, markers, batchId, touched) // BEFORE any lake mutation
+        // level-1 lake absorbs the batch (idempotent on replay)
+        level1.replaceBuckets(cells.select(col("cell"),
+          coalesce(col("new_cnt"), col("old_cnt")).as("dept_cnt")), touchedBk)
+        if (surviving == Some(Nil) && touched.isDefined)
+          applyDelta(spark, level2, delta, batchId, mirror, retract)
+        else recompute(spark, level1, level2, fs, touched, batchId, mirror, retract)
+      } finally { cells.unpersist(); () }
+      // lakes now agree with level-1 truth for every marked key
       clearMarkers(fs, markers)
     } finally {
       changed.unpersist()
       ()
     }
+  }
+
+  /** Steady state: add `delta` ((dept_cnt, delta, level-2 bucket) rows)
+    * to the touched level-2 buckets and emit the delta's keys as the
+    * changelog.
+    */
+  private def applyDelta(spark: SparkSession, level2: ParquetUpsertSink,
+      delta: Seq[(Long, Long, Int)], batchId: Long,
+      mirror: NetworkUpsertSink, retract: LakeRetractStream): Unit = {
+    import spark.implicits._
+    val buckets = delta.map(_._3).distinct
+    val freq = coalesce(col("cnt_freq"), lit(0L)) + coalesce(col("d"), lit(0L))
+    val next = level2.readBuckets(spark, buckets, Level2Schema)
+      .join(delta.map(r => (r._1, r._2)).toDF("dept_cnt", "d"), Seq("dept_cnt"), "full_outer")
+      .select(col("dept_cnt"),
+        // the lakes disagree (a lost marker or a hand edit): fail before
+        // the level-2 publish, so the marker survives and the retry
+        // recomputes these keys from level-1 truth
+        when(freq < 0, raise_error(concat(lit("cascade level 2: negative cnt_freq for dept_cnt "),
+          col("dept_cnt").cast("string")))).otherwise(freq).as("cnt_freq"),
+        col("d").isNotNull.as("in_delta"))
+      .persist()
+    try {
+      level2.replaceBuckets(next.where(col("cnt_freq") > 0).select("dept_cnt", "cnt_freq"), buckets)
+      val keys = next.where(col("in_delta"))
+      val ups = keys.where(col("cnt_freq") > 0).select("dept_cnt", "cnt_freq")
+      val dels = keys.where(col("cnt_freq") === 0).select("dept_cnt", "cnt_freq")
+      emit(ups, dels, batchId, mirror, retract)
+    } finally { next.unpersist(); () }
+  }
+
+  /** Recovery: recompute the `touched` keys (None = all) of the histogram
+    * from the level-1 lake and upsert them, deleting keys with no cell.
+    */
+  private def recompute(spark: SparkSession, level1: ParquetUpsertSink,
+      level2: ParquetUpsertSink, fs: org.apache.hadoop.fs.FileSystem,
+      touched: Option[Seq[Long]], batchId: Long,
+      mirror: NetworkUpsertSink, retract: LakeRetractStream): Unit = {
+    import spark.implicits._
+    val freshAll = level1Snapshot(spark, level1, fs)
+      .groupBy("dept_cnt").agg(count(lit(1)).as("cnt_freq"))
+    touched match {
+      case Some(keys) =>
+        val touchedDf = keys.toDF("dept_cnt")
+        val fresh = freshAll.join(broadcast(touchedDf), "dept_cnt").persist()
+        val dels = touchedDf.join(fresh.select("dept_cnt"), Seq("dept_cnt"), "left_anti")
+          .withColumn("cnt_freq", lit(0L))
+        try {
+          level2.upsert(fresh, dels)
+          emit(fresh, dels, batchId, mirror, retract)
+        } finally { fresh.unpersist(); () }
+      case None =>
+        // histogram domain too wide for a driver-side id list: recompute
+        // everything; deletes = lake keys with no surviving bucket
+        val existing =
+          if (fs.exists(new org.apache.hadoop.fs.Path(level2.path))) level2.snapshot(spark)
+          else null
+        val dels = Option(existing).map(_.select("dept_cnt")
+          .join(freshAll.select("dept_cnt"), Seq("dept_cnt"), "left_anti")
+          .withColumn("cnt_freq", lit(0L))).orNull
+        level2.upsert(freshAll, dels)
+        emit(freshAll, dels, batchId, mirror, retract)
+    }
+  }
+
+  // the level-2 (upserts, deletes) changelog IS the reference's Elastic
+  // upsert/delete stream; replay after a crash re-sends full documents,
+  // which the keyed store absorbs idempotently — and the same changelog
+  // retract-encodes: delete = retract-without-add (the mirror's own
+  // (false, row) path)
+  private def emit(ups: DataFrame, dels: DataFrame, batchId: Long,
+      mirror: NetworkUpsertSink, retract: LakeRetractStream): Unit = {
+    if (mirror != null) mirror.applyChangelog(ups, dels)
+    if (retract != null) retract.onChangelog(ups, dels, batchId)
   }
 
   /** Start the full streaming cascade: level-1 update-mode agg ->

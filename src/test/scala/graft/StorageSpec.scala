@@ -401,6 +401,24 @@ class StorageSpec extends SparkSpec {
     assert(sink.snapshot(spark).as[(Int, Long)].collect().toSet === before)
   }
 
+  test("an upsert leaves exactly one parquet file in each bucket it touches") {
+    import spark.implicits._
+    import graft.sinks.ParquetUpsertSink
+    val path = Files.createTempDirectory("pqsinkfiles").toString + "/store"
+    val sink = new ParquetUpsertSink(path, Seq("cell"), nBuckets = 8)
+    def files(bk: Int): Int = new java.io.File(path, s"bucket=$bk").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    // spread over 8 input partitions, each holding keys of every bucket
+    sink.upsert((0 until 64).map(i => (i, i.toLong)).toDF("cell", "cnt").repartition(8))
+    assert((0 until 8).map(files) === Seq.fill(8)(1))
+    val batch = Seq((1, 101L), (2, 102L), (3, 103L), (100, 100L)).toDF("cell", "cnt").repartition(4)
+    val bks = sink.bucketIdsOf(batch)
+    assert(bks.size > 1 && bks.size < 8, s"fixture vacuous: $bks")
+    sink.upsert(batch, deletes = Seq((9, 0L)).toDF("cell", "cnt"))
+    assert((0 until 8).map(files) === Seq.fill(8)(1))
+    assert(sink.snapshot(spark).count() === 64L)
+  }
+
   test("binaryFile source ingests raw media dirs into the decode seam") {
     import graft.operators.{Multimodal, DeterministicFakeDecoder}
     val dir = Files.createTempDirectory("media")

@@ -474,6 +474,103 @@ class StreamingSpec extends SparkSpec {
     assert(!fs.exists(markers) || fs.listStatus(markers).isEmpty)
   }
 
+  test("Q4 cascade runs the level-1 aggregation once per micro-batch") {
+    import graft.sinks.ParquetUpsertSink
+    import spark.implicits._
+    val input = MemoryStream[(Long, Boolean, Timestamp, Timestamp, Float, Float, Float, Float, Short)](spark)
+    val rides = input.toDF().toDF("rideId", "isStart", "startTime", "endTime",
+        "startLon", "startLat", "endLon", "endLat", "passengerCnt")
+      .withColumn("rowtime", when(col("isStart"), col("startTime")).otherwise(col("endTime")))
+    val sink = new ParquetUpsertSink(
+      Files.createTempDirectory("q4once").toString + "/hist", Seq("dept_cnt"), nBuckets = 4)
+    val ck = Files.createTempDirectory("q4onceck").toString
+    // batch 1: cells A and B at 1
+    input.addData(ride(1, "2013-01-01 00:01:00"), ride(2, "2013-01-01 00:02:00", lon = -73.90f))
+    CascadeQ4.startToParquet(rides, sink, ck).awaitTermination()
+    // batch 2: four rides change three cells (A -> 2, new C -> 2, new D -> 1)
+    input.addData(ride(3, "2013-01-01 00:03:00"),
+      ride(4, "2013-01-01 00:04:00", lon = -73.95f), ride(5, "2013-01-01 00:05:00", lon = -73.95f),
+      ride(6, "2013-01-01 00:06:00", lat = 40.70f))
+    val q = CascadeQ4.startToParquet(rides, sink, ck)
+    q.awaitTermination()
+    val ran = q.recentProgress.filter(_.numInputRows > 0)
+    assert(ran.length === 1, s"expected one data batch: ${ran.map(_.batchId).toSeq}")
+    // every re-execution of the aggregation adds the batch's updates again
+    assert(ran.last.stateOperators(0).numRowsUpdated === 3L,
+      "the level-1 aggregation ran more than once in the micro-batch")
+    assert(sink.snapshot(spark).as[(Long, Long)].collect().toMap === Map(2L -> 2L, 1L -> 2L))
+  }
+
+  test("Q4 cascade delta batches equal the recompute, replay idempotently, and fail loudly on a lake disagreement") {
+    import graft.sinks.{MemoryDocStore, NetworkUpsertSink, ParquetUpsertSink}
+    import spark.implicits._
+    val root = Files.createTempDirectory("q4delta").toString
+    val level1 = new ParquetUpsertSink(root + "/l1", Seq("cell"), nBuckets = 4)
+    val level2 = new ParquetUpsertSink(root + "/l2", Seq("dept_cnt"), nBuckets = 4)
+    val markers = new org.apache.hadoop.fs.Path(root, "markers")
+    val fs = markers.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val storeId = "q4-delta-mirror"
+    MemoryDocStore.clear(storeId)
+    val mirror = new NetworkUpsertSink(MemoryDocStore.Factory(storeId), Seq("dept_cnt"))
+    def lake(): Map[Long, Long] = level2.snapshot(spark).as[(Long, Long)].collect().toMap
+    def recomputed(): Map[Long, Long] = level1.snapshot(spark).groupBy("dept_cnt").count()
+      .as[(Long, Long)].collect().toMap
+    def mirrored(): Map[Long, Long] = MemoryDocStore.store(storeId).values
+      .map(d => d("dept_cnt").asInstanceOf[Long] -> d("cnt_freq").asInstanceOf[Long]).toMap
+    def noMarker(): Boolean = !fs.exists(markers) || fs.listStatus(markers).isEmpty
+    def emptyL2Buckets(): Int = new java.io.File(root, "l2").listFiles()
+      .count(d => d.getName.startsWith("bucket=") && !d.list().exists(_.endsWith(".parquet")))
+    // the driver-side reference: per-cell counts and their histogram
+    val counts = scala.collection.mutable.Map.empty[Int, Long]
+    def model(): Map[Long, Long] = counts.values.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
+    def apply(rows: Seq[(Int, Long)], batchId: Long): Unit =
+      CascadeQ4.applyBatch(level1, level2, markers, rows.toDF("cell", "dept_cnt"), batchId, mirror)
+
+    val rnd = new scala.util.Random(2026)
+    // random cells of 40 move between counts 1..6; batch 5 moves every
+    // cell to 9, emptying every other key and so the level-2 buckets that
+    // 9 does not hash to
+    val batches = (0 until 8).map { b =>
+      if (b == 5) (0 until 40).map(c => (c, 9L))
+      else rnd.shuffle((0 until 40).toList).take(5 + rnd.nextInt(20)).map(c => (c, 1L + rnd.nextInt(6)))
+    }
+    batches.zipWithIndex.foreach { case (rows, b) =>
+      apply(rows, b.toLong)
+      counts ++= rows
+      val want = model()
+      assert(noMarker(), s"batch $b left a marker")
+      assert(recomputed() === want, s"batch $b: level 1 diverged")
+      assert(lake() === want, s"batch $b: the level-2 delta diverged from the recompute")
+      assert(mirrored() === want, s"batch $b: the mirror diverged from the lake")
+      if (b == 5) assert(emptyL2Buckets() > 0, "fixture vacuous: no level-2 bucket emptied")
+      // the same batch again, markers cleared: old == new, all-zero delta
+      apply(rows, b.toLong)
+      assert(lake() === want && mirrored() === want, s"batch $b: the replay changed the lakes")
+    }
+
+    // lower one frequency by hand below what the next batch retracts
+    val (k, f) = lake().maxBy(_._2)
+    assert(f >= 2, s"fixture vacuous: max frequency $f")
+    level2.upsert(Seq((k, f - 1)).toDF("dept_cnt", "cnt_freq"))
+    val moveOut = counts.collect { case (c, n) if n == k => (c, 20L) }.toSeq
+    val e = intercept[Exception](apply(moveOut, 8L))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("negative cnt_freq")), e.toString)
+    assert(!noMarker(), "the failed batch must leave its marker")
+    assert(lake()(k) === f - 1, "level 2 published past the failure")
+    counts ++= moveOut // its level-1 publish went through before the failure
+
+    // the batch after it recovers by recompute from level-1 truth
+    val next = Seq((0, 30L), (1, 30L))
+    apply(next, 9L)
+    counts ++= next
+    assert(noMarker())
+    assert(recomputed() === model())
+    assert(lake() === model(), "the recompute did not heal level 2")
+    assert(mirrored() === model(), "the recompute did not heal the mirror")
+    MemoryDocStore.clear(storeId)
+  }
+
   test("streaming sliding window lands each departure in both overlapping windows") {
     val input = MemoryStream[(Long, Boolean, Timestamp, Timestamp, Float, Float, Float, Float, Short)](spark)
     val rides = input.toDF().toDF("rideId", "isStart", "startTime", "endTime",

@@ -28,10 +28,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * a contract the window VERIFIES by failing loudly if any writer
   * processed rows while the triggers ran; see [[maintenanceWindow]]).
   * Policies run
-  * in registration order, every decision is logged, and a policy that
-  * throws aborts the window — a half-run window is safe because every
-  * fold is individually atomic and idempotent, and the next window
-  * re-decides from the artifact state.
+  * in registration order, every decision is logged as its policy
+  * returns, and a policy that throws aborts the window after the
+  * decisions of the policies before it are logged — a half-run window is
+  * safe because every fold is individually atomic and idempotent, and the
+  * next window re-decides from the artifact state.
   *
   * Scale shape: a window's steady-state cost is the sum of the policies'
   * listings — metadata only. The scheduler adds no state of its own; all
@@ -80,11 +81,12 @@ final class MaintenanceScheduler {
     * triggers fails the window loudly rather than letting a racing batch
     * silently interleave with a DROP+RENAME.
     *
-    * An ABORTED window keeps what it logged. A tripped fence throws after
-    * all of the window's decisions are logged; a throwing policy aborts
-    * before the window logs anything, so that window has no decisions.
-    * The window number is spent either way, so a caller that retries logs
-    * the retry's decisions under the NEXT window number — after a tripped
+    * An ABORTED window keeps what it logged: each decision is logged as
+    * its policy returns. A tripped fence throws after all of the window's
+    * decisions are logged; a throwing policy aborts the window with the
+    * decisions of the policies that ran before it logged. The window
+    * number is spent either way, so a caller that retries logs the
+    * retry's decisions under the NEXT window number — after a tripped
     * fence, [[decisions]] holds both attempts, told apart by `window`.
     */
   def maintenanceWindow(writers: StreamingQuery*): Seq[Decision] =
@@ -95,14 +97,16 @@ final class MaintenanceScheduler {
         w -> Option(w.lastProgress).map(_.batchId).getOrElse(-1L))
       windows += 1
       val w = windows
+      // log each decision as its policy returns, so neither a later
+      // throwing policy nor a tripped fence (r21 ADVICE: that window's
+      // decisions are what the operator needs to diagnose the race)
+      // discards the decisions already made
       val ds = policies.toList.map { case (name, trigger) =>
         val (measure, fired) = trigger()
-        Decision(w, name, measure, fired)
+        val d = Decision(w, name, measure, fired)
+        log += d
+        d
       }
-      // log BEFORE the fence check (r21 ADVICE): a tripped fence is exactly
-      // the window whose trigger decisions the operator needs when
-      // diagnosing the detected race — throwing first would discard them
-      log ++= ds
       fence.foreach { case (wr, b0) =>
         // no-data batches (watermark bookkeeping) are tolerated; a batch
         // that PROCESSED ROWS ran concurrently with a possible rewrite

@@ -1,11 +1,16 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.sql.Timestamp
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StructField, StructType}
 import graft.core.Tables
 import graft.sinks.{MemoryDocStore, MemoryUpsertSink, NetworkUpsertSink, ParquetUpsertSink}
 import graft.sources.Rides
@@ -29,12 +34,14 @@ import graft.sources.Rides
   * sentinel row advances it and is excluded from the returned table —
   * the same technique StreamingSpec uses.
   *
-  * Every gate returns a result MATERIALIZED into the driver (bounded by
-  * the verify-SF result size) and deletes its checkpoint/lake temp dirs
-  * before returning; staged replay chunks are SHARED across gates and
-  * runs via [[replayCached]] (one copy per logical input per JVM, deleted
-  * at exit) — repeated bench runs must not accumulate staged table copies
-  * in /tmp or pin memory-sink tables for the session's life.
+  * Every gate runs inside [[gate]], which owns its scratch dirs, scratch
+  * tables, memory-sink views and session-conf scope and releases all of
+  * them whether the body returns or throws; the result is MATERIALIZED
+  * into the driver first (bounded by the verify-SF result size). Staged
+  * replay chunks are SHARED across gates and runs via [[stage]] (one copy
+  * per logical input per JVM, deleted at exit) — repeated bench runs must
+  * not accumulate staged table copies in /tmp or pin memory-sink tables
+  * for the session's life.
   *
   * This object is verification scaffolding bounded by the verify SF
   * (single-file chunk writes, driver-side min/max scalars); the operators
@@ -47,6 +54,27 @@ object StreamGate {
     * accumulation without dominating verify wall-clock.
     */
   val Chunks = 6
+
+  /** State and shuffle width of every gate scope. Every stateful operator
+    * instantiates one state store PER shuffle partition, and each store
+    * pays a fixed commit cost PER MICRO-BATCH (delta file + CRC + fsync;
+    * a stream-stream join carries four stores per partition) — measured
+    * ~100 ms/store/batch on this box, so a zero-row micro-batch at the
+    * session default of 32 partitions burned 3.7 s of pure commit
+    * overhead and q8's replay ran 36 s vs 8.6 s at width 8. Sizing state
+    * partitions to the workload is a first-class streaming knob, not a
+    * harness hack: in a real deployment the width is frozen into the
+    * checkpoint at first start and must be chosen for the state volume,
+    * while the batch default serves scans and joins. Re-probed across the
+    * FULL 29-gate set at sf0.1 (r15, shm scratch): width 8 = 117.5 s,
+    * width 4 = 108.6 s, with the state-heaviest gates (q8 pair join's 4
+    * stores/partition, the OVER buffers, funnel, bm25 ingest) gaining
+    * 15-30% and every regression inside the box's ±25 % noise band; the
+    * 20x dedup_events probe measured 33.4 s steady at width 4 vs width 8's
+    * 32.7 s — per-row state insertion, not partition width (README scale
+    * notes carry the full table).
+    */
+  private val Width = 4
 
   /** Scratch root for gate checkpoints, lakes, and staged replay chunks.
     * Micro-batch commit machinery writes MANY small files per batch
@@ -62,17 +90,17 @@ object StreamGate {
     * identical either way. SPARK_GRAFT_GATE_SCRATCH overrides (e.g. to
     * force disk when measuring the IO cost itself).
     */
-  private val scratchRoot: Path = {
+  private[graft] val scratchRoot: Path = {
     val chosen = sys.env.get("SPARK_GRAFT_GATE_SCRATCH")
-      .map(java.nio.file.Paths.get(_))
-      .orElse(Some(java.nio.file.Paths.get("/dev/shm"))
+      .map(Paths.get(_))
+      .orElse(Some(Paths.get("/dev/shm"))
         .filter(p => Files.isDirectory(p) && Files.isWritable(p)))
     chosen match {
       case Some(base) =>
         val d = base.resolve("graft-gate-scratch")
         Files.createDirectories(d)
         d
-      case None => java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+      case None => Paths.get(System.getProperty("java.io.tmpdir"))
     }
   }
 
@@ -83,7 +111,6 @@ object StreamGate {
 
   private def rmrf(p: Path): Unit = {
     if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
       val walk = Files.walk(p)
       try walk.iterator().asScala.toSeq.reverse.foreach(x => Files.deleteIfExists(x))
       finally walk.close()
@@ -94,101 +121,275 @@ object StreamGate {
   /** Pin a result into driver memory so it survives the deletion of the
     * temp dirs / memory-sink tables it was computed from.
     */
-  private def materialize(df: DataFrame): DataFrame = {
-    import scala.jdk.CollectionConverters._
+  private def materialize(df: DataFrame): DataFrame =
     df.sparkSession.createDataFrame(df.collect().toList.asJava, df.schema)
+
+  /** Run `body` with `conf` set on the session, restoring every prior
+    * value (or its absence) even on failure.
+    *
+    * SINGLE-QUERY ASSUMPTION: the mutation is session-global for the
+    * body's duration. Verify/Bench run gates strictly sequentially, which
+    * is what makes this safe — a concurrently executing query in the same
+    * session would silently run at the gate's settings. If gates are ever
+    * parallelized, give each its own `spark.newSession()`.
+    */
+  private def withConf[T](spark: SparkSession, conf: Seq[(String, String)])(body: => T): T = {
+    val prior = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
-  /** Split `df` into `chunks` files by range of the (monotone, long)
-    * `orderMs` expression under a fresh temp dir and return a streaming
-    * DataFrame replaying them one file per micro-batch, lowest range
-    * first, plus the temp root the caller must delete after the run. For
-    * event-time inputs pass `unix_millis(rowtime)`; for unordered corpora
-    * any stable key (e.g. doc_id) works.
+  /** The session conf a gate's streaming drive runs under ([[Gate.scope]]).
+    * The shuffle width is sized to the gate workload: the cascade's
+    * micro-batches move a ~5-key histogram through ~6 fixed actions per
+    * batch; at the session default of 32 every one of them pays 32
+    * shuffle tasks AND 32 state-store instances per stateful operator —
+    * pure per-task overhead at verify SF. Sizing shuffle partitions to the
+    * data is exactly what a real deployment does (the operators are
+    * partition-count agnostic: hash-agg/join results don't depend on it).
+    * Two more knobs follow the same workload-sizing call (r22
+    * A/B-measured per knob on the same box/load):
+    *  - leafNodeDefaultParallelism: materialize()'s local-rows parents,
+    *    per-batch literal frames (touched-bucket lists, empty-lake
+    *    stand-ins) and limit/collect scaffolds otherwise each launch 32
+    *    near-empty leaf tasks per action (core-count-derived); sized to
+    *    the gate width for EVERY scoped gate (probe: stream_ingest_admit
+    *    11.9->9.2 s, stream_q4_net_sink 8.8->7.1 s vs the
+    *    minPartitionNum-scoped leg).
+    *  - files.minPartitionNum ([[Narrow]] only): the retract/lake
+    *    protocol gates re-read small bucket/log files every batch and in
+    *    their post-stream audit folds; the session default of
+    *    minPartitionNum = defaultParallelism splits those KB-scale reads
+    *    into up to 32 near-empty scan tasks each (probe:
+    *    stream_q4_retract_lake 11.9->9.6 s, stream_q4_retract_compact
+    *    14.8->12.5 s). Gates whose per-batch work is a compute-heavy
+    *    join/search against a REAL table (admit joins, index searches)
+    *    keep the session default — the same probe showed narrowing their
+    *    scans COSTS 10-25% (stream_ingest_admit 9.2->11.9 s).
+    * At 100 TB both knobs are irrelevant inside a gate-sized batch
+    * (bytes/maxPartitionBytes dominates the split count) — they only trim
+    * the small-file floor a tiny batch otherwise pays per action.
     */
-  private def replay(df: DataFrame, orderMs: Column, chunks: Int = Chunks): (DataFrame, Path) = {
-    val (root, files) = stageChunkFiles(df, orderMs, chunks)
-    // callers rmrf the root only after replay RETURNS — clean it ourselves
-    // if anything below throws, per the object's no-accumulation contract
-    try {
-      val chunkDir = root.resolve("chunks")
-      Files.createDirectories(chunkDir)
-      files.zipWithIndex.foreach { case (f, i) =>
-        val dst = chunkDir.resolve(f.getFileName)
-        Files.move(f, dst)
-        // mtime order is the SOLE replay-order mechanism — a filesystem that
-        // refuses it would replay chunks arbitrarily and fail the oracle
-        // with no hint of the root cause, so fail fast instead
-        if (!dst.toFile.setLastModified((i + 1) * 60000L))
-          throw new java.io.IOException(
-            s"cannot set mtime on $dst — chunk replay order would be undefined")
+  private val Scoped = Seq("spark.sql.shuffle.partitions",
+    "spark.sql.leafNodeDefaultParallelism").map(_ -> Width.toString)
+  private val Narrow = Scoped :+ ("spark.sql.files.minPartitionNum" -> Width.toString)
+  private val Unscoped = Seq.empty[(String, String)]
+
+  /** The RocksDB state-store provider (transformWithState's backing
+    * store), for the token-budget gates that run
+    * [[graft.operators.Pipeline.TokenBudgetStream]]. Changelog
+    * checkpointing commits the per-batch DELTA instead of a full RocksDB
+    * snapshot per store per batch. On the local FS a few-MB store's
+    * snapshot upload is nearly free, so this moves little here; against a
+    * REMOTE checkpoint store (the deployment shape) the full-snapshot
+    * upload is the dominant per-batch cost and the delta log is the
+    * accepted fix, so the gates exercise the configuration the cluster
+    * would run.
+    */
+  private val RocksDb = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+
+  /** The Avro state encoding (the format under which Spark 4's
+    * transformWithState supports state SCHEMA EVOLUTION across a
+    * checkpoint restart — UnsafeRow-encoded state rejects any change).
+    * Must cover BOTH sides of an evolution gate: the encoding is frozen
+    * into the checkpoint at first start.
+    */
+  private val AvroState = Seq("spark.sql.streaming.stateStore.encodingFormat" -> "avro")
+
+  /** Run one gate `body` on a fresh [[Gate]] and release everything the
+    * body acquired through it — scratch dirs, scratch tables, memory-sink
+    * views, cached frames — in ONE cleanup that runs whether the body
+    * returns or throws, then unload every state-store provider. `name`
+    * prefixes the gate's scratch dir (`graft-gate-<name>…`); `conf` is the
+    * session conf of the gate's streaming drive ([[Scoped]], [[Narrow]],
+    * or [[Unscoped]] plus any state-store settings). A body failure wins
+    * over cleanup failures, which are attached to it as suppressed.
+    */
+  private[graft] def gate[T](spark: SparkSession, name: String,
+      conf: Seq[(String, String)] = Scoped)(body: Gate => T): T = {
+    val g = new Gate(spark, name, conf)
+    val out = try body(g) catch {
+      case e: Throwable =>
+        try g.close() catch { case c: Throwable => e.addSuppressed(c) }
+        throw e
+    }
+    g.close()
+    out
+  }
+
+  /** One gate's resources and streaming drive (see [[gate]]). */
+  private[graft] final class Gate(val spark: SparkSession, name: String,
+      conf: Seq[(String, String)]) {
+    private val closers = ArrayBuffer.empty[() => Unit]
+    private var root: Path = _
+    private var scoped = false
+
+    /** Register `f` for the gate's cleanup (last registered runs first). */
+    def onClose(f: => Unit): Unit = synchronized { closers += (() => f); () }
+
+    /** A path under the gate's private scratch dir, which is created on
+      * first use and deleted at cleanup; the path itself is not created.
+      */
+    def dir(sub: String): String = synchronized {
+      if (root == null) {
+        val r = gateTmp(s"graft-gate-$name")
+        root = r
+        onClose(rmrf(r))
       }
-      (df.sparkSession.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(chunkDir.toString), root)
-    } catch { case e: Throwable => rmrf(root); throw e }
-  }
+      root.resolve(sub).toString
+    }
 
-  /** SHARED chunk staging: gates replaying the SAME logical input at the
-    * SAME chunking re-use one staged chunk dir for the JVM's lifetime
-    * instead of each re-deriving, re-writing, and re-deleting identical
-    * files (q1/q3×2/q8/ttl×2/static/retract all replay the same 6
-    * rides chunks; at bench repeat=3 each gate stages 4× — the staging
-    * was a fixed cost of every gate run that the cache pays once per
-    * (input, chunking)). `key` names the logical input and MUST include
-    * every parameter the staged bytes depend on (the sf dir, any
-    * sentinel/union variant); `chunks` is part of the cache key.
-    *
-    * The staged dir is read-only after creation (gates never mutate the
-    * watched dir — each run gets its own checkpoint, and the file
-    * source's mtime ordering is burned in at staging), which is what
-    * makes sharing safe. Roots are deleted once, at JVM exit, preserving
-    * the no-accumulation contract across repeated bench runs in one JVM.
-    *
-    * The key deliberately does NOT include a content fingerprint of the
-    * source dir: every gate input is immutable for a JVM's lifetime
-    * (read-only /root/testdata; the 20x corpus is regenerated only by a
-    * separate Stress20x JVM). A caller replaying a dir it rewrites
-    * IN-PROCESS would replay stale bytes — fingerprint the dir into
-    * `key` (ModelTables' guard pattern) before doing that.
-    */
-  private val chunkCache = scala.collection.concurrent.TrieMap.empty[(String, Int), Path]
-  private val cacheHooked = new java.util.concurrent.atomic.AtomicBoolean(false)
+    /** A session-unique scratch table name, dropped at cleanup. */
+    def table(prefix: String): String = {
+      val t = s"${prefix}_${runId.incrementAndGet()}"
+      onClose { spark.sql(s"DROP TABLE IF EXISTS $t"); () }
+      t
+    }
 
-  private def replayCached(spark: SparkSession, key: String, chunks: Int = Chunks)
-      (mk: => (DataFrame, Column)): DataFrame = {
-    // gates run strictly sequentially (Verify/Bench contract), so the
-    // getOrElseUpdate race (double staging) can't occur in practice
-    val chunkDir = chunkCache.getOrElseUpdate((key, chunks), {
-      if (cacheHooked.compareAndSet(false, true))
-        Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          chunkCache.values.foreach(p => rmrf(p.getParent))))
-      val (df, orderMs) = mk
-      val (root, files) = stageChunkFiles(df, orderMs, chunks)
-      try {
-        val cdir = root.resolve("chunks")
-        Files.createDirectories(cdir)
-        files.zipWithIndex.foreach { case (f, i) =>
-          val dst = cdir.resolve(f.getFileName)
-          Files.move(f, dst)
-          if (!dst.toFile.setLastModified((i + 1) * 60000L))
-            throw new java.io.IOException(
-              s"cannot set mtime on $dst — chunk replay order would be undefined")
+    /** A session-unique memory-sink view name, dropped at cleanup. */
+    def view(): String = {
+      val v = s"graft_gate_${runId.incrementAndGet()}"
+      onClose { spark.catalog.dropTempView(v); () }
+      v
+    }
+
+    /** `df` persisted until cleanup. */
+    def cached(df: DataFrame): DataFrame = {
+      val c = df.persist()
+      onClose { c.unpersist(); () }
+      c
+    }
+
+    /** Run `body` under the gate's session conf; re-entrant, so nested
+      * drives share the outer scope.
+      */
+    def scope[T](body: => T): T =
+      if (scoped) body
+      else {
+        scoped = true
+        try withConf(spark, conf)(body) finally scoped = false
+      }
+
+    /** Start a query in the gate scope, `drive` it, and stop it whatever
+      * happens.
+      */
+    def run[T](start: => StreamingQuery)(drive: StreamingQuery => T): T =
+      scope {
+        val q = start
+        try drive(q) finally q.stop()
+      }
+
+    /** Start a query and run it until every available chunk is processed. */
+    def drain(start: => StreamingQuery): Unit = run(start)(_.processAllAvailable())
+
+    /** Run `out` to a memory sink until all replayed chunks (and any
+      * watermark-driven trailing batch) are processed; return the table
+      * materialized.
+      */
+    def memory(out: DataFrame, mode: String): DataFrame = scope {
+      val v = view()
+      drain(out.writeStream.format("memory").queryName(v).outputMode(mode)
+        .option("checkpointLocation", dir(v)).start())
+      materialize(spark.table(v))
+    }
+
+    /** Start `out` into a foreachBatch sink, checkpointed at `ck`. */
+    def foreachBatch(out: DataFrame, mode: String,
+        ck: String = dir(s"ck-${runId.incrementAndGet()}"))(
+        f: (DataFrame, Long) => Unit): StreamingQuery =
+      out.writeStream.outputMode(mode).option("checkpointLocation", ck)
+        .foreachBatch((b: Dataset[Row], id: Long) => f(b.toDF(), id)).start()
+
+    /** Drain the query `start` builds around an emission callback and
+      * return the union of its emissions as a `schema` frame.
+      */
+    def collect(schema: StructType)(start: (DataFrame => Unit) => StreamingQuery): DataFrame = {
+      val out = new Emissions(spark)
+      drain(start(out.emit))
+      out.df(schema)
+    }
+
+    /** A private watched dir read one file per trigger. */
+    def watch(schema: StructType): Watch =
+      new Watch(spark, Paths.get(dir(s"watch-${runId.incrementAndGet()}")), schema)
+
+    /** Start `start` over a fresh [[watch]] and feed `chunks` one file per
+      * micro-batch: each chunk is fed and drained, then `window(i)` runs
+      * while the query is idle (the maintenance window between batches —
+      * the single-writer contract). Returns the windows' results.
+      */
+    def feedEach[T](chunks: Staged)(start: DataFrame => StreamingQuery)(
+        window: Int => T): Seq[T] = {
+      val w = watch(chunks.schema)
+      run(start(w.stream)) { q =>
+        chunks.files.zipWithIndex.map { case (f, i) =>
+          w.feed(f)
+          q.processAllAvailable()
+          window(i)
         }
-        cdir
-      } catch { case e: Throwable => rmrf(root); throw e }
-    })
-    // schema from the staged footers (cache hits must not re-derive the
-    // input DataFrame — that was the point)
-    spark.readStream.schema(spark.read.parquet(chunkDir.toString).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(chunkDir.toString)
+      }
+    }
+
+    /** The restart gates' stop-and-resume: feed the first `k` files,
+      * run `instance(1)` (a drained and stopped query), feed the rest,
+      * run `instance(2)` on the same checkpoint.
+      */
+    def restart(w: Watch, files: Seq[Path], k: Int)(instance: Int => Unit): Unit = scope {
+      w.feed(files.take(k): _*)
+      instance(1)
+      w.feed(files.drop(k): _*)
+      instance(2)
+    }
+
+    private[StreamGate] def close(): Unit = {
+      var err: Throwable = null
+      (closers.reverseIterator ++
+        Iterator(() => org.apache.spark.sql.graftbridge.Bridge.unloadStateStores())).foreach { c =>
+        try c() catch {
+          case e: Throwable => if (err == null) err = e else err.addSuppressed(e)
+        }
+      }
+      if (err != null) throw err
+    }
   }
 
-  /** Feed one staged chunk file into a WATCHED directory that a running
-    * FileStreamSource is actively listing. The naive
-    * `Files.copy(src, dst); dst.setLastModified(t)` sequence has two
-    * races when the stream is LIVE:
+  /** The rows a streaming operator emits, one collected micro-batch at a
+    * time; the first emission's schema is kept for callers that have no
+    * batch twin to take it from.
+    */
+  private[graft] final class Emissions(spark: SparkSession) {
+    private val buf = ArrayBuffer.empty[Row]
+    private var first: StructType = _
+
+    val emit: DataFrame => Unit = { v =>
+      val rows = v.collect()
+      buf.synchronized { if (first == null) first = v.schema; buf ++= rows }
+      ()
+    }
+
+    def rows: List[Row] = buf.synchronized(buf.toList)
+
+    def df(schema: StructType = buf.synchronized(first)): DataFrame =
+      spark.createDataFrame(rows.asJava, schema)
+  }
+
+  /** A streaming parquet source over `dir`, one file per micro-batch,
+    * lowest mtime first.
+    */
+  private def fileStream(spark: SparkSession, schema: StructType, dir: Path): DataFrame =
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir.toString)
+
+  /** A gate-private WATCHED directory that a running FileStreamSource
+    * lists, fed from staged chunk files. Every feed makes the file visible
+    * atomically with a fresh, strictly increasing mtime. The naive
+    * `Files.copy(src, dst); dst.setLastModified(t)` sequence has two races
+    * when the stream is LIVE:
     *  - a trigger can list `dst` mid-copy and read a truncated parquet
     *    file;
     *  - far worse, a trigger can list `dst` BETWEEN the copy and the
@@ -200,84 +401,102 @@ object StreamGate {
     *    `stream_temporal_join_live` hash flake: a lost dimension chunk
     *    leaves stale open versions that still inner-join every fact
     *    (same row count, different seg values).
-    * The fix makes visibility atomic: copy to a dot-prefixed temp name
-    * (hidden from Spark's file listing), set the mtime on the hidden
-    * file, then ATOMIC_MOVE to the final name (rename preserves mtime).
-    * No observer can ever see a partial file or a wrong timestamp.
+    * So a feed ([[atomicFeed]]) copies to a dot-prefixed temp name (hidden
+    * from Spark's file listing), sets the mtime on the hidden file, then ATOMIC_MOVEs
+    * to the final name (rename preserves mtime): no observer can ever see
+    * a partial file or a wrong timestamp. COPY, not move: the staging is
+    * the shared JVM-wide cache.
+    *
+    * The mtime is a base captured at construction plus a per-file counter
+    * rather than the source's: chunk files written by one parquet job can
+    * share a millisecond mtime, and FileStreamSource breaks timestamp ties
+    * by listing order — RawLocalFileSystem listing is unsorted, so two
+    * tied chunks could replay out of order and flake any order-sensitive
+    * oracle (the token-budget FIFO hash). The counter spans feeds, so
+    * files fed before and after a restart stay totally ordered.
     */
-  private def atomicFeed(src: Path, dstDir: Path, mtimeMs: Option[Long]): Unit = {
-    val tmp = dstDir.resolve(s".tmp-${src.getFileName}")
-    val dst = dstDir.resolve(src.getFileName)
-    Files.copy(src, tmp, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    mtimeMs.foreach { t =>
-      if (!tmp.toFile.setLastModified(t))
-        throw new java.io.IOException(s"cannot set mtime on $tmp")
+  private[graft] final class Watch(spark: SparkSession, dir: Path, schema: StructType) {
+    Files.createDirectories(dir)
+    private val base = System.currentTimeMillis()
+    private var n = 0
+
+    def stream: DataFrame = fileStream(spark, schema, dir)
+
+    def feed(files: Path*): Unit = files.foreach { src =>
+      n += 1
+      atomicFeed(src, dir, base + n)
     }
-    Files.move(tmp, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  private def atomicFeed(src: Path, dstDir: Path, mtimeMs: Long): Unit = {
+    val tmp = dstDir.resolve(s".tmp-${src.getFileName}")
+    Files.copy(src, tmp, StandardCopyOption.REPLACE_EXISTING)
+    if (!tmp.toFile.setLastModified(mtimeMs))
+      throw new java.io.IOException(s"cannot set mtime on $tmp")
+    Files.move(tmp, dstDir.resolve(src.getFileName), StandardCopyOption.ATOMIC_MOVE)
     ()
   }
 
-  /** Copier for the restart gates' PRIVATE watched dirs (the query is
-    * stopped while these copies run, so atomicity doesn't matter — order
-    * does). Assigns each copied file a FRESH, STRICTLY INCREASING mtime
-    * (a base captured at construction + a per-file counter) instead of
-    * preserving the source mtimes: chunk files written by one parquet
-    * job can share a millisecond mtime, and FileStreamSource breaks
-    * timestamp ties by listing order — RawLocalFileSystem listing is
-    * unsorted, so two tied chunks could replay out of order and flake
-    * any order-sensitive oracle (the token-budget FIFO hash). The
-    * counter spans calls, so files fed before and after a restart stay
-    * totally ordered.
-    */
-  private final class OrderedCopier(watch: Path) {
-    private val base = System.currentTimeMillis()
-    private var n = 0
-    def copyIn(fs: Seq[Path]): Unit = fs.foreach { f =>
-      val dst = watch.resolve(f.getFileName)
-      Files.copy(f, dst)
-      n += 1
-      if (!dst.toFile.setLastModified(base + n))
-        throw new java.io.IOException(s"cannot set mtime on $dst")
-    }
+  /** One staged input: its chunk files in replay order and their schema. */
+  private[graft] final case class Staged(files: Seq[Path], schema: StructType) {
+    def stream(spark: SparkSession): DataFrame = fileStream(spark, schema, files.head.getParent)
   }
 
-  /** The shared rides replay every event-time gate uses. */
-  private def ridesReplay(spark: SparkSession, dir: String, chunks: Int = Chunks): DataFrame =
-    replayCached(spark, s"rides|$dir", chunks)(
-      (Rides.fromEvents(spark, dir), unix_millis(col("rowtime"))))
-
-  /** Cached STAGED FILES (not a watched dir): for gates that feed chunks
-    * one at a time ([[ingestAdmit]] moves files into its watched dir
-    * between maintenance passes). The staging is computed once per
-    * (key, chunks) and each run COPIES from it, so repeated bench runs
-    * skip the derive+write while the run's own watched dir stays private.
+  /** SHARED chunk staging: gates replaying the SAME logical input at the
+    * SAME chunking re-use one staged chunk dir for the JVM's lifetime
+    * instead of each re-deriving, re-writing, and re-deleting identical
+    * files (q1/q3×2/q8/ttl×2/static/retract/restart all replay the same 6
+    * rides chunks; at bench repeat=3 each gate stages 4× — the staging
+    * was a fixed cost of every gate run that the cache pays once per
+    * (input, chunking)). `key` names the logical input and MUST include
+    * every parameter the staged bytes depend on (the sf dir, any
+    * sentinel/union variant); `chunks` is part of the cache key. A gate
+    * either replays the staged dir directly ([[Staged.stream]]: mtimes
+    * are burned in at staging) or feeds copies of its files into a
+    * private [[Watch]] between maintenance passes.
+    *
+    * The staged dir is read-only after creation (gates never mutate it —
+    * each run gets its own checkpoint and watched dirs), which is what
+    * makes sharing safe. Roots are deleted once, at JVM exit, preserving
+    * the no-accumulation contract across repeated bench runs in one JVM.
+    * Gates run strictly sequentially (Verify/Bench contract), so the
+    * getOrElseUpdate race (double staging) can't occur in practice.
+    *
+    * The key deliberately does NOT include a content fingerprint of the
+    * source dir: every gate input is immutable for a JVM's lifetime
+    * (read-only /root/testdata; the 20x corpus is regenerated only by a
+    * separate Stress20x JVM). A caller replaying a dir it rewrites
+    * IN-PROCESS would replay stale bytes — fingerprint the dir into
+    * `key` (ModelTables' guard pattern) before doing that.
     */
-  private def stagedFilesCached(spark: SparkSession, key: String, chunks: Int)
-      (mk: => (DataFrame, Column)): Seq[Path] = {
-    val cdir = chunkCache.getOrElseUpdate((s"files|$key", chunks), {
-      if (cacheHooked.compareAndSet(false, true))
+  private val staging = scala.collection.concurrent.TrieMap.empty[(String, Int), Staged]
+  private val stagingHooked = new AtomicBoolean(false)
+
+  private def stage(spark: SparkSession, key: String, chunks: Int = Chunks)(
+      mk: => (DataFrame, Column)): Staged =
+    staging.getOrElseUpdate((key, chunks), {
+      if (stagingHooked.compareAndSet(false, true))
         Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          chunkCache.values.foreach(p => rmrf(p.getParent))))
+          staging.values.foreach(s => rmrf(s.files.head.getParent.getParent))))
       val (df, orderMs) = mk
-      val (root, files) = stageChunkFiles(df, orderMs, chunks)
+      val root = gateTmp("graft-stream-gate")
       try {
-        val dir = root.resolve("chunks")
-        Files.createDirectories(dir)
-        files.foreach(f => Files.move(f, dir.resolve(f.getFileName)))
-        dir
+        val files = stageChunkFiles(df, orderMs, chunks, root)
+        // schema from the staged footers, read once per staging
+        Staged(files, spark.read.parquet(files.head.getParent.toString).schema)
       } catch { case e: Throwable => rmrf(root); throw e }
     })
-    import scala.jdk.CollectionConverters._
-    val ls = Files.list(cdir)
-    try ls.iterator().asScala.toSeq.sortBy(_.getFileName.toString) finally ls.close()
-  }
+
+  /** The cached replay of one logical input (see [[stage]]). */
+  private def replay(spark: SparkSession, key: String, chunks: Int = Chunks)(
+      mk: => (DataFrame, Column)): DataFrame =
+    stage(spark, key, chunks)(mk).stream(spark)
 
   /** Stage `df` into one parquet file per chunk (range of the monotone
-    * `orderMs` expression) under a fresh temp root, returned in chunk
-    * order but NOT yet visible to any stream — callers either move them
-    * all into a watched dir up front ([[replay]]) or feed them one at a
-    * time to interleave maintenance between micro-batches
-    * ([[ingestAdmit]]).
+    * `orderMs` expression) under `root/chunks`, returned in chunk order
+    * with strictly increasing mtimes — the replay order of a stream over
+    * that dir. For event-time inputs pass `unix_millis(rowtime)`; for
+    * unordered corpora any stable key (e.g. doc_id) works.
     *
     * TWO load-bearing contracts live in the chunk-id expression
     * `(orderMs − t0) * chunks / span` (64-bit integer arithmetic):
@@ -295,215 +514,72 @@ object StreamGate {
     *    arithmetic here without changing chunkIdSql desynchronizes
     *    every disorder gate.
     */
-  private def stageChunkFiles(df: DataFrame, orderMs: Column, chunks: Int): (Path, Seq[Path]) = {
-    val root = gateTmp("graft-stream-gate")
-    // a failure mid-staging (bounds agg, chunk write, moves) must not leak
-    // the just-created root — no caller holds it yet
-    try {
-      val staged = root.resolve("staged")
-      val pending = root.resolve("pending")
-      Files.createDirectories(pending)
-      val bounds = df.agg(min(orderMs).as("t0"), max(orderMs).as("t1")).head()
-      val (t0, span) = (bounds.getLong(0), math.max(1L, bounds.getLong(1) - bounds.getLong(0) + 1))
-      // single-task write, one file per chunk dir (harness-only funnel —
-      // bounded by the verify SF, not an operator shape)
-      df.withColumn("_chunk", ((orderMs - t0) * chunks / span).cast("int"))
-        .repartition(1)
-        .write.partitionBy("_chunk").mode("overwrite").parquet(staged.toString)
-      val dirs = new java.io.File(staged.toString).listFiles()
-        .filter(_.getName.startsWith("_chunk="))
-        .sortBy(_.getName.stripPrefix("_chunk=").toInt)
-      val files = dirs.zipWithIndex.map { case (d, i) =>
-        val part = d.listFiles().filter(_.getName.endsWith(".parquet")).head
-        val dst = pending.resolve(f"chunk-$i%04d.parquet")
-        Files.move(part.toPath, dst)
-        dst
-      }.toSeq
-      rmrf(staged) // chunk files were moved out; drop the write leftovers
-      (root, files)
-    } catch { case e: Throwable => rmrf(root); throw e }
+  private def stageChunkFiles(df: DataFrame, orderMs: Column, chunks: Int,
+      root: Path): Seq[Path] = {
+    val staged = root.resolve("staged")
+    val chunkDir = root.resolve("chunks")
+    Files.createDirectories(chunkDir)
+    val bounds = df.agg(min(orderMs).as("t0"), max(orderMs).as("t1")).head()
+    val (t0, span) = (bounds.getLong(0), math.max(1L, bounds.getLong(1) - bounds.getLong(0) + 1))
+    // single-task write, one file per chunk dir (harness-only funnel —
+    // bounded by the verify SF, not an operator shape)
+    df.withColumn("_chunk", ((orderMs - t0) * chunks / span).cast("int"))
+      .repartition(1)
+      .write.partitionBy("_chunk").mode("overwrite").parquet(staged.toString)
+    val dirs = new java.io.File(staged.toString).listFiles()
+      .filter(_.getName.startsWith("_chunk="))
+      .sortBy(_.getName.stripPrefix("_chunk=").toInt)
+    val files = dirs.zipWithIndex.map { case (d, i) =>
+      val part = d.listFiles().filter(_.getName.endsWith(".parquet")).head
+      val dst = chunkDir.resolve(f"chunk-$i%04d.parquet")
+      Files.move(part.toPath, dst)
+      // mtime order is the SOLE replay-order mechanism — a filesystem that
+      // refuses it would replay chunks arbitrarily and fail the oracle
+      // with no hint of the root cause, so fail fast instead
+      if (!dst.toFile.setLastModified((i + 1) * 60000L))
+        throw new java.io.IOException(
+          s"cannot set mtime on $dst — chunk replay order would be undefined")
+      dst
+    }.toSeq
+    rmrf(staged) // chunk files were moved out; drop the write leftovers
+    files
   }
 
-  /** Run a streaming output to a memory sink until all replayed chunks
-    * (and any watermark-driven trailing batch) are processed; return the
-    * result materialized, with the sink table dropped and the checkpoint
-    * deleted (a kept memory table would pin the full result for the
-    * session's lifetime).
-    */
-  /** State partition width for the replay gates. Every stateful operator
-    * instantiates one state store PER shuffle partition, and each store
-    * pays a fixed commit cost PER MICRO-BATCH (delta file + CRC + fsync;
-    * a stream-stream join carries four stores per partition) — measured
-    * ~100 ms/store/batch on this box, so a zero-row micro-batch at the
-    * session default of 32 partitions burned 3.7 s of pure commit
-    * overhead and q8's replay ran 36 s vs 8.6 s at width 8. Sizing state
-    * partitions to the workload is a first-class streaming knob, not a
-    * harness hack: in a real deployment the width is frozen into the
-    * checkpoint at first start and must be chosen for the state volume,
-    * while the batch default serves scans and joins. 8 keeps ≤ ~2 k state
-    * keys per store at replay SFs with headroom for the 20x probe.
-    *
-    * SPARK_GRAFT_GATE_PARTITIONS overrides it — the operational knob a
-    * real deployment re-chooses per workload (frozen per checkpoint).
-    * Probed on the heaviest row-bound gate (dedup_events, doubled input)
-    * at sf0.1/20x: width 8 = 4.7 s / 32.7 s, width 32 = 7.6 s / 35.0 s —
-    * commit overhead dominates at both probed scales. Re-probed across
-    * the FULL 29-gate set at sf0.1 (r15, shm scratch): width 8 = 117.5 s,
-    * width 4 = 108.6 s, with the state-heaviest gates (q8 pair join's 4
-    * stores/partition, the OVER buffers, funnel, bm25 ingest) gaining
-    * 15-30% and every regression inside the box's ±25 % noise band — so 4
-    * is the default; the override exists for workloads where
-    * per-partition state or per-batch compute outgrows it (the 20x
-    * dedup_events probe re-measured at width 4: 33.4 s steady vs width
-    * 8's 32.7 s — per-row state insertion, not partition width; README
-    * scale notes carry the full table).
-    */
-  private val GateStatePartitions =
-    sys.env.get("SPARK_GRAFT_GATE_PARTITIONS") match {
-      case Some(raw) => raw.toIntOption.filter(_ > 0).getOrElse {
-        // 0/negative/garbage would make spark.sql.shuffle.partitions
-        // invalid and fail every gate at runtime with an opaque error —
-        // reject loudly and fall back
-        System.err.println(
-          s"SPARK_GRAFT_GATE_PARTITIONS='$raw' rejected (need a positive int); using 4")
-        4
-      }
-      case None => 4
-    }
+  /** The rides input every event-time gate replays. */
+  private def rides(spark: SparkSession, dir: String): (DataFrame, Column) =
+    (Rides.fromEvents(spark, dir), unix_millis(col("rowtime")))
 
-  /** Run `body` with the RocksDB state-store provider set on the session
-    * (transformWithState's backing store), restoring the prior provider —
-    * same single-query assumption as [[withGateParallelism]]. Its users
-    * are the token-budget gates ([[tokenBudget]], [[tokenBudgetRestart]],
-    * [[tokenBudgetEvolve]]), which run
-    * [[graft.operators.Pipeline.TokenBudgetStream]].
+  private def ridesReplay(spark: SparkSession, dir: String, chunks: Int = Chunks): DataFrame =
+    replay(spark, s"rides|$dir", chunks)(rides(spark, dir))
+
+  /** The documents table in 3 doc-id chunks. */
+  private def docs(spark: SparkSession, dir: String): Staged =
+    stage(spark, s"docs|$dir", 3)((Tables.load(spark, dir, "documents"), col("doc_id")))
+
+  /** The embeddings table in 3 vec-id chunks. */
+  private def embeddings(spark: SparkSession, dir: String): Staged =
+    stage(spark, s"emb|$dir", 3)((Tables.load(spark, dir, "embeddings"), col("vec_id")))
+
+  /** The ingest gates' embedding split: `(all, build, ingest)` — models
+    * train on the two-thirds `build` set, the remaining third is the
+    * staged ingest replay.
     */
-  private def withRocksDb[T](spark: SparkSession)(body: => T): T = {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    // Changelog checkpointing: commit the per-batch DELTA instead of a
-    // full RocksDB snapshot per store per batch. On the local FS a few-MB
-    // store's snapshot upload is nearly free, so this moves little here;
-    // against a REMOTE checkpoint store (the deployment shape) the
-    // full-snapshot upload is the dominant per-batch cost and the delta
-    // log is the accepted fix, so the gates exercise the configuration the
-    // cluster would run. Scoped and restored like the provider itself.
-    val clKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prev = spark.conf.getOption(provKey)
-    val prevCl = spark.conf.getOption(clKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(clKey, "true")
-    try body finally {
-      prev match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
-      }
-      prevCl match {
-        case Some(v) => spark.conf.set(clKey, v)
-        case None => spark.conf.unset(clKey)
-      }
-    }
+  private def ingestSplit(spark: SparkSession, dir: String): (DataFrame, DataFrame, Staged) = {
+    import graft.operators.Similarity.IvfRbIngestMod
+    val all = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
+    (all, all.filter(col("vec_id") % IvfRbIngestMod =!= 0),
+      stage(spark, s"embrb|$dir", 3)(
+        (all.filter(col("vec_id") % IvfRbIngestMod === 0), col("vec_id"))))
   }
 
-  /** Run `body` with the Avro state encoding (the format under which
-    * Spark 4's transformWithState supports state SCHEMA EVOLUTION across
-    * a checkpoint restart — UnsafeRow-encoded state rejects any change),
-    * restoring the prior setting. Must wrap BOTH sides of an evolution
-    * gate: the encoding is frozen into the checkpoint at first start.
-    */
-  private def withAvroState[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.encodingFormat"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "avro")
-    try body finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
-  private def runToMemory(out: DataFrame, mode: String): DataFrame = {
-    val spark = out.sparkSession
-    val name = s"graft_gate_${runId.incrementAndGet()}"
-    val ck = gateTmp("graft-gate-ck")
-    // view drop + checkpoint removal must run on FAILURE paths too (a
-    // failed processAllAvailable would otherwise pin the memory table for
-    // the session's life and accumulate checkpoints across bench runs)
-    try {
-      withGateParallelism(spark, GateStatePartitions) {
-        val q = out.writeStream.format("memory").queryName(name)
-          .outputMode(mode).option("checkpointLocation", ck.toString).start()
-        try q.processAllAvailable() finally q.stop()
-        materialize(spark.table(name))
-      }
-    } finally {
-      spark.catalog.dropTempView(name)
-      rmrf(ck)
-    }
-  }
-
-  /** Run `body` with the session's shuffle parallelism temporarily sized
-    * to the gate workload. The cascade's micro-batches move a ~5-key
-    * histogram through ~6 fixed actions per batch; at the session default
-    * of 32 every one of them pays 32 shuffle tasks AND 32 state-store
-    * instances per stateful operator — pure per-task overhead at verify
-    * SF. Sizing shuffle partitions to the data is exactly what a real
-    * deployment does (the operators are partition-count agnostic:
-    * hash-agg/join results don't depend on it); the default is restored
-    * even on failure so other queries in the same session are untouched.
-    *
-    * SINGLE-QUERY ASSUMPTION: the mutation is session-global for the
-    * body's duration. Verify/Bench run gates strictly sequentially, which
-    * is what makes this safe — a concurrently executing query in the same
-    * session would silently run at the gate's parallelism (and nested
-    * bodies would restore the inner value). If gates are ever
-    * parallelized, give each its own `spark.newSession()`.
-    */
-  private def withGateParallelism[T](spark: SparkSession, n: Int,
-      scanNarrow: Boolean = false)(body: => T): T = {
-    // Scope the gate's parallelism knobs to the workload, not just the
-    // shuffle width (the same workload-sizing call as the shuffle width,
-    // r22 A/B-measured per knob on the same box/load):
-    //  - leafNodeDefaultParallelism: materialize()'s local-rows parents,
-    //    per-batch literal frames (touched-bucket lists, empty-lake
-    //    stand-ins) and limit/collect scaffolds otherwise each launch 32
-    //    near-empty leaf tasks per action (core-count-derived); sized to
-    //    the gate width for EVERY gate (probe: stream_ingest_admit
-    //    11.9->9.2 s, stream_q4_net_sink 8.8->7.1 s vs the
-    //    minPartitionNum-scoped leg).
-    //  - files.minPartitionNum (scanNarrow=true only): the retract/lake
-    //    protocol gates re-read small bucket/log files every batch and in
-    //    their post-stream audit folds; the session default of
-    //    minPartitionNum = defaultParallelism splits those KB-scale reads
-    //    into up to 32 near-empty scan tasks each (probe:
-    //    stream_q4_retract_lake 11.9->9.6 s, stream_q4_retract_compact
-    //    14.8->12.5 s). Gates whose per-batch work is a compute-heavy
-    //    join/search against a REAL table (admit joins, index searches)
-    //    keep the session default — the same probe showed narrowing their
-    //    scans COSTS 10-25% (stream_ingest_admit 9.2->11.9 s).
-    // At 100 TB both knobs are irrelevant inside a gate-sized batch
-    // (bytes/maxPartitionBytes dominates the split count) — they only trim
-    // the small-file floor a tiny batch otherwise pays per action.
-    val keys = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.leafNodeDefaultParallelism") ++
-      (if (scanNarrow) Seq("spark.sql.files.minPartitionNum") else Seq.empty)
-    val prior = keys.map(k => k -> spark.conf.getOption(k))
-    keys.foreach(k => spark.conf.set(k, n.toString))
-    try body finally {
-      prior.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-      // every stateful gate runs (and stops) its query inside this block;
-      // release its state-store providers now instead of waiting for the
-      // 60 s maintenance sweep — in a session that runs gates back-to-back
-      // (Bench: 17 gates × repeats) the dead providers' heap maps and
-      // maintenance work otherwise pile into later gates' batch latencies
-      // (measured: stream_q8_pair 8.5 s in the 17-gate bench vs 6.3 s in a
-      // fresh JVM at identical per-batch plans/state sizes)
-      org.apache.spark.sql.graftbridge.Bridge.unloadStateStores()
-    }
+  /** Far-future in-NYC sentinel ride events `(rideId, isStart)` at `ms`. */
+  private def sentinelRides(spark: SparkSession, ms: Long, ids: (Long, Boolean)*): DataFrame = {
+    import spark.implicits._
+    ids.map { case (id, isStart) => (id, isStart, new Timestamp(ms), new Timestamp(ms),
+        -73.99f, 40.75f, -73.99f, 40.75f, 1.toShort) }
+      .toDF("rideId", "isStart", "startTime", "endTime",
+        "startLon", "startLat", "endLon", "endLat", "passengerCnt")
+      .withColumn("rowtime", col("startTime"))
   }
 
   /** Q1 tumbling-window agg through micro-batches (complete mode: state
@@ -511,9 +587,8 @@ object StreamGate {
     * batch-identical by construction, no finalization sentinel needed).
     * Oracle: the batch q1 oracle.
     */
-  def q1Tumble(spark: SparkSession, dir: String): DataFrame = {
-    val stream = ridesReplay(spark, dir)
-    runToMemory(StreamingQueries.q1Tumble(stream), "complete")
+  def q1Tumble(spark: SparkSession, dir: String): DataFrame = gate(spark, "q1") { g =>
+    g.memory(StreamingQueries.q1Tumble(ridesReplay(spark, dir)), "complete")
       .orderBy("dept_time", "cell")
   }
 
@@ -523,9 +598,8 @@ object StreamGate {
     * its overlapping windows across chunk boundaries. Oracle: the batch
     * q6 oracle.
     */
-  def q6Sliding(spark: SparkSession, dir: String): DataFrame = {
-    val stream = ridesReplay(spark, dir)
-    runToMemory(StreamingQueries.q6Sliding(stream), "complete")
+  def q6Sliding(spark: SparkSession, dir: String): DataFrame = gate(spark, "q6") { g =>
+    g.memory(StreamingQueries.q6Sliding(ridesReplay(spark, dir)), "complete")
       .orderBy("dept_time", "cell")
   }
 
@@ -535,22 +609,20 @@ object StreamGate {
     * delete-on-emptied-bucket. Final histogram = the level-2 lake
     * snapshot. Oracle: the batch q4 oracle.
     */
-  def q4Cascade(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = gateTmp("graft-gate-q4")
+  def q4Cascade(spark: SparkSession, dir: String): DataFrame = gate(spark, "q4") { g =>
     // 3 chunks and a narrow lake: each cascade micro-batch pays ~6 fixed
     // Spark actions (pre-image join, one-job lake merges, marker IO,
     // level-2 recompute), so the gate's cost is batches x per-action
     // overhead, not data volume — cross-batch state accumulation is already
     // proven at 3 batches, and the histogram lake holds ~5 keys. Shuffle
-    // parallelism is sized to that workload (see withGateParallelism).
-    val sink = new ParquetUpsertSink(tmp.resolve("level2").toString, Seq("dept_cnt"), 4)
+    // parallelism is sized to that workload (see Scoped).
+    val sink = new ParquetUpsertSink(g.dir("level2"), Seq("dept_cnt"), 4)
     val stream = ridesReplay(spark, dir, chunks = 3)
-    try withGateParallelism(spark, 4) {
-      val q = CascadeQ4.startToParquet(stream, sink, tmp.resolve("ck").toString)
+    g.run(CascadeQ4.startToParquet(stream, sink, g.dir("ck"))) { q =>
       q.awaitTermination()
       materialize(sink.snapshot(spark).select(col("dept_cnt"), col("cnt_freq")))
         .orderBy("dept_cnt")
-    } finally rmrf(tmp)
+    }
   }
 
   /** Q7 session windows through micro-batches (append mode — sessions
@@ -559,20 +631,15 @@ object StreamGate {
     * session is filtered out). Input rowtime is ms-truncated exactly as
     * the batch q7 does. Oracle: the batch q7 oracle.
     */
-  def q7Session(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  def q7Session(spark: SparkSession, dir: String): DataFrame = gate(spark, "q7") { g =>
     val rides = Rides.fromEvents(spark, dir)
       .withColumn("rowtime", timestamp_millis(unix_millis(col("rowtime"))))
     val maxMs = rides.agg(max(unix_millis(col("rowtime")))).head().getLong(0)
-    val sMs = maxMs + 2 * graft.operators.TaxiQueries.SessionGapMs + 200000L
-    val sentinel = Seq((-1L, true, new Timestamp(sMs), new Timestamp(sMs),
-        -73.99f, 40.75f, -73.99f, 40.75f, 1.toShort))
-      .toDF("rideId", "isStart", "startTime", "endTime",
-        "startLon", "startLat", "endLon", "endLat", "passengerCnt")
-      .withColumn("rowtime", col("startTime"))
-    val stream = replayCached(spark, s"ridesq7|$dir")(
+    val sentinel = sentinelRides(spark,
+      maxMs + 2 * graft.operators.TaxiQueries.SessionGapMs + 200000L, (-1L, true))
+    val stream = replay(spark, s"ridesq7|$dir")(
       (rides.unionByName(sentinel), unix_millis(col("rowtime"))))
-    runToMemory(StreamingQueries.q7Session(stream), "append")
+    g.memory(StreamingQueries.q7Session(stream), "append")
       .filter(col("sess_start") <= maxMs) // drop the sentinel's own session
       .orderBy("cell", "sess_start")
   }
@@ -584,9 +651,8 @@ object StreamGate {
     * With in-order replay the emit-once per-departure counts equal the
     * batch RANGE frame exactly. Oracle: the batch q3_over_recent oracle.
     */
-  def q3Over(spark: SparkSession, dir: String): DataFrame = {
-    val stream = ridesReplay(spark, dir)
-    runToMemory(OverWindowState.q3Streaming(stream,
+  def q3Over(spark: SparkSession, dir: String): DataFrame = gate(spark, "q3") { g =>
+    g.memory(OverWindowState.q3Streaming(ridesReplay(spark, dir),
           windowMs = graft.operators.TaxiQueries.RecentFrameMs).toDF(),
         "append")
       .filter(col("dept_cnt") > 1)
@@ -603,9 +669,8 @@ object StreamGate {
     * observed ~37 min). Replay is time-ordered, so an END never arrives
     * after the watermark evicted its START. Oracle: the batch q8 oracle.
     */
-  def q8Pair(spark: SparkSession, dir: String): DataFrame = {
-    val stream = ridesReplay(spark, dir)
-    runToMemory(StreamingQueries.pairStartEnd(stream), "append")
+  def q8Pair(spark: SparkSession, dir: String): DataFrame = gate(spark, "q8") { g =>
+    g.memory(StreamingQueries.pairStartEnd(ridesReplay(spark, dir)), "append")
       .orderBy("pair_id")
   }
 
@@ -619,23 +684,15 @@ object StreamGate {
     * outer oracle — every ride either matched with its real gap or
     * reported incomplete, nothing dropped, nothing doubled.
     */
-  def q8PairOuter(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  def q8PairOuter(spark: SparkSession, dir: String): DataFrame = gate(spark, "q8o") { g =>
     val rides = Rides.fromEvents(spark, dir)
     val maxMs = rides.agg(max(unix_millis(col("rowtime")))).head().getLong(0)
     val maxRideMs = graft.operators.TaxiQueries.MaxRideMs
-    val sMs = maxMs + maxRideMs + 600000L
-    val sentinels = Seq(
-        (-1000000L, true, new Timestamp(sMs), new Timestamp(sMs),
-          -73.99f, 40.75f, -73.99f, 40.75f, 1.toShort),
-        (-999998L, false, new Timestamp(sMs), new Timestamp(sMs),
-          -73.99f, 40.75f, -73.99f, 40.75f, 1.toShort))
-      .toDF("rideId", "isStart", "startTime", "endTime",
-        "startLon", "startLat", "endLon", "endLat", "passengerCnt")
-      .withColumn("rowtime", col("startTime"))
-    val stream = replayCached(spark, s"ridesq8o|$dir")(
+    val sentinels = sentinelRides(spark, maxMs + maxRideMs + 600000L,
+      (-1000000L, true), (-999998L, false))
+    val stream = replay(spark, s"ridesq8o|$dir")(
       (rides.unionByName(sentinels), unix_millis(col("rowtime"))))
-    runToMemory(StreamingQueries.pairStartEndOuter(stream, maxRideMs = maxRideMs), "append")
+    g.memory(StreamingQueries.pairStartEndOuter(stream, maxRideMs = maxRideMs), "append")
       .filter(col("pair_id") >= 0) // the sentinels' own (unmatched) rows
       .orderBy("pair_id")
   }
@@ -646,26 +703,16 @@ object StreamGate {
     * join under the hard gate. Oracle: the batch dedup_substring_incr
     * oracle (same verdicts, corpus joined in place).
     */
-  def substringIncr(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Dedup
-    val table = s"graft_gate_wins_${runId.incrementAndGet()}"
-    Dedup.persistWindowTable(spark, dir, table)
-    val stream = replayCached(spark, s"incoming|$dir", chunks = 3)(
-      (Dedup.incomingDocs(spark, dir), col("doc_id")))
-    try {
+  def substringIncr(spark: SparkSession, dir: String): DataFrame =
+    gate(spark, "substring", Unscoped) { g =>
+      import graft.operators.Dedup
+      val table = g.table("graft_gate_wins")
+      Dedup.persistWindowTable(spark, dir, table)
+      val stream = replay(spark, s"incoming|$dir", chunks = 3)(
+        (Dedup.incomingDocs(spark, dir), col("doc_id")))
       val schema = Dedup.substringIncremental(spark, dir).schema // lazy: no job
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-      val q = Dedup.substringStream(stream, table) { v =>
-        buf.synchronized { buf ++= v.collect() }; ()
-      }
-      try q.processAllAvailable() finally q.stop()
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(buf.synchronized(buf.toList).asJava, schema)
-        .orderBy("doc_id")
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $table"); ()
+      g.collect(schema)(Dedup.substringStream(stream, table)(_)).orderBy("doc_id")
     }
-  }
 
   /** LM perplexity scoring as a stream: documents replayed in doc-id
     * chunks are scored per micro-batch against the PERSISTED bigram LM
@@ -675,22 +722,12 @@ object StreamGate {
     * scoring is per-doc, so the union of batch outputs must equal the
     * batch score table. Oracle: the batch txt_perplexity oracle.
     */
-  def pplScore(spark: SparkSession, dir: String): DataFrame = {
+  def pplScore(spark: SparkSession, dir: String): DataFrame = gate(spark, "ppl") { g =>
     import graft.operators.TextAnalysis
     TextAnalysis.persistLmModel(spark, dir)
-    val stream = replayCached(spark, s"docs|$dir", chunks = 3)(
-      (Tables.load(spark, dir, "documents"), col("doc_id")))
+    val stream = docs(spark, dir).stream(spark)
     val schema = TextAnalysis.perplexityAgainst(spark, dir).schema
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-    withGateParallelism(spark, GateStatePartitions) {
-      val q = TextAnalysis.perplexityStream(stream) { v =>
-        buf.synchronized { buf ++= v.collect() }; ()
-      }
-      try q.processAllAvailable() finally q.stop()
-    }
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(buf.synchronized(buf.toList).asJava, schema)
-      .orderBy("doc_id")
+    g.collect(schema)(TextAnalysis.perplexityStream(stream)(_)).orderBy("doc_id")
   }
 
   /** PERCOLATION under the hard gate: the standing query set is
@@ -700,24 +737,15 @@ object StreamGate {
     * statistics. Stateless per doc, so the emission union must equal the
     * batch score table (`bm25PercolateOracle`) for any chunking.
     */
-  def bm25Percolate(spark: SparkSession, dir: String): DataFrame = {
+  def bm25Percolate(spark: SparkSession, dir: String): DataFrame = gate(spark, "perc") { g =>
     import graft.operators.TextAnalysis
     TextAnalysis.persistBm25Index(spark, dir)
     val standing = TextAnalysis.bm25StandingQueries(spark, dir)
-    val stream = replayCached(spark, s"docs|$dir", chunks = 3)(
-      (Tables.load(spark, dir, "documents"), col("doc_id")))
+    val stream = docs(spark, dir).stream(spark)
     val schema = TextAnalysis.bm25ScoreDocs(
       Tables.load(spark, dir, "documents"), standing,
       TextAnalysis.Bm25DfTable, TextAnalysis.Bm25StatsTable).schema
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-    withGateParallelism(spark, GateStatePartitions) {
-      val q = TextAnalysis.bm25PercolateStream(stream, standing) { v =>
-        buf.synchronized { buf ++= v.collect() }; ()
-      }
-      try q.processAllAvailable() finally q.stop()
-    }
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(buf.synchronized(buf.toList).asJava, schema)
+    g.collect(schema)(TextAnalysis.bm25PercolateStream(stream, standing)(_))
       .orderBy("query_id", "doc_id")
   }
 
@@ -732,49 +760,25 @@ object StreamGate {
     * emission union must equal the PIECEWISE batch score table: chunk-0
     * docs against A, chunks 1-2 against B, df/stats frozen throughout.
     */
-  def bm25PercolateLake(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.TextAnalysis
-    TextAnalysis.persistBm25Index(spark, dir)
-    val docsDf = Tables.load(spark, dir, "documents")
-    val files = stagedFilesCached(spark, s"docs|$dir", chunks = 3)(
-      (docsDf, col("doc_id")))
-    val root = gateTmp("graft-gate-perclake")
-    val lake = root.resolve("standing").toString
-    val watched = root.resolve("watched")
-    Files.createDirectories(watched)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("query_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("score_micro", org.apache.spark.sql.types.LongType)))
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-    try {
+  def bm25PercolateLake(spark: SparkSession, dir: String): DataFrame =
+    gate(spark, "perclake") { g =>
+      import graft.operators.TextAnalysis
+      TextAnalysis.persistBm25Index(spark, dir)
+      val chunks = docs(spark, dir)
+      val lake = g.dir("standing")
       TextAnalysis.StandingLake.publish(
-        TextAnalysis.bm25StandingQueriesDf(spark, dir, TextAnalysis.percolateSeedA),
-        lake)
-      withGateParallelism(spark, GateStatePartitions) {
-        val stream = spark.readStream.schema(docsDf.schema)
-          .option("maxFilesPerTrigger", "1").parquet(watched.toString)
-        val q = TextAnalysis.bm25PercolateLakeStream(stream, lake) { v =>
-          buf.synchronized { buf ++= v.collect() }; ()
-        }
-        try {
-          atomicFeed(files.head, watched, None)
-          q.processAllAvailable()
-          // the standing set changes mid-stream: set B goes live as the
-          // next immutable generation (publish = one atomic rename; a
-          // racing batch would keep reading its resolved generation)
-          TextAnalysis.StandingLake.publish(
-            TextAnalysis.bm25StandingQueriesDf(spark, dir, TextAnalysis.percolateSeedB),
-            lake)
-          files.tail.foreach { f => atomicFeed(f, watched, None) }
-          q.processAllAvailable()
-        } finally q.stop()
+        TextAnalysis.bm25StandingQueriesDf(spark, dir, TextAnalysis.percolateSeedA), lake)
+      val out = new Emissions(spark)
+      g.feedEach(chunks)(TextAnalysis.bm25PercolateLakeStream(_, lake)(out.emit)) { i =>
+        // the standing set changes mid-stream: set B goes live as the
+        // next immutable generation (publish = one atomic rename; a
+        // racing batch would keep reading its resolved generation)
+        if (i == 0) TextAnalysis.StandingLake.publish(
+          TextAnalysis.bm25StandingQueriesDf(spark, dir, TextAnalysis.percolateSeedB), lake)
       }
-    } finally rmrf(root)
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(buf.synchronized(buf.toList).asJava, schema)
-      .orderBy("query_id", "doc_id")
-  }
+      out.df(StructType(Seq("query_id", "doc_id", "score_micro").map(StructField(_, LongType))))
+        .orderBy("query_id", "doc_id")
+    }
 
   /** CONTINUOUS INDEX-QUALITY MONITORING under the hard gate: the query
     * vectors (every 20th embedding) arrive as a replayed stream; each
@@ -783,22 +787,13 @@ object StreamGate {
     * per-query independent, so the emission union must equal the batch
     * evaluation (oracle: the sim_eval_recall oracle).
     */
-  def evalRecallStream(spark: SparkSession, dir: String): DataFrame = {
+  def evalRecallStream(spark: SparkSession, dir: String): DataFrame = gate(spark, "evalq") { g =>
     import graft.operators.Similarity
-    val stream = replayCached(spark, s"evalq|$dir", chunks = 3)(
+    val stream = replay(spark, s"evalq|$dir", chunks = 3)(
       (Tables.load(spark, dir, "embeddings").filter(col("vec_id") % 20 === 0),
         col("vec_id")))
     val schema = Similarity.evalRecall(spark, dir).schema
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-    withGateParallelism(spark, GateStatePartitions) {
-      val q = Similarity.evalStream(stream, dir) { v =>
-        buf.synchronized { buf ++= v.collect() }; ()
-      }
-      try q.processAllAvailable() finally q.stop()
-    }
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(buf.synchronized(buf.toList).asJava, schema)
-      .orderBy("q_id")
+    g.collect(schema)(Similarity.evalStream(stream, dir)(_)).orderBy("q_id")
   }
 
   /** TEMPORAL TABLE JOIN under the hard gate: the SCD2 version table is
@@ -809,27 +804,15 @@ object StreamGate {
     * the emission union must equal the batch temporal join (oracle: the
     * rel_temporal_join ASOF JOIN oracle) for any chunking.
     */
-  def temporalJoin(spark: SparkSession, dir: String): DataFrame = {
+  def temporalJoin(spark: SparkSession, dir: String): DataFrame = gate(spark, "tjoin") { g =>
     import graft.operators.Relational
     val events = Tables.load(spark, dir, "events")
-    val dim = Relational.scd2Versions(events).cache()
-    try {
-      dim.count() // freeze the dimension before the stream starts
-      val stream = replayCached(spark, s"purchases|$dir", chunks = 3)(
-        (events.filter(col("event_type") === "purchase"), unix_micros(col("ts"))))
-      val schema = Relational.temporalJoinOn(
-        Relational.purchaseFacts(events), dim).schema
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-      withGateParallelism(spark, GateStatePartitions) {
-        val q = StreamingQueries.temporalJoinStream(stream, dim) { v =>
-          buf.synchronized { buf ++= v.collect() }; ()
-        }
-        try q.processAllAvailable() finally q.stop()
-      }
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(buf.synchronized(buf.toList).asJava, schema)
-        .orderBy("event_id")
-    } finally { dim.unpersist(); () }
+    val dim = g.cached(Relational.scd2Versions(events))
+    dim.count() // freeze the dimension before the stream starts
+    val stream = replay(spark, s"purchases|$dir", chunks = 3)(
+      (events.filter(col("event_type") === "purchase"), unix_micros(col("ts"))))
+    val schema = Relational.temporalJoinOn(Relational.purchaseFacts(events), dim).schema
+    g.collect(schema)(StreamingQueries.temporalJoinStream(stream, dim)(_)).orderBy("event_id")
   }
 
   /** CHECKPOINT RECOVERY under the hard gate: the tumbling-window query
@@ -840,39 +823,22 @@ object StreamGate {
     * table must hash-match the batch q1 oracle: nothing double-counted
     * across the restart boundary, no window lost with the first JVM's
     * state. The watched dir is private (staged files COPIED in two
-    * steps); mtimes carry over so replay order is preserved.
+    * steps) and fed in strictly increasing mtime order, so replay order
+    * is preserved.
     */
-  def q1Restart(spark: SparkSession, dir: String): DataFrame = {
-    val files = stagedFilesCached(spark, s"ridesfiles|$dir", Chunks)(
-      (Rides.fromEvents(spark, dir), unix_millis(col("rowtime"))))
-    val root = gateTmp("graft-gate-restart")
-    val watch = root.resolve("watch")
-    Files.createDirectories(watch)
-    val ck = root.resolve("ck")
-    val name = s"graft_restart_${runId.incrementAndGet()}"
-    val copier = new OrderedCopier(watch)
-    def copyIn(fs: Seq[Path]): Unit = copier.copyIn(fs)
-    def runOnce(): Unit = {
-      val stream = spark.readStream
-        .schema(spark.read.parquet(watch.toString).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(watch.toString)
-      val q = StreamingQueries.q1Tumble(stream).writeStream
-        .format("memory").queryName(name).outputMode("complete")
-        .option("checkpointLocation", ck.toString).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    try {
-      withGateParallelism(spark, GateStatePartitions) {
-        copyIn(files.take(Chunks / 2))
-        runOnce() // first instance sees half the history, then STOPS
-        copyIn(files.drop(Chunks / 2))
-        runOnce() // recovery: offsets + window state restore, replay completes
-        materialize(spark.table(name)).orderBy("dept_time", "cell")
+  def q1Restart(spark: SparkSession, dir: String): DataFrame = gate(spark, "restart") { g =>
+    val chunks = stage(spark, s"rides|$dir")(rides(spark, dir))
+    val w = g.watch(chunks.schema)
+    val (name, ck) = (g.view(), g.dir("ck"))
+    g.scope {
+      // instance 1 sees half the history, then STOPS; instance 2 recovers
+      // offsets + window state and completes the replay
+      g.restart(w, chunks.files, Chunks / 2) { _ =>
+        g.drain(StreamingQueries.q1Tumble(w.stream).writeStream
+          .format("memory").queryName(name).outputMode("complete")
+          .option("checkpointLocation", ck).start())
       }
-    } finally {
-      spark.catalog.dropTempView(name)
-      rmrf(root)
+      materialize(spark.table(name)).orderBy("dept_time", "cell")
     }
   }
 
@@ -889,19 +855,11 @@ object StreamGate {
     * same rel_temporal_join ASOF JOIN oracle — nothing about the
     * continuous execution may show in the result.
     */
-  def temporalJoinLive(spark: SparkSession, dir: String): DataFrame = {
+  def temporalJoinLive(spark: SparkSession, dir: String): DataFrame = gate(spark, "tjlive") { g =>
     import graft.operators.Relational
     val events = Tables.load(spark, dir, "events")
-    val files = stagedFilesCached(spark, s"eventsall|$dir", Chunks)(
-      (events, unix_micros(col("ts"))))
-    val schema = spark.read.parquet(files.head.getParent.toString).schema
-    val root = gateTmp("graft-gate-tjlive")
-    val dimWatch = root.resolve("dim")
-    val factWatch = root.resolve("facts")
-    Files.createDirectories(dimWatch)
-    Files.createDirectories(factWatch)
-    val lake = new graft.sinks.ParquetUpsertSink(
-      root.resolve("dimlake").toString, Seq("user_id", "version_no"), 4)
+    val chunks = stage(spark, s"eventsall|$dir")((events, unix_micros(col("ts"))))
+    val lake = new ParquetUpsertSink(g.dir("dimlake"), Seq("user_id", "version_no"), 4)
     val joinSchema = Relational.temporalJoinOn(
       Relational.purchaseFacts(events), Relational.scd2Versions(events)).schema
     // CURRENCY-FENCE expectations, TWO jobs total for all grid steps
@@ -920,12 +878,12 @@ object StreamGate {
     // build filtered to the prefix's max event ts — count and valid_from
     // frontier exactly (valid_to differs, open vs later-closed, but the
     // fence never reads it).
-    val cutoffByFile = spark.read.schema(schema)
-      .parquet(files.map(_.toString): _*)
+    val cutoffByFile = spark.read.schema(chunks.schema)
+      .parquet(chunks.files.map(_.toString): _*)
       .groupBy(input_file_name().as("f"))
       .agg(max(unix_micros(col("ts"))).as("hi"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val cutoffs = files.map { f =>
+    val cutoffs = chunks.files.map { f =>
       val name = f.getFileName.toString
       cutoffByFile.collectFirst { case (uri, hi) if uri.endsWith(name) => hi }
         .getOrElse(throw new IllegalStateException(
@@ -947,50 +905,37 @@ object StreamGate {
       (covered.map(_._1).sum,
         if (covered.isEmpty) Long.MinValue else covered.map(_._2).max)
     }
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-    try {
-      withGateParallelism(spark, GateStatePartitions) {
-        def watch(p: Path) = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(p.toString)
-        val dimQ = Scd2Stream.scd2Stream(watch(dimWatch)).toDF().writeStream
-          .outputMode("update")
-          .option("checkpointLocation", root.resolve("dimck").toString)
-          .foreachBatch { (b: Dataset[Row], _: Long) =>
-            if (!b.isEmpty) lake.upsert(b.toDF()); ()
+    val (dimW, factW) = (g.watch(chunks.schema), g.watch(chunks.schema))
+    val out = new Emissions(spark)
+    g.run(g.foreachBatch(Scd2Stream.scd2Stream(dimW.stream).toDF(), "update") { (b, _) =>
+      if (!b.isEmpty) lake.upsert(b); ()
+    }) { dimQ =>
+      g.run(StreamingQueries.temporalJoinLiveStream(factW.stream, lake)(out.emit)) { factQ =>
+        chunks.files.zipWithIndex.foreach { case (f, i) =>
+          dimW.feed(f)
+          dimQ.processAllAvailable()  // dimension first
+          // CURRENCY FENCE: before any fact row of this grid step may
+          // join, the lake must hold exactly the versions the batch
+          // build derives from the chunk prefix — count and frontier
+          // both. A lost dim chunk (the replay race this gate once had)
+          // or a stale lake read fails HERE, loudly, instead of
+          // surfacing as a nondeterministic hash mismatch downstream.
+          val (expectN, expectHi) = expectAt(i)
+          if (expectN > 0L) {
+            val got = lake.snapshot(spark)
+              .agg(count(lit(1)).as("n"), max(col("valid_from_us")).as("hi")).head()
+            if (got.getLong(0) != expectN || got.getLong(1) != expectHi)
+              throw new IllegalStateException(
+                s"temporalJoinLive: version lake not current after dim chunk $i — " +
+                  s"expected (count=$expectN, maxValidFrom=$expectHi), " +
+                  s"lake has (count=${got.getLong(0)}, maxValidFrom=${got.getLong(1)})")
           }
-          .start()
-        val factQ = StreamingQueries.temporalJoinLiveStream(watch(factWatch), lake) { v =>
-          buf.synchronized { buf ++= v.collect() }; ()
+          factW.feed(f)
+          factQ.processAllAvailable()
         }
-        try {
-          files.zipWithIndex.foreach { case (f, i) =>
-            atomicFeed(f, dimWatch, Some((i + 1) * 60000L))
-            dimQ.processAllAvailable()  // dimension first
-            // CURRENCY FENCE: before any fact row of this grid step may
-            // join, the lake must hold exactly the versions the batch
-            // build derives from the chunk prefix — count and frontier
-            // both. A lost dim chunk (the replay race this gate once had)
-            // or a stale lake read fails HERE, loudly, instead of
-            // surfacing as a nondeterministic hash mismatch downstream.
-            val (expectN, expectHi) = expectAt(i)
-            if (expectN > 0L) {
-              val got = lake.snapshot(spark)
-                .agg(count(lit(1)).as("n"), max(col("valid_from_us")).as("hi")).head()
-              if (got.getLong(0) != expectN || got.getLong(1) != expectHi)
-                throw new IllegalStateException(
-                  s"temporalJoinLive: version lake not current after dim chunk $i — " +
-                    s"expected (count=$expectN, maxValidFrom=$expectHi), " +
-                    s"lake has (count=${got.getLong(0)}, maxValidFrom=${got.getLong(1)})")
-            }
-            atomicFeed(f, factWatch, Some((i + 1) * 60000L))
-            factQ.processAllAvailable()
-          }
-        } finally { dimQ.stop(); factQ.stop(); () }
       }
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(buf.synchronized(buf.toList).asJava, joinSchema)
-        .orderBy("event_id")
-    } finally rmrf(root)
+    }
+    out.df(joinSchema).orderBy("event_id")
   }
 
   /** INCREMENTAL SCD2 BUILD under the hard gate: the dimension-side
@@ -1002,24 +947,16 @@ object StreamGate {
     * oracle): versions opened in one micro-batch and closed in a later
     * one land as one row with the closing batch's valid_to.
     */
-  def scd2Build(spark: SparkSession, dir: String): DataFrame = {
+  def scd2Build(spark: SparkSession, dir: String): DataFrame = gate(spark, "scd2") { g =>
     import graft.operators.Relational
-    val stream = replayCached(spark, s"evnonpurch|$dir")(
+    val stream = replay(spark, s"evnonpurch|$dir")(
       (Tables.load(spark, dir, "events").filter(col("event_type") =!= "purchase"),
         unix_micros(col("ts"))))
     val schema = Relational.scd2Build(spark, dir).schema
     val acc = scala.collection.concurrent.TrieMap.empty[(Long, Int), Row]
-    withGateParallelism(spark, GateStatePartitions) {
-      val q = Scd2Stream.scd2Stream(stream).toDF().writeStream
-        .outputMode("update")
-        .foreachBatch { (b: Dataset[Row], _: Long) =>
-          b.collect().foreach(r => acc((r.getLong(0), r.getInt(4))) = r)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    import scala.jdk.CollectionConverters._
+    g.drain(g.foreachBatch(Scd2Stream.scd2Stream(stream).toDF(), "update") { (b, _) =>
+      b.collect().foreach(r => acc((r.getLong(0), r.getInt(4))) = r)
+    })
     spark.createDataFrame(acc.values.toList.asJava, schema)
       .orderBy("user_id", "version_no")
   }
@@ -1032,24 +969,15 @@ object StreamGate {
     * counts complete within its batch, so the emission union must equal
     * the batch drift report (oracle: the pipe_quality_drift oracle).
     */
-  def qualityDrift(spark: SparkSession, dir: String): DataFrame = {
+  def qualityDrift(spark: SparkSession, dir: String): DataFrame = gate(spark, "drift") { g =>
     import graft.operators.Pipeline
     val d = Tables.load(spark, dir, "documents")
     val b = d.agg(min("doc_id"), max("doc_id")).head()
     val (t0, span) = (b.getLong(0), b.getLong(1) - b.getLong(0) + 1)
     val reference = materialize(Pipeline.referenceHistogram(d))
-    val stream = replayCached(spark, s"docs|$dir", chunks = 3)(
-      (d, col("doc_id")))
+    val stream = docs(spark, dir).stream(spark)
     val schema = Pipeline.qualityDrift(spark, dir).schema
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-    withGateParallelism(spark, GateStatePartitions) {
-      val q = Pipeline.qualityDriftStream(stream, reference, t0, span) { v =>
-        buf.synchronized { buf ++= v.collect() }; ()
-      }
-      try q.processAllAvailable() finally q.stop()
-    }
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(buf.synchronized(buf.toList).asJava, schema)
+    g.collect(schema)(Pipeline.qualityDriftStream(stream, reference, t0, span)(_))
       .orderBy("chunk", "bin")
   }
 
@@ -1063,20 +991,12 @@ object StreamGate {
     * oracle) — the index carries no cross-vector statistics, so any
     * chunking that keeps vectors whole grows the identical index.
     */
-  def ivfIngest(spark: SparkSession, dir: String): DataFrame = {
+  def ivfIngest(spark: SparkSession, dir: String): DataFrame = gate(spark, "ivfing") { g =>
     import graft.operators.Similarity
-    val table = "ivf_ing_index"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val stream = replayCached(spark, s"emb|$dir", chunks = 3)(
-      (Tables.load(spark, dir, "embeddings"), col("vec_id")))
-    try {
-      withGateParallelism(spark, GateStatePartitions) {
-        val q = Similarity.ivfIngestStream(stream, table)()
-        try q.processAllAvailable() finally q.stop()
-      }
-      materialize(Similarity.ivfTopkAgainst(spark, dir, table))
-        .orderBy("q_id", "rank")
-    } finally { spark.sql(s"DROP TABLE IF EXISTS $table"); () }
+    val table = g.table("ivf_ing_index")
+    val stream = embeddings(spark, dir).stream(spark)
+    g.drain(Similarity.ivfIngestStream(stream, table)())
+    materialize(Similarity.ivfTopkAgainst(spark, dir, table)).orderBy("q_id", "rank")
   }
 
   /** THE FULL INDEX LIFECYCLE under the hard gate —
@@ -1094,29 +1014,18 @@ object StreamGate {
     * deterministic, deletion anti-joins compose, and the re-train reads
     * only the final content.
     */
-  def ivfRebalance(spark: SparkSession, dir: String): DataFrame = {
+  def ivfRebalance(spark: SparkSession, dir: String): DataFrame = gate(spark, "ivfrb") { g =>
     import graft.operators.{Dedup, Similarity}
-    val id = runId.incrementAndGet()
-    val (table, model) = (s"gate_rb_index_$id", s"gate_rb_model_$id")
-    Seq(table, model).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    val all = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val stream = replayCached(spark, s"embrb|$dir", chunks = 3)(
-      (all.filter(col("vec_id") % Similarity.IvfRbIngestMod === 0), col("vec_id")))
-    try {
-      Similarity.buildKmeansIvf(spark,
-        all.filter(col("vec_id") % Similarity.IvfRbIngestMod =!= 0), table, model)
-      withGateParallelism(spark, GateStatePartitions) {
-        val q = Similarity.ivfKmeansAdmitStream(stream, table, model)
-        try q.processAllAvailable() finally q.stop()
-      }
-      // maintenance between stream close and serve: delete, then re-train
-      Dedup.rewriteBucketedTable(spark, table, "cluster_id")(
-        _.join(broadcast(Similarity.forgetVecIds(spark, dir)),
-          Seq("vec_id"), "left_anti"))
-      Similarity.rebalanceIvfIndex(spark, table, model)
-      materialize(Similarity.ivfKmeansServe(spark, table, model))
-        .orderBy("q_id", "rank")
-    } finally { Seq(table, model).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t")); () }
+    val (table, model) = (g.table("gate_rb_index"), g.table("gate_rb_model"))
+    val (_, build, ingest) = ingestSplit(spark, dir)
+    val stream = ingest.stream(spark)
+    Similarity.buildKmeansIvf(spark, build, table, model)
+    g.drain(Similarity.ivfKmeansAdmitStream(stream, table, model))
+    // maintenance between stream close and serve: delete, then re-train
+    Dedup.rewriteBucketedTable(spark, table, "cluster_id")(
+      _.join(broadcast(Similarity.forgetVecIds(spark, dir)), Seq("vec_id"), "left_anti"))
+    Similarity.rebalanceIvfIndex(spark, table, model)
+    materialize(Similarity.ivfKmeansServe(spark, table, model)).orderBy("q_id", "rank")
   }
 
   /** CONTINUOUS PQ ADMISSION under the hard gate — FAISS
@@ -1131,28 +1040,16 @@ object StreamGate {
     * of the stream: encoding under frozen models is per-row
     * deterministic, so every chunking grows the identical code index.
     */
-  def pqIngest(spark: SparkSession, dir: String): DataFrame = {
+  def pqIngest(spark: SparkSession, dir: String): DataFrame = gate(spark, "pqing") { g =>
     import graft.operators.Similarity
-    val id = runId.incrementAndGet()
-    val (table, coarseT, booksT) =
-      (s"gate_pq_index_$id", s"gate_pq_coarse_$id", s"gate_pq_books_$id")
-    Seq(table, coarseT, booksT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    val all = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val stream = replayCached(spark, s"embrb|$dir", chunks = 3)(
-      (all.filter(col("vec_id") % Similarity.IvfRbIngestMod === 0), col("vec_id")))
-    try {
-      Similarity.buildPqIndex(spark,
-        all.filter(col("vec_id") % Similarity.IvfRbIngestMod =!= 0),
-        table, coarseT, booksT)
-      withGateParallelism(spark, GateStatePartitions) {
-        val q = Similarity.pqAdmitStream(stream, table, coarseT, booksT)
-        try q.processAllAvailable() finally q.stop()
-      }
-      materialize(Similarity.pqServe(spark, dir, table, coarseT, booksT))
-        .orderBy("q_id", "rank")
-    } finally {
-      Seq(table, coarseT, booksT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t")); ()
-    }
+    val Seq(table, coarseT, booksT) =
+      Seq("gate_pq_index", "gate_pq_coarse", "gate_pq_books").map(g.table)
+    val (_, build, ingest) = ingestSplit(spark, dir)
+    val stream = ingest.stream(spark)
+    Similarity.buildPqIndex(spark, build, table, coarseT, booksT)
+    g.drain(Similarity.pqAdmitStream(stream, table, coarseT, booksT))
+    materialize(Similarity.pqServe(spark, dir, table, coarseT, booksT))
+      .orderBy("q_id", "rank")
   }
 
   /** CHECKPOINT-RESTARTED INDEX ADMISSION under the hard gate — the
@@ -1169,43 +1066,34 @@ object StreamGate {
     * duplicate). The served result must equal the unrestarted ingest
     * (the pqIngestOracle): nothing about the restart may show.
     */
-  def pqRestart(spark: SparkSession, dir: String): DataFrame = {
+  def pqRestart(spark: SparkSession, dir: String): DataFrame = gate(spark, "pqrestart") { g =>
     import graft.operators.Similarity
-    val id = runId.incrementAndGet()
-    val (table, coarseT, booksT) =
-      (s"gate_pqr_index_$id", s"gate_pqr_coarse_$id", s"gate_pqr_books_$id")
-    Seq(table, coarseT, booksT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    val all = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val files = stagedFilesCached(spark, s"embrb|$dir", chunks = 3)(
-      (all.filter(col("vec_id") % Similarity.IvfRbIngestMod === 0), col("vec_id")))
-    val root = gateTmp("graft-gate-pqrestart")
-    val watched = root.resolve("watched")
-    Files.createDirectories(watched)
-    val ck = root.resolve("ck")
-    def runOnce(): Unit = {
-      val stream = spark.readStream.schema(all.schema)
-        .option("maxFilesPerTrigger", "1").parquet(watched.toString)
-      val q = Similarity.pqAdmitStream(stream, table, coarseT, booksT,
-        Some(ck.toString))
-      try q.processAllAvailable() finally q.stop()
+    val Seq(table, coarseT, booksT) =
+      Seq("gate_pqr_index", "gate_pqr_coarse", "gate_pqr_books").map(g.table)
+    val (_, build, ingest) = ingestSplit(spark, dir)
+    val (w, ck) = (g.watch(ingest.schema), g.dir("ck"))
+    Similarity.buildPqIndex(spark, build, table, coarseT, booksT)
+    // instance 1 admits two chunks, then STOPS; instance 2 recovers its
+    // offsets and admits the rest once
+    g.restart(w, ingest.files, 2) { _ =>
+      g.drain(Similarity.pqAdmitStream(w.stream, table, coarseT, booksT, Some(ck)))
     }
-    try {
-      Similarity.buildPqIndex(spark,
-        all.filter(col("vec_id") % Similarity.IvfRbIngestMod =!= 0),
-        table, coarseT, booksT)
-      withGateParallelism(spark, GateStatePartitions) {
-        files.take(2).foreach(f => atomicFeed(f, watched, None))
-        runOnce() // first instance admits two chunks, then STOPS
-        files.drop(2).foreach(f => atomicFeed(f, watched, None))
-        runOnce() // recovery: offsets restore, the rest admits once
-      }
-      Similarity.compactPqIndex(spark, table)
-      materialize(Similarity.pqServe(spark, dir, table, coarseT, booksT))
-        .orderBy("q_id", "rank")
-    } finally {
-      rmrf(root)
-      Seq(table, coarseT, booksT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t")); ()
-    }
+    Similarity.compactPqIndex(spark, table)
+    materialize(Similarity.pqServe(spark, dir, table, coarseT, booksT))
+      .orderBy("q_id", "rank")
+  }
+
+  /** The tenant a policy gate deletes: the [[graft.operators.Similarity
+    * .IvfPolicyDoomedLists]] smallest lists under the COMMISSIONING
+    * quantizer `cents` (smallest count first, ties by list id).
+    */
+  private def doomedLists(all: DataFrame, cents: Seq[(Int, Seq[Long])]): Seq[Int] = {
+    import graft.operators.{Clustering, Similarity}
+    Clustering.withAssignment(all.selectExpr("vec_id", Clustering.quantizeSql), cents)
+      .groupBy(col("best.cid").as("cid")).count()
+      .collect().map(r => (r.getInt(0), r.getLong(1)))
+      .sortBy { case (cid, n) => (n, cid) }
+      .take(Similarity.IvfPolicyDoomedLists).map(_._1).toSeq
   }
 
   /** THE REBALANCE POLICY DECIDING UNDER LIVE INGEST — the maintenance
@@ -1241,65 +1129,37 @@ object StreamGate {
     ivfPolicyWithLog(spark, dir)._1
 
   private[graft] def ivfPolicyWithLog(spark: SparkSession,
-      dir: String): (DataFrame, Seq[(Double, Boolean)]) = {
+      dir: String): (DataFrame, Seq[(Double, Boolean)]) = gate(spark, "ivfpolicy") { g =>
     import graft.operators.{Clustering, Dedup, Similarity}
-    val id = runId.incrementAndGet()
-    val (table, model) = (s"gate_pol_index_$id", s"gate_pol_model_$id")
-    Seq(table, model).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    val all = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val files = stagedFilesCached(spark, s"embrb|$dir", chunks = 3)(
-      (all.filter(col("vec_id") % Similarity.IvfRbIngestMod === 0), col("vec_id")))
-    val root = gateTmp("graft-gate-ivfpolicy")
-    val watched = root.resolve("watched")
-    Files.createDirectories(watched)
-    val decisions = scala.collection.mutable.ArrayBuffer.empty[(Double, Boolean)]
-    try {
-      Similarity.buildKmeansIvf(spark,
-        all.filter(col("vec_id") % Similarity.IvfRbIngestMod =!= 0), table, model)
-      // the commissioning model, held for the forget predicate: the
-      // tenant is defined by the model that admitted it, not by whatever
-      // model a mid-stream re-train may have installed since
-      val initCents = Clustering.loadCentroids(spark, model)
-      withGateParallelism(spark, GateStatePartitions) {
-        val stream = spark.readStream.schema(all.schema)
-          .option("maxFilesPerTrigger", "1").parquet(watched.toString)
-        val q = Similarity.ivfKmeansAdmitStream(stream, table, model)
-        try files.foreach { f =>
-          atomicFeed(f, watched, None)
-          q.processAllAvailable()
-          // MAINTENANCE WINDOW: the policy decides per chunk
-          decisions += Similarity.rebalanceIfSkewed(spark, table, model,
-            Similarity.IvfPolicySkewMax)
-        } finally q.stop()
-      }
-      // the hollow-out: delete the doomed tenant by re-deriving each
-      // row's commissioning assignment (map-only against the K-struct
-      // literal) inside the atomic rewrite
-      val doomed = Clustering.withAssignment(
-          all.selectExpr("vec_id", Clustering.quantizeSql), initCents)
-        .groupBy(col("best.cid").as("cid")).count()
-        .collect().map(r => (r.getInt(0), r.getLong(1)))
-        .sortBy { case (cid, n) => (n, cid) }
-        .take(Similarity.IvfPolicyDoomedLists).map(_._1).toSeq
-      Dedup.rewriteBucketedTable(spark, table, "cluster_id")(df =>
-        Clustering.withAssignment(
-            df.selectExpr("cluster_id", "vec_id", "embedding", "nrm",
-              Clustering.quantizeSql), initCents)
-          .filter(!col("best.cid").isin(doomed: _*)))
-      val (skew, fired) = Similarity.rebalanceIfSkewed(spark, table, model,
-        Similarity.IvfPolicySkewMax)
-      decisions += ((skew, fired))
-      if (!fired)
-        throw new IllegalStateException(
-          s"ivfPolicy: post-forget window measured skew $skew <= " +
-            s"${Similarity.IvfPolicySkewMax} and skipped the re-train — " +
-            "the hollowed index would serve under a stale model")
-      (materialize(Similarity.ivfKmeansServe(spark, table, model))
-        .orderBy("q_id", "rank"), decisions.toSeq)
-    } finally {
-      rmrf(root)
-      Seq(table, model).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t")); ()
+    val (table, model) = (g.table("gate_pol_index"), g.table("gate_pol_model"))
+    val (all, build, ingest) = ingestSplit(spark, dir)
+    Similarity.buildKmeansIvf(spark, build, table, model)
+    // the commissioning model, held for the forget predicate: the
+    // tenant is defined by the model that admitted it, not by whatever
+    // model a mid-stream re-train may have installed since
+    val initCents = Clustering.loadCentroids(spark, model)
+    // MAINTENANCE WINDOW: the policy decides per chunk
+    val windows = g.feedEach(ingest)(Similarity.ivfKmeansAdmitStream(_, table, model)) { _ =>
+      Similarity.rebalanceIfSkewed(spark, table, model, Similarity.IvfPolicySkewMax)
     }
+    // the hollow-out: delete the doomed tenant by re-deriving each
+    // row's commissioning assignment (map-only against the K-struct
+    // literal) inside the atomic rewrite
+    val doomed = doomedLists(all, initCents)
+    Dedup.rewriteBucketedTable(spark, table, "cluster_id")(df =>
+      Clustering.withAssignment(
+          df.selectExpr("cluster_id", "vec_id", "embedding", "nrm",
+            Clustering.quantizeSql), initCents)
+        .filter(!col("best.cid").isin(doomed: _*)))
+    val (skew, fired) = Similarity.rebalanceIfSkewed(spark, table, model,
+      Similarity.IvfPolicySkewMax)
+    if (!fired)
+      throw new IllegalStateException(
+        s"ivfPolicy: post-forget window measured skew $skew <= " +
+          s"${Similarity.IvfPolicySkewMax} and skipped the re-train — " +
+          "the hollowed index would serve under a stale model")
+    (materialize(Similarity.ivfKmeansServe(spark, table, model))
+      .orderBy("q_id", "rank"), windows :+ ((skew, fired)))
   }
 
   /** THE PQ RE-TRAIN POLICY DECIDING UNDER LIVE INGEST — [[ivfPolicy]]'s
@@ -1325,64 +1185,35 @@ object StreamGate {
     pqPolicyWithLog(spark, dir)._1
 
   private[graft] def pqPolicyWithLog(spark: SparkSession,
-      dir: String): (DataFrame, Seq[(Double, Boolean)]) = {
+      dir: String): (DataFrame, Seq[(Double, Boolean)]) = gate(spark, "pqpolicy") { g =>
     import graft.operators.{Clustering, Dedup, Similarity}
-    val id = runId.incrementAndGet()
-    val (table, coarseT, booksT) =
-      (s"gate_pqp_index_$id", s"gate_pqp_coarse_$id", s"gate_pqp_books_$id")
-    Seq(table, coarseT, booksT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    val all = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val files = stagedFilesCached(spark, s"embrb|$dir", chunks = 3)(
-      (all.filter(col("vec_id") % Similarity.IvfRbIngestMod === 0), col("vec_id")))
-    val root = gateTmp("graft-gate-pqpolicy")
-    val watched = root.resolve("watched")
-    Files.createDirectories(watched)
-    val decisions = scala.collection.mutable.ArrayBuffer.empty[(Double, Boolean)]
-    try {
-      Similarity.buildPqIndex(spark,
-        all.filter(col("vec_id") % Similarity.IvfRbIngestMod =!= 0),
-        table, coarseT, booksT)
-      val initCoarse = Clustering.loadCentroids(spark, coarseT)
-      withGateParallelism(spark, GateStatePartitions) {
-        val stream = spark.readStream.schema(all.schema)
-          .option("maxFilesPerTrigger", "1").parquet(watched.toString)
-        val q = Similarity.pqAdmitStream(stream, table, coarseT, booksT)
-        try files.foreach { f =>
-          atomicFeed(f, watched, None)
-          q.processAllAvailable()
-          decisions += Similarity.retrainPqIfSkewed(spark, dir, table,
-            coarseT, booksT)
-        } finally q.stop()
-      }
-      // the hollow-out: commissioning assignment re-derived from raw
-      // vectors (codes carry no embedding) inside the atomic rewrite;
-      // survivors keep their stored codes — deletion never re-encodes
-      val doomed = Clustering.withAssignment(
-          all.selectExpr("vec_id", Clustering.quantizeSql), initCoarse)
-        .groupBy(col("best.cid").as("cid")).count()
-        .collect().map(r => (r.getInt(0), r.getLong(1)))
-        .sortBy { case (cid, n) => (n, cid) }
-        .take(Similarity.IvfPolicyDoomedLists).map(_._1).toSeq
-      Dedup.rewriteBucketedTable(spark, table, "cluster_id")(df =>
-        Clustering.withAssignment(
-            df.join(all, Seq("vec_id"))
-              .selectExpr("cluster_id", "vec_id", "code", Clustering.quantizeSql),
-            initCoarse)
-          .filter(!col("best.cid").isin(doomed: _*)))
-      val (skew, fired) = Similarity.retrainPqIfSkewed(spark, dir, table,
-        coarseT, booksT)
-      decisions += ((skew, fired))
-      if (!fired)
-        throw new IllegalStateException(
-          s"pqPolicy: post-forget window measured skew $skew <= " +
-            s"${Similarity.IvfPolicySkewMax} and skipped the re-train — " +
-            "the hollowed index would serve under stale codebooks")
-      (materialize(Similarity.pqServe(spark, dir, table, coarseT, booksT))
-        .orderBy("q_id", "rank"), decisions.toSeq)
-    } finally {
-      rmrf(root)
-      Seq(table, coarseT, booksT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t")); ()
+    val Seq(table, coarseT, booksT) =
+      Seq("gate_pqp_index", "gate_pqp_coarse", "gate_pqp_books").map(g.table)
+    val (all, build, ingest) = ingestSplit(spark, dir)
+    Similarity.buildPqIndex(spark, build, table, coarseT, booksT)
+    val initCoarse = Clustering.loadCentroids(spark, coarseT)
+    val windows = g.feedEach(ingest)(Similarity.pqAdmitStream(_, table, coarseT, booksT)) { _ =>
+      Similarity.retrainPqIfSkewed(spark, dir, table, coarseT, booksT)
     }
+    // the hollow-out: commissioning assignment re-derived from raw
+    // vectors (codes carry no embedding) inside the atomic rewrite;
+    // survivors keep their stored codes — deletion never re-encodes
+    val doomed = doomedLists(all, initCoarse)
+    Dedup.rewriteBucketedTable(spark, table, "cluster_id")(df =>
+      Clustering.withAssignment(
+          df.join(all, Seq("vec_id"))
+            .selectExpr("cluster_id", "vec_id", "code", Clustering.quantizeSql),
+          initCoarse)
+        .filter(!col("best.cid").isin(doomed: _*)))
+    val (skew, fired) = Similarity.retrainPqIfSkewed(spark, dir, table,
+      coarseT, booksT)
+    if (!fired)
+      throw new IllegalStateException(
+        s"pqPolicy: post-forget window measured skew $skew <= " +
+          s"${Similarity.IvfPolicySkewMax} and skipped the re-train — " +
+          "the hollowed index would serve under stale codebooks")
+    (materialize(Similarity.pqServe(spark, dir, table, coarseT, booksT))
+      .orderBy("q_id", "rank"), windows :+ ((skew, fired)))
   }
 
   /** CONTINUOUS HYBRID SERVING under the hard gate: retrieval queries
@@ -1397,26 +1228,21 @@ object StreamGate {
     * serving tier of a deployed retrieval stack: queries stream, the
     * indexes change only through the separate ingest/compaction path.
     */
-  def hybridServe(spark: SparkSession, dir: String): DataFrame = {
+  def hybridServe(spark: SparkSession, dir: String): DataFrame = gate(spark, "hybrid") { g =>
     import graft.operators.{Similarity, TextAnalysis}
     TextAnalysis.persistBm25Index(spark, dir)
     Similarity.persistIvfIndexIfStale(spark, dir)
-    val stream = replayCached(spark, s"hybridq|$dir", chunks = 3)(
-      (Tables.load(spark, dir, "embeddings")
-         .filter(col("vec_id") % TextAnalysis.Bm25QueryStride === 0),
-        col("vec_id")))
+    val stream = hybridQueries(spark, dir)
     val schema = Similarity.hybridRrfIvf(spark, dir).schema
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-    withGateParallelism(spark, GateStatePartitions) {
-      val q = Similarity.hybridServeStream(stream, dir) { v =>
-        buf.synchronized { buf ++= v.collect() }; ()
-      }
-      try q.processAllAvailable() finally q.stop()
-    }
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(buf.synchronized(buf.toList).asJava, schema)
-      .orderBy("query_id", "rk")
+    g.collect(schema)(Similarity.hybridServeStream(stream, dir)(_)).orderBy("query_id", "rk")
   }
+
+  /** The hybrid-serving query stream: every Bm25QueryStride-th embedding. */
+  private def hybridQueries(spark: SparkSession, dir: String): DataFrame =
+    replay(spark, s"hybridq|$dir", chunks = 3)(
+      (Tables.load(spark, dir, "embeddings")
+         .filter(col("vec_id") % graft.operators.TextAnalysis.Bm25QueryStride === 0),
+        col("vec_id")))
 
   /** [[hybridServe]] on the COMPRESSED index: each arriving query batch
     * is answered from the frozen BM25 postings + the PQ code index
@@ -1427,25 +1253,13 @@ object StreamGate {
     * serving tier a deployment runs once the corpus outgrows the flat
     * index's RAM tier.
     */
-  def hybridServePq(spark: SparkSession, dir: String): DataFrame = {
+  def hybridServePq(spark: SparkSession, dir: String): DataFrame = gate(spark, "hybridpq") { g =>
     import graft.operators.{Similarity, TextAnalysis}
     TextAnalysis.persistBm25Index(spark, dir)
     Similarity.persistPqHybridIfStale(spark, dir)
-    val stream = replayCached(spark, s"hybridq|$dir", chunks = 3)(
-      (Tables.load(spark, dir, "embeddings")
-         .filter(col("vec_id") % TextAnalysis.Bm25QueryStride === 0),
-        col("vec_id")))
+    val stream = hybridQueries(spark, dir)
     val schema = Similarity.hybridRrfPq(spark, dir).schema
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-    withGateParallelism(spark, GateStatePartitions) {
-      val q = Similarity.hybridServePqStream(stream, dir) { v =>
-        buf.synchronized { buf ++= v.collect() }; ()
-      }
-      try q.processAllAvailable() finally q.stop()
-    }
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(buf.synchronized(buf.toList).asJava, schema)
-      .orderBy("query_id", "rk")
+    g.collect(schema)(Similarity.hybridServePqStream(stream, dir)(_)).orderBy("query_id", "rk")
   }
 
   /** GENERATION-AWARE SERVING under the hard gate — the serve stream
@@ -1463,63 +1277,31 @@ object StreamGate {
     * models actually differ keeps the flip observable (a vacuous flip
     * would gate nothing).
     */
-  def hybridServeRefresh(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{Clustering, Similarity, TextAnalysis}
-    TextAnalysis.persistBm25Index(spark, dir)
-    Similarity.persistPqServeGens(spark, dir)
-    require(Clustering.loadCentroids(spark, Similarity.PqSr0Coarse) !=
-      Clustering.loadCentroids(spark, Similarity.PqSr1Coarse),
-      "the re-train must change the coarse model or the flip is unobservable")
-    val files = stagedFilesCached(spark, s"hybridqid|$dir", chunks = 3)(
-      (Tables.load(spark, dir, "embeddings").select("vec_id")
-         .filter(col("vec_id") % TextAnalysis.Bm25QueryStride === 0),
-        col("vec_id")))
-    Similarity.pqServeGenReset(spark)
-    val root = gateTmp("graft-gate-serverefresh")
-    val watched = root.resolve("watched")
-    Files.createDirectories(watched)
-    // rrfFuse's output shape (query_id, rk, doc_id, rrf)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("query_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("rk", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("rrf", org.apache.spark.sql.types.DoubleType)))
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-    try {
-      withGateParallelism(spark, GateStatePartitions) {
-        val stream = spark.readStream
-          .schema(org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("vec_id", org.apache.spark.sql.types.LongType))))
-          .option("maxFilesPerTrigger", "1").parquet(watched.toString)
-        val q = Similarity.hybridServePqStreamRefreshing(stream, dir) { v =>
-          buf.synchronized { buf ++= v.collect() }; ()
-        }
-        try {
-          atomicFeed(files.head, watched, None)
-          q.processAllAvailable()
-          // the maintenance path fires: generation 1 goes live between
-          // micro-batches with one atomic marker create
-          Similarity.pqServeGenPublish(spark, 1L)
-          files.tail.foreach { f => atomicFeed(f, watched, None) }
-          q.processAllAvailable()
-        } finally q.stop()
+  def hybridServeRefresh(spark: SparkSession, dir: String): DataFrame =
+    gate(spark, "serverefresh") { g =>
+      import graft.operators.{Clustering, Similarity, TextAnalysis}
+      TextAnalysis.persistBm25Index(spark, dir)
+      Similarity.persistPqServeGens(spark, dir)
+      require(Clustering.loadCentroids(spark, Similarity.PqSr0Coarse) !=
+        Clustering.loadCentroids(spark, Similarity.PqSr1Coarse),
+        "the re-train must change the coarse model or the flip is unobservable")
+      val chunks = stage(spark, s"hybridqid|$dir", 3)(
+        (Tables.load(spark, dir, "embeddings").select("vec_id")
+           .filter(col("vec_id") % TextAnalysis.Bm25QueryStride === 0),
+          col("vec_id")))
+      Similarity.pqServeGenReset(spark)
+      val out = new Emissions(spark)
+      g.feedEach(chunks)(Similarity.hybridServePqStreamRefreshing(_, dir)(out.emit)) { i =>
+        // the maintenance path fires: generation 1 goes live between
+        // micro-batches with one atomic marker create
+        if (i == 0) Similarity.pqServeGenPublish(spark, 1L)
       }
-    } finally rmrf(root)
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(buf.synchronized(buf.toList).asJava, schema)
-      .orderBy("query_id", "rk")
-  }
+      // rrfFuse's output shape (query_id, rk, doc_id, rrf)
+      out.df(StructType(Seq("query_id", "rk", "doc_id").map(StructField(_, LongType)) :+
+          StructField("rrf", DoubleType)))
+        .orderBy("query_id", "rk")
+    }
 
-  /** CONTINUOUS INDEX BUILD under the hard gate: the document table is
-    * replayed in chunks and every micro-batch is ADMITTED to an
-    * initially-empty BM25 index as append-only partials (postings
-    * bucket-aligned, df/stats generations) — the existing index is never
-    * read or rewritten inside the stream. After close, the standard
-    * query set against the grown index must answer EXACTLY like the
-    * batch-built index (oracle: the bm25 top-k oracle) — tf/dl are
-    * per-doc local and df/stats additive, so any chunking that keeps
-    * docs whole folds to the same index.
-    */
   /** CONTINUOUS DELETION under the hard gate — the index lifecycle's
     * missing third verb (build: [[bm25Ingest]]; repair/compact:
     * StorageSpec; now forget): deletion requests arrive as replayed
@@ -1531,33 +1313,26 @@ object StreamGate {
     * query set against the final index hash-matches the
     * filtered-corpus oracle (txt_bm25_forget's).
     */
-  def forgetDocs(spark: SparkSession, dir: String): DataFrame = {
+  def forgetDocs(spark: SparkSession, dir: String): DataFrame = gate(spark, "forgetdocs") { g =>
     import graft.operators.TextAnalysis
-    val id = runId.incrementAndGet()
-    val (p, f, st) = (s"gate_fg_post_$id", s"gate_fg_df_$id", s"gate_fg_stats_$id")
-    Seq(p, f, st).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    val Seq(p, f, st) = Seq("gate_fg_post", "gate_fg_df", "gate_fg_stats").map(g.table)
     // 2 chunks: each micro-batch pays a full postings rewrite + stats
     // rebuild (the real price of physical deletion), and two sequential
     // deletes already prove the anti-join composition the gate exists
     // for — a third batch re-proves it at pure cost
-    val stream = replayCached(spark, s"forgetids|$dir", chunks = 2)(
+    val stream = replay(spark, s"forgetids|$dir", chunks = 2)(
       (TextAnalysis.forgetDocIds(spark, dir), col("doc_id")))
-    try {
-      // full-corpus build first (one-shot tables: no staleness interplay
-      // with the batch row's dedicated tables)
-      TextAnalysis.bm25IndexWrites(spark, dir, p, f, st).foreach(_._2())
-      withGateParallelism(spark, GateStatePartitions) {
-        val q = TextAnalysis.bm25ForgetStream(stream, p, f, st)
-        try q.processAllAvailable() finally q.stop()
-      }
-      // the rewrites ran in the stream's cloned session; its refreshes
-      // don't invalidate THIS session's cached listings of the old
-      // generations
-      Seq(p, f, st).foreach(spark.catalog.refreshTable)
-      materialize(TextAnalysis.bm25SearchAgainst(spark,
-          TextAnalysis.bm25QueriesOf(TextAnalysis.bm25Corpus(spark, dir)), p, f, st))
-        .orderBy("query_id", "rk")
-    } finally { Seq(p, f, st).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t")); () }
+    // full-corpus build first (one-shot tables: no staleness interplay
+    // with the batch row's dedicated tables)
+    TextAnalysis.bm25IndexWrites(spark, dir, p, f, st).foreach(_._2())
+    g.drain(TextAnalysis.bm25ForgetStream(stream, p, f, st))
+    // the rewrites ran in the stream's cloned session; its refreshes
+    // don't invalidate THIS session's cached listings of the old
+    // generations
+    Seq(p, f, st).foreach(spark.catalog.refreshTable)
+    materialize(TextAnalysis.bm25SearchAgainst(spark,
+        TextAnalysis.bm25QueriesOf(TextAnalysis.bm25Corpus(spark, dir)), p, f, st))
+      .orderBy("query_id", "rk")
   }
 
   /** Continuous deletion for the DEDUP index under the hard gate: the
@@ -1573,24 +1348,17 @@ object StreamGate {
     * reason as [[forgetDocs]]: each batch pays the full rewrite, and two
     * sequential deletes already prove the composition.
     */
-  def dedupForget(spark: SparkSession, dir: String): DataFrame = {
+  def dedupForget(spark: SparkSession, dir: String): DataFrame = gate(spark, "dedupfg") { g =>
     import graft.operators.Dedup
-    val t = s"gate_fg_bands_${runId.incrementAndGet()}"
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    try {
-      Dedup.persistCorpusBands(spark, dir, t)
-      val fgIds = Dedup.incrementalAgainst(spark, dir, t)
-        .filter(!col("keep")).select(col("match_doc").as("doc_id")).distinct()
-      val stream = replayCached(spark, s"dedupfg|$dir", chunks = 2)(
-        (fgIds, col("doc_id")))
-      withGateParallelism(spark, GateStatePartitions) {
-        val q = Dedup.corpusForgetStream(stream, t)
-        try q.processAllAvailable() finally q.stop()
-      }
-      // rewrites ran in the stream's cloned session; refresh THIS one
-      spark.catalog.refreshTable(t)
-      materialize(Dedup.incrementalAgainst(spark, dir, t))
-    } finally { spark.sql(s"DROP TABLE IF EXISTS $t"); () }
+    val t = g.table("gate_fg_bands")
+    Dedup.persistCorpusBands(spark, dir, t)
+    val fgIds = Dedup.incrementalAgainst(spark, dir, t)
+      .filter(!col("keep")).select(col("match_doc").as("doc_id")).distinct()
+    val stream = replay(spark, s"dedupfg|$dir", chunks = 2)((fgIds, col("doc_id")))
+    g.drain(Dedup.corpusForgetStream(stream, t))
+    // rewrites ran in the stream's cloned session; refresh THIS one
+    spark.catalog.refreshTable(t)
+    materialize(Dedup.incrementalAgainst(spark, dir, t))
   }
 
   /** Continuous deletion for the PHASH index under the hard gate — the
@@ -1606,24 +1374,17 @@ object StreamGate {
     * reason as [[forgetDocs]]: each batch pays the full rewrite, and two
     * sequential deletes already prove the composition.
     */
-  def mmForget(spark: SparkSession, dir: String): DataFrame = {
+  def mmForget(spark: SparkSession, dir: String): DataFrame = gate(spark, "mmfg") { g =>
     import graft.operators.Multimodal
-    val t = s"gate_fg_phash_${runId.incrementAndGet()}"
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    try {
-      Multimodal.persistPhashBands(spark, dir, t)
-      val fgIds = Multimodal.phashVerdictsAgainst(spark, dir, t)
-        .filter(!col("keep")).select(col("match_id").as("doc_id")).distinct()
-      val stream = replayCached(spark, s"mmfg|$dir", chunks = 2)(
-        (fgIds, col("doc_id")))
-      withGateParallelism(spark, GateStatePartitions) {
-        val q = Multimodal.phashForgetStream(stream, t)
-        try q.processAllAvailable() finally q.stop()
-      }
-      // rewrites ran in the stream's cloned session; refresh THIS one
-      spark.catalog.refreshTable(t)
-      materialize(Multimodal.phashVerdictsAgainst(spark, dir, t))
-    } finally { spark.sql(s"DROP TABLE IF EXISTS $t"); () }
+    val t = g.table("gate_fg_phash")
+    Multimodal.persistPhashBands(spark, dir, t)
+    val fgIds = Multimodal.phashVerdictsAgainst(spark, dir, t)
+      .filter(!col("keep")).select(col("match_id").as("doc_id")).distinct()
+    val stream = replay(spark, s"mmfg|$dir", chunks = 2)((fgIds, col("doc_id")))
+    g.drain(Multimodal.phashForgetStream(stream, t))
+    // rewrites ran in the stream's cloned session; refresh THIS one
+    spark.catalog.refreshTable(t)
+    materialize(Multimodal.phashVerdictsAgainst(spark, dir, t))
   }
 
   /** THE UNIFIED DELETION WAVE OVER A REQUEST STREAM — the streaming
@@ -1650,46 +1411,47 @@ object StreamGate {
     import graft.operators.ForgetWave
     ForgetWave.forgetAllWith(spark, dir, ForgetWave.Wv2Tables,
       "forget-wave-stream:v1") { families =>
-      val root = gateTmp("graft-gate-forgetall")
-      try {
+      gate(spark, "forgetall") { g =>
         val requests = families.map(f =>
             f.resolve().select(lit(f.name).as("family"),
               col(f.key).cast("long").as("id")))
           .reduce(_.unionByName(_))
-        val (stageRoot, files) = stageChunkFiles(requests, col("id"), chunks = 2)
-        try {
-          val watched = root.resolve("watched")
-          Files.createDirectories(watched)
-          withGateParallelism(spark, GateStatePartitions) {
-            val stream = spark.readStream.schema(requests.schema)
-              .option("maxFilesPerTrigger", "1").parquet(watched.toString)
-            val q = stream.writeStream
-              .outputMode("append")
-              .option("checkpointLocation", root.resolve("ck").toString)
-              .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-                if (!batch.isEmpty) {
-                  val present = batch.select("family").distinct()
-                    .collect().map(_.getString(0)).toSet // bounded: <= 5 rows
-                  val b = batch.toDF().persist()
-                  try {
-                    val fams = families.filter(f => present(f.name)).map(f =>
-                      f.copy(resolve = () => b.filter(col("family") === f.name)
-                        .select(col("id").as(f.key))))
-                    ForgetWave.run(spark,
-                      root.resolve(s"wave=$batchId").toString, fams)
-                  } finally { b.unpersist(); () }
-                  ()
-                }
-              }.start()
-            try files.foreach { f =>
-              atomicFeed(f, watched, None)
-              q.processAllAvailable()
-            } finally q.stop()
+        // resolved per wave, so staged privately rather than cached
+        val chunks = Staged(stageChunkFiles(requests, col("id"), 2,
+          Paths.get(g.dir("requests"))), requests.schema)
+        g.feedEach(chunks)(g.foreachBatch(_, "append") { (batch, batchId) =>
+          if (!batch.isEmpty) {
+            val present = batch.select("family").distinct()
+              .collect().map(_.getString(0)).toSet // bounded: <= 5 rows
+            val b = batch.persist()
+            try {
+              val fams = families.filter(f => present(f.name)).map(f =>
+                f.copy(resolve = () => b.filter(col("family") === f.name)
+                  .select(col("id").as(f.key))))
+              ForgetWave.run(spark, g.dir(s"wave=$batchId"), fams)
+            } finally { b.unpersist(); () }
           }
-        } finally rmrf(stageRoot)
-      } finally rmrf(root)
+        })(_ => ())
+        ()
+      }
     }
   }
+
+  /** A copy-suppression loop is vacuous unless at least one kept
+    * original's copy arrived later and was suppressed at Hamming 0 by an
+    * ADMITTED (non-corpus) entry.
+    */
+  private def requireCopySuppressed(gateName: String, rows: Seq[Row]): Unit = {
+    val keptIds = rows.filter(_.getBoolean(2)).map(_.getLong(0)).toSet
+    if (!rows.exists(r => !r.getBoolean(2) && r.getLong(4) == 0L && keptIds.contains(r.getLong(3))))
+      throw new IllegalStateException(
+        s"$gateName: no copy was suppressed by an admitted original — the loop is vacuous")
+  }
+
+  /** The multimodal admission replay: augmented media arrivals in 3 chunks. */
+  private def mmArrivals(spark: SparkSession, dir: String): Staged =
+    stage(spark, s"mmadmit|$dir", 3)(
+      (graft.operators.Multimodal.mmArrivals(spark, dir), col("doc_id")))
 
   /** CONTINUOUS MULTIMODAL ADMISSION under the hard gate — the phash
     * ingest loop ([[graft.operators.Multimodal.phashAdmitStream]]): the
@@ -1703,47 +1465,15 @@ object StreamGate {
     * induction with brute-force Hamming pairs (the banded join provably
     * equals them at this radius).
     */
-  def mmAdmit(spark: SparkSession, dir: String): DataFrame = {
+  def mmAdmit(spark: SparkSession, dir: String): DataFrame = gate(spark, "mmadmit") { g =>
     import graft.operators.Multimodal
-    val table = s"graft_gate_mmadmit_${runId.incrementAndGet()}"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val incoming = Multimodal.mmArrivals(spark, dir)
-    val files = stagedFilesCached(spark, s"mmadmit|$dir", chunks = 3)(
-      (incoming, col("doc_id")))
-    val root = gateTmp("graft-gate-mmadmit")
-    val watched = root.resolve("watched")
-    Files.createDirectories(watched)
-    try {
-      Multimodal.persistPhashBands(spark, dir, table)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-      var schema: org.apache.spark.sql.types.StructType = null
-      withGateParallelism(spark, GateStatePartitions) {
-        val stream = spark.readStream.schema(incoming.schema)
-          .option("maxFilesPerTrigger", "1").parquet(watched.toString)
-        val q = Multimodal.phashAdmitStream(stream, table,
-            Some(root.resolve("ck").toString)) { v =>
-          buf.synchronized { if (schema == null) schema = v.schema; buf ++= v.collect() }; ()
-        }
-        try files.foreach { f =>
-          atomicFeed(f, watched, None)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      // non-vacuity: at least one kept original's copy arrived later and
-      // was suppressed at Hamming 0 by an ADMITTED (non-corpus) entry
-      val rows = buf.synchronized(buf.toList)
-      val keptIds = rows.filter(_.getBoolean(2)).map(_.getLong(0)).toSet
-      val copySuppressions = rows.count(r =>
-        !r.getBoolean(2) && r.getLong(4) == 0L && keptIds.contains(r.getLong(3)))
-      if (copySuppressions == 0)
-        throw new IllegalStateException(
-          "mmAdmit: no copy was suppressed by an admitted original — the loop is vacuous")
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(rows.asJava, schema).orderBy("doc_id")
-    } finally {
-      rmrf(root)
-      spark.sql(s"DROP TABLE IF EXISTS $table"); ()
-    }
+    val table = g.table("graft_gate_mmadmit")
+    val chunks = mmArrivals(spark, dir)
+    Multimodal.persistPhashBands(spark, dir, table)
+    val out = new Emissions(spark)
+    g.feedEach(chunks)(Multimodal.phashAdmitStream(_, table, Some(g.dir("ck")))(out.emit))(_ => ())
+    requireCopySuppressed("mmAdmit", out.rows)
+    out.df().orderBy("doc_id")
   }
 
   /** CHECKPOINT RECOVERY FOR transformWithState STATE — the restart
@@ -1761,49 +1491,8 @@ object StreamGate {
     * flip the over-budget tail back to keeps; a replayed batch would
     * double-emit verdicts and break the row count.
     */
-  def tokenBudgetRestart(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Pipeline
-    val budgets = Pipeline.tokenBudgets(spark, dir)
-    val files = stagedFilesCached(spark, s"docs|$dir", chunks = 3)(
-      (Tables.load(spark, dir, "documents"), col("doc_id")))
-    val root = gateTmp("graft-gate-tokrestart")
-    val watch = root.resolve("watch")
-    Files.createDirectories(watch)
-    val ck = root.resolve("ck")
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-    val copier = new OrderedCopier(watch)
-    def copyIn(fs: Seq[Path]): Unit = copier.copyIn(fs)
-    def runOnce(): Unit = {
-      val stream = spark.readStream
-        .schema(spark.read.parquet(watch.toString).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(watch.toString)
-      val q = Pipeline.TokenBudgetStream.query(stream, budgets).toDF()
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ck.toString)
-        .foreachBatch { (b: Dataset[Row], _: Long) =>
-          val rows = b.collect()
-          buf.synchronized { buf ++= rows }; ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    try {
-      withRocksDb(spark) {
-        withGateParallelism(spark, GateStatePartitions) {
-          copyIn(files.take(2))
-          runOnce() // instance 1: two chunks of spending, then STOP
-          copyIn(files.drop(2))
-          runOnce() // instance 2: RocksDB spent-sums restore, replay ends
-        }
-      }
-      import scala.jdk.CollectionConverters._
-      val schema = org.apache.spark.sql.Encoders
-        .product[Pipeline.TokenBudgetStream.TokVerdict].schema
-      spark.createDataFrame(buf.synchronized(buf.toList).asJava, schema)
-        .orderBy("doc_id")
-    } finally rmrf(root)
-  }
+  def tokenBudgetRestart(spark: SparkSession, dir: String): DataFrame =
+    tokenBudgetResumed(spark, dir, "tokrestart", Scoped ++ RocksDb)(_ => false)
 
   /** STATE-SCHEMA EVOLUTION across a checkpoint restart — the production
     * event the restart trilogy ([[q1Restart]], [[pqRestart]],
@@ -1821,52 +1510,29 @@ object StreamGate {
     * over-budget tail back to keeps; a schema mismatch would kill the
     * restarted query outright.
     */
-  def tokenBudgetEvolve(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Pipeline
-    val budgets = Pipeline.tokenBudgets(spark, dir)
-    val files = stagedFilesCached(spark, s"docs|$dir", chunks = 3)(
-      (Tables.load(spark, dir, "documents"), col("doc_id")))
-    val root = gateTmp("graft-gate-tokevolve")
-    val watch = root.resolve("watch")
-    Files.createDirectories(watch)
-    val ck = root.resolve("ck")
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-    val copier = new OrderedCopier(watch)
-    def runOnce(mk: DataFrame => DataFrame): Unit = {
-      val stream = spark.readStream
-        .schema(spark.read.parquet(watch.toString).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(watch.toString)
-      val q = mk(stream)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ck.toString)
-        .foreachBatch { (b: Dataset[Row], _: Long) =>
-          val rows = b.collect()
-          buf.synchronized { buf ++= rows }; ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    try {
-      withAvroState(spark) {
-        withRocksDb(spark) {
-          withGateParallelism(spark, GateStatePartitions) {
-            copier.copyIn(files.take(2))
-            runOnce(s => Pipeline.TokenBudgetStream.query(s, budgets).toDF())
-            copier.copyIn(files.drop(2))
-            // the MIGRATED deployment resumes: same checkpoint, same
-            // state name, widened schema
-            runOnce(s => Pipeline.TokenBudgetStream.queryEvolved(s, budgets).toDF())
-          }
-        }
+  def tokenBudgetEvolve(spark: SparkSession, dir: String): DataFrame =
+    // the MIGRATED deployment resumes: same checkpoint, same state name,
+    // widened schema
+    tokenBudgetResumed(spark, dir, "tokevolve", Scoped ++ RocksDb ++ AvroState)(_ == 2)
+
+  /** The token-budget stream stopped after two of three chunks and
+    * resumed on the same checkpoint; instance `i` runs the evolved
+    * processor when `evolved(i)`.
+    */
+  private def tokenBudgetResumed(spark: SparkSession, dir: String, name: String,
+      conf: Seq[(String, String)])(evolved: Int => Boolean): DataFrame =
+    gate(spark, name, conf) { g =>
+      import graft.operators.Pipeline.{tokenBudgets, TokenBudgetStream}
+      val budgets = tokenBudgets(spark, dir)
+      val chunks = docs(spark, dir)
+      val (w, ck, out) = (g.watch(chunks.schema), g.dir("ck"), new Emissions(spark))
+      g.restart(w, chunks.files, 2) { i =>
+        val q = if (evolved(i)) TokenBudgetStream.queryEvolved(w.stream, budgets)
+          else TokenBudgetStream.query(w.stream, budgets)
+        g.drain(g.foreachBatch(q.toDF(), "append", ck)((b, _) => out.emit(b)))
       }
-      import scala.jdk.CollectionConverters._
-      val schema = org.apache.spark.sql.Encoders
-        .product[Pipeline.TokenBudgetStream.TokVerdict].schema
-      spark.createDataFrame(buf.synchronized(buf.toList).asJava, schema)
-        .orderBy("doc_id")
-    } finally rmrf(root)
-  }
+      out.df(Encoders.product[TokenBudgetStream.TokVerdict].schema).orderBy("doc_id")
+    }
 
   /** LATE-DATA AUDIT under the hard gate: events replayed in ARRIVAL
     * order (rowtime + deterministic bounded jitter — the reference's
@@ -1877,25 +1543,14 @@ object StreamGate {
     * chunk id is a pure function of arrival_ms) and per-chunk watermark
     * evolution in SQL — the full audit, hash-checked.
     */
-  def lateAudit(spark: SparkSession, dir: String): DataFrame = {
+  def lateAudit(spark: SparkSession, dir: String): DataFrame = gate(spark, "lateaudit") { g =>
     val arr = StreamingQueries.lateArrivals(Rides.fromEvents(spark, dir))
-    val stream = replayCached(spark, s"latearr|$dir",
+    val stream = replay(spark, s"latearr|$dir",
       chunks = StreamingQueries.LateChunks)((arr, col("arrival_ms")))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("ride_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("is_start", org.apache.spark.sql.types.BooleanType),
-      org.apache.spark.sql.types.StructField("rowtime_ms", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("late", org.apache.spark.sql.types.BooleanType)))
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-    withGateParallelism(spark, GateStatePartitions) {
-      val q = StreamingQueries.lateAuditStream(stream) { v =>
-        buf.synchronized { buf ++= v.collect() }; ()
-      }
-      try q.processAllAvailable() finally q.stop()
-    }
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(buf.synchronized(buf.toList).asJava, schema)
-      .orderBy("ride_id")
+    val schema = StructType(Seq(StructField("ride_id", LongType),
+      StructField("is_start", BooleanType), StructField("rowtime_ms", LongType),
+      StructField("late", BooleanType)))
+    g.collect(schema)(StreamingQueries.lateAuditStream(stream)(_)).orderBy("ride_id")
   }
 
   /** Q1 OVER A DISORDERED STREAM with a deliberately tight watermark —
@@ -1917,24 +1572,18 @@ object StreamGate {
     * ms-truncated so the engine's microsecond watermark arithmetic
     * can't straddle a window boundary the oracle's ms model misses.
     */
-  def q1LateDrop(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  def q1LateDrop(spark: SparkSession, dir: String): DataFrame = gate(spark, "q1late") { g =>
     val rides = Rides.fromEvents(spark, dir)
       .withColumn("rowtime", timestamp_millis(unix_millis(col("rowtime"))))
     val maxMs = rides.agg(max(unix_millis(col("rowtime")))).head().getLong(0)
-    val sMs = maxMs + StreamingQueries.LateAuditMaxDelayMs
-    val sentinel = Seq((StreamingQueries.LateSentinelId, true,
-        new Timestamp(sMs), new Timestamp(sMs),
-        -73.99f, 40.75f, -73.99f, 40.75f, 1.toShort))
-      .toDF("rideId", "isStart", "startTime", "endTime",
-        "startLon", "startLat", "endLon", "endLat", "passengerCnt")
-      .withColumn("rowtime", col("startTime"))
+    val sentinel = sentinelRides(spark, maxMs + StreamingQueries.LateAuditMaxDelayMs,
+      (StreamingQueries.LateSentinelId, true))
     val arr = rides.unionByName(sentinel)
       .withColumn("arrival_ms", unix_millis(col("rowtime")) +
         StreamingQueries.arrivalJitter(col("rideId"), col("isStart")))
-    val stream = replayCached(spark, s"ridesq1late|$dir",
+    val stream = replay(spark, s"ridesq1late|$dir",
       chunks = StreamingQueries.LateChunks)((arr, col("arrival_ms")))
-    runToMemory(StreamingQueries.q1Tumble(stream,
+    g.memory(StreamingQueries.q1Tumble(stream,
         s"${StreamingQueries.LateAuditLagMs / 1000} seconds"), "append")
       .filter(col("dept_time") <= maxMs + 600000L) // the sentinel's window
       .orderBy("dept_time", "cell")
@@ -1946,23 +1595,16 @@ object StreamGate {
     * No derived statistics, so each batch is a single temp+rename; the
     * final standard search must hash-match the filtered-corpus oracle.
     */
-  def ivfForget(spark: SparkSession, dir: String): DataFrame = {
+  def ivfForget(spark: SparkSession, dir: String): DataFrame = gate(spark, "ivffg") { g =>
     import graft.operators.Similarity
-    val table = s"gate_ivffg_${runId.incrementAndGet()}"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val stream = replayCached(spark, s"ivfforgetids|$dir", chunks = 2)(
+    val table = g.table("gate_ivffg")
+    val stream = replay(spark, s"ivfforgetids|$dir", chunks = 2)(
       (Similarity.forgetVecIds(spark, dir), col("vec_id")))
-    try {
-      Similarity.persistIvfIndex(spark, dir, table)
-      withGateParallelism(spark, GateStatePartitions) {
-        val q = Similarity.ivfForgetStream(stream, table)
-        try q.processAllAvailable() finally q.stop()
-      }
-      // rewrites ran in the stream's cloned session (see forgetDocs)
-      spark.catalog.refreshTable(table)
-      materialize(Similarity.ivfTopkAgainst(spark, dir, table))
-        .orderBy("q_id", "rank")
-    } finally { spark.sql(s"DROP TABLE IF EXISTS $table"); () }
+    Similarity.persistIvfIndex(spark, dir, table)
+    g.drain(Similarity.ivfForgetStream(stream, table))
+    // rewrites ran in the stream's cloned session (see forgetDocs)
+    spark.catalog.refreshTable(table)
+    materialize(Similarity.ivfTopkAgainst(spark, dir, table)).orderBy("q_id", "rank")
   }
 
   /** CONTINUOUS DECONTAMINATION under the hard gate: training documents
@@ -1973,44 +1615,36 @@ object StreamGate {
     * frozen bench ⇒ emission union equals the batch fuzzy-decontamination
     * table (oracle: pipe_contamination_fuzzy's).
     */
-  def contamination(spark: SparkSession, dir: String): DataFrame = {
+  def contamination(spark: SparkSession, dir: String): DataFrame = gate(spark, "contam") { g =>
     import graft.operators.Training
-    val benchTable = s"gate_bench_bands_${runId.incrementAndGet()}"
-    spark.sql(s"DROP TABLE IF EXISTS $benchTable")
-    val stream = replayCached(spark, s"traindocs|$dir", chunks = 3)(
+    val benchTable = g.table("gate_bench_bands")
+    val stream = replay(spark, s"traindocs|$dir", chunks = 3)(
       (Tables.load(spark, dir, "documents")
         .filter(col("doc_id") % Training.FuzzyBenchMod =!= 0), col("doc_id")))
-    try {
-      Training.fuzzyBenchBands(spark, dir).write.saveAsTable(benchTable)
-      val schema = Training.contaminationFuzzy(spark, dir).schema // lazy: no job
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-      withGateParallelism(spark, GateStatePartitions) {
-        val q = Training.contaminationFuzzyStream(stream, benchTable) { v =>
-          buf.synchronized { buf ++= v.collect() }; ()
-        }
-        try q.processAllAvailable() finally q.stop()
-      }
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(buf.synchronized(buf.toList).asJava, schema)
-        .orderBy("doc_id", "bench_id")
-    } finally { spark.sql(s"DROP TABLE IF EXISTS $benchTable"); () }
+    Training.fuzzyBenchBands(spark, dir).write.saveAsTable(benchTable)
+    val schema = Training.contaminationFuzzy(spark, dir).schema // lazy: no job
+    g.collect(schema)(Training.contaminationFuzzyStream(stream, benchTable)(_))
+      .orderBy("doc_id", "bench_id")
   }
 
-  def bm25Ingest(spark: SparkSession, dir: String): DataFrame = {
+  /** CONTINUOUS INDEX BUILD under the hard gate: the document table is
+    * replayed in chunks and every micro-batch is ADMITTED to an
+    * initially-empty BM25 index as append-only partials (postings
+    * bucket-aligned, df/stats generations) — the existing index is never
+    * read or rewritten inside the stream. After close, the standard
+    * query set against the grown index must answer EXACTLY like the
+    * batch-built index (oracle: the bm25 top-k oracle) — tf/dl are
+    * per-doc local and df/stats additive, so any chunking that keeps
+    * docs whole folds to the same index.
+    */
+  def bm25Ingest(spark: SparkSession, dir: String): DataFrame = gate(spark, "bm25ing") { g =>
     import graft.operators.TextAnalysis
-    val (p, f, st) = ("bm25_ing_postings", "bm25_ing_df", "bm25_ing_stats")
-    Seq(p, f, st).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    val stream = replayCached(spark, s"docs|$dir", chunks = 3)(
-      (Tables.load(spark, dir, "documents"), col("doc_id")))
-    try {
-      withGateParallelism(spark, GateStatePartitions) {
-        val q = TextAnalysis.bm25IngestStream(stream, p, f, st)()
-        try q.processAllAvailable() finally q.stop()
-      }
-      materialize(TextAnalysis.bm25SearchAgainst(spark,
-          TextAnalysis.bm25QueriesOf(TextAnalysis.bm25Corpus(spark, dir)), p, f, st))
-        .orderBy("query_id", "rk")
-    } finally { Seq(p, f, st).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t")); () }
+    val Seq(p, f, st) = Seq("bm25_ing_postings", "bm25_ing_df", "bm25_ing_stats").map(g.table)
+    val stream = docs(spark, dir).stream(spark)
+    g.drain(TextAnalysis.bm25IngestStream(stream, p, f, st)())
+    materialize(TextAnalysis.bm25SearchAgainst(spark,
+        TextAnalysis.bm25QueriesOf(TextAnalysis.bm25Corpus(spark, dir)), p, f, st))
+      .orderBy("query_id", "rk")
   }
 
   /** INCREMENTAL LM fit under the hard gate: training docs replayed in
@@ -2025,29 +1659,23 @@ object StreamGate {
     * refitting") is the oracle, not a comment. Oracle: the batch
     * txt_lm_train oracle.
     */
-  def lmFit(spark: SparkSession, dir: String): DataFrame = {
+  def lmFit(spark: SparkSession, dir: String): DataFrame = gate(spark, "lmfit") { g =>
     import graft.operators.TextAnalysis
-    val stream = replayCached(spark, s"lmtrain|$dir", chunks = 3)(
+    val stream = replay(spark, s"lmtrain|$dir", chunks = 3)(
       (Tables.load(spark, dir, "documents")
         .filter(col("source") === TextAnalysis.LmTrainSource), col("doc_id")))
-    val root = gateTmp("graft-gate-lmfit")
-    val (biDir, tokDir) = (root.resolve("bi").toString, root.resolve("tok").toString)
-    try {
-      withGateParallelism(spark, GateStatePartitions) {
-        // batchId-keyed subdir + overwrite = idempotent under foreachBatch
-        // retries (an append-only sink would double-count a replayed
-        // batch's partials and corrupt the fold); the batch=N dirname
-        // surfaces as a partition column the fold's selectExpr ignores
-        val q = TextAnalysis.lmFitStream(stream) { (id, bi, toks) =>
-          bi.write.mode("overwrite").parquet(s"$biDir/batch=$id")
-          toks.write.mode("overwrite").parquet(s"$tokDir/batch=$id")
-        }
-        try q.processAllAvailable() finally q.stop()
-      }
-      materialize(TextAnalysis.lmModelFromRaw(
-          spark.read.parquet(biDir), spark.read.parquet(tokDir)))
-        .orderBy("l", "r")
-    } finally rmrf(root)
+    val (biDir, tokDir) = (g.dir("bi"), g.dir("tok"))
+    // batchId-keyed subdir + overwrite = idempotent under foreachBatch
+    // retries (an append-only sink would double-count a replayed
+    // batch's partials and corrupt the fold); the batch=N dirname
+    // surfaces as a partition column the fold's selectExpr ignores
+    g.drain(TextAnalysis.lmFitStream(stream) { (id, bi, toks) =>
+      bi.write.mode("overwrite").parquet(s"$biDir/batch=$id")
+      toks.write.mode("overwrite").parquet(s"$tokDir/batch=$id")
+    })
+    materialize(TextAnalysis.lmModelFromRaw(
+        spark.read.parquet(biDir), spark.read.parquet(tokDir)))
+      .orderBy("l", "r")
   }
 
   /** Streaming exact dedup through micro-batches: every ride event is
@@ -2059,13 +1687,13 @@ object StreamGate {
     * source table. Oracle: the batch src_rides oracle — any surviving
     * duplicate or over-dropped event hash-fails.
     */
-  def dedupEvents(spark: SparkSession, dir: String): DataFrame = {
-    val stream = replayCached(spark, s"rides2x|$dir") {
+  def dedupEvents(spark: SparkSession, dir: String): DataFrame = gate(spark, "dedupev") { g =>
+    val stream = replay(spark, s"rides2x|$dir") {
       val rides = Rides.fromEvents(spark, dir)
       (rides.unionByName(rides), unix_millis(col("rowtime")))
     }
     graft.operators.TaxiQueries.srcRidesProjection(
-      runToMemory(StreamingQueries.dedupEvents(stream), "append"))
+      g.memory(StreamingQueries.dedupEvents(stream), "append"))
   }
 
   /** BOUNDED-STATE dedup under the hard gate — [[dedupEvents]] shows the
@@ -2086,9 +1714,9 @@ object StreamGate {
     * ([[StreamingQueries.watermarkOverSql]] at the publication delay
     * pinned by stream_q1_late_drop) entirely in SQL.
     */
-  def dedupBounded(spark: SparkSession, dir: String): DataFrame = {
+  def dedupBounded(spark: SparkSession, dir: String): DataFrame = gate(spark, "dedupb") { g =>
     val rides = Rides.fromEvents(spark, dir).select(col("rideId"), col("rowtime"))
-    val stream = replayCached(spark, s"dedupb|$dir") {
+    val stream = replay(spark, s"dedupb|$dir") {
       val Array(mn, mx) = rides
         .agg(min(unix_millis(col("rowtime"))), max(unix_millis(col("rowtime"))))
         .head().toSeq.map(_.asInstanceOf[Long]).toArray
@@ -2100,10 +1728,15 @@ object StreamGate {
         .withColumn("arrival_ms", unix_millis(col("rowtime")))
       (doubled, col("arrival_ms"))
     }
-    runToMemory(StreamingQueries.dedupBounded(stream.drop("arrival_ms")), "append")
+    g.memory(StreamingQueries.dedupBounded(stream.drop("arrival_ms")), "append")
       .groupBy("ride_id").agg(count(lit(1)).cast("int").as("emitted"))
       .orderBy("ride_id")
   }
+
+  /** The dedup ingest replay: incoming docs plus offset re-submissions. */
+  private def ingestArrivals(spark: SparkSession, dir: String): Staged =
+    stage(spark, s"ingest|$dir", 3)(
+      (graft.operators.Dedup.ingestArrivals(spark, dir), col("doc_id")))
 
   /** The SELF-GROWING ingest loop under the hard gate: admit → verdict →
     * compact across 3 micro-batches. Each chunk of incoming docs is judged
@@ -2128,47 +1761,46 @@ object StreamGate {
     * split plus chunks < k's keepers), NOT the fixed-corpus batch oracle:
     * arrival order is part of the claim.
     */
-  def ingestAdmit(spark: SparkSession, dir: String): DataFrame = {
+  def ingestAdmit(spark: SparkSession, dir: String): DataFrame = gate(spark, "ingest") { g =>
     import graft.operators.Dedup
-    val table = s"graft_gate_corpus_${runId.incrementAndGet()}"
+    val table = g.table("graft_gate_corpus")
     Dedup.persistCorpusBands(spark, dir, table)
-    val incoming = Dedup.ingestArrivals(spark, dir)
-    val files = stagedFilesCached(spark, s"ingest|$dir", chunks = 3)(
-      (incoming, col("doc_id")))
-    val root = gateTmp("graft-gate-ingest")
-    val watched = root.resolve("watched")
-    Files.createDirectories(watched)
-    try {
-      val schema = Dedup.incremental(spark, dir).schema // lazy: no job
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-      // same workload-sized shuffle width as the other gates: the
-      // admission joins and between-batch compaction rewrites move a few
-      // thousand rows per chunk — 32-wide exchanges are pure task
-      // overhead here (results are partition-count invariant)
-      withGateParallelism(spark, GateStatePartitions) {
-        val stream = spark.readStream.schema(incoming.schema)
-          .option("maxFilesPerTrigger", "1").parquet(watched.toString)
-        val q = Dedup.incrementalStreamAdmitting(stream, table,
-            Some(root.resolve("ck").toString)) { v =>
-          buf.synchronized { buf ++= v.collect() }; ()
-        }
-        try files.foreach { f =>
-          // COPY, not move: the staging is the shared JVM-wide cache.
-          // Atomic visibility — the running source must never list a
-          // half-copied parquet file (mtime stays the copy's wall-clock,
-          // monotone across the feed loop, so no purge hazard here).
-          atomicFeed(f, watched, None)
-          q.processAllAvailable()
-          Dedup.compactCorpusBands(spark, table)
-        } finally q.stop()
-      }
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(buf.synchronized(buf.toList).asJava, schema)
-        .orderBy("doc_id")
-    } finally {
-      rmrf(root)
-      spark.sql(s"DROP TABLE IF EXISTS $table"); ()
+    val chunks = ingestArrivals(spark, dir)
+    val schema = Dedup.incremental(spark, dir).schema // lazy: no job
+    val out = new Emissions(spark)
+    // same workload-sized shuffle width as the other gates: the
+    // admission joins and between-batch compaction rewrites move a few
+    // thousand rows per chunk — 32-wide exchanges are pure task
+    // overhead here (results are partition-count invariant)
+    g.feedEach(chunks)(Dedup.incrementalStreamAdmitting(_, table, Some(g.dir("ck")))(out.emit)) {
+      _ => Dedup.compactCorpusBands(spark, table)
     }
+    out.df(schema).orderBy("doc_id")
+  }
+
+  /** Feed `chunks` one at a time into a private watched dir, drain each
+    * micro-batch, then run `trigger` as the maintenance window; the
+    * decision log must carry BOTH outcomes — a gate whose threshold never
+    * skips measures nothing about steady state, and one that never fires
+    * measures nothing about the repair.
+    *
+    * SUPPORTED RANGE: the per-family thresholds below are probed at
+    * sf0.01/sf0.1, where per-append files-per-bucket growth is
+    * write-width-driven, not data-size-driven (tools.CompactPolicyProbe
+    * measured the ratios identical at both SFs). Running a policy gate
+    * at an unprobed SF or write width can legitimately produce a
+    * single-outcome decision log, which this check rejects as vacuous
+    * rather than reporting results — re-probe and adjust the threshold
+    * before trusting the gate there.
+    */
+  private def policyWindows[M](g: Gate, gateName: String, chunks: Staged)(
+      start: DataFrame => StreamingQuery)(trigger: => (M, Boolean)): Seq[(M, Boolean)] = {
+    val decisions = g.feedEach(chunks)(start)(_ => trigger)
+    if (!decisions.exists(_._2) || !decisions.exists(!_._2))
+      throw new IllegalStateException(
+        s"$gateName: the gate needs both a fired and a skipped window " +
+          s"to be non-vacuous; got ${decisions.toList}")
+    decisions
   }
 
   /** THE COMPACTION TRIGGER DECIDING UNDER LIVE INGEST — [[ingestAdmit]]
@@ -2200,95 +1832,18 @@ object StreamGate {
     compactPolicyWithLog(spark, dir)._1
 
   private[graft] def compactPolicyWithLog(spark: SparkSession,
-      dir: String): (DataFrame, Seq[(Double, Boolean)]) = {
+      dir: String): (DataFrame, Seq[(Double, Boolean)]) = gate(spark, "cpolicy") { g =>
     import graft.operators.Dedup
-    val table = s"graft_gate_cpolicy_${runId.incrementAndGet()}"
-    val root = gateTmp("graft-gate-cpolicy")
-    val decisions = scala.collection.mutable.ArrayBuffer.empty[(Double, Boolean)]
-    // table creation + staging live INSIDE the try: a failure anywhere
-    // after the persist must still hit the finally's DROP TABLE (the
-    // sibling gates' shape — a leaked graft_gate_cpolicy_N otherwise
-    // pollutes the session catalog for its lifetime)
-    try {
-      Dedup.persistCorpusBands(spark, dir, table)
-      Dedup.compactCorpusBands(spark, table) // seal the base layout at 1.0
-      val incoming = Dedup.ingestArrivals(spark, dir)
-      val files = stagedFilesCached(spark, s"ingest|$dir", chunks = 3)(
-        (incoming, col("doc_id")))
-      val watched = root.resolve("watched")
-      Files.createDirectories(watched)
-      val schema = Dedup.incremental(spark, dir).schema // lazy: no job
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-      withGateParallelism(spark, GateStatePartitions) {
-        val stream = spark.readStream.schema(incoming.schema)
-          .option("maxFilesPerTrigger", "1").parquet(watched.toString)
-        val q = Dedup.incrementalStreamAdmitting(stream, table,
-            Some(root.resolve("ck").toString)) { v =>
-          buf.synchronized { buf ++= v.collect() }; ()
-        }
-        try files.foreach { f =>
-          atomicFeed(f, watched, None)
-          q.processAllAvailable()
-          decisions += Dedup.compactIfFragmented(spark, table, "band_key")
-        } finally q.stop()
-      }
-      if (!decisions.exists(_._2) || !decisions.exists(!_._2))
-        throw new IllegalStateException(
-          s"compactPolicy: the gate needs both a fired and a skipped window " +
-            s"to be non-vacuous; got ${decisions.toList}")
-      import scala.jdk.CollectionConverters._
-      (spark.createDataFrame(buf.synchronized(buf.toList).asJava, schema)
-        .orderBy("doc_id"), decisions.toSeq)
-    } finally {
-      rmrf(root)
-      spark.sql(s"DROP TABLE IF EXISTS $table"); ()
-    }
-  }
-
-  /** Shared chunked-ingest-with-maintenance loop for the per-family
-    * compaction-policy gates: feed staged chunk files one at a time into
-    * a private watched dir, drain the micro-batch, then run the
-    * family's `trigger` (a [[graft.operators.Dedup
-    * .compactIfFragmentedWith]] decision) as the maintenance window.
-    * Requires the decision log to carry BOTH outcomes — a gate whose
-    * threshold never skips measures nothing about steady state, and one
-    * that never fires measures nothing about the repair.
-    *
-    * SUPPORTED RANGE: the per-family thresholds below are probed at
-    * sf0.01/sf0.1, where per-append files-per-bucket growth is
-    * write-width-driven, not data-size-driven (tools.CompactPolicyProbe
-    * measured the ratios identical at both SFs). Running a policy gate
-    * at an unprobed SF or write width can legitimately produce a
-    * single-outcome decision log, which this check rejects as vacuous
-    * rather than reporting results — re-probe and adjust the threshold
-    * before trusting the gate there.
-    */
-  private def chunkedIngestWithTrigger(spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType, files: Seq[Path],
-      gatePrefix: String,
-      start: DataFrame => org.apache.spark.sql.streaming.StreamingQuery)(
-      trigger: () => (Double, Boolean)): Seq[(Double, Boolean)] = {
-    val root = gateTmp(gatePrefix)
-    val watched = root.resolve("watched")
-    Files.createDirectories(watched)
-    val decisions = scala.collection.mutable.ArrayBuffer.empty[(Double, Boolean)]
-    try {
-      withGateParallelism(spark, GateStatePartitions) {
-        val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(watched.toString)
-        val q = start(stream)
-        try files.foreach { f =>
-          atomicFeed(f, watched, None)
-          q.processAllAvailable()
-          decisions += trigger()
-        } finally q.stop()
-      }
-      if (!decisions.exists(_._2) || !decisions.exists(!_._2))
-        throw new IllegalStateException(
-          s"$gatePrefix: the gate needs both a fired and a skipped window " +
-            s"to be non-vacuous; got ${decisions.toList}")
-      decisions.toSeq
-    } finally rmrf(root)
+    val table = g.table("graft_gate_cpolicy")
+    Dedup.persistCorpusBands(spark, dir, table)
+    Dedup.compactCorpusBands(spark, table) // seal the base layout at 1.0
+    val chunks = ingestArrivals(spark, dir)
+    val schema = Dedup.incremental(spark, dir).schema // lazy: no job
+    val out = new Emissions(spark)
+    val decisions = policyWindows(g, "compactPolicy", chunks)(
+      Dedup.incrementalStreamAdmitting(_, table, Some(g.dir("ck")))(out.emit))(
+      Dedup.compactIfFragmented(spark, table, "band_key"))
+    (out.df(schema).orderBy("doc_id"), decisions)
   }
 
   /** Files-per-bucket thresholds for the per-family policy gates, chosen
@@ -2323,25 +1878,17 @@ object StreamGate {
     compactPolicyBm25WithLog(spark, dir)._1
 
   private[graft] def compactPolicyBm25WithLog(spark: SparkSession,
-      dir: String): (DataFrame, Seq[(Double, Boolean)]) = {
+      dir: String): (DataFrame, Seq[(Double, Boolean)]) = gate(spark, "cp-bm25") { g =>
     import graft.operators.{Dedup, TextAnalysis}
-    val id = runId.incrementAndGet()
-    val (p, f, st) = (s"gate_cp_post_$id", s"gate_cp_df_$id", s"gate_cp_stats_$id")
-    Seq(p, f, st).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    try {
-      val docsDf = Tables.load(spark, dir, "documents")
-      val files = stagedFilesCached(spark, s"docs|$dir", chunks = 3)(
-        (docsDf, col("doc_id")))
-      val decisions = chunkedIngestWithTrigger(spark, docsDf.schema, files,
-        "graft-gate-cp-bm25",
-        s => TextAnalysis.bm25IngestStream(s, p, f, st)())(
-        () => Dedup.compactIfFragmentedWith(spark, p, Bm25PolicyMaxFiles)(
-          () => { TextAnalysis.compactBm25Index(spark, p, f, st); () }))
-      Seq(p, f, st).foreach(spark.catalog.refreshTable)
-      (materialize(TextAnalysis.bm25SearchAgainst(spark,
-          TextAnalysis.bm25QueriesOf(TextAnalysis.bm25Corpus(spark, dir)), p, f, st))
-        .orderBy("query_id", "rk"), decisions)
-    } finally { Seq(p, f, st).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t")); () }
+    val Seq(p, f, st) = Seq("gate_cp_post", "gate_cp_df", "gate_cp_stats").map(g.table)
+    val decisions = policyWindows(g, "compactPolicyBm25", docs(spark, dir))(
+      TextAnalysis.bm25IngestStream(_, p, f, st)())(
+      Dedup.compactIfFragmentedWith(spark, p, Bm25PolicyMaxFiles)(
+        () => { TextAnalysis.compactBm25Index(spark, p, f, st); () }))
+    Seq(p, f, st).foreach(spark.catalog.refreshTable)
+    (materialize(TextAnalysis.bm25SearchAgainst(spark,
+        TextAnalysis.bm25QueriesOf(TextAnalysis.bm25Corpus(spark, dir)), p, f, st))
+      .orderBy("query_id", "rk"), decisions)
   }
 
   /** The fragmentation policy on the IVF-Flat index: vectors replay into
@@ -2355,23 +1902,16 @@ object StreamGate {
     compactPolicyIvfWithLog(spark, dir)._1
 
   private[graft] def compactPolicyIvfWithLog(spark: SparkSession,
-      dir: String): (DataFrame, Seq[(Double, Boolean)]) = {
+      dir: String): (DataFrame, Seq[(Double, Boolean)]) = gate(spark, "cp-ivf") { g =>
     import graft.operators.{Dedup, Similarity}
-    val table = s"gate_cp_ivf_${runId.incrementAndGet()}"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    try {
-      val all = Tables.load(spark, dir, "embeddings")
-      val files = stagedFilesCached(spark, s"emb|$dir", chunks = 3)(
-        (all, col("vec_id")))
-      val decisions = chunkedIngestWithTrigger(spark, all.schema, files,
-        "graft-gate-cp-ivf",
-        s => Similarity.ivfIngestStream(s, table)())(
-        () => Dedup.compactIfFragmentedWith(spark, table, IvfPolicyMaxFiles)(
-          () => { Similarity.compactIvfIndex(spark, table); () }))
-      spark.catalog.refreshTable(table)
-      (materialize(Similarity.ivfTopkAgainst(spark, dir, table))
-        .orderBy("q_id", "rank"), decisions)
-    } finally { spark.sql(s"DROP TABLE IF EXISTS $table"); () }
+    val table = g.table("gate_cp_ivf")
+    val decisions = policyWindows(g, "compactPolicyIvf", embeddings(spark, dir))(
+      Similarity.ivfIngestStream(_, table)())(
+      Dedup.compactIfFragmentedWith(spark, table, IvfPolicyMaxFiles)(
+        () => { Similarity.compactIvfIndex(spark, table); () }))
+    spark.catalog.refreshTable(table)
+    (materialize(Similarity.ivfTopkAgainst(spark, dir, table))
+      .orderBy("q_id", "rank"), decisions)
   }
 
   /** The fragmentation policy on the PQ code index: models train on
@@ -2386,31 +1926,19 @@ object StreamGate {
     compactPolicyPqWithLog(spark, dir)._1
 
   private[graft] def compactPolicyPqWithLog(spark: SparkSession,
-      dir: String): (DataFrame, Seq[(Double, Boolean)]) = {
+      dir: String): (DataFrame, Seq[(Double, Boolean)]) = gate(spark, "cp-pq") { g =>
     import graft.operators.{Dedup, Similarity}
-    val id = runId.incrementAndGet()
-    val (table, coarseT, booksT) =
-      (s"gate_cp_pq_$id", s"gate_cp_pqc_$id", s"gate_cp_pqb_$id")
-    Seq(table, coarseT, booksT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    try {
-      val all = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-      val files = stagedFilesCached(spark, s"embrb|$dir", chunks = 3)(
-        (all.filter(col("vec_id") % Similarity.IvfRbIngestMod === 0), col("vec_id")))
-      Similarity.buildPqIndex(spark,
-        all.filter(col("vec_id") % Similarity.IvfRbIngestMod =!= 0),
-        table, coarseT, booksT)
-      Similarity.compactPqIndex(spark, table) // seal the base layout at 1.0
-      val decisions = chunkedIngestWithTrigger(spark, all.schema, files,
-        "graft-gate-cp-pq",
-        s => Similarity.pqAdmitStream(s, table, coarseT, booksT))(
-        () => Dedup.compactIfFragmentedWith(spark, table, PqPolicyMaxFiles)(
-          () => { Similarity.compactPqIndex(spark, table); () }))
-      spark.catalog.refreshTable(table)
-      (materialize(Similarity.pqServe(spark, dir, table, coarseT, booksT))
-        .orderBy("q_id", "rank"), decisions)
-    } finally {
-      Seq(table, coarseT, booksT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t")); ()
-    }
+    val Seq(table, coarseT, booksT) = Seq("gate_cp_pq", "gate_cp_pqc", "gate_cp_pqb").map(g.table)
+    val (_, build, ingest) = ingestSplit(spark, dir)
+    Similarity.buildPqIndex(spark, build, table, coarseT, booksT)
+    Similarity.compactPqIndex(spark, table) // seal the base layout at 1.0
+    val decisions = policyWindows(g, "compactPolicyPq", ingest)(
+      Similarity.pqAdmitStream(_, table, coarseT, booksT))(
+      Dedup.compactIfFragmentedWith(spark, table, PqPolicyMaxFiles)(
+        () => { Similarity.compactPqIndex(spark, table); () }))
+    spark.catalog.refreshTable(table)
+    (materialize(Similarity.pqServe(spark, dir, table, coarseT, booksT))
+      .orderBy("q_id", "rank"), decisions)
   }
 
   /** The fragmentation policy on the PHASH band index — closing the
@@ -2427,33 +1955,19 @@ object StreamGate {
     compactPolicyMmWithLog(spark, dir)._1
 
   private[graft] def compactPolicyMmWithLog(spark: SparkSession,
-      dir: String): (DataFrame, Seq[(Double, Boolean)]) = {
+      dir: String): (DataFrame, Seq[(Double, Boolean)]) = gate(spark, "cp-mm") { g =>
     import graft.operators.{Dedup, Multimodal}
-    val table = s"gate_cp_mm_${runId.incrementAndGet()}"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    try {
-      Multimodal.persistPhashBands(spark, dir, table)
-      Multimodal.compactPhashBands(spark, table) // seal the base layout at 1.0
-      val incoming = Multimodal.mmArrivals(spark, dir)
-      val files = stagedFilesCached(spark, s"mmadmit|$dir", chunks = 3)(
-        (incoming, col("doc_id")))
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-      var schema: org.apache.spark.sql.types.StructType = null
-      val decisions = chunkedIngestWithTrigger(spark, incoming.schema, files,
-        "graft-gate-cp-mm",
-        s => Multimodal.phashAdmitStream(s, table, None) { v =>
-          buf.synchronized { if (schema == null) schema = v.schema; buf ++= v.collect() }; ()
-        })(
-        () => Dedup.compactIfFragmentedWith(spark, table, MmPolicyMaxFiles)(
-          () => { Multimodal.compactPhashBands(spark, table); () }))
-      val rows = buf.synchronized(buf.toList)
-      val keptIds = rows.filter(_.getBoolean(2)).map(_.getLong(0)).toSet
-      if (!rows.exists(r => !r.getBoolean(2) && r.getLong(4) == 0L && keptIds.contains(r.getLong(3))))
-        throw new IllegalStateException(
-          "compactPolicyMm: no copy was suppressed by an admitted original — the loop is vacuous")
-      import scala.jdk.CollectionConverters._
-      (spark.createDataFrame(rows.asJava, schema).orderBy("doc_id"), decisions)
-    } finally { spark.sql(s"DROP TABLE IF EXISTS $table"); () }
+    val table = g.table("gate_cp_mm")
+    Multimodal.persistPhashBands(spark, dir, table)
+    Multimodal.compactPhashBands(spark, table) // seal the base layout at 1.0
+    val chunks = mmArrivals(spark, dir)
+    val out = new Emissions(spark)
+    val decisions = policyWindows(g, "compactPolicyMm", chunks)(
+      Multimodal.phashAdmitStream(_, table, None)(out.emit))(
+      Dedup.compactIfFragmentedWith(spark, table, MmPolicyMaxFiles)(
+        () => { Multimodal.compactPhashBands(spark, table); () }))
+    requireCopySuppressed("compactPolicyMm", out.rows)
+    (out.df().orderBy("doc_id"), decisions)
   }
 
   /** FIFO token-budget admission under the hard gate:
@@ -2470,27 +1984,25 @@ object StreamGate {
     * chunk >= 1, so the boundary decision itself provably consumed
     * carried state (not just the tail verdicts).
     */
-  def tokenBudget(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Pipeline
-    val budgets = Pipeline.tokenBudgets(spark, dir) // the frozen recipe
-    val stream = replayCached(spark, s"docs|$dir", chunks = 3)(
-      (Tables.load(spark, dir, "documents"), col("doc_id")))
-    val out = withRocksDb(spark) {
-      runToMemory(Pipeline.TokenBudgetStream.query(stream, budgets).toDF(), "append")
+  def tokenBudget(spark: SparkSession, dir: String): DataFrame =
+    gate(spark, "tokbudget", Scoped ++ RocksDb) { g =>
+      import graft.operators.Pipeline
+      val budgets = Pipeline.tokenBudgets(spark, dir) // the frozen recipe
+      val stream = docs(spark, dir).stream(spark)
+      val out = g.memory(Pipeline.TokenBudgetStream.query(stream, budgets).toDF(), "append")
+      // same integer chunk arithmetic as stageChunkFiles
+      val ids = Tables.load(spark, dir, "documents")
+        .agg(min(col("doc_id")).as("t0"), max(col("doc_id")).as("t1")).head()
+      val (t0, span) = (ids.getLong(0), math.max(1L, ids.getLong(1) - ids.getLong(0) + 1))
+      val lateCrossings = out.filter(!col("keep"))
+        .groupBy("source").agg(min(col("doc_id")).as("first_drop"))
+        .filter(((col("first_drop") - t0) * 3 / span).cast("int") >= 1)
+      if (lateCrossings.isEmpty)
+        throw new IllegalStateException(
+          "tokenBudget gate: every budget crossing fell in chunk 0 — " +
+            "the cross-batch state claim would be vacuous")
+      out.orderBy("doc_id")
     }
-    // same integer chunk arithmetic as stageChunkFiles
-    val ids = Tables.load(spark, dir, "documents")
-      .agg(min(col("doc_id")).as("t0"), max(col("doc_id")).as("t1")).head()
-    val (t0, span) = (ids.getLong(0), math.max(1L, ids.getLong(1) - ids.getLong(0) + 1))
-    val lateCrossings = out.filter(!col("keep"))
-      .groupBy("source").agg(min(col("doc_id")).as("first_drop"))
-      .filter(((col("first_drop") - t0) * 3 / span).cast("int") >= 1)
-    if (lateCrossings.isEmpty)
-      throw new IllegalStateException(
-        "tokenBudget gate: every budget crossing fell in chunk 0 — " +
-          "the cross-batch state claim would be vacuous")
-    out.orderBy("doc_id")
-  }
 
   /** The idle-state TTL continuous count under the hard gate:
     * [[TtlContinuousCount]] (flatMapGroupsWithState + EventTimeTimeout —
@@ -2504,25 +2016,15 @@ object StreamGate {
     * Non-vacuous on the fixture: cells that accumulate across batches,
     * cells that evict and restart, and single-batch cells all occur.
     */
-  def ttlCount(spark: SparkSession, dir: String): DataFrame = {
+  def ttlCount(spark: SparkSession, dir: String): DataFrame = gate(spark, "ttl") { g =>
     import graft.operators.TaxiQueries
     val sink = new MemoryUpsertSink(Seq("cell"))
-    val ck = gateTmp("graft-gate-ttl-ck")
     val stream = ridesReplay(spark, dir)
-    try {
-      withGateParallelism(spark, 4) {
-        val q = TtlContinuousCount.query(stream, ttlMs = TaxiQueries.TtlGateMs).toDF()
-          .writeStream.outputMode("update")
-          .option("checkpointLocation", ck.toString)
-          .foreachBatch { (b: Dataset[Row], _: Long) => sink.upsertBatch(b.toDF()) }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(sink.snapshot.values.toSeq.asJava,
-          Encoders.product[TtlContinuousCount.CellCount].schema)
-        .orderBy("cell")
-    } finally rmrf(ck)
+    g.drain(g.foreachBatch(TtlContinuousCount.query(stream, ttlMs = TaxiQueries.TtlGateMs).toDF(),
+      "update")((b, _) => sink.upsertBatch(b)))
+    spark.createDataFrame(sink.snapshot.values.toSeq.asJava,
+        Encoders.product[TtlContinuousCount.CellCount].schema)
+      .orderBy("cell")
   }
 
   /** The full Q4 cascade with its level-2 changelog ALSO shipped through
@@ -2534,25 +2036,24 @@ object StreamGate {
     * batching writer delivered every upsert AND delete through the retry
     * path. Oracle: the same batch q4 oracle as [[q4Cascade]].
     */
-  def q4CascadeNet(spark: SparkSession, dir: String): DataFrame = {
+  def q4CascadeNet(spark: SparkSession, dir: String): DataFrame = gate(spark, "q4net") { g =>
     import spark.implicits._
-    val tmp = gateTmp("graft-gate-q4net")
     val storeId = s"gate-q4net-${runId.incrementAndGet()}"
     MemoryDocStore.clear(storeId)
-    val sink = new ParquetUpsertSink(tmp.resolve("level2").toString, Seq("dept_cnt"), 4)
+    g.onClose(MemoryDocStore.clear(storeId))
+    val sink = new ParquetUpsertSink(g.dir("level2"), Seq("dept_cnt"), 4)
     val mirror = new NetworkUpsertSink(
       MemoryDocStore.Factory(storeId, failFirstN = 2),
       Seq("dept_cnt"), maxActions = 4, maxRetries = 8, backoffMs = 1L)
     val stream = ridesReplay(spark, dir, chunks = 3)
-    try withGateParallelism(spark, 4) {
-      val q = CascadeQ4.startToParquetFrom(StreamingQueries.q4Level1(stream),
-        sink, tmp.resolve("ck").toString, mirror)
+    g.run(CascadeQ4.startToParquetFrom(StreamingQueries.q4Level1(stream),
+        sink, g.dir("ck"), mirror)) { q =>
       q.awaitTermination()
       MemoryDocStore.store(storeId).values.toSeq
         .map(d => (d("dept_cnt").asInstanceOf[Long], d("cnt_freq").asInstanceOf[Long]))
         .toDF("dept_cnt", "cnt_freq")
         .orderBy("dept_cnt")
-    } finally { rmrf(tmp); MemoryDocStore.clear(storeId) }
+    }
   }
 
   /** The stream-static dimension join under the hard gate: the ride
@@ -2563,31 +2064,21 @@ object StreamGate {
     * .TaxiQueries.ZoneCount]] cells — the left-join branch both ways).
     * Oracle: the same enrichment as one batch SQL.
     */
-  def staticJoin(spark: SparkSession, dir: String): DataFrame = {
+  def staticJoin(spark: SparkSession, dir: String): DataFrame = gate(spark, "szj", Unscoped) { g =>
     import graft.operators.TaxiQueries
     val dim = TaxiQueries.zoneDim(spark, dir)
-    val stream = ridesReplay(spark, dir)
-    val ck = gateTmp("graft-gate-szj-ck")
+    val out = TaxiQueries.zoneEnrich(ridesReplay(spark, dir), dim)
+    val keyIdx = out.schema.fieldIndex("ride_id")
     // keyed by ride_id, not appended: foreachBatch is at-least-once, so a
     // retried micro-batch must overwrite its own rows, not duplicate them
     // (the idempotence MemoryUpsertSink gives the update-mode gates)
-    val buf = scala.collection.mutable.LinkedHashMap.empty[Any, Row]
-    try {
-      val out = TaxiQueries.zoneEnrich(stream, dim)
-      val schema = out.schema
-      val keyIdx = schema.fieldIndex("ride_id")
-      val q = out.writeStream.outputMode("append")
-        .option("checkpointLocation", ck.toString)
-        .foreachBatch { (b: Dataset[Row], _: Long) =>
-          val rows = b.collect()
-          buf.synchronized { rows.foreach(r => buf.update(r.get(keyIdx), r)) }; ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(buf.synchronized(buf.values.toList).asJava, schema)
-        .orderBy("ride_id")
-    } finally rmrf(ck)
+    val rows = scala.collection.mutable.LinkedHashMap.empty[Any, Row]
+    g.drain(g.foreachBatch(out, "append") { (b, _) =>
+      val batch = b.collect()
+      rows.synchronized { batch.foreach(r => rows.update(r.get(keyIdx), r)) }
+    })
+    spark.createDataFrame(rows.synchronized(rows.values.toList).asJava, out.schema)
+      .orderBy("ride_id")
   }
 
   /** The retract-stream ENCODING under the hard gate: q4's level-1
@@ -2599,37 +2090,52 @@ object StreamGate {
     * retraction goes negative — both fail loudly), and the surviving rows
     * must hash-match the batch per-cell counts. Oracle: q4Level1OracleSql.
     */
-  def q4Retract(spark: SparkSession, dir: String): DataFrame = {
+  def q4Retract(spark: SparkSession, dir: String): DataFrame = gate(spark, "retract", Narrow) { g =>
     val retr = new RetractStream(Seq("cell"))
     val counts = scala.collection.mutable.Map.empty[Row, Int]
     val stream = ridesReplay(spark, dir)
-    val ck = gateTmp("graft-gate-retract-ck")
-    try {
-      val schema = StreamingQueries.q4Level1(Rides.fromEvents(spark, dir)).schema
-      withGateParallelism(spark, 4, scanNarrow = true) {
-        val q = StreamingQueries.q4Level1(stream).writeStream
-          .outputMode("update").option("checkpointLocation", ck.toString)
-          .foreachBatch { (b: Dataset[Row], _: Long) =>
-            retr.onBatch(b.toDF()).foreach { case (isAdd, row) =>
-              counts.synchronized {
-                val n = counts.getOrElse(row, 0) + (if (isAdd) 1 else -1)
-                if (n == 0) counts.remove(row) else counts.update(row, n)
-                ()
-              }
-            }; ()
-          }.start()
-        try q.processAllAvailable() finally q.stop()
+    val schema = StreamingQueries.q4Level1(Rides.fromEvents(spark, dir)).schema
+    g.drain(g.foreachBatch(StreamingQueries.q4Level1(stream), "update") { (b, _) =>
+      retr.onBatch(b).foreach { case (isAdd, row) =>
+        counts.synchronized {
+          val n = counts.getOrElse(row, 0) + (if (isAdd) 1 else -1)
+          if (n == 0) counts.remove(row) else counts.update(row, n)
+          ()
+        }
       }
-      val rows = counts.synchronized {
-        val bad = counts.filter(_._2 != 1)
-        require(bad.isEmpty, s"retract fold left non-unit multiplicities: $bad")
-        counts.keys.toList
-      }
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(rows.asJava, schema)
-        .select(col("cell"), col("dept_cnt"))
-        .orderBy("cell")
-    } finally rmrf(ck)
+    })
+    val rows = counts.synchronized {
+      val bad = counts.filter(_._2 != 1)
+      require(bad.isEmpty, s"retract fold left non-unit multiplicities: $bad")
+      counts.keys.toList
+    }
+    spark.createDataFrame(rows.asJava, schema)
+      .select(col("cell"), col("dept_cnt"))
+      .orderBy("cell")
+  }
+
+  /** Start q4's level-1 changelog over `rides` into the lake retract
+    * encoder `retr`.
+    */
+  private def lakeRetract(g: Gate, retr: LakeRetractStream)(rides: DataFrame): StreamingQuery =
+    g.foreachBatch(StreamingQueries.q4Level1(rides), "update") { (b, id) =>
+      if (!b.isEmpty) retr.onBatch(b, id)
+    }
+
+  /** One fold over `retr`'s emission log feeds both the multiplicity check
+    * and the returned `(key, value)` rows: a correct changelog folds every
+    * superseded pair to 0 (its add canceled by its retract) and every
+    * surviving row to exactly 1 — anything else is a missed/double
+    * retraction.
+    */
+  private def liveRows(g: Gate, retr: LakeRetractStream, key: String, value: String,
+      what: String): DataFrame = {
+    val folded = g.cached(retr.emitted(g.spark)
+      .groupBy(key, value)
+      .agg(sum(when(col("is_add"), 1L).otherwise(-1L)).as("mult")))
+    val bad = folded.filter(col("mult") =!= 1L && col("mult") =!= 0L).count()
+    require(bad == 0, s"$what fold left $bad non-unit multiplicities")
+    materialize(folded.filter(col("mult") === 1L).select(col(key), col(value)).orderBy(key))
   }
 
   /** The LEVEL-2 changelog (upserts AND deletes — the reference sink's
@@ -2642,29 +2148,17 @@ object StreamGate {
     * fire on this replay (the net-sink gate proves delivery of the same
     * stream), so the retract-without-add branch is exercised, not dead.
     */
-  def q4RetractL2(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = gateTmp("graft-gate-retractl2")
-    val sink = new ParquetUpsertSink(tmp.resolve("level2").toString, Seq("dept_cnt"), 4)
-    val retr = new LakeRetractStream(tmp.resolve("retract").toString, Seq("dept_cnt"))
-    val stream = ridesReplay(spark, dir, chunks = 3)
-    try withGateParallelism(spark, 4, scanNarrow = true) {
-      val q = CascadeQ4.startToParquetFrom(StreamingQueries.q4Level1(stream), sink,
-        tmp.resolve("ck").toString, retract = retr)
-      q.awaitTermination()
-      // one fold over the emission log feeds both the multiplicity check
-      // and the returned table (previously two full log reads)
-      val folded = retr.emitted(spark)
-        .groupBy("dept_cnt", "cnt_freq")
-        .agg(sum(when(col("is_add"), 1L).otherwise(-1L)).as("mult"))
-        .persist()
-      try {
-        val bad = folded.filter(col("mult") =!= 1L && col("mult") =!= 0L).count()
-        require(bad == 0, s"level-2 retract fold left $bad non-unit multiplicities")
-        materialize(folded.filter(col("mult") === 1L)
-          .select(col("dept_cnt"), col("cnt_freq")).orderBy("dept_cnt"))
-      } finally { folded.unpersist(); () }
-    } finally rmrf(tmp)
-  }
+  def q4RetractL2(spark: SparkSession, dir: String): DataFrame =
+    gate(spark, "retractl2", Narrow) { g =>
+      val sink = new ParquetUpsertSink(g.dir("level2"), Seq("dept_cnt"), 4)
+      val retr = new LakeRetractStream(g.dir("retract"), Seq("dept_cnt"))
+      val stream = ridesReplay(spark, dir, chunks = 3)
+      g.run(CascadeQ4.startToParquetFrom(StreamingQueries.q4Level1(stream), sink,
+          g.dir("ck"), retract = retr)) { q =>
+        q.awaitTermination()
+        liveRows(g, retr, "dept_cnt", "cnt_freq", "level-2 retract")
+      }
+    }
 
   /** The retract encoding again, through [[LakeRetractStream]] — the
     * cluster-scale form where last-emitted state lives in a parquet
@@ -2676,37 +2170,13 @@ object StreamGate {
     * q4Level1OracleSql — same as the driver-map form, so the two
     * encodings are certified interchangeable.
     */
-  def q4RetractLake(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = gateTmp("graft-gate-retractlake")
-    val retr = new LakeRetractStream(tmp.resolve("retract").toString, Seq("cell"))
-    val stream = ridesReplay(spark, dir)
-    try {
-      withGateParallelism(spark, 4, scanNarrow = true) {
-        val q = StreamingQueries.q4Level1(stream).writeStream
-          .outputMode("update")
-          .option("checkpointLocation", tmp.resolve("ck").toString)
-          .foreachBatch { (b: Dataset[Row], id: Long) =>
-            if (!b.isEmpty) retr.onBatch(b.toDF(), id)
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      // one fold over the emission log feeds both the multiplicity check
-      // and the returned table (previously two full log reads)
-      val folded = retr.emitted(spark)
-        .groupBy("cell", "dept_cnt")
-        .agg(sum(when(col("is_add"), 1L).otherwise(-1L)).as("mult"))
-        .persist()
-      try {
-        // a correct changelog folds every superseded (cell, cnt) pair to 0
-        // (its add canceled by its retract) and every surviving row to
-        // exactly 1 — anything else is a missed/double retraction
-        val bad = folded.filter(col("mult") =!= 1L && col("mult") =!= 0L).count()
-        require(bad == 0, s"lake retract fold left $bad non-unit multiplicities")
-        materialize(folded.filter(col("mult") === 1L)
-          .select(col("cell"), col("dept_cnt")).orderBy("cell"))
-      } finally { folded.unpersist(); () }
-    } finally rmrf(tmp)
-  }
+  def q4RetractLake(spark: SparkSession, dir: String): DataFrame =
+    gate(spark, "retractlake", Narrow) { g =>
+      val retr = new LakeRetractStream(g.dir("retract"), Seq("cell"))
+      val stream = ridesReplay(spark, dir)
+      g.drain(lakeRetract(g, retr)(stream))
+      liveRows(g, retr, "cell", "dept_cnt", "lake retract")
+    }
 
   /** RETENTION for the retract changelog under the hard gate: the same
     * level-1 cascade as [[q4RetractLake]], then the log-compaction verb
@@ -2721,20 +2191,11 @@ object StreamGate {
     * (superseded pairs existed), and live batches above the first seal
     * must exist (the mixed snapshot+log read path actually ran).
     */
-  def q4RetractCompact(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = gateTmp("graft-gate-retractcompact")
-    val retr = new LakeRetractStream(tmp.resolve("retract").toString, Seq("cell"))
-    val stream = ridesReplay(spark, dir)
-    try {
-      withGateParallelism(spark, 4, scanNarrow = true) {
-        val q = StreamingQueries.q4Level1(stream).writeStream
-          .outputMode("update")
-          .option("checkpointLocation", tmp.resolve("ck").toString)
-          .foreachBatch { (b: Dataset[Row], id: Long) =>
-            if (!b.isEmpty) retr.onBatch(b.toDF(), id)
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      }
+  def q4RetractCompact(spark: SparkSession, dir: String): DataFrame =
+    gate(spark, "retractcompact", Narrow) { g =>
+      val retr = new LakeRetractStream(g.dir("retract"), Seq("cell"))
+      val stream = ridesReplay(spark, dir)
+      g.drain(lakeRetract(g, retr)(stream))
       // every verification fold carries the raw record count (nrec) so a
       // single log read yields both the consumer fold AND the record
       // count — the previous shape read the emission log twice per
@@ -2769,8 +2230,7 @@ object StreamGate {
         .agg(sum(when(col("is_add"), 1L).otherwise(-1L)).as("mult"))
         .filter(col("mult") === 1L)
         .select(col("cell"), col("dept_cnt")).orderBy("cell"))
-    } finally rmrf(tmp)
-  }
+    }
 
   /** THE RETENTION POLICY DECIDING UNDER LIVE INGEST — the retract log's
     * member of the maintenance-trigger family (`stream_compact_policy*`
@@ -2787,58 +2247,18 @@ object StreamGate {
     * batch oracle under any decision schedule.
     */
   def q4RetractPolicy(spark: SparkSession, dir: String): DataFrame =
-    q4RetractPolicyWithLog(spark, dir)._1
+    gate(spark, "retractpolicy", Narrow) { g =>
+      val retr = new LakeRetractStream(g.dir("retract"), Seq("cell"))
+      val chunks = stage(spark, s"rides|$dir", chunks = 4)(rides(spark, dir))
+      // offsets for every published log are committed here (the query
+      // just drained), so the committed watermark IS the max published
+      // id — the quiescent-caller case of the explicit-watermark rule
+      policyWindows(g, "q4RetractPolicy", chunks)(lakeRetract(g, retr))(
+        retr.compactRetractLogIfLong(spark, RetractPolicyMaxLogs, retr.lastBatchId(spark)))
+      liveRows(g, retr, "cell", "dept_cnt", "retract")
+    }
 
   private val RetractPolicyMaxLogs = 2
-
-  private[graft] def q4RetractPolicyWithLog(spark: SparkSession,
-      dir: String): (DataFrame, Seq[(Long, Boolean)]) = {
-    val tmp = gateTmp("graft-gate-retractpolicy")
-    val retr = new LakeRetractStream(tmp.resolve("retract").toString, Seq("cell"))
-    val rides = Rides.fromEvents(spark, dir)
-    val files = stagedFilesCached(spark, s"rides|$dir", chunks = 4)(
-      (rides, unix_millis(col("rowtime"))))
-    val watched = tmp.resolve("watched")
-    Files.createDirectories(watched)
-    val decisions = scala.collection.mutable.ArrayBuffer.empty[(Long, Boolean)]
-    try {
-      withGateParallelism(spark, 4, scanNarrow = true) {
-        val stream = spark.readStream.schema(rides.schema)
-          .option("maxFilesPerTrigger", "1").parquet(watched.toString)
-        val q = StreamingQueries.q4Level1(stream).writeStream
-          .outputMode("update")
-          .option("checkpointLocation", tmp.resolve("ck").toString)
-          .foreachBatch { (b: Dataset[Row], id: Long) =>
-            if (!b.isEmpty) retr.onBatch(b.toDF(), id)
-          }.start()
-        try files.foreach { f =>
-          atomicFeed(f, watched, None)
-          q.processAllAvailable()
-          // offsets for every published log are committed here (the query
-          // just drained), so the committed watermark IS the max published
-          // id — the quiescent-caller case of the explicit-watermark rule
-          decisions += retr.compactRetractLogIfLong(spark, RetractPolicyMaxLogs,
-            retr.lastBatchId(spark))
-        } finally q.stop()
-      }
-      if (!decisions.exists(_._2) || !decisions.exists(!_._2))
-        throw new IllegalStateException(
-          s"q4RetractPolicy: the gate needs both a fired and a skipped " +
-            s"window to be non-vacuous; got ${decisions.toList}")
-      // one fold over the emission log feeds both the multiplicity check
-      // and the returned table (previously two full log reads)
-      val folded = retr.emitted(spark)
-        .groupBy("cell", "dept_cnt")
-        .agg(sum(when(col("is_add"), 1L).otherwise(-1L)).as("mult"))
-        .persist()
-      try {
-        val bad = folded.filter(col("mult") =!= 1L && col("mult") =!= 0L).count()
-        require(bad == 0, s"retract fold left $bad non-unit multiplicities")
-        (materialize(folded.filter(col("mult") === 1L)
-          .select(col("cell"), col("dept_cnt")).orderBy("cell")), decisions.toSeq)
-      } finally { folded.unpersist(); () }
-    } finally rmrf(tmp)
-  }
 
   /** Per-user funnel through micro-batches: [[FunnelStream]]'s update-mode
     * snapshots keyed-upserted into a memory store; the final state per
@@ -2848,7 +2268,7 @@ object StreamGate {
     * ≥1 view (its s1 base relation), so depth-0 snapshots are excluded.
     * Oracle: the batch rel_funnel oracle.
     */
-  def funnel(spark: SparkSession, dir: String): DataFrame = {
+  def funnel(spark: SparkSession, dir: String): DataFrame = gate(spark, "funnel") { g =>
     import spark.implicits._
     val ev = Tables.load(spark, dir, "events")
       .select(col("user_id"), col("ts"), col("event_type"))
@@ -2856,27 +2276,16 @@ object StreamGate {
     val sentinel = Seq((-1L, new Timestamp(maxMs + 600000L), "gate_sentinel"))
       .toDF("user_id", "ts", "event_type")
     val sink = new MemoryUpsertSink(Seq("user_id"))
-    val ck = gateTmp("graft-gate-funnel-ck")
-    val stream = replayCached(spark, s"eventsfunnel|$dir")(
+    val stream = replay(spark, s"eventsfunnel|$dir")(
       (ev.unionByName(sentinel), unix_millis(col("ts"))))
-    try {
-      // same state-partition sizing as runToMemory: the per-user funnel
-      // fold keeps one flatMapGroupsWithState store per shuffle partition,
-      // and at the session default of 32 the per-batch store commits
-      // dominated the gate (measured 7.2 s vs 3.3 s sized)
-      withGateParallelism(spark, GateStatePartitions) {
-        val q = FunnelStream.funnelStream(stream).toDF()
-          .writeStream.outputMode("update")
-          .option("checkpointLocation", ck.toString)
-          .foreachBatch { (b: Dataset[Row], _: Long) => sink.upsertBatch(b.toDF()) }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(sink.snapshot.values.toSeq.asJava,
-          Encoders.product[FunnelStream.FunnelUpdate].schema)
-        .filter(col("t_view").isNotNull)
-        .orderBy("user_id")
-    } finally rmrf(ck)
+    // the per-user funnel fold keeps one flatMapGroupsWithState store per
+    // shuffle partition, and at the session default of 32 the per-batch
+    // store commits dominated the gate (measured 7.2 s vs 3.3 s sized)
+    g.drain(g.foreachBatch(FunnelStream.funnelStream(stream).toDF(), "update")(
+      (b, _) => sink.upsertBatch(b)))
+    spark.createDataFrame(sink.snapshot.values.toSeq.asJava,
+        Encoders.product[FunnelStream.FunnelUpdate].schema)
+      .filter(col("t_view").isNotNull)
+      .orderBy("user_id")
   }
 }

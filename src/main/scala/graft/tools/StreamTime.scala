@@ -6,7 +6,7 @@ package graft.tools
   * offset commits), and state-store rows/memory — the evidence that
   * separates data work from fixed per-batch overhead (a zero-row batch
   * with a multi-second addBatch is store-commit overhead, not compute;
-  * that observation is what sized StreamGate.GateStatePartitions).
+  * that observation is what sized StreamGate.Width).
   *
   * Usage: runMain graft.tools.StreamTime <queryName> [sfDir] [runs]
   */

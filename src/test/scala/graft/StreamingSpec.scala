@@ -870,4 +870,47 @@ class StreamingSpec extends SparkSpec {
     assert(byGap(0).forall(_ == 1), "an exact same-chunk duplicate must always be suppressed")
     assert(byGap(3).exists(_ == 2), "3-chunk-late re-deliveries must hit expired state")
   }
+
+  /** Names directly under the gate scratch root that start with `prefix`. */
+  private def scratchEntries(prefix: String): Set[String] = {
+    val ls = Files.list(graft.streaming.StreamGate.scratchRoot)
+    try {
+      import scala.jdk.CollectionConverters._
+      ls.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith(prefix)).toSet
+    } finally ls.close()
+  }
+
+  test("a gate that fails leaves no scratch dir behind") {
+    val before = scratchEntries("graft-gate-retractlake")
+    intercept[Exception] {
+      graft.streaming.StreamGate.q4RetractLake(spark, "/nonexistent/graft-missing-sf")
+    }
+    assert(scratchEntries("graft-gate-retractlake") -- before === Set.empty[String])
+  }
+
+  test("the gate skeleton releases its scratch table and dir when the body throws") {
+    var (table, dir) = ("", "")
+    val e = intercept[IllegalStateException] {
+      graft.streaming.StreamGate.gate(spark, "leaktest") { g =>
+        table = g.table("gate_leak_test")
+        dropTables(table)
+        spark.range(3).write.saveAsTable(table)
+        dir = g.dir("scratch")
+        Files.createDirectories(java.nio.file.Paths.get(dir))
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage === "body failed")
+    assert(!spark.catalog.tableExists(table))
+    assert(!Files.exists(java.nio.file.Paths.get(dir).getParent))
+  }
+
+  test("a passing gate leaves no table, view or scratch dir beyond the shared staging") {
+    def catalog = spark.catalog.listTables().collect().map(_.name).toSet
+    val (tablesBefore, scratchBefore) = (catalog, scratchEntries("graft-gate"))
+    val out = graft.streaming.StreamGate.ingestAdmit(spark, Sf0001)
+    assert(out.count() > 0)
+    assert(catalog -- tablesBefore === Set.empty[String])
+    assert(scratchEntries("graft-gate") -- scratchBefore === Set.empty[String])
+  }
 }

@@ -13,6 +13,12 @@ with columns sorted by name. Exits nonzero if any query mismatches.
 --json PATH  also write the sweep as the bench/correctness_rNN_local.json
              schema: sf, passed, failed, oracle_not_run, note, and
              queries{name: {rows_match, schema_match, hash_match, rows, err}}
+--against OTHER_OUT_DIR
+             parity check instead of the oracle sweep: compare each query's
+             output here with OTHER_OUT_DIR's (another tree's Verify output)
+             by the same canonical hash, printing SAME, CHANGED or MISSING
+             per query; exits nonzero on any CHANGED or MISSING. Queries are
+             those named in either dir's oracle_sql.json, or --only's.
 """
 import sys, os, json, glob, argparse
 import duckdb
@@ -63,6 +69,37 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
+def load_output(res_dir):
+    """One Verify output dir's parquet parts as a single frame."""
+    files = glob.glob(f"{res_dir}/*.parquet")
+    return pd.concat([pd.read_parquet(f) for f in sorted(files)],
+                     ignore_index=True)
+
+
+def parity(name, out_dir, other_dir):
+    """SAME, CHANGED or MISSING for one query's output in two out dirs."""
+    dirs = [f"{out_dir}/{name}", f"{other_dir}/{name}"]
+    missing = [d for d in dirs if not os.path.isdir(d)]
+    if missing:
+        print(f"MISSING {name}: no output dir {', '.join(missing)}")
+        return "MISSING"
+    a, b = (normalize(canon(load_output(d))) for d in dirs)
+    if list(a.columns) != list(b.columns):
+        print(f"CHANGED {name}: columns {list(a.columns)} vs {list(b.columns)}")
+        return "CHANGED"
+    if len(a) != len(b) or df_hash(a) != df_hash(b):
+        print(f"CHANGED {name}: {len(a)} rows vs {len(b)} rows, hash differs")
+        return "CHANGED"
+    print(f"SAME {name} ({len(a)} rows)")
+    return "SAME"
+
+
+def sql_names(out_dir):
+    """Query names in an out dir's oracle_sql.json (none if it is absent)."""
+    path = f"{out_dir}/oracle_sql.json"
+    return set(json.load(open(path))) if os.path.exists(path) else set()
+
+
 def record(rows=None, schema=None, rows_match=None, hash_match=None, err=None):
     return {"rows_match": rows_match, "schema_match": schema,
             "hash_match": hash_match, "rows": rows, "err": err}
@@ -77,9 +114,7 @@ def compare(con, name, sql, out_dir):
     if not os.path.isdir(res_dir):
         print(f"FAIL {name}: no spark output dir")
         return record(err="no spark output dir")
-    files = glob.glob(f"{res_dir}/*.parquet")
-    spark_df = pd.concat([pd.read_parquet(f) for f in sorted(files)],
-                         ignore_index=True)
+    spark_df = load_output(res_dir)
     try:
         duck_df = con.execute(sql).df()
     except Exception as e:
@@ -142,15 +177,24 @@ def main(argv=None):
     ap.add_argument("out_dir")
     ap.add_argument("--only", help="comma-separated query names to compare")
     ap.add_argument("--json", help="write the sweep summary to this path")
+    ap.add_argument("--against", metavar="OTHER_OUT_DIR",
+                    help="compare outputs with another out dir instead of the oracles")
     args = ap.parse_args(argv)
+    only = None if args.only is None else \
+        [n.strip() for n in args.only.split(",") if n.strip()]
+    if args.against:
+        if args.json:
+            ap.error("--json writes the oracle sweep; it does not combine with --against")
+        names = sorted(set(only)) if only is not None else \
+            sorted(sql_names(args.out_dir) | sql_names(args.against))
+        verdicts = [parity(n, args.out_dir, args.against) for n in names]
+        sys.exit(0 if all(v == "SAME" for v in verdicts) else 1)
     con = duckdb.connect()
     for t in TABLES:
         p = f"{args.sf_dir}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{args.out_dir}/oracle_sql.json"))
-    only = None if args.only is None else \
-        [n.strip() for n in args.only.split(",") if n.strip()]
     names = sorted(set(only)) if only is not None else sorted(oracle)
     queries = {n: compare(con, n, oracle.get(n), args.out_dir) for n in names}
     if args.json:

@@ -111,6 +111,53 @@ class LocalVerifyTest(unittest.TestCase):
         self.assertEqual(plain.stdout, with_json.stdout)
         self.assertEqual(plain.returncode, with_json.returncode)
 
+    def other_tree(self, frames):
+        """A second out dir holding `frames` (name -> Spark output frame)."""
+        other = os.path.join(self.tmp.name, "other")
+        for name, df in frames.items():
+            os.makedirs(os.path.join(other, name))
+            df.to_parquet(os.path.join(other, name, "part-0.parquet"), index=False)
+        with open(os.path.join(other, "oracle_sql.json"), "w") as f:
+            json.dump({n: "SELECT 1" for n in frames}, f)
+        return other
+
+    def test_against_reports_same_changed_and_missing(self):
+        other = self.other_tree({
+            # same values, columns in another order: canonical hash matches
+            "q_pass": pd.DataFrame({"k": [0, 1, 2], "name": ["A", "B", "C"]}),
+            "q_hash": pd.DataFrame({"k": [0, 1, 2]}),
+            "q_rows": pd.DataFrame({"k": [0, 1]}),
+            "q_missing": pd.DataFrame({"k": [1]}),
+        })
+        r = self.run_tool("--against", other)
+        self.assertEqual(r.returncode, 1)
+        lines = r.stdout.splitlines()
+        self.assertIn("SAME q_pass (3 rows)", lines)
+        self.assertIn("SAME q_rows (2 rows)", lines)
+        self.assertIn("CHANGED q_hash: 3 rows vs 3 rows, hash differs", lines)
+        self.assertIn(f"MISSING q_missing: no output dir {self.out}/q_missing", lines)
+        # named only in this tree: missing from the other
+        self.assertIn(f"MISSING q_cols: no output dir {other}/q_cols", lines)
+        self.assertEqual(len(lines), len(QUERIES))
+
+    def test_against_combines_with_only(self):
+        other = self.other_tree({"q_pass": QUERIES["q_pass"][1],
+                                 "q_hash": pd.DataFrame({"k": [0, 1, 2]})})
+        r = self.run_tool("--against", other, "--only", "q_pass")
+        self.assertEqual(r.returncode, 0, r.stdout + r.stderr)
+        self.assertEqual(r.stdout, "SAME q_pass (3 rows)\n")
+        r = self.run_tool("--against", other, "--only", "q_pass,q_hash")
+        self.assertEqual(r.returncode, 1)
+        self.assertEqual(r.stdout, "CHANGED q_hash: 3 rows vs 3 rows, hash differs\n"
+                                   "SAME q_pass (3 rows)\n")
+
+    def test_against_detects_a_changed_column_set(self):
+        other = self.other_tree({"q_pass": pd.DataFrame({"k": [0, 1, 2]})})
+        r = self.run_tool("--against", other, "--only", "q_pass")
+        self.assertEqual(r.returncode, 1)
+        self.assertEqual(r.stdout,
+                         "CHANGED q_pass: columns ['k', 'name'] vs ['k']\n")
+
 
 if __name__ == "__main__":
     unittest.main()

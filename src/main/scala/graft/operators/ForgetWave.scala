@@ -200,8 +200,7 @@ object ForgetWave {
         v2.cast("double").as("v2"))
     val keep01 = when(col("keep"), 1L).otherwise(0L)
     val bm = norm("bm25",
-      TextAnalysis.bm25SearchAgainst(spark,
-        TextAnalysis.bm25QueriesOf(TextAnalysis.bm25Corpus(spark, dir)),
+      TextAnalysis.bm25SearchAgainst(spark, TextAnalysis.bm25Queries(spark, dir),
         bm25Postings, bm25Df, bm25Stats),
       "query_id", "doc_id", col("rk"), col("score_micro"))
     val dd = norm("dedup", Dedup.incrementalAgainst(spark, dir, dedupTable),

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.streaming.StreamingQueries.eachBatch
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
   *
@@ -59,7 +60,7 @@ object Similarity {
     * corpus-derived query streams the collect form would materialize
     * data-scale ids on the driver, which is exactly the failure mode
     * the serving tier must not have at 100×. Mirrors the
-    * [[graft.operators.TextAnalysis.bm25SearchAgainstDf]] discipline.
+    * [[graft.operators.TextAnalysis.Terms.frame]] discipline.
     */
   private def semiOnVecId(q: DataFrame, querySet: Option[DataFrame]): DataFrame =
     querySet.fold(q)(s =>
@@ -437,19 +438,6 @@ object Similarity {
   def ivfIngestStream(newVectors: DataFrame, table: String)(
       ): org.apache.spark.sql.streaming.StreamingQuery =
     eachBatch(newVectors)(ivfAdmitVectors(_, table))
-
-  /** Run `f` on every non-empty micro-batch of `arriving` — the append
-    * skeleton behind every continuous admit/forget/serve loop here.
-    */
-  private def eachBatch(arriving: DataFrame, checkpoint: Option[String] = None)(
-      f: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) f(batch.toDF())
-      }
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
 
   // -------------------------------------------------------------------------
   // IVF rebalance / re-train (closing the index lifecycle)
@@ -2426,7 +2414,7 @@ object Similarity {
     */
   private def lexLegFor(spark: SparkSession, dir: String,
       querySet: DataFrame): DataFrame = {
-    val lexQueries = TextAnalysis.bm25QueriesOf(TextAnalysis.bm25Corpus(spark, dir))
+    val lexQueries = TextAnalysis.bm25Queries(spark, dir)
       .join(broadcast(querySet.select(col("vec_id").as("query_id")).distinct()),
         Seq("query_id"), "left_semi")
     TextAnalysis.bm25SearchAgainstDf(spark, lexQueries)

@@ -1,8 +1,11 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.core.Tables
+import graft.streaming.StreamingQueries.eachBatch
 
 /** Text-analysis operators for LLM-data pipelines over the `documents`
   * table: tokenization stats, quality scoring, n-gram language-ID heuristic,
@@ -1146,14 +1149,21 @@ object TextAnalysis {
     */
   def perplexityAgainst(spark: SparkSession, dir: String,
       vocabTable: String = LmVocabTable, modelTable: String = LmModelTable,
-      ctxTable: String = LmCtxTable): DataFrame = {
+      ctxTable: String = LmCtxTable): DataFrame =
+    lmScoreAgainst(docs(spark, dir), vocabTable, modelTable, ctxTable)
+
+  /** [[lmScoreDocs]] against the persisted model tables — the batch path
+    * and every stream micro-batch alike.
+    */
+  private def lmScoreAgainst(d: DataFrame, vocabTable: String,
+      modelTable: String, ctxTable: String): DataFrame = {
+    val s = d.sparkSession
     // model-parameter pull: V strings + V² counts live in catalog tables;
     // only the vocab literal (for the token→event mapping) is collected
-    val vocab = spark.table(vocabTable)
+    val vocab = s.table(vocabTable)
       .orderBy("token").collect().map(_.getString(0)).toSeq
-    lmScore(spark, dir, vocab,
-      spark.table(modelTable).select("l", "r", "cnt"),
-      spark.table(ctxTable).select("l", "n_l"))
+    lmScoreDocs(d, vocab, s.table(modelTable).select("l", "r", "cnt"),
+      s.table(ctxTable).select("l", "n_l"))
   }
 
   /** The fit-inline form — the spec's fit/apply-equality reference. */
@@ -1161,12 +1171,8 @@ object TextAnalysis {
       dir: String): DataFrame = {
     val vocab = lmVocabDf(spark, dir).collect().map(_.getString(0)).toSeq
     val model = lmModelDf(spark, dir, vocab)
-    lmScore(spark, dir, vocab, model, lmCtxDf(model))
+    lmScoreDocs(docs(spark, dir), vocab, model, lmCtxDf(model))
   }
-
-  private def lmScore(spark: SparkSession, dir: String, vocab: Seq[String],
-      model: DataFrame, ctx: DataFrame): DataFrame =
-    lmScoreDocs(docs(spark, dir), vocab, model, ctx)
 
   /** The scoring plan over an arbitrary (doc_id, source, text) frame —
     * shared by the batch paths and the per-micro-batch stream scorer.
@@ -1269,20 +1275,8 @@ object TextAnalysis {
     */
   def perplexityStream(newDocs: DataFrame, vocabTable: String = LmVocabTable,
       modelTable: String = LmModelTable, ctxTable: String = LmCtxTable)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    newDocs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val vocab = s.table(vocabTable)
-            .orderBy("token").collect().map(_.getString(0)).toSeq
-          sink(lmScoreDocs(batch, vocab,
-            s.table(modelTable).select("l", "r", "cnt"),
-            s.table(ctxTable).select("l", "n_l")))
-        }
-      }
-      .start()
+      sink: DataFrame => Unit): StreamingQuery =
+    eachBatch(newDocs)(b => sink(lmScoreAgainst(b, vocabTable, modelTable, ctxTable)))
 
   /** Gated entry: fit (no-op when current) + dump the bigram table. The
     * model IS the deliverable here — (l, r, cnt) fully ordered; vocab
@@ -1452,17 +1446,54 @@ object TextAnalysis {
     docs(spark, dir).selectExpr("doc_id", s"$toks AS tk")
 
   private[graft] def bm25QueriesOf(d: DataFrame): DataFrame =
-    d.filter(col("doc_id") % Bm25QueryStride === 0)
-      .selectExpr("doc_id AS query_id",
-        s"explode(array_distinct(slice(tk, 1, $Bm25QueryTerms))) AS token")
+    seededQueries(d, col("doc_id") % Bm25QueryStride === 0)
 
-  /** Shared ranking tail over (query_id, doc_id, micro) term partials:
-    * integer per-doc sums, then the bounded TopK aggregate — O(queries×k)
-    * shuffle rows, never a per-query window sort.
+  /** The standard query set of a corpus dir. */
+  private[graft] def bm25Queries(spark: SparkSession, dir: String): DataFrame =
+    bm25QueriesOf(bm25Corpus(spark, dir))
+
+  /** Each `seed` doc's first query terms as (query_id, token) rows. */
+  private def seededQueries(d: DataFrame, seed: Column): DataFrame =
+    d.filter(seed).selectExpr("doc_id AS query_id",
+      s"explode(array_distinct(slice(tk, 1, $Bm25QueryTerms))) AS token")
+
+  /** (token, doc_id, tf, dl) rows of a (doc_id, tk) frame, the tokens cut
+    * by `keep` BEFORE the (token, doc) shuffle.
     */
-  private def bm25Rank(term: DataFrame): DataFrame =
-    term.groupBy("query_id", "doc_id").agg(sum("micro").as("score_micro"))
-      .groupBy("query_id")
+  private def termFreqs(d: DataFrame, keep: DataFrame => DataFrame = identity): DataFrame =
+    keep(d.selectExpr("doc_id", "CAST(size(tk) AS BIGINT) AS dl", "explode(tk) AS token"))
+      .groupBy("token", "doc_id")
+      .agg(count(lit(1)).as("tf"), max("dl").as("dl"))
+
+  private def docFreqs(post: DataFrame): DataFrame =
+    post.groupBy("token").agg(count(lit(1)).cast("bigint").as("df"))
+
+  private def corpusStats(d: DataFrame): DataFrame =
+    d.agg(count(lit(1)).cast("bigint").as("n_docs"),
+      sum(expr("size(tk)")).cast("bigint").as("sum_dl"))
+
+  /** df and stats REBUILT from postings as single generations. */
+  private def derived(post: DataFrame): (DataFrame, DataFrame) =
+    (docFreqs(post), post.groupBy("doc_id").agg(max("dl").as("dl"))
+      .agg(count(lit(1)).cast("bigint").as("n_docs"),
+        sum("dl").cast("bigint").as("sum_dl")))
+
+  /** The one BM25 scoring plan, summed per (query, doc) in integer
+    * micro-units; each caller's broadcast hints ride on `queries`/`dfreq`.
+    */
+  private def score(tf: DataFrame, queries: DataFrame, dfreq: DataFrame,
+      stats: DataFrame): DataFrame =
+    tf.join(queries, "token")
+      .join(dfreq, "token")
+      .crossJoin(broadcast(stats))
+      .selectExpr("query_id", "doc_id", s"$bm25MicroExpr AS micro")
+      .groupBy("query_id", "doc_id").agg(sum("micro").as("score_micro"))
+
+  /** Shared ranking tail over [[score]]'s sums: the bounded TopK
+    * aggregate — O(queries×k) shuffle rows, never a per-query window sort.
+    */
+  private def bm25Rank(scored: DataFrame): DataFrame =
+    scored.groupBy("query_id")
       .agg(graft.functions.TopK.topk(Bm25TopK)(
         col("doc_id"), col("score_micro").cast("double")).as("top"))
       .select(col("query_id"), posexplode(col("top")))
@@ -1490,21 +1521,8 @@ object TextAnalysis {
     // different columns). The cached frame is only the searched terms'
     // postings (query-bounded, not corpus-vocabulary), and the harnesses
     // clear the session cache between queries.
-    val tf = d
-      .selectExpr("doc_id", "CAST(size(tk) AS BIGINT) AS dl", "explode(tk) AS token")
-      .join(broadcast(qset), "token")
-      .groupBy("doc_id", "token")
-      .agg(count(lit(1)).as("tf"), max("dl").as("dl")) // dl constant per doc
-      .persist()
-    val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
-    val stats = d.agg(count(lit(1)).as("n_docs"),
-      sum(expr("size(tk)")).cast("bigint").as("sum_dl"))
-    val term = tf
-      .join(broadcast(queries), "token")
-      .join(broadcast(dfreq), "token")
-      .crossJoin(broadcast(stats))
-      .selectExpr("query_id", "doc_id", s"$bm25MicroExpr AS micro")
-    bm25Rank(term)
+    val tf = termFreqs(d, _.join(broadcast(qset), "token")).persist()
+    bm25Rank(score(tf, broadcast(queries), broadcast(docFreqs(tf)), corpusStats(d)))
   }
 
   // ---- persisted inverted index (fit/apply: index once, search many) ----
@@ -1522,10 +1540,7 @@ object TextAnalysis {
     * once per corpus snapshot; every later search touches only the
     * postings of its own terms.
     */
-  private[graft] def bm25PostingsDf(d: DataFrame): DataFrame =
-    d.selectExpr("doc_id", "CAST(size(tk) AS BIGINT) AS dl", "explode(tk) AS token")
-      .groupBy("token", "doc_id")
-      .agg(count(lit(1)).as("tf"), max("dl").as("dl"))
+  private[graft] def bm25PostingsDf(d: DataFrame): DataFrame = termFreqs(d)
 
   /** Persist postings (BUCKETED by token — a literal term predicate at
     * search time prunes whole buckets from the scan), document
@@ -1570,24 +1585,52 @@ object TextAnalysis {
       postingsTable -> (() => bm25PostingsDf(d)
         .write.mode("overwrite").bucketBy(Bm25Buckets, "token")
         .saveAsTable(postingsTable)),
-      dfTable -> (() => spark.table(postingsTable)
-        .groupBy("token").agg(count(lit(1)).as("df"))
+      dfTable -> (() => docFreqs(spark.table(postingsTable))
         .write.mode("overwrite").saveAsTable(dfTable)),
-      statsTable -> (() => d.agg(count(lit(1)).as("n_docs"),
-          sum(expr("size(tk)")).cast("bigint").as("sum_dl"))
+      statsTable -> (() => corpusStats(d)
         .write.mode("overwrite").saveAsTable(statsTable)))
   }
 
-  /** Search the persisted index with an arbitrary (query_id, token)
-    * frame. The distinct term set is collected — bounded, it IS the
-    * search input — and pushed as a LITERAL predicate, so the postings
-    * scan prunes both rows and whole buckets before anything joins;
-    * df rows for the searched terms ride the same literal filter. No
-    * corpus-scale tokenize, shuffle, or join anywhere on this path.
+  /** The query-term set a plan is cut to — the only thing the search
+    * paths differ in. [[Terms.literal]] collects the tokens (bounded: they
+    * ARE the search input) into a LITERAL predicate, so the postings scan
+    * prunes rows and whole buckets, and broadcasts. [[Terms.frame]] keeps
+    * them a DATAFRAME cut by token semi-join — zero driver collects; the
+    * query join cuts the bucketBy(token) postings, every bucket read.
     */
-  def bm25SearchAgainst(spark: SparkSession, queries: DataFrame,
-      postingsTable: String = Bm25PostingsTable, dfTable: String = Bm25DfTable,
-      statsTable: String = Bm25StatsTable): DataFrame = {
+  private[graft] final class Terms private (val keep: DataFrame => DataFrame,
+      val scan: DataFrame => DataFrame, val hint: DataFrame => DataFrame)
+
+  private[graft] object Terms {
+    def literal(queries: DataFrame): Terms = {
+      val tokens = queries.select("token").collect().map(_.getString(0)).distinct.toSeq
+      val keep = (rows: DataFrame) => rows.filter(col("token").isin(tokens: _*))
+      new Terms(keep, keep, broadcast(_))
+    }
+
+    def frame(queries: DataFrame, bcast: Boolean): Terms = {
+      val hint = (df: DataFrame) => if (bcast) broadcast(df) else df
+      val tokens = queries.select("token").distinct()
+      new Terms(_.join(hint(tokens), Seq("token"), "left_semi"), identity, hint)
+    }
+  }
+
+  /** The search-time df/stats fold over PARTIAL-GENERATION tables (one
+    * row set per admitted batch — see [[bm25AdmitDocs]]; the identity for
+    * a one-shot [[persistBm25Index]]), df on the searched terms' rows only.
+    */
+  private def bm25Stats(spark: SparkSession, terms: Terms, dfTable: String,
+      statsTable: String): (DataFrame, DataFrame) =
+    (terms.keep(spark.table(dfTable)).groupBy("token")
+      .agg(sum("df").cast("bigint").as("df")),
+      spark.table(statsTable).agg(sum("n_docs").cast("bigint").as("n_docs"),
+        sum("sum_dl").cast("bigint").as("sum_dl")))
+
+  /** The one indexed search of a (query_id, token) frame: no corpus-scale
+    * tokenize, shuffle, or join anywhere on this path.
+    */
+  private def search(spark: SparkSession, queries: DataFrame, terms: Terms,
+      postingsTable: String, dfTable: String, statsTable: String): DataFrame = {
     // a compaction that died mid-window (postings already deduped, df/
     // stats still holding the pre-compaction partials) left its marker
     // behind — repair before scoring rather than silently using the
@@ -1595,62 +1638,33 @@ object TextAnalysis {
     // step derives from postings alone.
     if (bm25CompactionTorn(spark, postingsTable))
       compactBm25Index(spark, postingsTable, dfTable, statsTable)
-    val terms = queries.select("token").distinct()
-      .collect().map(_.getString(0)).toSeq
-    // df/stats are PARTIAL-GENERATION tables (one row set per admitted
-    // batch — see bm25AdmitDocs); fold them at search time. For a
-    // one-shot persistBm25Index there is a single generation and the
-    // fold is the identity. The df fold runs on the searched terms'
-    // rows only; the stats fold is a handful of 2-long rows.
-    val dfreq = spark.table(dfTable).filter(col("token").isin(terms: _*))
-      .groupBy("token").agg(sum("df").cast("bigint").as("df"))
-    val stats = spark.table(statsTable)
-      .agg(sum("n_docs").cast("bigint").as("n_docs"),
-        sum("sum_dl").cast("bigint").as("sum_dl"))
-    val term = spark.table(postingsTable)
-      .filter(col("token").isin(terms: _*))
-      .join(broadcast(queries), "token")
-      .join(broadcast(dfreq), "token")
-      .crossJoin(broadcast(stats))
-      .selectExpr("query_id", "doc_id", s"$bm25MicroExpr AS micro")
-    bm25Rank(term)
+    val (dfreq, stats) = bm25Stats(spark, terms, dfTable, statsTable)
+    bm25Rank(score(terms.scan(spark.table(postingsTable)), terms.hint(queries),
+      terms.hint(dfreq), stats))
   }
+
+  /** Search the persisted index with a bounded (query_id, token) frame —
+    * the alert/search default: the [[Terms.literal]] cut prunes whole
+    * buckets at the scan.
+    */
+  def bm25SearchAgainst(spark: SparkSession, queries: DataFrame,
+      postingsTable: String = Bm25PostingsTable, dfTable: String = Bm25DfTable,
+      statsTable: String = Bm25StatsTable): DataFrame =
+    search(spark, queries, Terms.literal(queries), postingsTable, dfTable, statsTable)
 
   /** MASS-QUERY indexed search — the scale path for query sets that are
     * themselves data-scale (re-scoring a crawl against the index, batch
-    * re-ranking): the same postings/df/stats generation folds as
-    * [[bm25SearchAgainst]], but the query set stays a DATAFRAME end to
-    * end — no driver collect, no literal IN. Term membership becomes a
-    * semi-join on token (the postings table is bucketBy(token), so the
-    * probe co-locates with the stored buckets), the df fold is
-    * restricted by the same semi-join, and the stats fold is unchanged
-    * (a handful of 2-long rows). Trade-off vs the literal form: no
-    * bucket pruning at the scan — every postings bucket is read — which
-    * is exactly right when the term set touches most buckets anyway;
-    * the literal IN stays the alert/search default where a bounded term
-    * set prunes whole buckets. Identical rows to the literal form by
-    * construction (same folds, same ranking) — the `txt_bm25_mass`
-    * oracle pins it.
+    * re-ranking): the query set stays a DATAFRAME end to end
+    * ([[Terms.frame]]: no driver collect, no literal IN, no broadcast —
+    * right when the term set touches most buckets anyway). Identical rows
+    * to the literal form by construction (same folds, same ranking) — the
+    * `txt_bm25_mass` oracle pins it.
     */
   def bm25SearchAgainstDf(spark: SparkSession, queries: DataFrame,
       postingsTable: String = Bm25PostingsTable, dfTable: String = Bm25DfTable,
-      statsTable: String = Bm25StatsTable): DataFrame = {
-    if (bm25CompactionTorn(spark, postingsTable))
-      compactBm25Index(spark, postingsTable, dfTable, statsTable)
-    val qTerms = queries.select("token").distinct()
-    val dfreq = spark.table(dfTable)
-      .join(qTerms, Seq("token"), "left_semi")
-      .groupBy("token").agg(sum("df").cast("bigint").as("df"))
-    val stats = spark.table(statsTable)
-      .agg(sum("n_docs").cast("bigint").as("n_docs"),
-        sum("sum_dl").cast("bigint").as("sum_dl"))
-    val term = spark.table(postingsTable)
-      .join(queries, "token")
-      .join(dfreq, Seq("token"))
-      .crossJoin(broadcast(stats))
-      .selectExpr("query_id", "doc_id", s"$bm25MicroExpr AS micro")
-    bm25Rank(term)
-  }
+      statsTable: String = Bm25StatsTable): DataFrame =
+    search(spark, queries, Terms.frame(queries, bcast = false), postingsTable,
+      dfTable, statsTable)
 
   /** Gated entry for the mass path: the standard query set served
     * through [[bm25SearchAgainstDf]] — rows must equal the literal-IN
@@ -1658,8 +1672,7 @@ object TextAnalysis {
     */
   def bm25Mass(spark: SparkSession, dir: String): DataFrame = {
     persistBm25Index(spark, dir)
-    bm25SearchAgainstDf(spark,
-      bm25QueriesOf(bm25Corpus(spark, dir)))
+    bm25SearchAgainstDf(spark, bm25Queries(spark, dir))
   }
 
   /** ADMISSION: append one batch of documents to a (possibly empty)
@@ -1675,23 +1688,15 @@ object TextAnalysis {
       postingsTable: String = Bm25PostingsTable, dfTable: String = Bm25DfTable,
       statsTable: String = Bm25StatsTable): Unit = {
     val d = batch.selectExpr("doc_id", s"$toks AS tk")
-    val post = bm25PostingsDf(d).persist()
+    val post = termFreqs(d).persist()
     try {
       post.write.mode("append").bucketBy(Bm25Buckets, "token")
         .saveAsTable(postingsTable)
-      post.groupBy("token").agg(count(lit(1)).cast("bigint").as("df"))
-        .write.mode("append").saveAsTable(dfTable)
-      d.agg(count(lit(1)).cast("bigint").as("n_docs"),
-          sum(expr("size(tk)")).cast("bigint").as("sum_dl"))
-        .write.mode("append").saveAsTable(statsTable)
+      docFreqs(post).write.mode("append").saveAsTable(dfTable)
+      corpusStats(d).write.mode("append").saveAsTable(statsTable)
     } finally { post.unpersist(); () }
   }
 
-  /** Continuous index build: every micro-batch of arriving documents is
-    * admitted as append-only partials. Because tf/dl are per-doc local
-    * and df/stats are additive, ANY chunking that keeps docs whole
-    * folds to the batch-built index exactly — the gate's oracle.
-    */
   /** Compact a grown index. Postings: dedup + one file per bucket via the
     * substring family's temp-table+rename rewrite — EXACT-duplicate
     * posting rows are at-least-once replay copies (tf/dl are
@@ -1750,8 +1755,11 @@ object TextAnalysis {
       postingsTable: String = Bm25PostingsTable, dfTable: String = Bm25DfTable,
       statsTable: String = Bm25StatsTable): (Long, Long) =
     rewriteBm25IndexHooked(spark, postingsTable, dfTable, statsTable)(
-      _.join(broadcast(forgetIds.select("doc_id")), Seq("doc_id"), "left_anti"))(
-      () => ())
+      forgetting(forgetIds))(() => ())
+
+  /** Postings without `forgetIds`' docs (a bounded request: broadcast). */
+  private def forgetting(forgetIds: DataFrame): DataFrame => DataFrame =
+    _.join(broadcast(forgetIds.select("doc_id")), Seq("doc_id"), "left_anti")
 
   /** The shared fenced-rewrite core: marker publish → postings transform
     * (atomic bucket-aligned rewrite) → df/stats REBUILT from the new
@@ -1764,20 +1772,15 @@ object TextAnalysis {
       postingsTable: String, dfTable: String, statsTable: String)(
       transform: DataFrame => DataFrame)(
       afterPostings: () => Unit): (Long, Long) = {
-    val marker = compactMarkerPath(spark, postingsTable)
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, marker) = compactMarker(spark, postingsTable)
     val out = fs.create(marker, true)
     try out.write("compacting\n".getBytes("UTF-8")) finally out.close()
     val counts = graft.operators.Dedup
       .rewriteBucketedTable(spark, postingsTable, "token")(transform)
     afterPostings()
-    val post = spark.table(postingsTable)
-    replaceTable(spark, dfTable,
-      post.groupBy("token").agg(count(lit(1)).cast("bigint").as("df")))
-    replaceTable(spark, statsTable,
-      post.groupBy("doc_id").agg(max("dl").as("dl"))
-        .agg(count(lit(1)).cast("bigint").as("n_docs"),
-          sum("dl").cast("bigint").as("sum_dl")))
+    val (dfreq, stats) = derived(spark.table(postingsTable))
+    replaceTable(spark, dfTable, dfreq)
+    replaceTable(spark, statsTable, stats)
     fs.delete(marker, false)
     counts
   }
@@ -1787,18 +1790,22 @@ object TextAnalysis {
     * a partially-written marker (crash during publish) still reads as
     * in-progress, and the false positive costs one harmless re-compaction.
     */
-  private def compactMarkerPath(spark: SparkSession,
-      postingsTable: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), s"$postingsTable.compacting")
+  private def compactMarker(spark: SparkSession, postingsTable: String): (FileSystem, Path) =
+    warehousePath(spark, s"$postingsTable.compacting")
+
+  /** `name` next to the warehouse tables, with its file system. */
+  private def warehousePath(spark: SparkSession, name: String): (FileSystem, Path) = {
+    val p = new Path(spark.conf.get("spark.sql.warehouse.dir"), name)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
 
   /** True when a previous [[compactBm25Index]] died inside its rewrite
     * window, leaving the index internally inconsistent.
     */
   private[graft] def bm25CompactionTorn(spark: SparkSession,
       postingsTable: String = Bm25PostingsTable): Boolean = {
-    val m = compactMarkerPath(spark, postingsTable)
-    m.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(m)
+    val (fs, m) = compactMarker(spark, postingsTable)
+    fs.exists(m)
   }
 
   /** Checked replace for the small derived tables: write the replacement
@@ -1825,18 +1832,15 @@ object TextAnalysis {
     spark.catalog.refreshTable(table)
   }
 
+  /** Continuous index build: every micro-batch of arriving documents is
+    * admitted as append-only partials. Because tf/dl are per-doc local
+    * and df/stats are additive, ANY chunking that keeps docs whole
+    * folds to the batch-built index exactly — the gate's oracle.
+    */
   def bm25IngestStream(newDocs: DataFrame,
       postingsTable: String, dfTable: String, statsTable: String)(
-      onBatch: () => Unit = () => ()): org.apache.spark.sql.streaming.StreamingQuery =
-    newDocs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          bm25AdmitDocs(batch, postingsTable, dfTable, statsTable)
-          onBatch()
-        }
-      }
-      .start()
+      onBatch: () => Unit = () => ()): StreamingQuery =
+    eachBatch(newDocs) { b => bm25AdmitDocs(b, postingsTable, dfTable, statsTable); onBatch() }
 
   /** `txt_bm25_indexed`: build-or-reuse the index, then run the standard
     * query set against it — must equal [[bm25Topk]] bit-for-bit (same
@@ -1844,7 +1848,7 @@ object TextAnalysis {
     */
   def bm25Indexed(spark: SparkSession, dir: String): DataFrame = {
     persistBm25Index(spark, dir)
-    bm25SearchAgainst(spark, bm25QueriesOf(bm25Corpus(spark, dir)))
+    bm25SearchAgainst(spark, bm25Queries(spark, dir))
   }
 
   // ---- right-to-be-forgotten: deletion propagation through the index ----
@@ -1888,8 +1892,7 @@ object TextAnalysis {
         Bm25FgStatsTable): _*)(
       () => { forgetBm25Docs(spark, forgetDocIds(spark, dir),
         Bm25FgPostingsTable, Bm25FgDfTable, Bm25FgStatsTable); () })
-    bm25SearchAgainst(spark,
-      bm25QueriesOf(bm25Corpus(spark, dir)).filter(queryWhere),
+    bm25SearchAgainst(spark, bm25Queries(spark, dir).filter(queryWhere),
       Bm25FgPostingsTable, Bm25FgDfTable, Bm25FgStatsTable)
   }
 
@@ -1901,17 +1904,8 @@ object TextAnalysis {
     * answer; the `stream_forget_docs` gate holds it to the same oracle.
     */
   def bm25ForgetStream(forgetIds: DataFrame, postingsTable: String,
-      dfTable: String, statsTable: String): org.apache.spark.sql.streaming.StreamingQuery =
-    forgetIds.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          forgetBm25Docs(batch.sparkSession, batch.toDF(),
-            postingsTable, dfTable, statsTable)
-          ()
-        }
-      }
-      .start()
+      dfTable: String, statsTable: String): StreamingQuery =
+    eachBatch(forgetIds)(b => forgetBm25Docs(b.sparkSession, b, postingsTable, dfTable, statsTable))
 
   private[graft] def bm25ScoreCtes(stride: Int): String =
     bm25ScoreCtesWhere(stride, "TRUE")
@@ -1924,10 +1918,7 @@ object TextAnalysis {
   private[graft] def bm25ScoreCtesWhere(stride: Int, docWhere: String): String =
     s"""dall AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
        |d AS (SELECT doc_id, tk FROM dall WHERE $docWhere),
-       |q AS (
-       |  SELECT doc_id AS query_id, unnest(list_distinct(tk[1:$Bm25QueryTerms])) AS token
-       |  FROM dall WHERE doc_id % $stride = 0
-       |),
+       |${seededSql("q", s"doc_id % $stride = 0")}
        |tf AS (
        |  SELECT doc_id, token, count(*) AS tf, max(dl) AS dl FROM (
        |    SELECT doc_id, len(tk) AS dl, unnest(tk) AS token FROM d
@@ -1944,8 +1935,16 @@ object TextAnalysis {
        |  FROM term GROUP BY 1, 2
        |)""".stripMargin
 
-  val bm25TopkOracle: String =
-    s"""WITH ${bm25ScoreCtes(Bm25QueryStride)}
+  /** The SQL twin of [[seededQueries]]: the `name` CTE over `dall`. */
+  private def seededSql(name: String, where: String): String =
+    s"""$name AS (
+       |  SELECT doc_id AS query_id, unnest(list_distinct(tk[1:$Bm25QueryTerms])) AS token
+       |  FROM dall WHERE $where
+       |),""".stripMargin
+
+  /** The top-k ranking over [[bm25ScoreCtesWhere]]'s scores. */
+  private def bm25RankOracle(docWhere: String): String =
+    s"""WITH ${bm25ScoreCtesWhere(Bm25QueryStride, docWhere)}
        |SELECT query_id, rk, doc_id, score_micro FROM (
        |  SELECT query_id, doc_id, score_micro,
        |    row_number() OVER (PARTITION BY query_id
@@ -1955,22 +1954,15 @@ object TextAnalysis {
        |WHERE rk <= $Bm25TopK
        |ORDER BY query_id, rk""".stripMargin
 
+  val bm25TopkOracle: String = bm25RankOracle("TRUE")
+
   /** The forget equality, stated independently: the same BM25 ranking
     * computed over the corpus MINUS the forgotten docs (queries still
     * from the full corpus). If any forgotten posting, df row, or stats
     * contribution survived in the index, the hash diverges.
     */
   val bm25ForgetOracle: String =
-    s"""WITH ${bm25ScoreCtesWhere(Bm25QueryStride,
-           s"doc_id % $Bm25ForgetMod <> $Bm25ForgetRem")}
-       |SELECT query_id, rk, doc_id, score_micro FROM (
-       |  SELECT query_id, doc_id, score_micro,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY score_micro DESC, doc_id) AS rk
-       |  FROM score
-       |)
-       |WHERE rk <= $Bm25TopK
-       |ORDER BY query_id, rk""".stripMargin
+    bm25RankOracle(s"doc_id % $Bm25ForgetMod <> $Bm25ForgetRem")
 
   // ---- generation-pointer serving: reads during maintenance ----
 
@@ -2004,22 +1996,30 @@ object TextAnalysis {
     * generation rewrites: zero errors, every answer equal to one
     * generation's oracle.
     */
-  private def genDir(spark: SparkSession, base: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), s"$base.GEN")
+  private def genDir(spark: SparkSession, base: String): (FileSystem, Path) =
+    warehousePath(spark, s"$base.GEN")
+
+  /** The `g=N` generations under a BM25 pointer dir or [[StandingLake]]. */
+  private def published(fs: FileSystem, root: Path): Seq[Long] =
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith("g=")).map(_.stripPrefix("g=").toLong)
 
   private[graft] def genTables(base: String, g: Long): (String, String, String) =
     (s"${base}_post_g$g", s"${base}_df_g$g", s"${base}_stats_g$g")
 
+  /** Drop generation `g` from both catalog layers: a fresh JVM's catalog
+    * misses a previous JVM's tables while their warehouse dirs survive.
+    */
+  private def dropGen(spark: SparkSession, base: String, g: Long): Unit = {
+    val (p, df, st) = genTables(base, g)
+    Seq(p, df, st).foreach(t => graft.core.ModelTables.dropBothLayers(spark, t))
+  }
+
   /** The live generation — the max published marker. */
   def bm25GenCurrent(spark: SparkSession, base: String): Long = {
-    val d = genDir(spark, base)
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(d)) sys.error(s"no generations published under $d")
-    val gs = fs.listStatus(d).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("g=")).map(_.stripPrefix("g=").toLong)
-    if (gs.isEmpty) sys.error(s"no generations published under $d")
-    gs.max
+    val (fs, d) = genDir(spark, base)
+    published(fs, d).maxOption.getOrElse(sys.error(s"no generations published under $d"))
   }
 
   /** Build generation 0 from a (doc_id, tk) corpus frame and publish the
@@ -2027,17 +2027,13 @@ object TextAnalysis {
     * generation; a torn init (tables written, marker missing) rebuilds.
     */
   def bm25GenInit(spark: SparkSession, base: String, corpus: DataFrame): Long = {
-    val d = genDir(spark, base)
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(d) && fs.listStatus(d).exists(_.getPath.getName.startsWith("g=")))
-      return bm25GenCurrent(spark, base)
+    val (fs, d) = genDir(spark, base)
+    if (published(fs, d).nonEmpty) return bm25GenCurrent(spark, base)
+    dropGen(spark, base, 0L)
     val (p, df, st) = genTables(base, 0L)
-    // both catalog layers: a fresh JVM's in-memory catalog doesn't know a
-    // previous JVM's generation tables while their warehouse dirs survive
-    Seq(p, df, st).foreach(t => graft.core.ModelTables.dropBothLayers(spark, t))
     bm25IndexWritesOf(spark, corpus, p, df, st).foreach(_._2())
     fs.mkdirs(d)
-    fs.create(new org.apache.hadoop.fs.Path(d, "g=0"), true).close()
+    fs.create(new Path(d, "g=0"), true).close()
     0L
   }
 
@@ -2054,28 +2050,21 @@ object TextAnalysis {
     val (p0, _, _) = genTables(base, g)
     val (p1, d1, s1) = genTables(base, g + 1)
     // a torn previous attempt left unpublished g+1 tables: rebuild them
-    // (both layers — see bm25GenInit)
-    Seq(p1, d1, s1).foreach(t => graft.core.ModelTables.dropBothLayers(spark, t))
+    dropGen(spark, base, g + 1)
     val cols = spark.table(p0).columns
     transform(spark.table(p0))
       .select(cols.map(col).toIndexedSeq: _*)
       .repartition(Bm25Buckets, col("token"))
       .write.bucketBy(Bm25Buckets, "token").saveAsTable(p1)
-    val post = spark.table(p1)
-    post.groupBy("token").agg(count(lit(1)).cast("bigint").as("df"))
-      .write.saveAsTable(d1)
-    post.groupBy("doc_id").agg(max("dl").as("dl"))
-      .agg(count(lit(1)).cast("bigint").as("n_docs"),
-        sum("dl").cast("bigint").as("sum_dl"))
-      .write.saveAsTable(s1)
-    val d = genDir(spark, base)
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(new org.apache.hadoop.fs.Path(d, s"g=${g + 1}"), true).close()
+    val (dfreq, stats) = derived(spark.table(p1))
+    dfreq.write.saveAsTable(d1)
+    stats.write.saveAsTable(s1)
+    val (fs, d) = genDir(spark, base)
+    fs.create(new Path(d, s"g=${g + 1}"), true).close()
     // retain N-1 for in-flight readers; drop everything older
     (0L until g).foreach { old =>
-      val (op, od, os) = genTables(base, old)
-      Seq(op, od, os).foreach(t => graft.core.ModelTables.dropBothLayers(spark, t))
-      fs.delete(new org.apache.hadoop.fs.Path(d, s"g=$old"), false)
+      dropGen(spark, base, old)
+      fs.delete(new Path(d, s"g=$old"), false)
     }
     g + 1
   }
@@ -2085,15 +2074,14 @@ object TextAnalysis {
     * dir — the gate/spec cleanup and the stale-rebuild prelude.
     */
   private[graft] def bm25GenDropAll(spark: SparkSession, base: String): Unit = {
-    val wh = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"))
-    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, gen) = genDir(spark, base)
+    val wh = gen.getParent
     val pat = s"${java.util.regex.Pattern.quote(base)}_(post|df|stats)_g[0-9]+".r.pattern
     if (fs.exists(wh))
       fs.listStatus(wh).toSeq.map(_.getPath.getName)
         .filter(n => pat.matcher(n).matches())
         .foreach(t => graft.core.ModelTables.dropBothLayers(spark, t))
-    fs.delete(genDir(spark, base), true); ()
+    fs.delete(gen, true); ()
   }
 
   /** Search through the pointer: resolve the live generation at plan
@@ -2128,10 +2116,8 @@ object TextAnalysis {
         bm25GenInit(spark, Bm25GenBase, bm25Corpus(spark, dir))
         spark.range(1).write.saveAsTable(Bm25GenAnchor)
       }))(
-      () => { bm25GenRewrite(spark, Bm25GenBase)(
-        _.join(broadcast(forgetDocIds(spark, dir)), Seq("doc_id"), "left_anti")); () })
-    bm25SearchAgainstGen(spark,
-      bm25QueriesOf(bm25Corpus(spark, dir)), Bm25GenBase)
+      () => { bm25GenRewrite(spark, Bm25GenBase)(forgetting(forgetDocIds(spark, dir))); () })
+    bm25SearchAgainstGen(spark, bm25Queries(spark, dir), Bm25GenBase)
   }
 
   // ---- percolation: standing queries, streaming documents ----
@@ -2145,18 +2131,24 @@ object TextAnalysis {
     */
   private val Bm25PercolateStride = 370
 
-  /** The standing query set as driver values (bounded — it IS the set of
-    * registered alerts a percolator holds).
+  /** The standing query set as a DATAFRAME (query_id, token) — what the
+    * lake-backed percolator persists and re-resolves per micro-batch; no
+    * driver collect anywhere on the registration path.
     */
-  private[graft] def bm25StandingQueries(spark: SparkSession,
-      dir: String,
-      seedWhere: org.apache.spark.sql.Column = lit(true)): Seq[(Long, String)] =
-    bm25Corpus(spark, dir)
-      .filter(col("doc_id") % Bm25PercolateStride === 0)
-      .filter(seedWhere)
-      .selectExpr("doc_id AS query_id",
-        s"explode(array_distinct(slice(tk, 1, $Bm25QueryTerms))) AS token")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+  private[graft] def bm25StandingQueriesDf(spark: SparkSession, dir: String,
+      seedWhere: Column): DataFrame =
+    seededQueries(bm25Corpus(spark, dir),
+      col("doc_id") % Bm25PercolateStride === 0 && seedWhere)
+
+  /** The standing set built ONCE as a local relation (bounded: it IS the
+    * registered alert set) — never rescanned per batch, and its
+    * [[Terms.literal]] cut collects without a Spark job.
+    */
+  private[graft] def bm25Standing(spark: SparkSession, dir: String,
+      seedWhere: Column = lit(true)): DataFrame = {
+    val q = bm25StandingQueriesDf(spark, dir, seedWhere)
+    spark.createDataFrame(java.util.Arrays.asList(q.collect(): _*), q.schema)
+  }
 
   /** Percolation scorer over an arbitrary (doc_id, text) batch: tf and
     * doc length come from the ARRIVING documents (batch-local, no state);
@@ -2170,34 +2162,26 @@ object TextAnalysis {
     * standing set derived from a large corpus from emitting
     * quadratically (every alert×every arriving doc). The filter is
     * per-(query, doc) and stateless, so it composes with the streaming
-    * form unchanged.
+    * form unchanged. `terms` is the standing set's cut, either form.
     */
-  private[graft] def bm25ScoreDocs(batch: DataFrame,
-      standing: Seq[(Long, String)], dfTable: String,
-      statsTable: String, minScoreMicro: Option[Long] = None): DataFrame = {
-    val s = batch.sparkSession
-    import s.implicits._
-    val queries = standing.toDF("query_id", "token")
-    val terms = standing.map(_._2).distinct
-    val tf = batch.selectExpr("doc_id", s"$toks AS tk")
-      .selectExpr("doc_id", "CAST(size(tk) AS BIGINT) AS dl", "explode(tk) AS token")
-      .filter(col("token").isin(terms: _*))
-      .groupBy("doc_id", "token")
-      .agg(count(lit(1)).as("tf"), max("dl").as("dl"))
-    // same partial-generation folds as bm25SearchAgainst: identity for a
-    // one-shot index, correct against a grown one
-    val dfreq = s.table(dfTable).filter(col("token").isin(terms: _*))
-      .groupBy("token").agg(sum("df").cast("bigint").as("df"))
-    val stats = s.table(statsTable)
-      .agg(sum("n_docs").cast("bigint").as("n_docs"),
-        sum("sum_dl").cast("bigint").as("sum_dl"))
-    val scored = tf.join(broadcast(queries), "token")
-      .join(broadcast(dfreq), "token")
-      .crossJoin(broadcast(stats))
-      .selectExpr("query_id", "doc_id", s"$bm25MicroExpr AS micro")
-      .groupBy("query_id", "doc_id").agg(sum("micro").as("score_micro"))
+  private[graft] def bm25PercolateScore(batch: DataFrame, standing: DataFrame,
+      terms: Terms, dfTable: String, statsTable: String,
+      minScoreMicro: Option[Long] = None): DataFrame = {
+    val (dfreq, stats) = bm25Stats(batch.sparkSession, terms, dfTable, statsTable)
+    val scored = score(termFreqs(batch.selectExpr("doc_id", s"$toks AS tk"), terms.keep),
+      terms.hint(standing), terms.hint(dfreq), stats)
     minScoreMicro.fold(scored)(t => scored.filter(col("score_micro") >= t))
   }
+
+  /** [[bm25PercolateScore]] cut by the standing frame itself
+    * ([[Terms.frame]], broadcast): zero collects, which is what lets the
+    * streaming percolator RE-RESOLVE the set per micro-batch.
+    */
+  private[graft] def bm25ScoreDocsDf(batch: DataFrame, standing: DataFrame,
+      dfTable: String, statsTable: String,
+      minScoreMicro: Option[Long] = None): DataFrame =
+    bm25PercolateScore(batch, standing, Terms.frame(standing, bcast = true),
+      dfTable, statsTable, minScoreMicro)
 
   /** Emission bound for [[bm25PercolateBounded]]: −4 micro-nat-millions.
     * BM25 scores here are routinely NEGATIVE (the standing queries' lead
@@ -2228,12 +2212,12 @@ object TextAnalysis {
     * with corpus growth).
     */
   private[graft] def bm25PercolateBoundedWhere(spark: SparkSession,
-      dir: String, seedWhere: org.apache.spark.sql.Column): DataFrame = {
+      dir: String, seedWhere: Column,
+      minScoreMicro: Option[Long] = Some(Bm25PercolateMinMicro)): DataFrame = {
     persistBm25Index(spark, dir)
-    bm25ScoreDocs(docs(spark, dir),
-        bm25StandingQueries(spark, dir, seedWhere),
-        Bm25DfTable, Bm25StatsTable,
-        minScoreMicro = Some(Bm25PercolateMinMicro))
+    val standing = bm25Standing(spark, dir, seedWhere)
+    bm25PercolateScore(docs(spark, dir), standing, Terms.literal(standing),
+        Bm25DfTable, Bm25StatsTable, minScoreMicro)
       .orderBy("query_id", "doc_id")
   }
 
@@ -2241,52 +2225,35 @@ object TextAnalysis {
     * reference for proving the bound is a pure filter.
     */
   private[graft] def bm25PercolateRawForSpec(spark: SparkSession,
-      dir: String): DataFrame = {
-    persistBm25Index(spark, dir)
-    bm25ScoreDocs(docs(spark, dir), bm25StandingQueries(spark, dir),
-        Bm25DfTable, Bm25StatsTable)
-      .orderBy("query_id", "doc_id")
-  }
+      dir: String): DataFrame =
+    bm25PercolateBoundedWhere(spark, dir, lit(true), minScoreMicro = None)
 
-  val bm25PercolateBoundedOracle: String =
+  /** The percolation score table, `where`-filtered. */
+  private def percolateOracle(where: String): String =
     s"""WITH ${bm25ScoreCtes(Bm25PercolateStride)}
        |SELECT query_id, doc_id, score_micro FROM score
-       |WHERE score_micro >= $Bm25PercolateMinMicro
-       |ORDER BY query_id, doc_id""".stripMargin
+       |${where}ORDER BY query_id, doc_id""".stripMargin
+
+  val bm25PercolateBoundedOracle: String =
+    percolateOracle(s"WHERE score_micro >= $Bm25PercolateMinMicro\n")
 
   /** Continuous percolation: each micro-batch of arriving documents is
     * scored against the standing queries with the frozen index stats —
     * per-doc and stateless, so the union of batch emissions equals the
-    * batch score table for any chunking that keeps docs whole.
+    * batch score table for any chunking that keeps docs whole. The
+    * standing frame is frozen for the stream's life (a [[bm25Standing]]
+    * local relation), so its literal cut is collected once, at start.
     */
-  def bm25PercolateStream(newDocs: DataFrame, standing: Seq[(Long, String)],
+  def bm25PercolateStream(newDocs: DataFrame, standing: DataFrame,
       dfTable: String = Bm25DfTable, statsTable: String = Bm25StatsTable)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    newDocs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) sink(bm25ScoreDocs(batch, standing, dfTable, statsTable))
-      }
-      .start()
+      sink: DataFrame => Unit): StreamingQuery = {
+    val terms = Terms.literal(standing)
+    eachBatch(newDocs)(b => sink(bm25PercolateScore(b, standing, terms, dfTable, statsTable)))
+  }
 
-  val bm25PercolateOracle: String =
-    s"""WITH ${bm25ScoreCtes(Bm25PercolateStride)}
-       |SELECT query_id, doc_id, score_micro FROM score
-       |ORDER BY query_id, doc_id""".stripMargin
+  val bm25PercolateOracle: String = percolateOracle("")
 
   // ---- percolation with an UPDATABLE standing-query lake ----
-
-  /** The standing query set as a DATAFRAME (query_id, token) — what the
-    * lake-backed percolator persists and re-resolves per micro-batch; no
-    * driver collect anywhere on the registration path.
-    */
-  private[graft] def bm25StandingQueriesDf(spark: SparkSession, dir: String,
-      seedWhere: org.apache.spark.sql.Column): DataFrame =
-    bm25Corpus(spark, dir)
-      .filter(col("doc_id") % Bm25PercolateStride === 0)
-      .filter(seedWhere)
-      .selectExpr("doc_id AS query_id",
-        s"explode(array_distinct(slice(tk, 1, $Bm25QueryTerms))) AS token")
 
   /** The percolate-lake gate's two standing generations: set A (every
     * 2nd stride seed) is registered at stream start; set B (stride seeds
@@ -2297,38 +2264,6 @@ object TextAnalysis {
     col("doc_id") % (2L * Bm25PercolateStride) === 0
   private[graft] def percolateSeedB: org.apache.spark.sql.Column =
     col("doc_id") % (3L * Bm25PercolateStride) =!= 0
-
-  /** [[bm25ScoreDocs]] with the standing set as a DataFrame: term
-    * membership is a broadcast semi-join instead of a literal IN (the
-    * mass-query discipline of [[bm25SearchAgainstDf]]), the standing
-    * frame broadcasts into the batch-local tf, and the frozen df/stats
-    * folds are unchanged. Identical rows to the driver-values form for
-    * the same set, with zero collects — which is what lets the streaming
-    * percolator RE-RESOLVE the set per micro-batch.
-    */
-  private[graft] def bm25ScoreDocsDf(batch: DataFrame, standing: DataFrame,
-      dfTable: String, statsTable: String,
-      minScoreMicro: Option[Long] = None): DataFrame = {
-    val s = batch.sparkSession
-    val qTokens = standing.select("token").distinct()
-    val tf = batch.selectExpr("doc_id", s"$toks AS tk")
-      .selectExpr("doc_id", "CAST(size(tk) AS BIGINT) AS dl", "explode(tk) AS token")
-      .join(broadcast(qTokens), Seq("token"), "left_semi")
-      .groupBy("doc_id", "token")
-      .agg(count(lit(1)).as("tf"), max("dl").as("dl"))
-    val dfreq = s.table(dfTable)
-      .join(broadcast(qTokens), Seq("token"), "left_semi")
-      .groupBy("token").agg(sum("df").cast("bigint").as("df"))
-    val stats = s.table(statsTable)
-      .agg(sum("n_docs").cast("bigint").as("n_docs"),
-        sum("sum_dl").cast("bigint").as("sum_dl"))
-    val scored = tf.join(broadcast(standing), "token")
-      .join(broadcast(dfreq), "token")
-      .crossJoin(broadcast(stats))
-      .selectExpr("query_id", "doc_id", s"$bm25MicroExpr AS micro")
-      .groupBy("query_id", "doc_id").agg(sum("micro").as("score_micro"))
-    minScoreMicro.fold(scored)(t => scored.filter(col("score_micro") >= t))
-  }
 
   /** GENERATION-POINTERED standing-query lake — registrations live in
     * immutable per-generation parquet dirs (`<lake>/g=N`), and an update
@@ -2342,27 +2277,21 @@ object TextAnalysis {
     * bounded write + a rename at any corpus scale.
     */
   object StandingLake {
-    private def gens(fs: org.apache.hadoop.fs.FileSystem,
-        root: org.apache.hadoop.fs.Path): Seq[Long] =
-      if (!fs.exists(root)) Seq.empty
-      else fs.listStatus(root).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("g=")).map(_.stripPrefix("g=").toLong)
-
     /** Publish `standing` as the next generation; returns its id. */
     def publish(standing: DataFrame, lakeDir: String): Long = {
       val spark = standing.sparkSession
-      val root = new org.apache.hadoop.fs.Path(lakeDir)
+      val root = new Path(lakeDir)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val g = gens(fs, root).maxOption.getOrElse(-1L) + 1
-      val tmp = new org.apache.hadoop.fs.Path(root, s".tmp-g-$g")
+      val g = published(fs, root).maxOption.getOrElse(-1L) + 1
+      val tmp = new Path(root, s".tmp-g-$g")
       standing.write.mode("overwrite").parquet(tmp.toString)
-      val dest = new org.apache.hadoop.fs.Path(root, s"g=$g")
+      val dest = new Path(root, s"g=$g")
       if (!fs.rename(tmp, dest) && !fs.exists(dest))
         sys.error(s"could not publish standing-lake generation $g under $lakeDir")
       // retain g-1 for in-flight readers; drop older generations and any
       // torn temp a crashed publish left
-      gens(fs, root).filter(_ < g - 1).foreach(old =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, s"g=$old"), true))
+      published(fs, root).filter(_ < g - 1).foreach(old =>
+        fs.delete(new Path(root, s"g=$old"), true))
       fs.listStatus(root).toSeq.map(_.getPath)
         .filter(_.getName.startsWith(".tmp-")).foreach(fs.delete(_, true))
       g
@@ -2370,11 +2299,11 @@ object TextAnalysis {
 
     /** The live generation's path — resolved once per micro-batch. */
     def resolve(spark: SparkSession, lakeDir: String): String = {
-      val root = new org.apache.hadoop.fs.Path(lakeDir)
+      val root = new Path(lakeDir)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val g = gens(fs, root).maxOption.getOrElse(
+      val g = published(fs, root).maxOption.getOrElse(
         sys.error(s"no standing-query generation published under $lakeDir"))
-      new org.apache.hadoop.fs.Path(root, s"g=$g").toString
+      new Path(root, s"g=$g").toString
     }
   }
 
@@ -2382,7 +2311,7 @@ object TextAnalysis {
     * every micro-batch re-resolves the live lake GENERATION at its
     * boundary ([[StandingLake]]), so alerts can be registered and
     * retired WITHOUT restarting the percolator — the gap that made
-    * [[bm25PercolateStream]]'s frozen `Seq` a restart per standing-set
+    * [[bm25PercolateStream]]'s frozen set a restart per standing-set
     * change — and an update can race a planning batch safely
     * (generations are immutable; the publish rename is the commit). The
     * lake read is bounded (it is the set of registered alerts); scoring
@@ -2390,18 +2319,12 @@ object TextAnalysis {
     */
   def bm25PercolateLakeStream(newDocs: DataFrame, lakePath: String,
       dfTable: String = Bm25DfTable, statsTable: String = Bm25StatsTable)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    newDocs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          sink(bm25ScoreDocsDf(batch,
-            s.read.parquet(StandingLake.resolve(s, lakePath)),
-            dfTable, statsTable))
-        }
-      }
-      .start()
+      sink: DataFrame => Unit): StreamingQuery =
+    eachBatch(newDocs) { b =>
+      val s = b.sparkSession
+      sink(bm25ScoreDocsDf(b, s.read.parquet(StandingLake.resolve(s, lakePath)),
+        dfTable, statsTable))
+    }
 
   /** Oracle for `stream_bm25_percolate_lake`: the document chunks are the
     * staged split (chunk arithmetic mirrored from
@@ -2412,15 +2335,16 @@ object TextAnalysis {
     */
   val bm25PercolateLakeOracle: String = {
     val stride = Bm25PercolateStride
+    def term(set: String, chunk: String) =
+      s"""term$set AS (
+         |  SELECT query_id, doc_id, $bm25MicroExpr AS micro
+         |  FROM tf JOIN q$set USING (token) JOIN dfreq USING (token)
+         |  CROSS JOIN stats CROSS JOIN bounds
+         |  WHERE CAST((doc_id - t0) * 3 // span AS INT) $chunk
+         |)""".stripMargin
     s"""WITH dall AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-       |qa AS (
-       |  SELECT doc_id AS query_id, unnest(list_distinct(tk[1:$Bm25QueryTerms])) AS token
-       |  FROM dall WHERE doc_id % ${2L * stride} = 0
-       |),
-       |qb AS (
-       |  SELECT doc_id AS query_id, unnest(list_distinct(tk[1:$Bm25QueryTerms])) AS token
-       |  FROM dall WHERE doc_id % $stride = 0 AND doc_id % ${3L * stride} <> 0
-       |),
+       |${seededSql("qa", s"doc_id % ${2L * stride} = 0")}
+       |${seededSql("qb", s"doc_id % $stride = 0 AND doc_id % ${3L * stride} <> 0")}
        |qt AS (SELECT token FROM qa UNION SELECT token FROM qb),
        |tf AS (
        |  SELECT doc_id, token, count(*) AS tf, max(dl) AS dl FROM (
@@ -2430,18 +2354,8 @@ object TextAnalysis {
        |dfreq AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
        |stats AS (SELECT count(*) AS n_docs, CAST(sum(len(tk)) AS BIGINT) AS sum_dl FROM dall),
        |bounds AS (SELECT min(doc_id) AS t0, max(doc_id) - min(doc_id) + 1 AS span FROM documents),
-       |terma AS (
-       |  SELECT query_id, doc_id, $bm25MicroExpr AS micro
-       |  FROM tf JOIN qa USING (token) JOIN dfreq USING (token)
-       |  CROSS JOIN stats CROSS JOIN bounds
-       |  WHERE CAST((doc_id - t0) * 3 // span AS INT) = 0
-       |),
-       |termb AS (
-       |  SELECT query_id, doc_id, $bm25MicroExpr AS micro
-       |  FROM tf JOIN qb USING (token) JOIN dfreq USING (token)
-       |  CROSS JOIN stats CROSS JOIN bounds
-       |  WHERE CAST((doc_id - t0) * 3 // span AS INT) >= 1
-       |)
+       |${term("a", "= 0")},
+       |${term("b", ">= 1")}
        |SELECT query_id, doc_id, CAST(sum(micro) AS BIGINT) AS score_micro
        |FROM (SELECT * FROM terma UNION ALL SELECT * FROM termb)
        |GROUP BY 1, 2

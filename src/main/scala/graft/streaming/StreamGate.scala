@@ -267,13 +267,18 @@ object StreamGate {
     }
 
     /** Run `body` under the gate's session conf; re-entrant, so nested
-      * drives share the outer scope.
+      * drives share the outer scope. Every scope also roots checkpoints in
+      * the gate's scratch dir: a query started without an explicit
+      * `checkpointLocation` (the operator streams) would otherwise get a
+      * Spark temporary dir under java.io.tmpdir, which survives a failed
+      * query and which the cleanup cannot see.
       */
     def scope[T](body: => T): T =
       if (scoped) body
       else {
         scoped = true
-        try withConf(spark, conf)(body) finally scoped = false
+        try withConf(spark, conf :+ ("spark.sql.streaming.checkpointLocation" -> dir("ck")))(body)
+        finally scoped = false
       }
 
     /** Start a query in the gate scope, `drive` it, and stop it whatever
@@ -740,12 +745,8 @@ object StreamGate {
   def bm25Percolate(spark: SparkSession, dir: String): DataFrame = gate(spark, "perc") { g =>
     import graft.operators.TextAnalysis
     TextAnalysis.persistBm25Index(spark, dir)
-    val standing = TextAnalysis.bm25StandingQueries(spark, dir)
-    val stream = docs(spark, dir).stream(spark)
-    val schema = TextAnalysis.bm25ScoreDocs(
-      Tables.load(spark, dir, "documents"), standing,
-      TextAnalysis.Bm25DfTable, TextAnalysis.Bm25StatsTable).schema
-    g.collect(schema)(TextAnalysis.bm25PercolateStream(stream, standing)(_))
+    val standing = TextAnalysis.bm25Standing(spark, dir)
+    g.collect(Bm25Scored)(TextAnalysis.bm25PercolateStream(docs(spark, dir).stream(spark), standing)(_))
       .orderBy("query_id", "doc_id")
   }
 
@@ -776,9 +777,12 @@ object StreamGate {
         if (i == 0) TextAnalysis.StandingLake.publish(
           TextAnalysis.bm25StandingQueriesDf(spark, dir, TextAnalysis.percolateSeedB), lake)
       }
-      out.df(StructType(Seq("query_id", "doc_id", "score_micro").map(StructField(_, LongType))))
-        .orderBy("query_id", "doc_id")
+      out.df(Bm25Scored).orderBy("query_id", "doc_id")
     }
+
+  /** The (query_id, doc_id, score_micro) rows both percolation gates emit. */
+  private val Bm25Scored =
+    StructType(Seq("query_id", "doc_id", "score_micro").map(StructField(_, LongType)))
 
   /** CONTINUOUS INDEX-QUALITY MONITORING under the hard gate: the query
     * vectors (every 20th embedding) arrive as a replayed stream; each
@@ -1326,12 +1330,17 @@ object StreamGate {
     // with the batch row's dedicated tables)
     TextAnalysis.bm25IndexWrites(spark, dir, p, f, st).foreach(_._2())
     g.drain(TextAnalysis.bm25ForgetStream(stream, p, f, st))
-    // the rewrites ran in the stream's cloned session; its refreshes
-    // don't invalidate THIS session's cached listings of the old
-    // generations
+    bm25Answer(spark, dir, p, f, st)
+  }
+
+  /** The standard BM25 query set against a gate-built index, materialized;
+    * refreshed first, since the stream's cloned session wrote it.
+    */
+  private def bm25Answer(spark: SparkSession, dir: String,
+      p: String, f: String, st: String): DataFrame = {
+    import graft.operators.TextAnalysis
     Seq(p, f, st).foreach(spark.catalog.refreshTable)
-    materialize(TextAnalysis.bm25SearchAgainst(spark,
-        TextAnalysis.bm25QueriesOf(TextAnalysis.bm25Corpus(spark, dir)), p, f, st))
+    materialize(TextAnalysis.bm25SearchAgainst(spark, TextAnalysis.bm25Queries(spark, dir), p, f, st))
       .orderBy("query_id", "rk")
   }
 
@@ -1642,9 +1651,7 @@ object StreamGate {
     val Seq(p, f, st) = Seq("bm25_ing_postings", "bm25_ing_df", "bm25_ing_stats").map(g.table)
     val stream = docs(spark, dir).stream(spark)
     g.drain(TextAnalysis.bm25IngestStream(stream, p, f, st)())
-    materialize(TextAnalysis.bm25SearchAgainst(spark,
-        TextAnalysis.bm25QueriesOf(TextAnalysis.bm25Corpus(spark, dir)), p, f, st))
-      .orderBy("query_id", "rk")
+    bm25Answer(spark, dir, p, f, st)
   }
 
   /** INCREMENTAL LM fit under the hard gate: training docs replayed in
@@ -1885,10 +1892,7 @@ object StreamGate {
       TextAnalysis.bm25IngestStream(_, p, f, st)())(
       Dedup.compactIfFragmentedWith(spark, p, Bm25PolicyMaxFiles)(
         () => { TextAnalysis.compactBm25Index(spark, p, f, st); () }))
-    Seq(p, f, st).foreach(spark.catalog.refreshTable)
-    (materialize(TextAnalysis.bm25SearchAgainst(spark,
-        TextAnalysis.bm25QueriesOf(TextAnalysis.bm25Corpus(spark, dir)), p, f, st))
-      .orderBy("query_id", "rk"), decisions)
+    (bm25Answer(spark, dir, p, f, st), decisions)
   }
 
   /** The fragmentation policy on the IVF-Flat index: vectors replay into

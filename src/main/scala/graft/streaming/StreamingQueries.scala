@@ -25,6 +25,21 @@ import scala.collection.concurrent.TrieMap
   */
 object StreamingQueries {
 
+  /** Run `f` on every non-empty micro-batch of `arriving` — the append
+    * skeleton of the operator families' admit/forget/serve loops. With no
+    * `checkpoint`, the session's checkpointLocation root (a gate sets one)
+    * or else a Spark temporary dir holds the query's checkpoint.
+    */
+  def eachBatch(arriving: DataFrame, checkpoint: Option[String] = None)(
+      f: DataFrame => Unit): StreamingQuery = {
+    val w = arriving.writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
+        if (!batch.isEmpty) f(batch.toDF())
+      }
+    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
+  }
+
   /** Q1 streaming: departures per (cell, 10-min tumbling window).
     * Watermark 61 s = the demo's maxOutOfOrder 60 s + 1 ms rounded up
     * (TaxiRideSource.java:102,150,210).

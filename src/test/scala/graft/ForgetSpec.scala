@@ -26,27 +26,40 @@ class ForgetSpec extends SparkSpec {
   test("bm25 forget leaves postings/df/stats bit-equal to a filtered-corpus build") {
     val a = Seq("fgs_post_a", "fgs_df_a", "fgs_stats_a")
     val b = Seq("fgs_post_b", "fgs_df_b", "fgs_stats_b")
+    val base = "fgs_gen"
     drop(a ++ b: _*)
+    TextAnalysis.bm25GenDropAll(spark, base)
     try {
+      // the in-place rewrite...
       TextAnalysis.bm25IndexWrites(spark, Sf0001, a(0), a(1), a(2)).foreach(_._2())
       TextAnalysis.forgetBm25Docs(spark,
         TextAnalysis.forgetDocIds(spark, Sf0001), a(0), a(1), a(2))
+      // ...and the generation rewrite: g=1 is g=0 with the forget anti-join
+      TextAnalysis.bm25GenInit(spark, base, TextAnalysis.bm25Corpus(spark, Sf0001))
+      assert(TextAnalysis.bm25GenRewrite(spark, base)(_.join(
+        broadcast(TextAnalysis.forgetDocIds(spark, Sf0001)), Seq("doc_id"), "left_anti")) === 1L)
+      val (gp, gd, gs) = TextAnalysis.genTables(base, 1L)
       val filtered = TextAnalysis.bm25Corpus(spark, Sf0001)
         .filter(col("doc_id") % TextAnalysis.Bm25ForgetMod =!= TextAnalysis.Bm25ForgetRem)
       TextAnalysis.bm25IndexWritesOf(spark, filtered, b(0), b(1), b(2)).foreach(_._2())
-      assert(rows(spark.table(a(0))) === rows(spark.table(b(0))), "postings differ")
-      assert(rows(spark.table(a(1))) === rows(spark.table(b(1))), "df differs")
-      // stats may differ in generation count; the search-time fold is the
-      // contract
-      def folded(t: String) = spark.table(t)
-        .agg(sum("n_docs").cast("bigint"), sum("sum_dl").cast("bigint"))
-        .head().toString
-      assert(folded(a(2)) === folded(b(2)), "folded stats differ")
-      // and no forgotten doc survives anywhere
-      assert(spark.table(a(0))
-        .filter(col("doc_id") % TextAnalysis.Bm25ForgetMod === TextAnalysis.Bm25ForgetRem)
-        .count() === 0L)
-    } finally drop(a ++ b: _*)
+      for ((path, Seq(p, d, st)) <- Seq("in-place" -> a, "generation" -> Seq(gp, gd, gs))) {
+        assert(rows(spark.table(p)) === rows(spark.table(b(0))), s"$path: postings differ")
+        assert(rows(spark.table(d)) === rows(spark.table(b(1))), s"$path: df differs")
+        // stats may differ in generation count; the search-time fold is the
+        // contract
+        def folded(t: String) = spark.table(t)
+          .agg(sum("n_docs").cast("bigint"), sum("sum_dl").cast("bigint"))
+          .head().toString
+        assert(folded(st) === folded(b(2)), s"$path: folded stats differ")
+        // and no forgotten doc survives anywhere
+        assert(spark.table(p)
+          .filter(col("doc_id") % TextAnalysis.Bm25ForgetMod === TextAnalysis.Bm25ForgetRem)
+          .count() === 0L, s"$path: a forgotten doc survives")
+      }
+    } finally {
+      drop(a ++ b: _*)
+      TextAnalysis.bm25GenDropAll(spark, base)
+    }
   }
 
   test("bm25 forget is idempotent: re-forgetting changes nothing") {

@@ -1344,7 +1344,8 @@ class OperatorsSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
       val d = graft.core.Tables.load(s2, Sf0001, "documents")
       def score(batch: org.apache.spark.sql.DataFrame) =
-        TextAnalysis.bm25ScoreDocs(batch, standing, "bm25p_df_t", "bm25p_stats_t")
+        TextAnalysis.bm25ScoreDocsDf(batch, standing.toDF("query_id", "token"),
+          "bm25p_df_t", "bm25p_stats_t")
       // frozen stats: scoring 3 disjoint arrival batches separately must
       // union to exactly the one-shot score table (stateless per doc)
       val chunked = (0 to 2).map(k => score(d.filter(col("doc_id") % 3 === k)))

@@ -913,4 +913,31 @@ class StreamingSpec extends SparkSpec {
     assert(catalog -- tablesBefore === Set.empty[String])
     assert(scratchEntries("graft-gate") -- scratchBefore === Set.empty[String])
   }
+
+  test("a checkpoint-less operator stream that fails inside a gate leaves no checkpoint behind") {
+    import graft.operators.TextAnalysis
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def temporaries: Set[String] = {
+      val ls = Files.list(tmp)
+      try {
+        import scala.jdk.CollectionConverters._
+        ls.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith("temporary-")).toSet
+      } finally ls.close()
+    }
+    val (tmpBefore, scratchBefore) = (temporaries, scratchEntries("graft-gate"))
+    val docs = MemoryStream[(Long, String)](spark)
+    docs.addData((1L, "a b c"), (2L, "b c d"))
+    val e = intercept[Exception] {
+      graft.streaming.StreamGate.gate(spark, "ckleak") { g =>
+        val Seq(p, f, st) = Seq("ckleak_post", "ckleak_df", "ckleak_stats").map(g.table)
+        g.drain(TextAnalysis.bm25IngestStream(docs.toDF().toDF("doc_id", "text"), p, f, st)(
+          () => throw new IllegalStateException("batch failed")))
+      }
+    }
+    assert(e.getMessage.contains("batch failed"), e.getMessage)
+    assert(temporaries -- tmpBefore === Set.empty[String],
+      "the failed query's checkpoint landed outside the gate scratch dir")
+    assert(scratchEntries("graft-gate") -- scratchBefore === Set.empty[String])
+  }
 }

@@ -152,11 +152,12 @@ class TextAnalysisSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     TextAnalysis.persistBm25Index(spark, Sf0001)
     val batch = graft.core.Tables.load(spark, Sf0001, "documents")
-    val standingSeq = TextAnalysis.bm25StandingQueries(spark, Sf0001)
+    val standingLocal = TextAnalysis.bm25Standing(spark, Sf0001)
     val standingDf = TextAnalysis.bm25StandingQueriesDf(spark, Sf0001, lit(true))
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
-    val a = rows(TextAnalysis.bm25ScoreDocs(batch, standingSeq,
+    val a = rows(TextAnalysis.bm25PercolateScore(batch, standingLocal,
+      TextAnalysis.Terms.literal(standingLocal),
       TextAnalysis.Bm25DfTable, TextAnalysis.Bm25StatsTable))
     val b = rows(TextAnalysis.bm25ScoreDocsDf(batch, standingDf,
       TextAnalysis.Bm25DfTable, TextAnalysis.Bm25StatsTable))

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Commit, Tables}
 
 /** Deduplication operators for LLM-data pipelines over `documents`:
   * exact (hash-groupBy), near-key blocking, n-gram Jaccard, MinHash+LSH,
@@ -641,12 +641,9 @@ object Dedup {
     * hourly ingests is ~9k files per bucket without this). DISTINCT also
     * drops the dead duplicate rows an at-least-once replay can leave.
     *
-    * The rewrite goes through a temp table + catalog rename. A crash
-    * BEFORE the canonical table is dropped leaves the original intact
-    * (the temp is re-created on retry); a crash in the drop-to-rename
-    * window leaves only the temp, which the next call — or any call
-    * after restart — detects and promotes before doing anything else,
-    * so the canonical name is always recoverable without manual surgery.
+    * The rewrite swaps the table through [[graft.core.Commit.swapTable]],
+    * whose torn state the next call, or any call after restart, promotes
+    * before doing anything else.
     *
     * SINGLE-WRITER contract: compaction snapshots the table, so an
     * [[admitToCorpus]] append committing while the rewrite runs would be
@@ -709,21 +706,7 @@ object Dedup {
   def compactIfFragmentedWith(spark: SparkSession, table: String,
       maxFilesPerBucket: Double = CompactMaxFilesPerBucket)(
       fire: () => Unit): (Double, Boolean) = {
-    val catalog = spark.sessionState.catalog
-    // self-heal a torn DROP-to-RENAME from a crashed rewrite FIRST: the
-    // metadata probe below would otherwise throw NoSuchTableException
-    // before the fold's own recovery path could run
-    recoverTornRewrite(spark, table)
-    // same stale-listing hazard as rewriteBucketedTable: streaming appends
-    // do not invalidate this session's cached file listing
-    spark.catalog.refreshTable(table)
-    val meta = catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val buckets = meta.bucketSpec.map(_.numBuckets).getOrElse(
-      throw new IllegalArgumentException(s"$table is not a bucketed table"))
-    val p = new org.apache.hadoop.fs.Path(meta.location)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val files = fs.listStatus(p).count(_.getPath.getName.startsWith("part-")).toLong
+    val (buckets, files) = probeBucketed(spark, table)
     val ratio = files.toDouble / buckets
     if (ratio > maxFilesPerBucket) {
       fire(); (ratio, true)
@@ -859,68 +842,47 @@ object Dedup {
 
   /** The general atomic rewrite behind [[compactBucketedTable]] (transform
     * = distinct) and the forget family's anti-join rewrites: snapshot the
-    * bucketed table, apply `transform`, write bucket-aligned to a temp
-    * table, swap via DROP + RENAME. Torn-run recovery (canonical gone,
-    * temp present → promote the temp) and the SINGLE-WRITER contract are
-    * inherited unchanged. The transform must be deterministic and must
-    * not read the table it replaces through any path other than the
-    * frame passed to it (the snapshot is the frame).
+    * bucketed table, apply `transform`, write bucket-aligned and swap it
+    * in ([[Commit.swapTable]], SINGLE-WRITER). The transform must be
+    * deterministic and must not read the table it replaces through any
+    * path other than the frame passed to it (the snapshot is the frame).
     */
-  /** Finish a torn previous [[rewriteBucketedTable]] run: canonical gone
-    * + temp present means the crash hit between DROP and RENAME — promote
-    * the temp. Every entry point that probes the canonical table's
-    * metadata (the rewrite itself, [[compactIfFragmented]]'s trigger)
-    * runs this first so a torn state is recoverable from ANY path, not
-    * just a retry of the rewrite.
-    */
-  private[graft] def recoverTornRewrite(spark: SparkSession, table: String): Unit = {
-    val catalog = spark.sessionState.catalog
-    val tmpName = table + "_compact_tmp"
-    if (!catalog.tableExists(org.apache.spark.sql.catalyst.TableIdentifier(table)) &&
-        catalog.tableExists(org.apache.spark.sql.catalyst.TableIdentifier(tmpName)))
-      spark.sql(s"ALTER TABLE $tmpName RENAME TO $table")
-    ()
-  }
-
   private[graft] def rewriteBucketedTable(spark: SparkSession, table: String,
       keyCol: String)(transform: DataFrame => DataFrame): (Long, Long) = {
-    val catalog = spark.sessionState.catalog
-    val tmpName = table + "_compact_tmp"
-    recoverTornRewrite(spark, table)
-    def meta = catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val buckets = meta.bucketSpec.map(_.numBuckets).getOrElse(
-      throw new IllegalArgumentException(s"$table is not a bucketed table"))
-    // refresh BEFORE reading the current generation: a session that read
-    // this table earlier holds its file listing in the catalog's relation
-    // cache, and streaming foreachBatch APPENDS (the admit verbs) do not
-    // invalidate it — a rewrite planned against the stale listing would
-    // silently DROP every row appended since that read (found live: the
-    // ivf-policy gate's maintenance windows read the index between admit
-    // chunks, and the later forget rewrite lost chunks 2-3)
-    spark.catalog.refreshTable(table)
-    def fileCount(m: org.apache.spark.sql.catalyst.catalog.CatalogTable): Long = {
-      val p = new org.apache.hadoop.fs.Path(m.location)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      fs.listStatus(p).count(_.getPath.getName.startsWith("part-")).toLong
-    }
-    val before = fileCount(meta)
-    spark.sql(s"DROP TABLE IF EXISTS $tmpName")
+    val (buckets, before) = probeBucketed(spark, table)
     // re-select the original column order: a USING-join transform moves
     // its key to the front, and the rewritten generation must keep the
     // table's declared schema
     val cols = spark.table(table).columns
-    transform(spark.table(table))
+    Commit.swapTable(spark, table)(transform(spark.table(table))
       .select(cols.map(col).toIndexedSeq: _*)
       .repartition(buckets, col(keyCol))
-      .write.bucketBy(buckets, keyCol).saveAsTable(tmpName)
-    spark.sql(s"DROP TABLE $table")
-    spark.sql(s"ALTER TABLE $tmpName RENAME TO $table")
-    // drop any cached file listing for the old generation: a session that
-    // rewrites the same table repeatedly (the per-batch forget stream)
-    // would otherwise plan later reads against deleted part files
+      .write.bucketBy(buckets, keyCol).saveAsTable(_))
+    (before, probeBucketed(spark, table)._2)
+  }
+
+  /** A bucketed table's (bucket count, part-file count). Every entry point
+    * that reads the table's metadata (the rewrite, [[compactIfFragmented]]'s
+    * trigger) probes through here, so it first promotes a torn swap — the
+    * metadata read would otherwise throw NoSuchTableException before any
+    * recovery could run — and refreshes the listing: a session that read
+    * this table earlier holds its file listing in the catalog's relation
+    * cache, and streaming foreachBatch APPENDS (the admit verbs) do not
+    * invalidate it — a rewrite planned against the stale listing would
+    * silently DROP every row appended since that read (found live: the
+    * ivf-policy gate's maintenance windows read the index between admit
+    * chunks, and the later forget rewrite lost chunks 2-3).
+    */
+  private def probeBucketed(spark: SparkSession, table: String): (Int, Long) = {
+    Commit.promoteTorn(spark, table)
     spark.catalog.refreshTable(table)
-    (before, fileCount(meta))
+    val meta = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table))
+    val buckets = meta.bucketSpec.map(_.numBuckets).getOrElse(
+      throw new IllegalArgumentException(s"$table is not a bucketed table"))
+    val p = new org.apache.hadoop.fs.Path(meta.location)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    (buckets, fs.listStatus(p).count(_.getPath.getName.startsWith("part-")).toLong)
   }
 
   val incrementalOracle: String =

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Commit
 
 /** RIGHT-TO-BE-FORGOTTEN AS ONE RESUMABLE WAVE across every persisted
   * index family.
@@ -77,21 +78,13 @@ object ForgetWave {
           // NON-atomic copy (RawLocalFileSystem) — and since fs.exists(ids)
           // is the resume-skip test, a crash mid-copy would freeze a
           // PARTIAL deletion set into the manifest. mkdirs first so the
-          // rename is a true atomic commit, and treat rename=false with a
-          // pre-existing dest as the error it is (a half-copied dest must
-          // not read as success).
+          // rename is a true atomic commit.
           fs.mkdirs(ids.getParent)
-          if (!fs.rename(tmp, ids))
-            sys.error(s"could not publish the ${f.name} id set for wave $waveDir" +
-              (if (fs.exists(ids)) " (dest already present — partial publish?)" else ""))
+          Commit.rename(fs, tmp, ids)
         }
       }
-      val tmp = new Path(root, ".tmp-MANIFEST")
-      val out = fs.create(tmp, true)
-      try out.write(families.map(_.name).mkString("", "\n", "\n").getBytes("UTF-8"))
-      finally out.close()
-      if (!fs.rename(tmp, manifest) && !fs.exists(manifest))
-        sys.error(s"could not publish the wave manifest for $waveDir")
+      Commit.writeFile(fs, new Path(root, ".tmp-MANIFEST"), manifest,
+        families.map(_.name).mkString("", "\n", "\n"))
     }
     // a resume must describe the SAME wave: the manifest freezes the
     // family list, and a caller handing a different one is a bug, not a

@@ -2146,41 +2146,28 @@ object Similarity {
         PqSr1Coarse, PqSr1Books)))
   }
 
-  /** The serving tier's MODEL-GENERATION POINTER — the same max-marker
-    * mechanism as the BM25 table generations
-    * ([[TextAnalysis.bm25GenCurrent]]): a fired re-train publishes its
-    * generation with one atomic empty-file create, and the serving
+  /** The serving tier's MODEL-GENERATION POINTER — a
+    * [[graft.core.Generations]] marker dir, like the BM25 table
+    * generations: a fired re-train publishes its marker, and the serving
     * stream re-resolves the pointer at every micro-batch boundary
     * (one listing + two K-row model loads — cheap enough to pay per
     * batch) instead of freezing models at stream start. A re-train no
     * longer strands a running serve stream.
     */
-  private def srGenDir(spark: SparkSession): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
+  private def srGens(spark: SparkSession): graft.core.Generations = {
+    val d = new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir"), "pq_sr.GEN")
-
-  def pqServeGenCurrent(spark: SparkSession): Long = {
-    val d = srGenDir(spark)
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(d)) sys.error(s"no serving generation published under $d")
-    val gs = fs.listStatus(d).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("g=")).map(_.stripPrefix("g=").toLong)
-    if (gs.isEmpty) sys.error(s"no serving generation published under $d")
-    gs.max
+    graft.core.Generations(d.getFileSystem(spark.sparkContext.hadoopConfiguration), d, "g=")
   }
 
-  def pqServeGenPublish(spark: SparkSession, g: Long): Unit = {
-    val d = srGenDir(spark)
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(d)
-    fs.create(new org.apache.hadoop.fs.Path(d, s"g=$g"), true).close()
-  }
+  def pqServeGenCurrent(spark: SparkSession): Long = srGens(spark).current
+
+  def pqServeGenPublish(spark: SparkSession, g: Long): Unit = srGens(spark).mark(g)
 
   private[graft] def pqServeGenReset(spark: SparkSession): Unit = {
-    val d = srGenDir(spark)
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(d, true)
-    pqServeGenPublish(spark, 0L)
+    val gs = srGens(spark)
+    gs.fs.delete(gs.root, true)
+    gs.mark(0L)
   }
 
   private[graft] def srTables(g: Long): (String, String, String) =

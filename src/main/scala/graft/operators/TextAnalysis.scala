@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.core.Tables
+import graft.core.{Commit, Generations, Tables}
 import graft.streaming.StreamingQueries.eachBatch
 
 /** Text-analysis operators for LLM-data pipelines over the `documents`
@@ -286,20 +286,30 @@ object TextAnalysis {
     * ulp between libm implementations, so it is banished from the
     * hash-compared surface); ties break on the token string.
     *
-    * Scale shape: tf is one shuffle on (doc, token) with map-side partial
-    * counts, df one shuffle on token; the per-doc top-3 is a bounded
-    * row_number window partitioned by doc_id — millions of independent
-    * partitions, no global sort.
+    * Scale shape: the corpus is read once. tf is one shuffle on (doc,
+    * token) with map-side partial counts; df and the corpus size are
+    * derived from those groups (df one shuffle on token); the per-doc
+    * top-3 is a bounded row_number window partitioned by doc_id —
+    * millions of independent partitions, no global sort.
     */
   def tfidf(spark: SparkSession, dir: String): DataFrame = {
-    val toks = docs(spark, dir)
-      .selectExpr("doc_id", "explode(split(text, ' ')) AS token")
-    val tf = toks.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-    val dfreq = toks.distinct().groupBy("token").agg(count(lit(1)).as("df"))
-    val n = docs(spark, dir).agg(count(lit(1)).as("n_docs"))
+    // every document row also yields one ' ' token, which split on ' '
+    // never does, so those groups count the rows: n_docs is count(*),
+    // null and empty text included. The corpus is read once because all
+    // three consumers of `tf` keep the same (doc, token) aggregate: each
+    // reads both `tf` and `sentinel` (so neither is pruned from it) and
+    // filters `token IS NOT NULL` as the join does
+    val tf = docs(spark, dir)
+      .selectExpr("doc_id", "explode(concat(array(' '), " +
+        "coalesce(split(text, ' '), array()))) AS token")
+      .groupBy("doc_id", "token")
+      .agg(count(lit(1)).as("tf"), max(col("token") === " ").as("sentinel"))
+    val dfreq = tf.groupBy("token").agg(count(when(!col("sentinel"), col("tf"))).as("df"))
+    val n = tf.filter(col("token").isNotNull)
+      .agg(sum(when(col("sentinel"), col("tf"))).as("n_docs"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy(col("score").desc, col("token").asc)
-    tf.join(dfreq, "token")
+    tf.filter(!col("sentinel")).join(dfreq, "token")
       .crossJoin(n) // 1-row broadcast: the corpus size constant
       .withColumn("score", expr("CAST(tf * n_docs AS DOUBLE) / df"))
       .withColumn("rk", row_number().over(w))
@@ -1773,22 +1783,22 @@ object TextAnalysis {
       transform: DataFrame => DataFrame)(
       afterPostings: () => Unit): (Long, Long) = {
     val (fs, marker) = compactMarker(spark, postingsTable)
-    val out = fs.create(marker, true)
-    try out.write("compacting\n".getBytes("UTF-8")) finally out.close()
+    // a surviving marker already fences this repair run
+    if (!fs.exists(marker)) Commit.writeFile(fs,
+      new Path(marker.getParent, s".tmp-${marker.getName}"), marker, "compacting\n")
     val counts = graft.operators.Dedup
       .rewriteBucketedTable(spark, postingsTable, "token")(transform)
     afterPostings()
+    // the replacements derive from postings, never from the table they replace
     val (dfreq, stats) = derived(spark.table(postingsTable))
-    replaceTable(spark, dfTable, dfreq)
-    replaceTable(spark, statsTable, stats)
+    Commit.swapTable(spark, dfTable)(dfreq.write.saveAsTable(_))
+    Commit.swapTable(spark, statsTable)(stats.write.saveAsTable(_))
     fs.delete(marker, false)
     counts
   }
 
   /** The durable compaction fence, one per postings table, living next
-    * to the warehouse tables it protects. Its PRESENCE is the signal:
-    * a partially-written marker (crash during publish) still reads as
-    * in-progress, and the false positive costs one harmless re-compaction.
+    * to the warehouse tables it protects. Its PRESENCE is the signal.
     */
   private def compactMarker(spark: SparkSession, postingsTable: String): (FileSystem, Path) =
     warehousePath(spark, s"$postingsTable.compacting")
@@ -1806,30 +1816,6 @@ object TextAnalysis {
       postingsTable: String = Bm25PostingsTable): Boolean = {
     val (fs, m) = compactMarker(spark, postingsTable)
     fs.exists(m)
-  }
-
-  /** Checked replace for the small derived tables: write the replacement
-    * to a temp table, then drop + rename. A crash between drop and
-    * rename leaves the finished temp; the promotion guard completes it
-    * on the next call (same recovery contract as the bucketed
-    * compactor). The replacement frame must NOT read the table it
-    * replaces — both call sites derive from postings.
-    */
-  private def replaceTable(spark: SparkSession, table: String,
-      data: DataFrame): Unit = {
-    val catalog = spark.sessionState.catalog
-    val tmp = table + "_compact_tmp"
-    def exists(t: String) = catalog.tableExists(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-    if (!exists(table) && exists(tmp))
-      spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    data.write.saveAsTable(tmp)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    // see rewriteBucketedTable: repeated same-session rewrites must not
-    // serve the previous generation's cached file listing
-    spark.catalog.refreshTable(table)
   }
 
   /** Continuous index build: every micro-batch of arriving documents is
@@ -1977,12 +1963,11 @@ object TextAnalysis {
     *
     *  - generation N lives in tables `<base>_post_gN` / `_df_gN` /
     *    `_stats_gN`, written once and never touched again;
-    *  - the live pointer is the MAX marker file `g=N` under the
-    *    `<base>.GEN` directory next to the warehouse tables — publishing
-    *    is one atomic empty-file create, and a torn rewrite (tables
-    *    written, marker missing) is invisible to readers and repaired by
-    *    re-running the rewrite (it drops and rebuilds the unpublished
-    *    generation);
+    *  - the live pointer is the max `g=N` marker of a
+    *    [[graft.core.Generations]] dir `<base>.GEN` next to the warehouse
+    *    tables; a torn rewrite (tables written, marker missing) is
+    *    repaired by re-running the rewrite, which drops and rebuilds the
+    *    unpublished generation;
     *  - readers resolve the pointer ONCE at plan time
     *    ([[bm25SearchAgainstGen]]) and keep reading their resolved
     *    generation to completion;
@@ -1996,14 +1981,10 @@ object TextAnalysis {
     * generation rewrites: zero errors, every answer equal to one
     * generation's oracle.
     */
-  private def genDir(spark: SparkSession, base: String): (FileSystem, Path) =
-    warehousePath(spark, s"$base.GEN")
-
-  /** The `g=N` generations under a BM25 pointer dir or [[StandingLake]]. */
-  private def published(fs: FileSystem, root: Path): Seq[Long] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("g=")).map(_.stripPrefix("g=").toLong)
+  private def gens(spark: SparkSession, base: String): Generations = {
+    val (fs, d) = warehousePath(spark, s"$base.GEN")
+    Generations(fs, d, "g=")
+  }
 
   private[graft] def genTables(base: String, g: Long): (String, String, String) =
     (s"${base}_post_g$g", s"${base}_df_g$g", s"${base}_stats_g$g")
@@ -2017,24 +1998,22 @@ object TextAnalysis {
   }
 
   /** The live generation — the max published marker. */
-  def bm25GenCurrent(spark: SparkSession, base: String): Long = {
-    val (fs, d) = genDir(spark, base)
-    published(fs, d).maxOption.getOrElse(sys.error(s"no generations published under $d"))
-  }
+  def bm25GenCurrent(spark: SparkSession, base: String): Long =
+    gens(spark, base).current
 
   /** Build generation 0 from a (doc_id, tk) corpus frame and publish the
     * pointer. Idempotent: an already-initialized base returns its live
     * generation; a torn init (tables written, marker missing) rebuilds.
     */
   def bm25GenInit(spark: SparkSession, base: String, corpus: DataFrame): Long = {
-    val (fs, d) = genDir(spark, base)
-    if (published(fs, d).nonEmpty) return bm25GenCurrent(spark, base)
-    dropGen(spark, base, 0L)
-    val (p, df, st) = genTables(base, 0L)
-    bm25IndexWritesOf(spark, corpus, p, df, st).foreach(_._2())
-    fs.mkdirs(d)
-    fs.create(new Path(d, "g=0"), true).close()
-    0L
+    val gs = gens(spark, base)
+    gs.latest.getOrElse {
+      dropGen(spark, base, 0L)
+      val (p, df, st) = genTables(base, 0L)
+      bm25IndexWritesOf(spark, corpus, p, df, st).foreach(_._2())
+      gs.mark(0L)
+      0L
+    }
   }
 
   /** Publish generation N+1 = `transform`(generation N's postings), with
@@ -2046,7 +2025,8 @@ object TextAnalysis {
     */
   def bm25GenRewrite(spark: SparkSession, base: String)(
       transform: DataFrame => DataFrame): Long = {
-    val g = bm25GenCurrent(spark, base)
+    val gs = gens(spark, base)
+    val g = gs.current
     val (p0, _, _) = genTables(base, g)
     val (p1, d1, s1) = genTables(base, g + 1)
     // a torn previous attempt left unpublished g+1 tables: rebuild them
@@ -2059,13 +2039,9 @@ object TextAnalysis {
     val (dfreq, stats) = derived(spark.table(p1))
     dfreq.write.saveAsTable(d1)
     stats.write.saveAsTable(s1)
-    val (fs, d) = genDir(spark, base)
-    fs.create(new Path(d, s"g=${g + 1}"), true).close()
+    gs.mark(g + 1)
     // retain N-1 for in-flight readers; drop everything older
-    (0L until g).foreach { old =>
-      dropGen(spark, base, old)
-      fs.delete(new Path(d, s"g=$old"), false)
-    }
+    gs.sweepBelow(g)(dropGen(spark, base, _))
     g + 1
   }
 
@@ -2074,7 +2050,7 @@ object TextAnalysis {
     * dir — the gate/spec cleanup and the stale-rebuild prelude.
     */
   private[graft] def bm25GenDropAll(spark: SparkSession, base: String): Unit = {
-    val (fs, gen) = genDir(spark, base)
+    val Generations(fs, gen, _) = gens(spark, base)
     val wh = gen.getParent
     val pat = s"${java.util.regex.Pattern.quote(base)}_(post|df|stats)_g[0-9]+".r.pattern
     if (fs.exists(wh))
@@ -2266,9 +2242,9 @@ object TextAnalysis {
     col("doc_id") % (3L * Bm25PercolateStride) =!= 0
 
   /** GENERATION-POINTERED standing-query lake — registrations live in
-    * immutable per-generation parquet dirs (`<lake>/g=N`), and an update
-    * PUBLISHES generation N+1 (write to a dot-temp dir, one atomic
-    * rename is the commit) instead of overwriting in place, so an
+    * immutable per-generation parquet dirs (`<lake>/g=N`,
+    * [[graft.core.Generations]]), and an update PUBLISHES generation N+1
+    * instead of overwriting in place, so an
     * updater racing a concurrently-planned micro-batch can never expose
     * a half-written set: the batch keeps reading the generation it
     * resolved. Readers take the max generation; the sweeper retains N-1
@@ -2277,33 +2253,24 @@ object TextAnalysis {
     * bounded write + a rename at any corpus scale.
     */
   object StandingLake {
+    private def lake(spark: SparkSession, lakeDir: String): Generations = {
+      val root = new Path(lakeDir)
+      Generations(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root, "g=")
+    }
+
     /** Publish `standing` as the next generation; returns its id. */
     def publish(standing: DataFrame, lakeDir: String): Long = {
-      val spark = standing.sparkSession
-      val root = new Path(lakeDir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val g = published(fs, root).maxOption.getOrElse(-1L) + 1
-      val tmp = new Path(root, s".tmp-g-$g")
-      standing.write.mode("overwrite").parquet(tmp.toString)
-      val dest = new Path(root, s"g=$g")
-      if (!fs.rename(tmp, dest) && !fs.exists(dest))
-        sys.error(s"could not publish standing-lake generation $g under $lakeDir")
-      // retain g-1 for in-flight readers; drop older generations and any
-      // torn temp a crashed publish left
-      published(fs, root).filter(_ < g - 1).foreach(old =>
-        fs.delete(new Path(root, s"g=$old"), true))
-      fs.listStatus(root).toSeq.map(_.getPath)
-        .filter(_.getName.startsWith(".tmp-")).foreach(fs.delete(_, true))
+      val gs = lake(standing.sparkSession, lakeDir)
+      val g = gs.latest.getOrElse(-1L) + 1
+      gs.publish(g)(tmp => standing.write.mode("overwrite").parquet(tmp.toString))
+      gs.sweepBelow(g - 1)() // retain g-1 for in-flight readers
       g
     }
 
     /** The live generation's path — resolved once per micro-batch. */
     def resolve(spark: SparkSession, lakeDir: String): String = {
-      val root = new Path(lakeDir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val g = published(fs, root).maxOption.getOrElse(
-        sys.error(s"no standing-query generation published under $lakeDir"))
-      new Path(root, s"g=$g").toString
+      val gs = lake(spark, lakeDir)
+      gs.path(gs.current).toString
     }
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Cast, Expression, GetStructField}
 import scala.collection.concurrent.TrieMap
+import graft.core.DirPublish
 
 /** Upsert-sink layer reproducing the contract of the reference's
   * ElasticUpsertTableSink (ElasticUpsertTableSink.scala:38-148):
@@ -307,13 +308,7 @@ class ParquetUpsertSink(val path: String, val keyFields: Seq[String],
     * repartition on the bucket, so each bucket is written by ONE task as
     * ONE file, whatever the core count (a plain partitioned write stages
     * a file per write task per bucket). Only then does each bucket
-    * publish with pure filesystem renames. Crash/retry safety per bucket:
-    * the old contents are renamed ASIDE (`.bak-`) before the new dir
-    * renames in, and the read path consults the bak when the live dir is
-    * missing — so a crash or failed rename at ANY point leaves at least
-    * one complete copy of the previous rows, and a retry reconverges.
-    * (Delete-then-rename would lose the bucket if the rename failed after
-    * the delete.)
+    * publish through [[DirPublish]], so a retry reconverges.
     */
   private[graft] def replaceBuckets(rows: DataFrame, touched: Seq[Int]): Unit = {
     if (touched.isEmpty) return
@@ -373,39 +368,6 @@ class ParquetUpsertSink(val path: String, val keyFields: Seq[String],
   }
 }
 
-/** Shared crash-safe directory publish, used by both the upsert sink and
-  * compaction so their recovery semantics cannot drift: new contents go to
-  * `tmp`, the live dir renames ASIDE to `bak`, `tmp` renames in, `bak` is
-  * dropped — and readers always fall back to `bak` when the live dir is
-  * missing (the window between the two renames).
-  */
-private[sinks] object DirPublish {
-  import org.apache.hadoop.fs.{FileSystem, Path}
-
-  def bakOf(dir: Path): Path = new Path(dir.getParent, s".bak-${dir.getName}")
-  def tmpOf(dir: Path): Path = new Path(dir.getParent, s".tmp-${dir.getName}")
-
-  /** The live dir, or the bak a crashed publish left behind. */
-  def readable(fs: FileSystem, dir: Path): Option[Path] = {
-    val bak = bakOf(dir)
-    if (fs.exists(dir)) Some(dir) else if (fs.exists(bak)) Some(bak) else None
-  }
-
-  /** Publish `tmp` as `dir` (checked renames; never leaves zero copies). */
-  def publish(fs: FileSystem, tmp: Path, dir: Path): Unit = {
-    val bak = bakOf(dir)
-    if (fs.exists(dir)) {
-      if (fs.exists(bak)) fs.delete(bak, true)
-      if (!fs.rename(dir, bak))
-        throw new java.io.IOException(s"publish backup failed: $dir -> $bak")
-    }
-    if (!fs.rename(tmp, dir))
-      throw new java.io.IOException(s"publish swap failed: $tmp -> $dir")
-    fs.delete(bak, true)
-    ()
-  }
-}
-
 /** Small-file compaction — the lake-maintenance chore every long-running
   * ingestion needs (micro-batches and per-bucket upserts both fragment;
   * thousands of KB-files kill scan throughput via per-file open cost and
@@ -415,20 +377,16 @@ private[sinks] object DirPublish {
   * compacted PER BUCKET, preserving the partition layout the sink's merge
   * depends on; a plain dir is rewritten to `targetFiles` files. Reads use
   * mergeSchema so schema-evolved file generations keep their newer
-  * columns, and go through [[DirPublish.readable]] so a compaction torn by
-  * a crash (live dir renamed aside, replacement not yet in) recovers from
-  * the bak copy instead of failing forever.
+  * columns, and a compaction torn by a crash (live dir renamed aside,
+  * replacement not yet in) first restores the bak copy
+  * ([[DirPublish.restore]]) instead of failing forever.
   */
 object Compaction {
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
               targetFiles: Int): Unit = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // recover a torn previous compaction of the root itself
-    if (!fs.exists(root) && fs.exists(DirPublish.bakOf(root))) {
-      if (!fs.rename(DirPublish.bakOf(root), root))
-        throw new java.io.IOException(s"compaction recovery failed for $root")
-    }
+    DirPublish.restore(fs, root) // a torn previous compaction of the root itself
     val bucketDirs = fs.listStatus(root).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("bucket="))
     if (bucketDirs.nonEmpty) {
@@ -440,16 +398,14 @@ object Compaction {
   private def compactDir(spark: org.apache.spark.sql.SparkSession,
                          fs: org.apache.hadoop.fs.FileSystem,
                          dir: org.apache.hadoop.fs.Path, nFiles: Int): Unit = {
-    val src = DirPublish.readable(fs, dir).getOrElse(
-      throw new java.io.FileNotFoundException(s"nothing to compact at $dir"))
+    // a torn state restores the bak as live first, so publish's backup
+    // step has a live dir to move aside
+    if (!DirPublish.restore(fs, dir))
+      throw new java.io.FileNotFoundException(s"nothing to compact at $dir")
     val tmp = DirPublish.tmpOf(dir)
-    spark.read.option("mergeSchema", "true").parquet(src.toString)
+    spark.read.option("mergeSchema", "true").parquet(dir.toString)
       .repartition(nFiles)
       .write.mode("overwrite").parquet(tmp.toString)
-    // if we read from the bak (torn state), restore it as live first so
-    // publish's backup step has a live dir to move aside
-    if (src != dir && !fs.rename(src, dir))
-      throw new java.io.IOException(s"compaction recovery failed: $src -> $dir")
     DirPublish.publish(fs, tmp, dir)
   }
 }

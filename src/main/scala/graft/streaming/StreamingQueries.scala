@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.functions.Taxi
+import graft.core.{Commit, Generations}
 import graft.sinks.{MemoryUpsertSink, NetworkUpsertSink, UpsertKeys}
 import scala.collection.concurrent.TrieMap
 
@@ -413,8 +414,8 @@ private[graft] class RetractStream(keyFields: Seq[String]) extends Serializable 
   *
   * Crash contract under foreachBatch's at-least-once replay: a batch's
   * emission log is derived against the lake BEFORE that batch's upsert
-  * and published ATOMICALLY (written to a dot-tmp dir, renamed into
-  * `emitted/batch=<id>`). A retried batch that finds its log already
+  * and published as generation `emitted/batch=<id>`
+  * ([[graft.core.Generations]]). A retried batch that finds its log already
   * published reuses it verbatim — the failed attempt may have partially
   * or fully upserted the lake, and re-deriving retractions against that
   * mutated lake would retract rows that were never emitted — then
@@ -447,8 +448,7 @@ class LakeRetractStream(root: String, keyFields: Seq[String],
       batchId: Long): Unit = {
     val spark = upserts.sparkSession
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dest = new Path(s"$emitRoot/batch=$batchId")
-    if (!fs.exists(dest)) {
+    if (!fs.exists(batches(fs).path(batchId))) {
       // one plan execution feeds both the retract join and the upsert
       val b = upserts.persist()
       val delKeys = Option(deletes)
@@ -471,11 +471,7 @@ class LakeRetractStream(root: String, keyFields: Seq[String],
           val out = retracts.withColumn("is_add", lit(false))
             .unionByName(b.withColumn("is_add", lit(true)))
             .select((col("is_add") +: upserts.columns.map(col).toIndexedSeq): _*)
-          val tmp = new Path(s"$emitRoot/.tmp-batch-$batchId")
-          out.write.mode("overwrite").parquet(tmp.toString)
-          fs.mkdirs(dest.getParent)
-          if (!fs.rename(tmp, dest) && !fs.exists(dest))
-            sys.error(s"could not publish retract log for batch $batchId")
+          batches(fs).publish(batchId)(tmp => out.write.mode("overwrite").parquet(tmp.toString))
           lake.upsertPrepared(b, delKeys.orNull, touchedBk, old)
         } finally { old.unpersist(); () }
       } finally {
@@ -500,15 +496,14 @@ class LakeRetractStream(root: String, keyFields: Seq[String],
   def emitted(spark: SparkSession): DataFrame = {
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val live =
-      if (batchIds(fs).nonEmpty)
+      if (batches(fs).ids.nonEmpty)
         Some(spark.read.parquet(emitRoot)
           .withColumn("batch", col("batch").cast("long")))
       else None
-    segIds(fs).maxOption match {
-      case None => live.getOrElse(
-        sys.error(s"no emitted records under $emitRoot"))
+    segs(fs).latest match {
+      case None => live.getOrElse(Generations.nothingPublished(new Path(root)))
       case Some(sealedId) =>
-        val snap = spark.read.parquet(s"$snapRoot/seg=$sealedId")
+        val snap = spark.read.parquet(segs(fs).path(sealedId).toString)
           .withColumn("batch", lit(sealedId))
         live.map(_.filter(col("batch") > sealedId)) match {
           case Some(l) => snap.select(l.columns.map(col).toIndexedSeq: _*).unionByName(l)
@@ -519,19 +514,11 @@ class LakeRetractStream(root: String, keyFields: Seq[String],
 
   private val snapRoot = s"$root/snapshot"
 
-  private def childIds(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-      prefix: String): Seq[Long] = {
-    val p = new Path(dir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith(prefix)).map(_.stripPrefix(prefix).toLong)
-  }
+  private def batches(fs: org.apache.hadoop.fs.FileSystem) =
+    Generations(fs, new Path(emitRoot), "batch=")
 
-  private def batchIds(fs: org.apache.hadoop.fs.FileSystem): Seq[Long] =
-    childIds(fs, emitRoot, "batch=")
-
-  private def segIds(fs: org.apache.hadoop.fs.FileSystem): Seq[Long] =
-    childIds(fs, snapRoot, "seg=")
+  private def segs(fs: org.apache.hadoop.fs.FileSystem) =
+    Generations(fs, new Path(snapRoot), "seg=")
 
   /** The highest batch id with a published emission log (the newest
     * record the changelog carries) — the natural `sealedBatchId` argument
@@ -539,7 +526,8 @@ class LakeRetractStream(root: String, keyFields: Seq[String],
     */
   def lastBatchId(spark: SparkSession): Long = {
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (batchIds(fs) ++ segIds(fs)).max
+    (batches(fs).latest ++ segs(fs).latest).maxOption
+      .getOrElse(Generations.nothingPublished(new Path(root)))
   }
 
   /** RETENTION for the changelog — the verb that stops the per-batch
@@ -553,12 +541,11 @@ class LakeRetractStream(root: String, keyFields: Seq[String],
     * net-0 groups contribute nothing to any fold and net-1 groups are
     * re-emitted as a single add.
     *
-    * Crash contract (the [[emitted]] reader enforces it): the segment is
-    * written to a dot-prefixed temp dir and RENAMED into place — a crash
-    * before the rename leaves the previous generation untouched; a crash
-    * after it leaves stale leftovers (the older segment, folded batch
-    * dirs) that the reader ignores and the next call sweeps. A re-run
-    * with the same seal detects the published segment and only sweeps.
+    * Crash contract: the segment publishes as generation `seg=<id>`
+    * ([[graft.core.Generations]]); a crash after the publish leaves stale
+    * leftovers (the older segment, folded batch dirs) that the
+    * [[emitted]] reader ignores and the next call sweeps. A re-run with
+    * the same seal detects the published segment and only sweeps.
     *
     * SINGLE-WRITER contract, plus one sealing rule: seal only batch ids
     * whose processing the checkpoint has committed (e.g. after the query
@@ -575,9 +562,9 @@ class LakeRetractStream(root: String, keyFields: Seq[String],
   private[graft] def compactRetractLogHooked(spark: SparkSession,
       sealedBatchId: Long)(afterPublish: () => Unit): (Long, Long) = {
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dest = new Path(s"$snapRoot/seg=$sealedBatchId")
-    if (fs.exists(dest)) { sweep(fs); return (0L, 0L) } // already published: repair only
-    val cur = segIds(fs).maxOption
+    // already published: repair only
+    if (fs.exists(segs(fs).path(sealedBatchId))) { sweep(fs); return (0L, 0L) }
+    val cur = segs(fs).latest
     require(cur.forall(_ <= sealedBatchId),
       s"seal $sealedBatchId is below the published segment ${cur.get}")
     val input = emitted(spark).filter(col("batch") <= sealedBatchId)
@@ -609,11 +596,7 @@ class LakeRetractStream(root: String, keyFields: Seq[String],
         .withColumn("is_add", lit(true))
         .select((col("is_add") +: valueCols.map(col)).toIndexedSeq: _*)
       val after = audit.getLong(2)
-      val tmp = new Path(s"$snapRoot/.tmp-seg-$sealedBatchId")
-      snap.write.mode("overwrite").parquet(tmp.toString)
-      fs.mkdirs(dest.getParent)
-      if (!fs.rename(tmp, dest) && !fs.exists(dest))
-        sys.error(s"could not publish snapshot segment $sealedBatchId")
+      segs(fs).publish(sealedBatchId)(tmp => snap.write.mode("overwrite").parquet(tmp.toString))
       afterPublish() // crash-injection seam: leftovers below are sweepable
       sweep(fs)
       (before, after)
@@ -645,8 +628,8 @@ class LakeRetractStream(root: String, keyFields: Seq[String],
   def compactRetractLogIfLong(spark: SparkSession, maxLiveLogs: Int,
       committedBatchId: Long): (Long, Boolean) = {
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sealedId = segIds(fs).maxOption.getOrElse(-1L)
-    val sealable = batchIds(fs).filter(id => id > sealedId && id <= committedBatchId)
+    val sealedId = segs(fs).latest.getOrElse(-1L)
+    val sealable = batches(fs).ids.filter(id => id > sealedId && id <= committedBatchId)
     val live = sealable.length.toLong
     if (live > maxLiveLogs) {
       compactRetractLog(spark, sealable.max); (live, true)
@@ -657,19 +640,11 @@ class LakeRetractStream(root: String, keyFields: Seq[String],
     * segments, batch logs at or below the seal, and any temp dirs. Safe
     * at every torn state — the reader never looks at what this deletes.
     */
-  private def sweep(fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    segIds(fs).maxOption.foreach { sealedId =>
-      segIds(fs).filter(_ < sealedId).foreach(i =>
-        fs.delete(new Path(s"$snapRoot/seg=$i"), true))
-      batchIds(fs).filter(_ <= sealedId).foreach(i =>
-        fs.delete(new Path(s"$emitRoot/batch=$i"), true))
+  private def sweep(fs: org.apache.hadoop.fs.FileSystem): Unit =
+    segs(fs).latest.foreach { sealedId =>
+      segs(fs).sweepBelow(sealedId)()
+      batches(fs).sweepBelow(sealedId + 1)()
     }
-    Seq(snapRoot, emitRoot).foreach { d =>
-      val p = new Path(d)
-      if (fs.exists(p)) fs.listStatus(p).toSeq.map(_.getPath)
-        .filter(_.getName.startsWith(".tmp-")).foreach(fs.delete(_, true))
-    }
-  }
 }
 
 /** Stateful two-level cascade for Q4 (TaxiRideQueries.scala:148-167),
@@ -757,8 +732,8 @@ object CascadeQ4 {
 
   // ---- replay markers ------------------------------------------------------
   // One file per in-flight batch ATTEMPT: "ALL" or newline-separated bucket
-  // ids. tmp+rename so a torn marker write is invisible, and every attempt
-  // publishes under a fresh unique name — replacing the previous attempt's
+  // ids, published by [[Commit.writeFile]]. Every attempt publishes under
+  // a fresh unique name — replacing the previous attempt's
   // marker in place (delete + rename) would open a window with NO marker on
   // disk, and a crash there permanently reopens the stale-bucket divergence
   // this protocol exists to close. Attempts accumulate only until the
@@ -769,15 +744,9 @@ object CascadeQ4 {
                           dir: org.apache.hadoop.fs.Path,
                           batchId: Long, buckets: Option[Seq[Long]]): Unit = {
     val attempt = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new org.apache.hadoop.fs.Path(dir, s"$batchId-$attempt.tmp")
-    val fin = new org.apache.hadoop.fs.Path(dir, s"$batchId-$attempt.marker")
-    val out = fs.create(tmp, true)
-    try buckets match {
-      case None => out.writeBytes("ALL\n")
-      case Some(bs) => bs.foreach(b => out.writeBytes(s"$b\n"))
-    } finally out.close()
-    if (!fs.rename(tmp, fin))
-      throw new java.io.IOException(s"cascade marker publish failed: $tmp -> $fin")
+    Commit.writeFile(fs, new org.apache.hadoop.fs.Path(dir, s"$batchId-$attempt.tmp"),
+      new org.apache.hadoop.fs.Path(dir, s"$batchId-$attempt.marker"),
+      buckets.fold("ALL\n")(_.map(b => s"$b\n").mkString))
   }
 
   /** All surviving markers' buckets; None = some marker says ALL. */

@@ -1167,4 +1167,48 @@ class StorageSpec extends SparkSpec {
       assert(observed.distinct.size >= 2, "the reader never spanned a flip")
     } finally TextAnalysis.bm25GenDropAll(spark, base)
   }
+
+  test("generation pointer: a torn rewrite is invisible, the next rewrite rebuilds it, the sweep keeps N-1") {
+    import graft.operators.TextAnalysis
+    val (base, clean) = ("sspec_bm25torn", "sspec_bm25clean")
+    def queries = TextAnalysis.bm25QueriesOf(TextAnalysis.bm25Corpus(spark, Sf0001))
+    def search(b: String): Seq[String] =
+      TextAnalysis.bm25SearchAgainstGen(spark, queries, b)
+        .collect().map(_.toString).sorted.toSeq
+    def rows(t: String): Seq[String] =
+      spark.table(t).collect().map(_.toString).sorted.toSeq
+    def forget(m: Int)(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("doc_id") % m =!= 0)
+    def markers(b: String): Set[String] = {
+      val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+      new java.io.File(wh, s"$b.GEN").list().filter(_.startsWith("g=")).toSet
+    }
+    Seq(base, clean).foreach(TextAnalysis.bm25GenDropAll(spark, _))
+    try {
+      Seq(base, clean).foreach(b =>
+        TextAnalysis.bm25GenInit(spark, b, TextAnalysis.bm25Corpus(spark, Sf0001)))
+      val served0 = search(base)
+      // the crash window: generation 1's tables are written (here a
+      // partial postings table and a copied df), its marker never was
+      val (p0, d0, _) = TextAnalysis.genTables(base, 0L)
+      val (p1, d1, _) = TextAnalysis.genTables(base, 1L)
+      spark.table(p0).filter(col("doc_id") % 2 === 0).write.saveAsTable(p1)
+      spark.table(d0).write.saveAsTable(d1)
+      assert(TextAnalysis.bm25GenCurrent(spark, base) === 0L)
+      assert(search(base) === served0, "a search served the unpublished generation")
+      // the next rewrite rebuilds generation 1 exactly as a clean chain does
+      assert(TextAnalysis.bm25GenRewrite(spark, base)(forget(7)) === 1L)
+      assert(TextAnalysis.bm25GenRewrite(spark, clean)(forget(7)) === 1L)
+      val (bt, ct) = (TextAnalysis.genTables(base, 1L), TextAnalysis.genTables(clean, 1L))
+      Seq(bt._1 -> ct._1, bt._2 -> ct._2, bt._3 -> ct._3).foreach { case (t, c) =>
+        assert(rows(t) === rows(c), s"$t differs from $c")
+      }
+      assert(search(base) === search(clean))
+      // two more rewrites: the pointer dir holds exactly {g-1, g}, and
+      // the swept generations' tables are gone
+      (2 to 3).foreach(i => TextAnalysis.bm25GenRewrite(spark, base)(forget(7 + i)))
+      assert(markers(base) === Set("g=2", "g=3"))
+      assert(!spark.catalog.tableExists(p0) && !spark.catalog.tableExists(p1))
+    } finally Seq(base, clean).foreach(TextAnalysis.bm25GenDropAll(spark, _))
+  }
 }

@@ -174,6 +174,9 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val root = Files.createTempDirectory("lakeretract-compact")
     val retr = new LakeRetractStream(root.resolve("r").toString, Seq("k"))
+    // nothing published yet: the error names the stream's root
+    val none = intercept[IllegalStateException](retr.lastBatchId(spark))
+    assert(none.getMessage.contains(root.resolve("r").toString), none.getMessage)
     // k=1: 10 -> 20 (10 superseded); k=2: 5 deleted; k=3: 7 lives
     retr.onChangelog(Seq((1L, 10L), (2L, 5L)).toDF("k", "v"), null, 0L)
     retr.onChangelog(Seq((1L, 20L)).toDF("k", "v"), Seq((2L, 0L)).toDF("k", "v"), 1L)

@@ -133,8 +133,14 @@ class TextAnalysisSpec extends SparkSpec {
       intercept[RuntimeException](StandingLake.resolve(spark, lake))
       assert(StandingLake.publish(setOf(1L -> "a"), lake) === 0L)
       assert(readIds() === Set(1L))
+      // a torn publish leaves a `.tmp-g-N` dir: resolve ignores it, the
+      // next publish sweeps it
+      setOf(9L -> "z").write.parquet(s"$lake/.tmp-g-5")
+      assert(readIds() === Set(1L))
       assert(StandingLake.publish(setOf(2L -> "b", 3L -> "c"), lake) === 1L)
       assert(readIds() === Set(2L, 3L))
+      assert(!new java.io.File(lake).list().exists(_.startsWith(".tmp-")),
+        "the publish must sweep the torn temp")
       // N-1 retained for an in-flight reader of the previous generation
       assert(genDirs() === Set("g=0", "g=1"))
       assert(StandingLake.publish(setOf(4L -> "d"), lake) === 2L)

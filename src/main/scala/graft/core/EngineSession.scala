@@ -12,11 +12,15 @@ import org.apache.spark.sql.SparkSession
   *    TaxiRide.java:41-42; oracle hash-parity depends on it);
   *  - AQE on (runtime coalescing + skew splitting — the default scale
   *    posture; operators that must NOT be coalesced pin partitioning
-  *    explicitly, see Dedup.editDistance);
+  *    explicitly, see Dedup.editDistance), plus [[SmallFinalSort]] from
+  *    the extensions: a final ORDER BY over small materialized shuffle
+  *    stages sorts in one partition, without range partitioning's
+  *    sampling job;
   *  - object-hash aggregation headroom for the bounded top-k Aggregator
   *    (sort-based fallback only past 1M groups/task);
   *  - [[GraftExtensions]] injected, so `float_dot` / `rolling_hash` work
-  *    from pure SQL in every session built here.
+  *    from pure SQL and [[SmallFinalSort]] is active in every session
+  *    built here.
   */
 object EngineSession {
 

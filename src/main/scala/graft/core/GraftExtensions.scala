@@ -9,12 +9,16 @@ import graft.functions.{FloatDotProduct, RollingHash}
   * codegen expressions as SQL functions, so
   * `spark.sql("SELECT float_dot(a, b)")` works cluster-wide via
   *   spark.sql.extensions=graft.core.GraftExtensions
-  * or `SparkSession.builder.withExtensions(new GraftExtensions)`.
+  * or `SparkSession.builder.withExtensions(new GraftExtensions)`, and adds
+  * one AQE query-stage-prep rule, [[SmallFinalSort]]: a query's final
+  * ORDER BY over small materialized shuffle stages sorts in one partition
+  * instead of paying range partitioning's sampling job.
   * This is the sanctioned seam for engine extensions — no spark-internal
   * patching, survives session cloning, visible to pure-SQL users.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectQueryStagePrepRule(SmallFinalSort(_))
     ext.injectFunction((
       new FunctionIdentifier("float_dot"),
       new ExpressionInfo(classOf[FloatDotProduct].getName, "float_dot"),

@@ -14,7 +14,7 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else declared(spark, s"$dir/$name.parquet")
   }
 
   /** events.parquet's `ts` physical encoding has drifted across testdata
@@ -43,8 +43,9 @@ object Tables {
     // file in the same session read as LongType without any exception and
     // was silently mis-scaled 1000x by the div-1000 branch. Footers are
     // ground truth per file, so the refusal no longer depends on what was
-    // read earlier in the session.
-    val kinds = tsFooterKinds(spark, path)
+    // read earlier in the session. Every call opens every footer again.
+    val footers = dataFiles(spark, path).map(footer(spark, _))
+    val kinds = footers.map(tsKind).toSet
     if (kinds.contains("PLAIN_INT64")) throw new IllegalStateException(
       s"$path: ts stored as PLAIN INT64 (no timestamp annotation) — " +
         "unknown epoch unit, refusing to guess a divisor")
@@ -60,7 +61,8 @@ object Tables {
       // TIMESTAMP(NANOS) columns are read, no other testdata table has
       // one, and the footer check above refuses plain INT64 regardless.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(path)
+    // after the conf set: the schema converter reads nanosAsLong
+    val df = readDeclared(spark, path, footers.headOption)
     df.schema("ts").dataType match {
       case LongType if kinds == Set("NANOS") =>
         df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -75,52 +77,82 @@ object Tables {
     }
   }
 
-  /** The ts column's parquet encoding per data file under `path` (a file
-    * or a directory tree), read straight from the footers:
-    * `"NANOS"`/`"MICROS"`/`"MILLIS"` for INT64 timestamp annotations,
-    * `"PLAIN_INT64"` for an unannotated INT64 (the encoding the loader
-    * must refuse — no epoch unit recorded), the primitive name otherwise,
-    * `"absent"` when the file has no ts. Driver-side metadata reads, one
-    * footer per file — the same O(files) listing cost Spark's own scan
-    * planning pays; a catalog-backed deployment would read this from
-    * table metadata instead.
+  /** `path` (a parquet file or directory tree) read with the schema its
+    * first data file's footer declares, converted by Spark's own
+    * footer-to-schema converter under the session's parquet confs — the
+    * schema `spark.read.parquet` would infer without schema merging, minus
+    * the one-task Spark job that inference runs to open that same footer.
+    * Nothing is cached: each call lists and opens the footer again. A path
+    * with no data file is read undeclared, so it fails with Spark's own
+    * error.
     */
-  private def tsFooterKinds(spark: SparkSession, path: String): Set[String] = {
+  private[graft] def declared(spark: SparkSession, path: String): DataFrame =
+    readDeclared(spark, path, dataFiles(spark, path).headOption.map(footer(spark, _)))
+
+  private def readDeclared(spark: SparkSession, path: String,
+      first: Option[org.apache.parquet.hadoop.Footer]): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+      ParquetToSparkSchemaConverter}
+    first match {
+      case Some(f) =>
+        val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+        spark.read.schema(ParquetFileFormat.readSchemaFromFooter(f, converter)).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  /** Data files under `path` (a file or a directory tree; `_`/`.`-prefixed
+    * names skipped, as Spark's file index skips them), sorted by path;
+    * empty when `path` does not exist. Driver-side listing — the same
+    * O(files) cost Spark's own scan planning pays.
+    */
+  private def dataFiles(spark: SparkSession, path: String): Seq[org.apache.hadoop.fs.Path] = {
     import org.apache.hadoop.fs.Path
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    def dataFiles(p: Path): Seq[Path] = {
-      val st = fs.getFileStatus(p)
-      if (st.isDirectory)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(p: Path): Seq[Path] =
+      if (fs.getFileStatus(p).isDirectory)
         fs.listStatus(p).toSeq
           .filterNot(s => s.getPath.getName.startsWith("_") ||
             s.getPath.getName.startsWith("."))
-          .flatMap(s => dataFiles(s.getPath))
+          .flatMap(s => walk(s.getPath))
       else Seq(p)
-    }
-    dataFiles(root).map { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        val schema = r.getFooter.getFileMetaData.getSchema
-        if (!schema.containsField("ts")) "absent"
-        else {
-          val t = schema.getType(Seq("ts"): _*)
-          if (!t.isPrimitive) "group"
-          else {
-            val prim = t.asPrimitiveType()
-            (prim.getPrimitiveTypeName.toString, prim.getLogicalTypeAnnotation) match {
-              case ("INT64", ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation) =>
-                ts.getUnit.toString
-              case ("INT64", null) => "PLAIN_INT64"
-              case (p2, _) => p2: String
-            }
-          }
+    if (fs.exists(root)) walk(root).sortBy(_.toString) else Nil
+  }
+
+  /** One data file's parquet footer, read on the driver. */
+  private def footer(spark: SparkSession,
+      file: org.apache.hadoop.fs.Path): org.apache.parquet.hadoop.Footer = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try new org.apache.parquet.hadoop.Footer(file, r.getFooter) finally r.close()
+  }
+
+  /** The ts column's parquet encoding in one footer:
+    * `"NANOS"`/`"MICROS"`/`"MILLIS"` for INT64 timestamp annotations,
+    * `"PLAIN_INT64"` for an unannotated INT64 (the encoding the loader
+    * must refuse — no epoch unit recorded), the primitive name otherwise,
+    * `"absent"` when the file has no ts. A catalog-backed deployment would
+    * read this from table metadata instead.
+    */
+  private def tsKind(f: org.apache.parquet.hadoop.Footer): String = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    val schema = f.getParquetMetadata.getFileMetaData.getSchema
+    if (!schema.containsField("ts")) "absent"
+    else {
+      val t = schema.getType(Seq("ts"): _*)
+      if (!t.isPrimitive) "group"
+      else {
+        val prim = t.asPrimitiveType()
+        (prim.getPrimitiveTypeName.toString, prim.getLogicalTypeAnnotation) match {
+          case ("INT64", ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation) =>
+            ts.getUnit.toString
+          case ("INT64", null) => "PLAIN_INT64"
+          case (p2, _) => p2: String
         }
-      } finally r.close()
-    }.toSet
+      }
+    }
   }
 
   /** Register every table of `dir` as a temp view (idempotent, lazy scans). */

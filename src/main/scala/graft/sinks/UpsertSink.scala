@@ -215,7 +215,7 @@ class ParquetUpsertSink(val path: String, val keyFields: Seq[String],
     *
     * ALL touched buckets merge and write in ONE Spark job: the existing
     * rows of every touched bucket are read in a single multi-dir scan, the
-    * replace/delete anti-joins run on the KEY alone (equivalent to
+    * replace and the delete anti-join run on the KEY alone (equivalent to
     * per-bucket joins — a key's rows only ever live in the bucket the key
     * hashes to), and [[replaceBuckets]] stages every rewritten bucket
     * under a tmp root in one write, then publishes each bucket with pure
@@ -271,11 +271,11 @@ class ParquetUpsertSink(val path: String, val keyFields: Seq[String],
     }
   }
 
-  /** Shared merge core: anti-join the touched buckets' current rows
-    * against the batch's keys, union the batch, drop deletes, and
-    * [[replaceBuckets]] with the result. `old = None` reads the touched
-    * buckets here (the plain-[[upsert]] path); `Some(rows)` reuses a
-    * caller-provided (persisted) read.
+  /** Shared merge core: union the touched buckets' current rows with the
+    * batch, keep per key only the batch's rows where it has the key, drop
+    * deletes, and [[replaceBuckets]] with the result. `old = None` reads
+    * the touched buckets here (the plain-[[upsert]] path); `Some(rows)`
+    * reuses a caller-provided (persisted) read.
     */
   private def mergeInto(b: DataFrame, delKeys: Option[DataFrame],
       touched: Seq[Int], old: Option[DataFrame]): Unit = {
@@ -284,12 +284,20 @@ class ParquetUpsertSink(val path: String, val keyFields: Seq[String],
       b.schema.fields.filterNot(_.name == "bucket"))
     val oldRows = old.getOrElse(readDirs(b.sparkSession, touched, dataSchema))
     // bucket is recomputed from the key — the same pmod(hash) that
-    // placed the row at write time, so placement never drifts. The
-    // anti-join's result does not depend on duplicate keys on its right
-    // side, so the batch's keys need no distinct (and no shuffle for it).
+    // placed the row at write time, so placement never drifts.
     val oldB = bucketed(oldRows).select(b.columns.map(col).toIndexedSeq: _*)
-    val merged = oldB.join(b.select(keyCol(b).as("_k")), keyCol(oldB) === col("_k"), "left_anti")
-      .unionByName(b)
+    // `b` enters the plan ONCE: a plan that references a persisted frame
+    // twice (say, an anti-join on its keys plus a union of its rows)
+    // recomputes one leg from its source, re-running the caller's upstream
+    // plan. So tag each side and keep, per key, the rows of the newest
+    // side present: the batch's rows where the batch has the key, else
+    // the lake's.
+    val tagged = oldB.withColumn("_src", lit(0)).unionByName(b.withColumn("_src", lit(1)))
+    val merged = tagged
+      .withColumn("_newest", max("_src").over(
+        org.apache.spark.sql.expressions.Window.partitionBy(keyCol(tagged))))
+      .where(col("_src") === col("_newest"))
+      .drop("_src", "_newest")
     val afterDeletes = delKeys match {
       case Some(dk) =>
         merged.join(dk.select("_del_key"),

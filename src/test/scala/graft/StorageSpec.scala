@@ -419,6 +419,37 @@ class StorageSpec extends SparkSpec {
     assert(sink.snapshot(spark).count() === 64L)
   }
 
+  test("a foreachBatch upsert runs the caller's upstream aggregation once per batch") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.OutputMode
+    import graft.sinks.ParquetUpsertSink
+    val input = MemoryStream[(String, Long)](spark)
+    val sink = new ParquetUpsertSink(
+      Files.createTempDirectory("upsertonce").toString + "/lake", Seq("k"), nBuckets = 4)
+    val q = input.toDF().toDF("k", "v").groupBy("k").agg(sum("v").as("total"))
+      .writeStream.outputMode(OutputMode.Update())
+      .option("checkpointLocation", Files.createTempDirectory("upsertonceck").toString)
+      .foreachBatch((batch: DataFrame, _: Long) => sink.upsert(batch))
+      .start()
+    // every execution of the aggregation in a micro-batch adds that
+    // batch's updated keys to numRowsUpdated again
+    def updatedRows(): Long = {
+      q.processAllAvailable()
+      q.lastProgress.stateOperators(0).numRowsUpdated
+    }
+    try {
+      input.addData(("a", 1L), ("b", 2L), ("c", 3L))
+      assert(updatedRows() === 3L, "the upstream aggregation ran more than once in batch 1")
+      // batch 2 merges into the lake's existing rows: two keys change
+      input.addData(("a", 10L), ("d", 4L))
+      assert(updatedRows() === 2L, "the upstream aggregation ran more than once in batch 2")
+    } finally q.stop()
+    assert(sink.snapshot(spark).as[(String, Long)].collect().toMap ===
+      Map("a" -> 11L, "b" -> 2L, "c" -> 3L, "d" -> 4L))
+  }
+
   test("binaryFile source ingests raw media dirs into the decode seam") {
     import graft.operators.{Multimodal, DeterministicFakeDecoder}
     val dir = Files.createTempDirectory("media")

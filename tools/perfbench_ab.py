@@ -3,7 +3,7 @@
 pairs of one perfbench workload, one pair per seed.
 
     python3 tools/perfbench_ab.py --parent DIR --change DIR --workload W
-        --seeds 101-110 [--json PATH]
+        --seeds 101-110 [--trace] [--json PATH]
 
 Each side runs `python3 perfbench/run.py --workload W --seed S --seconds 1
 --trace 0` from the root of its checkout. Odd seeds run the parent first,
@@ -16,17 +16,26 @@ tenths of the pairs and its median beats the parent's by more than the
 parent's spread. The exit code is nonzero if any run failed or was not
 correct.
 
+--trace runs `run.py --trace 1` instead and summarizes, the same way, the
+per-layer metrics named in TRACE_METRICS (a traced run reports per-layer
+metrics, not end-to-end ones, and its timings carry the tracing overhead).
+
 Make each checkout fresh from git (`git clone` or `git worktree add`), not
 by copying a built tree with `cp -a`: a copied tree has been seen to lose
 its compiled classes after a build in a copy of it. Each checkout builds
 itself from source on its first run.
 """
 import argparse
+import functools
 import json
 import statistics
 import subprocess
 import sys
 from pathlib import Path
+
+# the per-layer metrics of BENCHMARK.json that --trace summarizes: Spark
+# jobs per op and the build and exec medians
+TRACE_METRICS = ("spark.jobs", "operators.build_ms", "spark.exec_ms")
 
 
 def parse_seeds(spec):
@@ -45,10 +54,10 @@ def read_loadavg():
         return None
 
 
-def run_checkout(checkout, workload, seed):
+def run_checkout(checkout, workload, seed, trace=False):
     """One benchmark run; returns (ok, result dict or None, stderr tail)."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", "1", "--trace", "0"]
+           "--seed", str(seed), "--seconds", "1", "--trace", "1" if trace else "0"]
     p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     result = None
     for line in reversed(p.stdout.splitlines()):
@@ -68,12 +77,20 @@ def quartiles(xs):
     return q1, med, q3
 
 
-def summarize(spec, pairs):
-    """Per end-to-end metric: both sides' quartiles, ratio and wins over
-    the pairs in which both runs succeeded."""
+def compared_metrics(spec, trace):
+    """The metric entries of BENCHMARK.json an A/B compares: the end-to-end
+    ones, or with --trace the per-layer TRACE_METRICS."""
+    if not trace:
+        return spec["end_to_end"]
+    return [m for m in spec["per_layer"] if m["name"] in TRACE_METRICS]
+
+
+def summarize(metrics, pairs):
+    """Per metric entry: both sides' quartiles, ratio and wins over the
+    pairs in which both runs succeeded."""
     good = [(p, c) for p, c in pairs if p is not None and c is not None]
     out = {}
-    for m in spec["end_to_end"]:
+    for m in metrics:
         name, lower = m["name"], m["better"] == "lower"
         par = [p[name]["value"] for p, _ in good]
         chg = [c[name]["value"] for _, c in good]
@@ -113,17 +130,20 @@ def main(argv=None, runner=run_checkout, loadavg=read_loadavg):
     ap.add_argument("--change", required=True, help="checkout of the change")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="e.g. 101-110 or 101,103,107-109")
+    ap.add_argument("--trace", action="store_true",
+                    help="run traced and compare the per-layer TRACE_METRICS")
     ap.add_argument("--json", help="write every run and the summary here")
     args = ap.parse_args(argv)
     spec = json.loads(Path(args.parent, "BENCHMARK.json").read_text())
     sides = {"parent": args.parent, "change": args.change}
+    run = functools.partial(runner, trace=True) if args.trace else runner
     runs, pairs, failed = [], [], 0
     for seed in parse_seeds(args.seeds):
         order = ["parent", "change"] if seed % 2 else ["change", "parent"]
         got = {}
         for pos, side in enumerate(order):
             load = loadavg()
-            ok, result, err = runner(sides[side], args.workload, seed)
+            ok, result, err = run(sides[side], args.workload, seed)
             runs.append({"seed": seed, "side": side, "position": pos, "loadavg": load,
                          "ok": ok, "result": result})
             if not ok:
@@ -134,14 +154,15 @@ def main(argv=None, runner=run_checkout, loadavg=read_loadavg):
             print(f"[ab] seed {seed} {side} ({'first' if pos == 0 else 'second'}, "
                   f"loadavg {load_s}): {'ok' if ok else 'FAILED'}", file=sys.stderr, flush=True)
         pairs.append((got["parent"], got["change"]))
-    summary = summarize(spec, pairs)
+    summary = summarize(compared_metrics(spec, args.trace), pairs)
     print_table(args.workload, summary)
     if failed:
         print(f"{failed} run(s) failed")
     if args.json:
         Path(args.json).write_text(json.dumps(
             {"workload": args.workload, "seeds": parse_seeds(args.seeds),
-             "command": "python3 perfbench/run.py --workload W --seed S --seconds 1 --trace 0",
+             "command": "python3 perfbench/run.py --workload W --seed S --seconds 1 --trace "
+                        + ("1" if args.trace else "0"),
              "order": "odd seed: parent first; even seed: change first",
              "failed_runs": failed, "summary": summary, "runs": runs}, indent=1) + "\n")
     return 1 if failed else 0

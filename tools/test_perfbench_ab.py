@@ -16,7 +16,12 @@ import perfbench_ab  # noqa: E402
 
 SPEC = {"end_to_end": [
     {"name": "throughput_ops_per_s", "unit": "ops/s", "better": "higher", "bound": 0.25},
-    {"name": "latency_p50_s", "unit": "s", "better": "lower", "bound": 0.25}]}
+    {"name": "latency_p50_s", "unit": "s", "better": "lower", "bound": 0.25}],
+    "per_layer": [
+    {"name": "operators.build_ms", "unit": "ms", "better": "lower"},
+    {"name": "spark.exec_ms", "unit": "ms", "better": "lower"},
+    {"name": "spark.jobs", "unit": "count", "better": "lower"},
+    {"name": "spark.stages", "unit": "count", "better": "lower"}]}
 
 
 def result(tput, p50):
@@ -44,7 +49,7 @@ class FakeRunner:
 
 class PerfbenchAbTest(unittest.TestCase):
 
-    def run_tool(self, runner, seeds="101-110"):
+    def run_tool(self, runner, seeds="101-110", extra=()):
         with tempfile.TemporaryDirectory() as d:
             for side in ("parent", "change"):
                 os.mkdir(os.path.join(d, side))
@@ -55,7 +60,8 @@ class PerfbenchAbTest(unittest.TestCase):
             with contextlib.redirect_stdout(out), contextlib.redirect_stderr(err):
                 rc = perfbench_ab.main(
                     ["--parent", os.path.join(d, "parent"), "--change", os.path.join(d, "change"),
-                     "--workload", "stream_cascade", "--seeds", seeds, "--json", out_json],
+                     "--workload", "stream_cascade", "--seeds", seeds, "--json", out_json,
+                     *extra],
                     runner=runner, loadavg=lambda: ["1.00", "2.00", "3.00"])
             with open(out_json) as f:
                 art = json.load(f)
@@ -115,6 +121,41 @@ class PerfbenchAbTest(unittest.TestCase):
         self.assertEqual(art["summary"]["throughput_ops_per_s"]["pairs"], 9)
         self.assertIn("1 run(s) failed", out)
         self.assertIn("seed 104 change: run failed", err)
+
+
+    def test_trace_compares_the_per_layer_medians(self):
+        calls = []
+
+        def runner(checkout, workload, seed, trace=False):
+            side = os.path.basename(checkout)
+            calls.append(trace)
+            jobs, build = (5.1, 110.0) if side == "parent" else (4.0, 20.0 + seed % 3)
+            metrics = {"spark.jobs": jobs, "operators.build_ms": build,
+                       "spark.exec_ms": 300.0, "spark.stages": 5.0}
+            return True, {"correct": True, "attempted": 22, "failed": 0, "metrics": {
+                k: {"value": v, "unit": "x"} for k, v in metrics.items()}}, ""
+        rc, out, _, art = self.run_tool(runner, seeds="1-4", extra=["--trace"])
+        self.assertEqual(rc, 0)
+        self.assertTrue(all(calls) and len(calls) == 8)
+        self.assertIn("--trace 1", art["command"])
+        # only the named per-layer metrics, in BENCHMARK.json's order
+        self.assertEqual(list(art["summary"]),
+                         ["operators.build_ms", "spark.exec_ms", "spark.jobs"])
+        jobs = art["summary"]["spark.jobs"]
+        self.assertEqual((jobs["parent"]["median"], jobs["change"]["median"]), (5.1, 4.0))
+        self.assertEqual(jobs["wins"], 4)
+        self.assertTrue(art["summary"]["operators.build_ms"]["gain"])
+        # equal exec times are ties, not a gain
+        self.assertEqual(art["summary"]["spark.exec_ms"]["wins"], 0)
+        self.assertFalse(art["summary"]["spark.exec_ms"]["gain"])
+        self.assertIn("spark.jobs", out)
+
+    def test_untraced_runs_pass_no_trace_flag(self):
+        runner = FakeRunner()  # takes no trace argument
+        rc, _, _, art = self.run_tool(runner, seeds="1-2")
+        self.assertEqual(rc, 0)
+        self.assertIn("--trace 0", art["command"])
+        self.assertEqual(list(art["summary"]), ["throughput_ops_per_s", "latency_p50_s"])
 
 
 if __name__ == "__main__":

@@ -8,6 +8,16 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // optional comma-separated query filter for local iteration. A name
+    // that is no SparkEntry id fails the run before any Spark work: a typo
+    // would otherwise select nothing and report a clean `total 0.0`
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
+    val unknown = only.toSeq.flatten.filterNot(SparkEntry.queries.contains).sorted
+    if (unknown.nonEmpty) {
+      System.err.println("[bench] SPARK_GRAFT_ONLY names unknown queries: " +
+        unknown.map(n => s"'$n'").mkString(", "))
+      sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.core.EngineSession.create(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
@@ -25,8 +35,6 @@ object Bench {
     // serialization (memoized per JVM in stage()) is setup, not workload
     try { graft.sources.DocsJsonl.stage(spark, sfDir); () }
     catch { case e: Throwable => System.err.println(s"[bench] jsonl staging failed: ${e.getMessage}") }
-    // optional comma-separated query filter for local iteration
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
     // SPARK_GRAFT_REPEAT=n repeats the whole measured loop n times: the
     // box's noise band is ~±25% (r5 vs r6 ran byte-identical code and
     // "moved" 1.22x), so per-query claims need n>=3; the reported

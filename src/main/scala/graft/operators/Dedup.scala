@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Commit, Tables}
+import graft.streaming.StreamingQueries.eachBatch
 
 /** Deduplication operators for LLM-data pipelines over `documents`:
   * exact (hash-groupBy), near-key blocking, n-gram Jaccard, MinHash+LSH,
@@ -529,14 +530,9 @@ object Dedup {
     */
   def incrementalStream(newDocs: DataFrame, corpusTable: String,
       checkpointLocation: Option[String] = None)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = newDocs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) sink(verdictFor(batch, batch.sparkSession.table(corpusTable)))
-      }
-    checkpointLocation.fold(writer)(writer.option("checkpointLocation", _)).start()
-  }
+      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+    eachBatch(newDocs, checkpointLocation)(b =>
+      sink(verdictFor(b, b.sparkSession.table(corpusTable))))
 
   /** ADMISSION — the maintenance step that closes the ingest loop: the
     * band rows of a batch's kept documents are appended to the persisted
@@ -607,25 +603,19 @@ object Dedup {
     */
   def incrementalStreamAdmitting(newDocs: DataFrame, corpusTable: String,
       checkpointLocation: Option[String] = None)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = newDocs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val bands = bandKeysOf(batch.select("doc_id", "text")).persist()
-          try {
-            val verdicts = verdictFromBands(
-              batch.select("doc_id"), bands,
-              replaySafeCorpus(batch, corpusTable)).persist()
-            try {
-              sink(verdicts)
-              admitBands(bands, verdicts, corpusTable); ()
-            } finally { verdicts.unpersist(); () }
-          } finally { bands.unpersist(); () }
-        }
-      }
-    checkpointLocation.fold(writer)(writer.option("checkpointLocation", _)).start()
-  }
+      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+    eachBatch(newDocs, checkpointLocation) { batch =>
+      val bands = bandKeysOf(batch.select("doc_id", "text")).persist()
+      try {
+        val verdicts = verdictFromBands(
+          batch.select("doc_id"), bands,
+          replaySafeCorpus(batch, corpusTable)).persist()
+        try {
+          sink(verdicts)
+          admitBands(bands, verdicts, corpusTable); ()
+        } finally { verdicts.unpersist(); () }
+      } finally { bands.unpersist(); () }
+    }
 
   /** The corpus as this batch must see it: minus any rows the batch
     * itself already admitted (an at-least-once replay) — broadcast
@@ -747,14 +737,7 @@ object Dedup {
     */
   def corpusForgetStream(forgetIds: DataFrame,
       table: String): org.apache.spark.sql.streaming.StreamingQuery =
-    forgetIds.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          forgetCorpusDocs(batch.sparkSession, table, batch.toDF()); ()
-        }
-      }
-      .start()
+    eachBatch(forgetIds) { b => forgetCorpusDocs(b.sparkSession, table, b); () }
 
   /** `dedup_forget`: build the band table, forget EXACTLY the corpus docs
     * currently suppressing an arrival (the contested content — the shape
@@ -1572,14 +1555,9 @@ object Dedup {
     */
   def substringStream(newDocs: DataFrame, windowTable: String,
       checkpointLocation: Option[String] = None)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = newDocs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) sink(substringVerdictFor(batch, batch.sparkSession.table(windowTable)))
-      }
-    checkpointLocation.fold(writer)(writer.option("checkpointLocation", _)).start()
-  }
+      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+    eachBatch(newDocs, checkpointLocation)(b =>
+      sink(substringVerdictFor(b, b.sparkSession.table(windowTable))))
 
   val substringIncrementalOracle: String = {
     val w = SubstrWindow

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.streaming.StreamingQueries.eachBatch
 
 /** A media record: opaque bytes + typed metadata, the schema shape a
   * 100 TB multimodal corpus uses (payload as parquet binary, metadata as
@@ -475,30 +476,24 @@ object Multimodal {
     */
   def phashAdmitStream(newMedia: DataFrame, table: String,
       checkpointLocation: Option[String] = None)(
-      onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = newMedia.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          import spark.implicits._
-          val ph = phashes(batch.as[MediaRecord]).cache()
-          try {
-            // replay-safe: an at-least-once re-delivery must not see the
-            // batch's own earlier admission (same contract as the text
-            // loop's replaySafeCorpus)
-            val idx = spark.table(table)
-              .join(broadcast(batch.select("doc_id")), Seq("doc_id"), "left_anti")
-            val v = phashVerdictFor(ph, idx).cache()
-            try {
-              onBatch(v)
-              admitPhashBands(ph, v, table)
-            } finally { v.unpersist(); () }
-          } finally { ph.unpersist(); () }
-        }
-      }
-    checkpointLocation.fold(writer)(writer.option("checkpointLocation", _)).start()
-  }
+      onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+    eachBatch(newMedia, checkpointLocation) { batch =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      val ph = phashes(batch.as[MediaRecord]).cache()
+      try {
+        // replay-safe: an at-least-once re-delivery must not see the
+        // batch's own earlier admission (same contract as the text
+        // loop's replaySafeCorpus)
+        val idx = spark.table(table)
+          .join(broadcast(batch.select("doc_id")), Seq("doc_id"), "left_anti")
+        val v = phashVerdictFor(ph, idx).cache()
+        try {
+          onBatch(v)
+          admitPhashBands(ph, v, table)
+        } finally { v.unpersist(); () }
+      } finally { ph.unpersist(); () }
+    }
 
   /** The gate's arrival stream: every incoming media record (doc_id %
     * 10 >= 8), followed by a RE-SUBMISSION of the same payload under
@@ -644,14 +639,7 @@ object Multimodal {
     */
   def phashForgetStream(forgetIds: DataFrame,
       table: String): org.apache.spark.sql.streaming.StreamingQuery =
-    forgetIds.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          forgetPhashDocs(batch.sparkSession, table, batch.toDF()); ()
-        }
-      }
-      .start()
+    eachBatch(forgetIds) { b => forgetPhashDocs(b.sparkSession, table, b); () }
 
   /** The incoming 20% split (the arrivals the forget contract is judged
     * on), shared with [[mmArrivals]]' base.

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.streaming.StreamingQueries.eachBatch
 
 /** End-to-end corpus-curation queries: the composition layer that turns the
   * individual operators (quality metrics, dedup, hashing) into the actual
@@ -1294,19 +1295,14 @@ object Pipeline {
     */
   def qualityDriftStream(newDocs: DataFrame, reference: DataFrame, t0: Long, span: Long)(
       sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    newDocs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val binned = batch
-            .withColumn("chunk", expr(s"CAST((doc_id - $t0) * $DriftChunks DIV $span AS INT)"))
-            .withColumn("bin",
-              expr(s"CAST(least(n_chars DIV $DriftBinChars, ${DriftBins - 1}) AS INT)"))
-          sink(driftReport(
-            binned.groupBy("chunk", "bin").agg(count(lit(1)).as("observed")), reference))
-        }
-      }
-      .start()
+    eachBatch(newDocs) { batch =>
+      val binned = batch
+        .withColumn("chunk", expr(s"CAST((doc_id - $t0) * $DriftChunks DIV $span AS INT)"))
+        .withColumn("bin",
+          expr(s"CAST(least(n_chars DIV $DriftBinChars, ${DriftBins - 1}) AS INT)"))
+      sink(driftReport(
+        binned.groupBy("chunk", "bin").agg(count(lit(1)).as("observed")), reference))
+    }
 
   val qualityDriftOracle: String =
     s"""WITH bounds AS (

@@ -694,12 +694,14 @@ object Similarity {
     */
   val IvfPolicyDoomedLists = 4
 
-  /** The policy gate's re-train trigger. Calibrated against the measured
-    * trajectory on the fixture corpora (tools.IvfSkewProbe): steady-state
-    * skew under uniform admission is 1.07-1.36 across sf0.001/0.01/0.1,
-    * the post-hollow-out spike is 2.14-2.35 — 1.7 sits between with ~25%
-    * margin both ways, so uniform maintenance windows must SKIP (paying
-    * only the K-row histogram) and the post-forget window must FIRE.
+  /** The policy gate's re-train trigger. Calibrated against the skew
+    * trajectory measured on the fixture corpora (README, round 18:
+    * steady-state skew under uniform admission is 1.07-1.36 across
+    * sf0.001/0.01/0.1, the post-hollow-out spike is 2.14-2.35) — 1.7 sits
+    * between with ~25% margin both ways, so uniform maintenance windows
+    * must SKIP (paying only the K-row histogram) and the post-forget
+    * window must FIRE. `stream_ivf_policy` re-checks both outcomes on
+    * every run.
     */
   val IvfPolicySkewMax = 1.7
 
@@ -1071,30 +1073,21 @@ object Similarity {
   def pqTopkAgainst(spark: SparkSession, dir: String, coarseTable: String,
       pqTable: String, nprobe: Int = NProbe, refine: Int = PqRefine): DataFrame =
     pqTopkWith(spark, dir, Clustering.loadCentroids(spark, coarseTable),
-      loadPqBooks(spark, pqTable), strided(20), nprobe, refine)
-
-  /** [[pqTopkAgainst]] with an explicit query-set predicate (the
-    * fixed-query scale-probe seam, `tools.FixedQueryStress`).
-    */
-  private[graft] def pqTopkAgainstWhere(spark: SparkSession, dir: String,
-      coarseTable: String, pqTable: String, nprobe: Int,
-      queryPred: Column): DataFrame =
-    pqTopkWith(spark, dir, Clustering.loadCentroids(spark, coarseTable),
-      loadPqBooks(spark, pqTable), queryPred, nprobe)
+      loadPqBooks(spark, pqTable), nprobe, refine)
 
   /** The fit-inline form — the spec's reference for fit/apply equality. */
   private[graft] def pqTopkInline(spark: SparkSession, dir: String,
       nprobe: Int): DataFrame = {
     val coarse = Clustering.fitCentroids(spark, dir)
     pqTopkWith(spark, dir, coarse,
-      groupBooks(fitPqCodebooks(spark, dir, coarse)), strided(20), nprobe)
+      groupBooks(fitPqCodebooks(spark, dir, coarse)), nprobe)
   }
 
   /** The search with the corpus dir encoded inline under in-hand models. */
   private def pqTopkWith(spark: SparkSession, dir: String,
       coarse: Seq[(Int, Seq[Long])], books: Seq[Seq[(Int, Seq[Long])]],
-      queryPred: Column, nprobe: Int, refine: Int = PqRefine): DataFrame =
-    pqSearch(spark, dir, None, coarse, books, queryPred, nprobe, refine)
+      nprobe: Int, refine: Int = PqRefine): DataFrame =
+    pqSearch(spark, dir, None, coarse, books, strided(20), nprobe, refine)
 
   /** The oracle replays the coarse fit (shared CTE chain), the residuals,
     * all PqM slice fits, the encode, and the ADC search — exact integer
@@ -1642,21 +1635,17 @@ object Similarity {
   def multiprobeTopk(spark: SparkSession, dir: String): DataFrame =
     multiprobeTopkRadius(spark, dir, ProbeRadius)
 
-  /** [[multiprobeTopk]] with an explicit Hamming probe radius. */
-  def multiprobeTopkRadius(spark: SparkSession, dir: String, h: Int): DataFrame =
-    multiprobeTopkRadiusWhere(spark, dir, h, col("vec_id") % 20 === 0)
-
-  /** [[multiprobeTopkRadius]] with an explicit query-set predicate — the
-    * fixture's default query set is 5% OF THE CORPUS, so total probe
-    * volume grows quadratically under corpus scaling by construction;
-    * `tools.FixedQueryStress` pins the per-query claim (cost ∝ probed
-    * bucket size, linear in the corpus) by holding the query set fixed.
+  /** [[multiprobeTopk]] with an explicit Hamming probe radius. The query
+    * set is 5% OF THE CORPUS (`vec_id % 20 = 0`), so total probe volume
+    * grows quadratically under corpus scaling by construction; per-query
+    * cost scales with the probed bucket size, linear in the corpus — at a
+    * 20x corpus the raw gate measured 5.8x and a fixed query set 1.6x
+    * steady (SCALE.md row "LSH near-dup / multi-probe").
     */
-  private[graft] def multiprobeTopkRadiusWhere(spark: SparkSession, dir: String,
-      h: Int, queryPred: Column): DataFrame = {
+  def multiprobeTopkRadius(spark: SparkSession, dir: String, h: Int): DataFrame = {
     val s = sketched(spark, dir)
     val masks = (0 until (1 << NumPlanes)).filter(m => Integer.bitCount(m) <= h)
-    val q = s.filter(queryPred)
+    val q = s.filter(strided(20))
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("nrm").as("q_nrm"), col("bucket").as("q_bucket"))
       .withColumn("mask", explode(typedLit(masks)))
@@ -1737,17 +1726,10 @@ object Similarity {
     * double as the coarse partition here; with learned centroids the
     * exclusion becomes a post-probe label filter, same shape.
     */
-  def hardNegatives(spark: SparkSession, dir: String): DataFrame =
-    hardNegativesWhere(spark, dir, lit(true))
-
-  /** [[hardNegatives]] with an extra query-side predicate (the 20x probe
-    * pins the query set to the replica-0 ids).
-    */
-  private[graft] def hardNegativesWhere(spark: SparkSession, dir: String,
-      queryWhere: Column): DataFrame = {
+  def hardNegatives(spark: SparkSession, dir: String): DataFrame = {
     persistIvfIndexIfStale(spark, dir)
     ivfLabelSearch(spark, dir, spark.table(IvfIndexTable), NProbe,
-      strided(20) && queryWhere, includeSelf = true, excludeOwnLabel = true)
+      strided(20), includeSelf = true, excludeOwnLabel = true)
   }
 
   val hardNegativesOracle: String =
@@ -2050,24 +2032,14 @@ object Similarity {
     * Models + index build once behind the staleness gate; steady-state
     * calls pay the two index-served legs and the metadata-scale fusion.
     */
-  def hybridRrfPq(spark: SparkSession, dir: String): DataFrame =
-    rrfFuse(bm25Leg(spark, dir), semLeg(pqHybridSemLegStride(spark, dir,
-      graft.operators.TextAnalysis.Bm25QueryStride)))
-
-  /** The PQ semantic leg at a given query stride: [[hybridRrfPq]]'s leg
-    * at the BM25 stride, and the fixed-q scale probe's knob (probing a
-    * 20x corpus at 20x the stride holds the query COUNT constant,
-    * isolating per-query corpus cost — the ADC pool of
-    * ~corpus x nprobe / K candidates — from query-set growth, the same
-    * discipline as the other fixed-q rows in SCALE.md).
-    */
-  private[graft] def pqHybridSemLegStride(spark: SparkSession, dir: String,
-      stride: Int): DataFrame = {
+  def hybridRrfPq(spark: SparkSession, dir: String): DataFrame = {
+    val lexical = bm25Leg(spark, dir)
     persistPqHybridIfStale(spark, dir)
-    pqSearch(spark, dir, Some(PqHyTable),
+    rrfFuse(lexical, semLeg(pqSearch(spark, dir, Some(PqHyTable),
       Clustering.loadCentroids(spark, PqHyCoarse),
-      loadPqBooks(spark, PqHyBooks), strided(stride), NProbe, PqRefine,
-      includeSelf = true)
+      loadPqBooks(spark, PqHyBooks),
+      strided(graft.operators.TextAnalysis.Bm25QueryStride), NProbe, PqRefine,
+      includeSelf = true)))
   }
 
   /** [[hybridServeBatch]] with the semantic leg on the COMPRESSED index:

@@ -1264,6 +1264,7 @@ object TextAnalysis {
     */
   def lmFitStream(trainDocs: DataFrame)(
       sink: (Long, DataFrame, DataFrame) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+    // not on eachBatch: the sink needs the batch id, which eachBatch drops
     trainDocs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
@@ -1544,14 +1545,6 @@ object TextAnalysis {
   private val Bm25Buckets = 16
   private val Bm25Fingerprint = s"bm25:v1:buckets=$Bm25Buckets"
 
-  /** The full inverted index: one posting row per (token, doc) with term
-    * frequency and doc length baked in at build time. THIS is the
-    * corpus-scale pass — one tokenize + one (doc, token) shuffle — paid
-    * once per corpus snapshot; every later search touches only the
-    * postings of its own terms.
-    */
-  private[graft] def bm25PostingsDf(d: DataFrame): DataFrame = termFreqs(d)
-
   /** Persist postings (BUCKETED by token — a literal term predicate at
     * search time prunes whole buckets from the scan), document
     * frequencies (derived FROM the stored postings: bucket-local count,
@@ -1584,15 +1577,20 @@ object TextAnalysis {
       postingsTable: String, dfTable: String,
       statsTable: String): Seq[(String, () => Unit)] = {
     Seq[(String, () => Unit)](
-      // deliberately NOT sortBy("token"): measured at 20x (tools.Bm25Probe),
-      // token-sorting the bucket files LOST on both the narrow and the mass
-      // search — at any per-bucket size where a file holds a single parquet
-      // row group there is nothing for min/max skipping to skip, the sorted
-      // write costs a sort and fragments buckets into more files, and the
-      // >10-term mass path degrades the pushed In to a min/max range that a
-      // corpus-spanning term set never prunes. Revisit only when bucket
-      // files span many row groups AND searches are few-term.
-      postingsTable -> (() => bm25PostingsDf(d)
+      // The full inverted index: one posting row per (token, doc) with tf
+      // and doc length baked in — the corpus-scale pass (one tokenize + one
+      // (doc, token) shuffle), paid once per corpus snapshot.
+      // Deliberately NOT sortBy("token"): measured at 20x (README "Postings
+      // layout adjudicated by measurement": a narrow search ran 1.83 s
+      // sorted vs 1.26 s unsorted steady), token-sorting the bucket files
+      // LOST on both the narrow and the mass search — at any per-bucket
+      // size where a file holds a single parquet row group there is
+      // nothing for min/max skipping to skip, the sorted write costs a sort
+      // and fragments buckets into more files, and the >10-term mass path
+      // degrades the pushed In to a min/max range that a corpus-spanning
+      // term set never prunes. Revisit only when bucket files span many
+      // row groups AND searches are few-term.
+      postingsTable -> (() => termFreqs(d)
         .write.mode("overwrite").bucketBy(Bm25Buckets, "token")
         .saveAsTable(postingsTable)),
       dfTable -> (() => docFreqs(spark.table(postingsTable))
@@ -1864,21 +1862,14 @@ object TextAnalysis {
     * staleness gate, so steady-state calls skip straight to the search
     * and the benched cost is the query side, like every fit/apply family.
     */
-  def bm25Forget(spark: SparkSession, dir: String): DataFrame =
-    bm25ForgetWhere(spark, dir, lit(true))
-
-  /** [[bm25Forget]] with a query-side predicate (the 20x probe pins the
-    * query set to replica-0 ids so the ratio isolates per-search cost).
-    */
-  private[graft] def bm25ForgetWhere(spark: SparkSession, dir: String,
-      queryWhere: org.apache.spark.sql.Column): DataFrame = {
+  def bm25Forget(spark: SparkSession, dir: String): DataFrame = {
     graft.core.ModelTables.persistGroupMutatedIfStale(spark, dir,
       "bm25-forget:v1")(
       bm25IndexWrites(spark, dir, Bm25FgPostingsTable, Bm25FgDfTable,
         Bm25FgStatsTable): _*)(
       () => { forgetBm25Docs(spark, forgetDocIds(spark, dir),
         Bm25FgPostingsTable, Bm25FgDfTable, Bm25FgStatsTable); () })
-    bm25SearchAgainst(spark, bm25Queries(spark, dir).filter(queryWhere),
+    bm25SearchAgainst(spark, bm25Queries(spark, dir),
       Bm25FgPostingsTable, Bm25FgDfTable, Bm25FgStatsTable)
   }
 
@@ -2120,9 +2111,8 @@ object TextAnalysis {
     * registered alert set) — never rescanned per batch, and its
     * [[Terms.literal]] cut collects without a Spark job.
     */
-  private[graft] def bm25Standing(spark: SparkSession, dir: String,
-      seedWhere: Column = lit(true)): DataFrame = {
-    val q = bm25StandingQueriesDf(spark, dir, seedWhere)
+  private[graft] def bm25Standing(spark: SparkSession, dir: String): DataFrame = {
+    val q = bm25StandingQueriesDf(spark, dir, lit(true))
     spark.createDataFrame(java.util.Arrays.asList(q.collect(): _*), q.schema)
   }
 
@@ -2180,18 +2170,15 @@ object TextAnalysis {
     * unbounded form stays gated by `stream_bm25_percolate`.
     */
   def bm25PercolateBounded(spark: SparkSession, dir: String): DataFrame =
-    bm25PercolateBoundedWhere(spark, dir, lit(true))
+    bm25Percolate(spark, dir, Some(Bm25PercolateMinMicro))
 
-  /** [[bm25PercolateBounded]] with a predicate pinning the standing-seed
-    * docs — the fixed-standing-set 20x probe uses it (the standard set is
-    * corpus-derived, so a naive 20x probe compounds standing-set growth
-    * with corpus growth).
+  /** The percolation score table over the standing set, emissions cut at
+    * `minScoreMicro` when one is given.
     */
-  private[graft] def bm25PercolateBoundedWhere(spark: SparkSession,
-      dir: String, seedWhere: Column,
-      minScoreMicro: Option[Long] = Some(Bm25PercolateMinMicro)): DataFrame = {
+  private def bm25Percolate(spark: SparkSession, dir: String,
+      minScoreMicro: Option[Long]): DataFrame = {
     persistBm25Index(spark, dir)
-    val standing = bm25Standing(spark, dir, seedWhere)
+    val standing = bm25Standing(spark, dir)
     bm25PercolateScore(docs(spark, dir), standing, Terms.literal(standing),
         Bm25DfTable, Bm25StatsTable, minScoreMicro)
       .orderBy("query_id", "doc_id")
@@ -2202,7 +2189,7 @@ object TextAnalysis {
     */
   private[graft] def bm25PercolateRawForSpec(spark: SparkSession,
       dir: String): DataFrame =
-    bm25PercolateBoundedWhere(spark, dir, lit(true), minScoreMicro = None)
+    bm25Percolate(spark, dir, minScoreMicro = None)
 
   /** The percolation score table, `where`-filtered. */
   private def percolateOracle(where: String): String =
@@ -2346,19 +2333,9 @@ object TextAnalysis {
     * (`contains(' '||text||' ', ' '||t1||' '||t2||' ')`), so the two
     * formulations cross-check each other.
     */
-  def phraseSearch(spark: SparkSession, dir: String): DataFrame =
-    phraseSearchWhere(spark, dir, lit(true))
-
-  /** [[phraseSearch]] with an extra predicate on the QUERY-seeding docs —
-    * the fixed-query scale probes pin the query set with it (the standard
-    * set is corpus-derived, so a naive 20x probe compounds query-set
-    * growth with postings growth).
-    */
-  private[graft] def phraseSearchWhere(spark: SparkSession, dir: String,
-      queryPred: Column): DataFrame = {
+  def phraseSearch(spark: SparkSession, dir: String): DataFrame = {
     val d = bm25Corpus(spark, dir)
-    val q = d.filter(col("doc_id") % Bm25QueryStride === 0 && expr("size(tk) >= 2")
-        && queryPred)
+    val q = d.filter(col("doc_id") % Bm25QueryStride === 0 && expr("size(tk) >= 2"))
       .selectExpr("doc_id AS query_id", "tk[0] AS t1", "tk[1] AS t2")
     val qset = q.selectExpr("t1 AS token").union(q.selectExpr("t2 AS token")).distinct()
     val pos = d.selectExpr("doc_id", "posexplode(tk) AS (pos, token)")
@@ -2402,16 +2379,9 @@ object TextAnalysis {
     * back on the doc row — full text never shuffles, only (doc_id,
     * token, pos) triples do.
     */
-  def snippet(spark: SparkSession, dir: String): DataFrame =
-    snippetWhere(spark, dir, lit(true))
-
-  /** [[snippet]] with an extra query-doc predicate (see
-    * [[phraseSearchWhere]]).
-    */
-  private[graft] def snippetWhere(spark: SparkSession, dir: String,
-      queryPred: Column): DataFrame = {
+  def snippet(spark: SparkSession, dir: String): DataFrame = {
     val d = bm25Corpus(spark, dir)
-    val q = d.filter(col("doc_id") % Bm25QueryStride === 0 && queryPred)
+    val q = d.filter(col("doc_id") % Bm25QueryStride === 0)
       .selectExpr("doc_id AS query_id", "tk[0] AS t1")
     val qset = q.select(col("t1").as("token")).distinct()
     val firstPos = d

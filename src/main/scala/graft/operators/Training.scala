@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.Tables
+import graft.streaming.StreamingQueries.eachBatch
 
 /** LLM-training-data operators beyond curation basics: benchmark
   * decontamination, sequence chunk/packing layout, and embedding
@@ -78,18 +79,10 @@ object Training {
     */
   val FuzzyBenchMod = 10
 
-  def contaminationFuzzy(spark: SparkSession, dir: String): DataFrame =
-    contaminationFuzzyWhere(spark, dir, lit(true))
-
-  /** [[contaminationFuzzy]] with a bench-side predicate (the 20x probe
-    * pins the benchmark to the replica-0 ids: arriving corpus grows 20x,
-    * the eval suite doesn't — the deployment shape).
-    */
-  private[graft] def contaminationFuzzyWhere(spark: SparkSession, dir: String,
-      benchWhere: org.apache.spark.sql.Column): DataFrame = {
+  def contaminationFuzzy(spark: SparkSession, dir: String): DataFrame = {
     val d = docs(spark, dir)
     val bench = Dedup.minhashBandsOf(
-        Dedup.shinglesOf(d.filter(col("doc_id") % FuzzyBenchMod === 0 && benchWhere)))
+        Dedup.shinglesOf(d.filter(col("doc_id") % FuzzyBenchMod === 0)))
       .select(col("band"), col("band_sig"),
         col("doc_id").as("bench_id"), col("sig").as("sig_b"))
     val train = Dedup.minhashBandsOf(
@@ -147,22 +140,16 @@ object Training {
     */
   def contaminationFuzzyStream(newDocs: DataFrame, benchTable: String)(
       onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    newDocs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val train = Dedup.minhashBandsOf(Dedup.shinglesOf(batch.toDF()))
-          val verdicts = train.join(spark.table(benchTable), Seq("band", "band_sig"))
-            .select(col("doc_id"), col("bench_id"), col("sig"), col("sig_b"))
-            .distinct()
-            .withColumn("est_sim", Dedup.estSimCol(col("sig"), col("sig_b")))
-            .filter(col("est_sim") >= FuzzyContamSim)
-            .select("doc_id", "bench_id", "est_sim")
-          onBatch(verdicts)
-        }
-      }
-      .start()
+    eachBatch(newDocs) { batch =>
+      val train = Dedup.minhashBandsOf(Dedup.shinglesOf(batch))
+      val verdicts = train.join(batch.sparkSession.table(benchTable), Seq("band", "band_sig"))
+        .select(col("doc_id"), col("bench_id"), col("sig"), col("sig_b"))
+        .distinct()
+        .withColumn("est_sim", Dedup.estSimCol(col("sig"), col("sig_b")))
+        .filter(col("est_sim") >= FuzzyContamSim)
+        .select("doc_id", "bench_id", "est_sim")
+      onBatch(verdicts)
+    }
 
   /** [[contamination]] with a BLOOM-FILTER pre-join — the 100 TB form.
     * The benchmark shingle set folds into one Bloom filter (Spark's own

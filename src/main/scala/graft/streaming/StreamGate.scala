@@ -308,6 +308,7 @@ object StreamGate {
     def foreachBatch(out: DataFrame, mode: String,
         ck: String = dir(s"ck-${runId.incrementAndGet()}"))(
         f: (DataFrame, Long) => Unit): StreamingQuery =
+      // not on eachBatch: gates drive update-mode changelogs and batch-id callbacks
       out.writeStream.outputMode(mode).option("checkpointLocation", ck)
         .foreachBatch((b: Dataset[Row], id: Long) => f(b.toDF(), id)).start()
 
@@ -1793,21 +1794,21 @@ object StreamGate {
     *
     * SUPPORTED RANGE: the per-family thresholds below are probed at
     * sf0.01/sf0.1, where per-append files-per-bucket growth is
-    * write-width-driven, not data-size-driven (tools.CompactPolicyProbe
-    * measured the ratios identical at both SFs). Running a policy gate
+    * write-width-driven, not data-size-driven (the recorded per-family
+    * decision logs carried identical ratios at both SFs, README
+    * "Round-19 probes"). Running a policy gate
     * at an unprobed SF or write width can legitimately produce a
     * single-outcome decision log, which this check rejects as vacuous
     * rather than reporting results — re-probe and adjust the threshold
     * before trusting the gate there.
     */
   private def policyWindows[M](g: Gate, gateName: String, chunks: Staged)(
-      start: DataFrame => StreamingQuery)(trigger: => (M, Boolean)): Seq[(M, Boolean)] = {
+      start: DataFrame => StreamingQuery)(trigger: => (M, Boolean)): Unit = {
     val decisions = g.feedEach(chunks)(start)(_ => trigger)
     if (!decisions.exists(_._2) || !decisions.exists(!_._2))
       throw new IllegalStateException(
         s"$gateName: the gate needs both a fired and a skipped window " +
           s"to be non-vacuous; got ${decisions.toList}")
-    decisions
   }
 
   /** THE COMPACTION TRIGGER DECIDING UNDER LIVE INGEST — [[ingestAdmit]]
@@ -1835,11 +1836,7 @@ object StreamGate {
     * deployable (compaction folds replay residue and small files; it
     * must never change what the corpus admits).
     */
-  def compactPolicy(spark: SparkSession, dir: String): DataFrame =
-    compactPolicyWithLog(spark, dir)._1
-
-  private[graft] def compactPolicyWithLog(spark: SparkSession,
-      dir: String): (DataFrame, Seq[(Double, Boolean)]) = gate(spark, "cpolicy") { g =>
+  def compactPolicy(spark: SparkSession, dir: String): DataFrame = gate(spark, "cpolicy") { g =>
     import graft.operators.Dedup
     val table = g.table("graft_gate_cpolicy")
     Dedup.persistCorpusBands(spark, dir, table)
@@ -1847,17 +1844,17 @@ object StreamGate {
     val chunks = ingestArrivals(spark, dir)
     val schema = Dedup.incremental(spark, dir).schema // lazy: no job
     val out = new Emissions(spark)
-    val decisions = policyWindows(g, "compactPolicy", chunks)(
+    policyWindows(g, "compactPolicy", chunks)(
       Dedup.incrementalStreamAdmitting(_, table, Some(g.dir("ck")))(out.emit))(
       Dedup.compactIfFragmented(spark, table, "band_key"))
-    (out.df(schema).orderBy("doc_id"), decisions)
+    out.df(schema).orderBy("doc_id")
   }
 
   /** Files-per-bucket thresholds for the per-family policy gates, chosen
     * against the MEASURED per-append growth at the gate's write width
     * (each streaming append adds up to one file per (write task, touched
-    * bucket) pair, so ratios climb in family-specific steps — probed via
-    * `tools.CompactPolicyProbe` at sf0.01: bm25 ~3.7/append, ivf/pq
+    * bucket) pair, so ratios climb in family-specific steps — recorded at
+    * sf0.01 and sf0.1, README "Round-19 probes": bm25 ~3.7/append, ivf/pq
     * ~0.6, phash ~1.0): low enough that the replay's appends provably
     * cross it, high enough that at least one window — including the one
     * right after a fold (ratio back at ~1.0) — skips. Deployments tune
@@ -1881,18 +1878,14 @@ object StreamGate {
     * the batch-built index — the bm25TopkOracle — under ANY decision
     * schedule; the gate additionally requires both outcomes to occur.
     */
-  def compactPolicyBm25(spark: SparkSession, dir: String): DataFrame =
-    compactPolicyBm25WithLog(spark, dir)._1
-
-  private[graft] def compactPolicyBm25WithLog(spark: SparkSession,
-      dir: String): (DataFrame, Seq[(Double, Boolean)]) = gate(spark, "cp-bm25") { g =>
+  def compactPolicyBm25(spark: SparkSession, dir: String): DataFrame = gate(spark, "cp-bm25") { g =>
     import graft.operators.{Dedup, TextAnalysis}
     val Seq(p, f, st) = Seq("gate_cp_post", "gate_cp_df", "gate_cp_stats").map(g.table)
-    val decisions = policyWindows(g, "compactPolicyBm25", docs(spark, dir))(
+    policyWindows(g, "compactPolicyBm25", docs(spark, dir))(
       TextAnalysis.bm25IngestStream(_, p, f, st)())(
       Dedup.compactIfFragmentedWith(spark, p, Bm25PolicyMaxFiles)(
         () => { TextAnalysis.compactBm25Index(spark, p, f, st); () }))
-    (bm25Answer(spark, dir, p, f, st), decisions)
+    bm25Answer(spark, dir, p, f, st)
   }
 
   /** The fragmentation policy on the IVF-Flat index: vectors replay into
@@ -1902,20 +1895,15 @@ object StreamGate {
     * stats, no marker) only past the threshold. Served top-k must equal
     * the batch-built index (ivfTopkOracle) under any schedule.
     */
-  def compactPolicyIvf(spark: SparkSession, dir: String): DataFrame =
-    compactPolicyIvfWithLog(spark, dir)._1
-
-  private[graft] def compactPolicyIvfWithLog(spark: SparkSession,
-      dir: String): (DataFrame, Seq[(Double, Boolean)]) = gate(spark, "cp-ivf") { g =>
+  def compactPolicyIvf(spark: SparkSession, dir: String): DataFrame = gate(spark, "cp-ivf") { g =>
     import graft.operators.{Dedup, Similarity}
     val table = g.table("gate_cp_ivf")
-    val decisions = policyWindows(g, "compactPolicyIvf", embeddings(spark, dir))(
+    policyWindows(g, "compactPolicyIvf", embeddings(spark, dir))(
       Similarity.ivfIngestStream(_, table)())(
       Dedup.compactIfFragmentedWith(spark, table, IvfPolicyMaxFiles)(
         () => { Similarity.compactIvfIndex(spark, table); () }))
     spark.catalog.refreshTable(table)
-    (materialize(Similarity.ivfTopkAgainst(spark, dir, table))
-      .orderBy("q_id", "rank"), decisions)
+    materialize(Similarity.ivfTopkAgainst(spark, dir, table)).orderBy("q_id", "rank")
   }
 
   /** The fragmentation policy on the PQ code index: models train on
@@ -1926,23 +1914,18 @@ object StreamGate {
     * the first window measures ingest growth, not build layout. Served
     * result must equal the unscheduled ingest (pqIngestOracle).
     */
-  def compactPolicyPq(spark: SparkSession, dir: String): DataFrame =
-    compactPolicyPqWithLog(spark, dir)._1
-
-  private[graft] def compactPolicyPqWithLog(spark: SparkSession,
-      dir: String): (DataFrame, Seq[(Double, Boolean)]) = gate(spark, "cp-pq") { g =>
+  def compactPolicyPq(spark: SparkSession, dir: String): DataFrame = gate(spark, "cp-pq") { g =>
     import graft.operators.{Dedup, Similarity}
     val Seq(table, coarseT, booksT) = Seq("gate_cp_pq", "gate_cp_pqc", "gate_cp_pqb").map(g.table)
     val (_, build, ingest) = ingestSplit(spark, dir)
     Similarity.buildPqIndex(spark, build, table, coarseT, booksT)
     Similarity.compactPqIndex(spark, table) // seal the base layout at 1.0
-    val decisions = policyWindows(g, "compactPolicyPq", ingest)(
+    policyWindows(g, "compactPolicyPq", ingest)(
       Similarity.pqAdmitStream(_, table, coarseT, booksT))(
       Dedup.compactIfFragmentedWith(spark, table, PqPolicyMaxFiles)(
         () => { Similarity.compactPqIndex(spark, table); () }))
     spark.catalog.refreshTable(table)
-    (materialize(Similarity.pqServe(spark, dir, table, coarseT, booksT))
-      .orderBy("q_id", "rank"), decisions)
+    materialize(Similarity.pqServe(spark, dir, table, coarseT, booksT)).orderBy("q_id", "rank")
   }
 
   /** The fragmentation policy on the PHASH band index — closing the
@@ -1955,23 +1938,19 @@ object StreamGate {
     * the unscheduled loop (mmAdmitOracle) — including the suppressed
     * copies the loop exists to force.
     */
-  def compactPolicyMm(spark: SparkSession, dir: String): DataFrame =
-    compactPolicyMmWithLog(spark, dir)._1
-
-  private[graft] def compactPolicyMmWithLog(spark: SparkSession,
-      dir: String): (DataFrame, Seq[(Double, Boolean)]) = gate(spark, "cp-mm") { g =>
+  def compactPolicyMm(spark: SparkSession, dir: String): DataFrame = gate(spark, "cp-mm") { g =>
     import graft.operators.{Dedup, Multimodal}
     val table = g.table("gate_cp_mm")
     Multimodal.persistPhashBands(spark, dir, table)
     Multimodal.compactPhashBands(spark, table) // seal the base layout at 1.0
     val chunks = mmArrivals(spark, dir)
     val out = new Emissions(spark)
-    val decisions = policyWindows(g, "compactPolicyMm", chunks)(
+    policyWindows(g, "compactPolicyMm", chunks)(
       Multimodal.phashAdmitStream(_, table, None)(out.emit))(
       Dedup.compactIfFragmentedWith(spark, table, MmPolicyMaxFiles)(
         () => { Multimodal.compactPhashBands(spark, table); () }))
     requireCopySuppressed("compactPolicyMm", out.rows)
-    (out.df().orderBy("doc_id"), decisions)
+    out.df().orderBy("doc_id")
   }
 
   /** FIFO token-budget admission under the hard gate:

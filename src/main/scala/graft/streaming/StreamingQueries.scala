@@ -273,19 +273,14 @@ object StreamingQueries {
   def lateAuditStream(arrivals: DataFrame, lagMs: Long = LateAuditLagMs)(
       onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     val wmRef = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    arrivals.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val wm = wmRef.get()
-          onBatch(batch.toDF()
-            .withColumn("late", col("rowtime_ms") < lit(wm))
-            .select("ride_id", "is_start", "rowtime_ms", "late"))
-          val mx = batch.toDF().agg(max("rowtime_ms")).head().getLong(0)
-          wmRef.set(math.max(wm, mx - lagMs))
-        }
-      }
-      .start()
+    eachBatch(arrivals) { batch =>
+      val wm = wmRef.get()
+      onBatch(batch
+        .withColumn("late", col("rowtime_ms") < lit(wm))
+        .select("ride_id", "is_start", "rowtime_ms", "late"))
+      val mx = batch.agg(max("rowtime_ms")).head().getLong(0)
+      wmRef.set(math.max(wm, mx - lagMs))
+    }
   }
 
   /** Streaming exact dedup: drop replayed/duplicate events by event key,
@@ -330,15 +325,8 @@ object StreamingQueries {
     */
   def temporalJoinStream(facts: DataFrame, dim: DataFrame)(
       sink: DataFrame => Unit): StreamingQuery =
-    facts.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        if (!batch.isEmpty) {
-          sink(graft.operators.Relational.temporalJoinOn(
-            graft.operators.Relational.purchaseFacts(batch), dim))
-        }
-      }
-      .start()
+    eachBatch(facts)(b => sink(graft.operators.Relational.temporalJoinOn(
+      graft.operators.Relational.purchaseFacts(b), dim)))
 
   /** [[temporalJoinStream]] against a LIVE dimension: each fact
     * micro-batch re-snapshots the version lake that [[Scd2Stream]] is
@@ -353,16 +341,8 @@ object StreamingQueries {
   def temporalJoinLiveStream(facts: DataFrame,
       lake: graft.sinks.ParquetUpsertSink)(
       sink: DataFrame => Unit): StreamingQuery =
-    facts.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        if (!batch.isEmpty) {
-          sink(graft.operators.Relational.temporalJoinOn(
-            graft.operators.Relational.purchaseFacts(batch),
-            lake.snapshot(batch.sparkSession)))
-        }
-      }
-      .start()
+    eachBatch(facts)(b => sink(graft.operators.Relational.temporalJoinOn(
+      graft.operators.Relational.purchaseFacts(b), lake.snapshot(b.sparkSession))))
 }
 
 /** Spark analogue of Flink's `toRetractStream[Row]`
@@ -461,15 +441,24 @@ class LakeRetractStream(root: String, keyFields: Seq[String],
         // scale) — and the same pre-mutation read feeds the upsert's
         // merge below, so those buckets are read once per batch, not
         // twice.
-        val touchedKeys = delKeys.fold(
-          b.select(keyFields.map(col): _*).distinct())(
-          b.select(keyFields.map(col): _*).distinct().unionByName(_).distinct())
-        val touchedBk = lake.bucketIdsOf(touchedKeys)
+        val keys = keyFields.map(col)
+        val touchedBk = lake.bucketIdsOf(delKeys.fold(b.select(keys: _*))(
+          b.select(keys: _*).unionByName(_)).distinct())
         val old = lake.readBuckets(spark, touchedBk, upserts.schema).persist()
         try {
-          val retracts = old.join(touchedKeys, keyFields, "left_semi")
-          val out = retracts.withColumn("is_add", lit(false))
+          // `b` enters the emission plan ONCE (a plan that references a
+          // persisted frame twice recomputes one leg from its source, the
+          // caller's upstream aggregation): tag the lake's rows and the
+          // batch's rows in one union and keep a lake row only where the
+          // batch upserts its key. Deleted keys retract from `old` alone.
+          val tagged = old.withColumn("is_add", lit(false))
             .unionByName(b.withColumn("is_add", lit(true)))
+          val upserted = tagged
+            .withColumn("_up", max("is_add").over(
+              org.apache.spark.sql.expressions.Window.partitionBy(keys: _*)))
+            .where(col("_up")).drop("_up")
+          val out = delKeys.fold(upserted)(dk => upserted.unionByName(
+              old.join(dk, keyFields, "left_semi").withColumn("is_add", lit(false))))
             .select((col("is_add") +: upserts.columns.map(col).toIndexedSeq): _*)
           batches(fs).publish(batchId)(tmp => out.write.mode("overwrite").parquet(tmp.toString))
           lake.upsertPrepared(b, delKeys.orNull, touchedBk, old)
@@ -933,6 +922,7 @@ object CascadeQ4 {
       new org.apache.hadoop.fs.Path(checkpoint, "graft-cascade-level1").toString,
       Seq("cell"), sink.nBuckets)
     val markers = markerDir(checkpoint)
+    // not on eachBatch: update mode, AvailableNow, and the batch id the markers key on
     level1Changelog
       .writeStream
       .outputMode(OutputMode.Update())

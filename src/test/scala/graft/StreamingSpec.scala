@@ -169,6 +169,36 @@ class StreamingSpec extends SparkSpec {
     assert(b2 === List((true, 1L)), s"got $b2")
   }
 
+  test("a lake retract stream runs the caller's upstream aggregation once per batch") {
+    import graft.streaming.LakeRetractStream
+    val input = MemoryStream[(String, Long)](spark)
+    val root = Files.createTempDirectory("retractonce")
+    val retr = new LakeRetractStream(root.resolve("r").toString, Seq("k"))
+    val q = input.toDF().toDF("k", "v").groupBy("k").agg(sum("v").as("total"))
+      .writeStream.outputMode(OutputMode.Update())
+      .option("checkpointLocation", root.resolve("ck").toString)
+      .foreachBatch((batch: org.apache.spark.sql.DataFrame, id: Long) => retr.onBatch(batch, id))
+      .start()
+    // every execution of the aggregation in a micro-batch adds that
+    // batch's updated keys to numRowsUpdated again
+    def updatedRows(): Long = {
+      q.processAllAvailable()
+      q.lastProgress.stateOperators(0).numRowsUpdated
+    }
+    try {
+      input.addData(("a", 1L), ("b", 2L), ("c", 3L))
+      assert(updatedRows() === 3L, "the upstream aggregation ran more than once in batch 1")
+      // batch 2 retracts a's first total and adds d
+      input.addData(("a", 10L), ("d", 4L))
+      assert(updatedRows() === 2L, "the upstream aggregation ran more than once in batch 2")
+    } finally q.stop()
+    val log = retr.emitted(spark).orderBy("batch", "is_add", "k")
+      .select("is_add", "k", "total").collect()
+      .map(r => (r.getBoolean(0), r.getString(1), r.getLong(2))).toList
+    assert(log === List((true, "a", 1L), (true, "b", 2L), (true, "c", 3L),
+      (false, "a", 1L), (true, "a", 11L), (true, "d", 4L)), s"got $log")
+  }
+
   test("retract-log compaction preserves the fold, is idempotent, and survives a torn run") {
     import graft.streaming.LakeRetractStream
     import spark.implicits._

@@ -8,16 +8,8 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // optional comma-separated query filter for local iteration. A name
-    // that is no SparkEntry id fails the run before any Spark work: a typo
-    // would otherwise select nothing and report a clean `total 0.0`
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
-    val unknown = only.toSeq.flatten.filterNot(SparkEntry.queries.contains).sorted
-    if (unknown.nonEmpty) {
-      System.err.println("[bench] SPARK_GRAFT_ONLY names unknown queries: " +
-        unknown.map(n => s"'$n'").mkString(", "))
-      sys.exit(2)
-    }
+    // optional query filter for local iteration
+    val only = SparkEntry.onlySelected("bench")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.core.EngineSession.create(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")

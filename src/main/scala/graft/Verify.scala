@@ -6,6 +6,9 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // dev filter: SPARK_GRAFT_ONLY=q1,q2 limits the dump to named queries
+    // (unset: every query dumps)
+    val only = SparkEntry.onlySelected("verify")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.core.EngineSession.create(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
@@ -15,10 +18,6 @@ object Verify {
     // must surface as ONE named line per mismatch before any query runs
     graft.core.Tables.preflight(spark, sfDir)
       .foreach(p => System.err.println(s"[verify] $p"))
-    // Dev filter: SPARK_GRAFT_ONLY=q1,q2 limits the dump to named queries
-    // (unset for driver runs — all queries dump).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** The FIT/APPLY persistence discipline shared by the trained-model
   * families (BPE merges, Naive-Bayes weights, k-means centroids, PQ
-  * codebooks; the bucketed layouts in Relational/Similarity follow the
-  * same contract with their own writers): a model table is keyed on its
+  * codebooks, and the bucketed layouts in Relational/Similarity): a
+  * model table is keyed on its
   * source dir AND a model fingerprint via the `graft.src` table property,
   * rebuilt only when stale, and re-used by every later apply — training
   * cost is paid once per (source, model) pair, which is the entire point
@@ -174,14 +174,8 @@ object ModelTables {
     * SPARK-WRITTEN DIRS ONLY caveat as [[isCurrent]].
     */
   def persistGroupIfStale(spark: SparkSession, dir: String, params: String = "")
-      (writes: (String, () => Unit)*): Unit = {
-    writes.foreach { case (table, _) => requireSimpleName(table) }
-    val key = srcKey(spark, dir, params)
-    if (writes.forall { case (table, _) => isCurrentKey(spark, table, key) }) return
-    writes.foreach { case (table, _) => dropBothLayers(spark, table) }
-    writes.foreach { case (_, write) => write() }
-    writes.foreach { case (table, _) => stamp(spark, table, key) }
-  }
+      (writes: (String, () => Unit)*): Unit =
+    persistGroupMutatedIfStale(spark, dir, params)(writes: _*)(() => ())
 
   /** [[persistGroupIfStale]] for groups whose steady state is a MUTATION
     * of the built tables (the right-to-be-forgotten indexes: build from

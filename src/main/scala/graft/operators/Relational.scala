@@ -991,40 +991,13 @@ object Relational {
     * flink-table's shuffle).
     */
   def persistBucketedFacts(spark: SparkSession, dir: String): Unit = {
-    val tables = Seq("graft_bkt_orders", "graft_bkt_lineitem")
-    // the layout is built ONCE per source and amortized over every join
-    // against it — that amortization is the entire point at 100 TB, so
-    // skip the rebuild when this session already persisted these sources
-    // (keyed on the source dir via a table property; the fixture dirs are
-    // immutable, so dir identity == data identity)
-    def current(tb: String): Boolean =
-      spark.catalog.tableExists(tb) &&
-        (try spark.sql(s"SHOW TBLPROPERTIES $tb ('graft.src')")
-          .collect().headOption.exists(_.getString(1) == dir)
-        catch { case _: Exception => false })
-    if (tables.forall(current)) return
-    // a fresh session's in-memory catalog does not know tables a PREVIOUS
-    // session wrote, and CTAS refuses to reuse their orphaned warehouse
-    // directories (LOCATION_ALREADY_EXISTS) — clear both layers first
-    val wh = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
-    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    tables.foreach { tb =>
-      spark.sql(s"DROP TABLE IF EXISTS $tb")
-      fs.delete(new org.apache.hadoop.fs.Path(wh, tb), true)
-    }
-    t(spark, dir, "orders")
-      .write.mode("overwrite")
-      .bucketBy(JoinBuckets, "o_orderkey").sortBy("o_orderkey")
-      .saveAsTable("graft_bkt_orders")
-    t(spark, dir, "lineitem")
-      .write.mode("overwrite")
-      .bucketBy(JoinBuckets, "l_orderkey").sortBy("l_orderkey")
-      .saveAsTable("graft_bkt_lineitem")
-    // single quotes in dir would break the literal (the staleness check
-    // above compares the RAW dir, so escaping only the write side is safe)
-    val dirLit = dir.replace("'", "''")
-    tables.foreach(tb =>
-      spark.sql(s"ALTER TABLE $tb SET TBLPROPERTIES ('graft.src' = '$dirLit')"))
+    def bucketed(src: String, key: String) = s"graft_bkt_$src" -> (() =>
+      t(spark, dir, src).write.mode("overwrite")
+        .bucketBy(JoinBuckets, key).sortBy(key).saveAsTable(s"graft_bkt_$src"))
+    // built once per source content and amortized over every join against
+    // it — that amortization is the entire point at 100 TB
+    graft.core.ModelTables.persistGroupIfStale(spark, dir)(
+      bucketed("orders", "o_orderkey"), bucketed("lineitem", "l_orderkey"))
   }
 
   /** Revenue-by-priority over the bucketed layout: the orders⋈lineitem

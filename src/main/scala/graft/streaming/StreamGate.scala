@@ -634,12 +634,11 @@ object StreamGate {
   /** Q7 session windows through micro-batches (append mode — sessions
     * merge across chunks and emit once the watermark passes their close;
     * a far-future in-NYC sentinel ride finalizes the tail and its own
-    * session is filtered out). Input rowtime is ms-truncated exactly as
-    * the batch q7 does. Oracle: the batch q7 oracle.
+    * session is filtered out). The query truncates rowtime to
+    * milliseconds itself, as in batch. Oracle: the batch q7 oracle.
     */
   def q7Session(spark: SparkSession, dir: String): DataFrame = gate(spark, "q7") { g =>
     val rides = Rides.fromEvents(spark, dir)
-      .withColumn("rowtime", timestamp_millis(unix_millis(col("rowtime"))))
     val maxMs = rides.agg(max(unix_millis(col("rowtime")))).head().getLong(0)
     val sentinel = sentinelRides(spark,
       maxMs + 2 * graft.operators.TaxiQueries.SessionGapMs + 200000L, (-1L, true))
@@ -670,10 +669,10 @@ object StreamGate {
     * START/END inner join ([[StreamingQueries.pairStartEnd]] — the
     * reference's core data model, TaxiRide.java:24-38) over chunk replay.
     * Inner-join matches emit in the micro-batch both sides arrive, so no
-    * finalization sentinel is needed; the ±2 h time-range condition only
-    * bounds the join-state buffers, and covers every fixture gap (max
-    * observed ~37 min). Replay is time-ordered, so an END never arrives
-    * after the watermark evicted its START. Oracle: the batch q8 oracle.
+    * finalization sentinel is needed; the ±2 h time-range condition is
+    * the oracle's millisecond ride bound and also bounds the join-state
+    * buffers. Replay is time-ordered, so an END never arrives after the
+    * watermark evicted its START. Oracle: the batch q8 oracle.
     */
   def q8Pair(spark: SparkSession, dir: String): DataFrame = gate(spark, "q8") { g =>
     g.memory(StreamingQueries.pairStartEnd(ridesReplay(spark, dir)), "append")
@@ -693,12 +692,11 @@ object StreamGate {
   def q8PairOuter(spark: SparkSession, dir: String): DataFrame = gate(spark, "q8o") { g =>
     val rides = Rides.fromEvents(spark, dir)
     val maxMs = rides.agg(max(unix_millis(col("rowtime")))).head().getLong(0)
-    val maxRideMs = graft.operators.TaxiQueries.MaxRideMs
-    val sentinels = sentinelRides(spark, maxMs + maxRideMs + 600000L,
+    val sentinels = sentinelRides(spark, maxMs + graft.operators.TaxiQueries.MaxRideMs + 600000L,
       (-1000000L, true), (-999998L, false))
     val stream = replay(spark, s"ridesq8o|$dir")(
       (rides.unionByName(sentinels), unix_millis(col("rowtime"))))
-    g.memory(StreamingQueries.pairStartEndOuter(stream, maxRideMs = maxRideMs), "append")
+    g.memory(StreamingQueries.pairStartEndOuter(stream), "append")
       .filter(col("pair_id") >= 0) // the sentinels' own (unmatched) rows
       .orderBy("pair_id")
   }

@@ -1,18 +1,26 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.functions.Taxi
 import graft.core.{Commit, Generations}
+import graft.operators.TaxiQueries
 import graft.sinks.{MemoryUpsertSink, NetworkUpsertSink, UpsertKeys}
 import scala.collection.concurrent.TrieMap
 
-/** Structured-Streaming forms of the reference's queries. The reference is
-  * a pure streaming app (dynamic tables over an unbounded taxi-ride stream,
-  * TaxiRideQueries.scala:33-37); these are the Spark-native equivalents:
+/** The reference's queries over a rides frame that may be bounded or
+  * unbounded. The reference is a pure streaming app (dynamic tables over an
+  * unbounded taxi-ride stream, TaxiRideQueries.scala:33-37) that writes
+  * each query once against the `rides` table; so does this object for Q1,
+  * Q4 level 1, Q6, Q7 and both Q8 forms. The batch entries
+  * ([[graft.operators.TaxiQueries]]) apply these same definitions to the
+  * rides-from-events table and add a total ORDER BY: Spark's analyzer
+  * drops `withWatermark` from a batch frame (EliminateEventTimeWatermark),
+  * so a batch plan is the plain query. Each reads the one
+  * [[graft.operators.TaxiQueries.departures]] projection.
   *
-  *  - Q1/Q2 (tumbling-window agg): watermarked streaming aggregation —
+  *  - Q1 (tumbling-window agg): watermarked streaming aggregation —
   *    append mode emits finalized windows, update mode mirrors Flink's
   *    eagerly-updating dynamic table.
   *  - Q4 (cascaded agg): Spark forbids chained streaming aggregations; the
@@ -41,111 +49,115 @@ object StreamingQueries {
     checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
   }
 
-  /** Q1 streaming: departures per (cell, 10-min tumbling window).
-    * Watermark 61 s = the demo's maxOutOfOrder 60 s + 1 ms rounded up
+  /** The demo's watermark delay: maxOutOfOrder 60 s + 1 ms, rounded up
     * (TaxiRideSource.java:102,150,210).
     */
-  def q1Tumble(rides: DataFrame, watermark: String = "61 seconds"): DataFrame =
-    rides
-      .filter(col("isStart") && Taxi.inNyc(col("startLon"), col("startLat")))
-      .select(col("rideId"), Taxi.toCellId(col("startLon"), col("startLat")).as("cell"), col("rowtime"))
+  final val Watermark = "61 seconds"
+
+  /** `ts` truncated to milliseconds. events.parquet carries sub-ms parts
+    * and the oracles work in rowtime_ms, so a query whose answer turns on
+    * an exact gap (Q7's session split, Q8's ride bound) truncates before
+    * its watermark: batch, stream and oracle then compare the same gaps.
+    */
+  private def millis(ts: Column): Column = timestamp_millis(unix_millis(ts))
+
+  /** Q1: departures per (cell, 10-min tumbling window), with the
+    * cell-center geo point and the window end in epoch millis (Flink
+    * cast(ts AS LONG) = millis, SURVEY §7.4). `watermark` is the lag the
+    * late-drop gate widens.
+    */
+  def q1Tumble(rides: DataFrame, watermark: String = Watermark): DataFrame =
+    TaxiQueries.departures(rides)
       .withWatermark("rowtime", watermark)
       .groupBy(col("cell"), window(col("rowtime"), "10 minutes").as("w"))
-      .agg(count(col("rideId")).as("dept_cnt"))
+      .agg(count(col("ride_id")).as("dept_cnt"))
       .select(col("cell"),
         Taxi.cellLon(col("cell")).as("cell_lon"),
         Taxi.cellLat(col("cell")).as("cell_lat"),
         unix_millis(col("w.end")).as("dept_time"),
         col("dept_cnt"))
 
-  /** Q6 streaming: 10-min windows sliding every 5 min — the hopping
-    * variant of [[q1Tumble]]. Spark plans the streaming hop as Expand
-    * (each departure into window/slide = 2 state rows) → windowed state
-    * agg; the expand factor is bounded by the hop ratio, so state stays
-    * 2× the tumbling query's, not data-dependent.
+  /** Q6: 10-min windows sliding every 5 min — the hopping variant of
+    * [[q1Tumble]]; each departure lands in exactly two windows. Spark plans
+    * the hop as Expand (window/slide = 2 rows per departure) → windowed
+    * agg, so streaming state stays 2× the tumbling query's.
     */
-  def q6Sliding(rides: DataFrame, watermark: String = "61 seconds"): DataFrame =
-    rides
-      .filter(col("isStart") && Taxi.inNyc(col("startLon"), col("startLat")))
-      .select(col("rideId"), Taxi.toCellId(col("startLon"), col("startLat")).as("cell"), col("rowtime"))
-      .withWatermark("rowtime", watermark)
+  def q6Sliding(rides: DataFrame): DataFrame =
+    TaxiQueries.departures(rides)
+      .withWatermark("rowtime", Watermark)
       .groupBy(col("cell"), window(col("rowtime"), "10 minutes", "5 minutes").as("w"))
-      .agg(count(col("rideId")).as("dept_cnt"))
+      .agg(count(col("ride_id")).as("dept_cnt"))
       .select(col("cell"), unix_millis(col("w.end")).as("dept_time"), col("dept_cnt"))
 
-  /** Q7 streaming: per-cell session windows (30-min gap). Spark's native
-    * streaming session_window merges partial sessions across micro-batches
-    * and emits a session once the watermark passes its close — the
-    * streaming twin of the batch TaxiQueries.q7Session.
+  /** Q7: per-cell sessions via Spark's native `session_window`: a session
+    * absorbs departures until a 30-min silence and ends at last event +
+    * gap. Rowtime is [[millis]]-truncated first, so sessions form over the
+    * millisecond rowtimes the oracle reads. Streaming merges partial
+    * sessions across micro-batches and emits a session once the watermark
+    * passes its close.
     */
-  def q7Session(rides: DataFrame, watermark: String = "61 seconds"): DataFrame =
-    rides
-      .filter(col("isStart") && Taxi.inNyc(col("startLon"), col("startLat")))
-      .select(col("rideId"), Taxi.toCellId(col("startLon"), col("startLat")).as("cell"), col("rowtime"))
-      .withWatermark("rowtime", watermark)
+  def q7Session(rides: DataFrame): DataFrame =
+    TaxiQueries.departures(rides)
+      .withColumn("rowtime", millis(col("rowtime")))
+      .withWatermark("rowtime", Watermark)
       .groupBy(col("cell"), session_window(col("rowtime"), "30 minutes").as("w"))
-      .agg(count(col("rideId")).as("n_dept"))
+      .agg(count(col("ride_id")).as("n_dept"))
       .select(col("cell"),
         unix_millis(col("w.start")).as("sess_start"),
         unix_millis(col("w.end")).as("sess_end"),
         col("n_dept"))
 
-  /** Q8 streaming: watermarked stream-stream inner join pairing START and
-    * END events of the same ride (pair key rideId div 2 in the synthetic
-    * derivation; the reference shares rideId, TaxiRide.java:24-38). The
-    * time-range condition bounds both join-state buffers: an unmatched
-    * START is dropped once the watermark passes start + maxRide, an END
-    * once it passes end + maxRide — without it, state grows forever.
+  /** Q8's START ⋈ END join on the pair key (rideId div 2 in the synthetic
+    * derivation, even ids are STARTs; the reference shares rideId,
+    * TaxiRide.java:24-38), keeping the ENDs `keepEnd` selects. Both
+    * rowtimes are [[millis]]-truncated before the watermark, so the
+    * time-range condition is exactly |end_ms − start_ms| ≤
+    * [[TaxiQueries.MaxRideMs]], the oracle's bound. In a stream it also
+    * bounds both join-state buffers: a START is evicted once the watermark
+    * passes start + MaxRideMs, an END once it passes end + MaxRideMs.
     */
-  def pairStartEnd(rides: DataFrame, watermark: String = "61 seconds",
-                   maxRideMs: Long = graft.operators.TaxiQueries.MaxRideMs): DataFrame = {
-    val starts = rides.filter(col("isStart"))
-      .select(expr("rideId div 2").as("pair_id"), col("rowtime").as("start_rt"))
-      .withWatermark("start_rt", watermark)
-    val ends = rides.filter(!col("isStart"))
-      .select(expr("rideId div 2").as("end_pair_id"), col("rowtime").as("end_rt"))
-      .withWatermark("end_rt", watermark)
+  private def pairJoin(rides: DataFrame, keepEnd: Column, joinType: String): DataFrame = {
+    def side(isStart: Column, key: String, time: String) =
+      rides.filter(isStart)
+        .select(expr("rideId div 2").as(key), millis(col("rowtime")).as(time))
+    val starts = side(col("isStart"), "pair_id", "start_rt").withWatermark("start_rt", Watermark)
+    val ends = side(!col("isStart"), "end_pair_id", "end_rt").filter(keepEnd)
+      .withWatermark("end_rt", Watermark)
+    val maxRide = expr(s"INTERVAL ${TaxiQueries.MaxRideMs / 1000} SECONDS")
     starts.join(ends,
-        col("pair_id") === col("end_pair_id") &&
-          col("end_rt") >= col("start_rt") - expr(s"INTERVAL ${maxRideMs / 1000} SECONDS") &&
-          col("end_rt") <= col("start_rt") + expr(s"INTERVAL ${maxRideMs / 1000} SECONDS"))
+      col("pair_id") === col("end_pair_id") &&
+        col("end_rt") >= col("start_rt") - maxRide && col("end_rt") <= col("start_rt") + maxRide,
+      joinType)
+  }
+
+  /** Q8: each ride's START paired with its END and the event-time gap
+    * (stream: a watermarked stream-stream inner join).
+    */
+  def pairStartEnd(rides: DataFrame): DataFrame =
+    pairJoin(rides, lit(true), "inner")
       .select(col("pair_id"),
         unix_millis(col("start_rt")).as("start_ms"),
         unix_millis(col("end_rt")).as("end_ms"),
         (unix_millis(col("end_rt")) - unix_millis(col("start_rt"))).as("gap_ms"))
-  }
 
-  /** Q8 LEFT OUTER streaming: the watermarked stream-stream join keeping
-    * unmatched STARTs. Spark emits the null-padded row for a START only
-    * when the watermark proves no END can still arrive (watermark past
-    * start + maxRide — the join-state eviction point), so the outer
-    * result is exactly "rides provably incomplete", not "not yet
-    * matched". The caller must push the final watermark past the last
-    * start's eviction bound (the gate appends far-future sentinel events
-    * on BOTH sides) or tail unmatched rows stay unemitted — the batch
-    * twin is TaxiQueries.q8PairOuter, same -1-sentinel NULL-free output.
+  /** Q8 LEFT OUTER: every START, paired or not; every 7th pair's END is
+    * dropped ([[TaxiQueries.PairEndDropMod]]) so unmatched STARTs occur.
+    * NULL-free output (-1 sentinels plus a `matched` flag), so the
+    * cross-engine hash never depends on NULL encodings. A stream emits a
+    * START's null-padded row only once the watermark passes start +
+    * MaxRideMs (its join-state eviction), so the result is "rides provably
+    * incomplete", not "not yet matched": the caller must push the final
+    * watermark past the last start's bound (the gate appends far-future
+    * sentinels on BOTH sides) or tail unmatched rows stay unemitted.
     */
-  def pairStartEndOuter(rides: DataFrame, watermark: String = "61 seconds",
-                        maxRideMs: Long = graft.operators.TaxiQueries.MaxRideMs): DataFrame = {
-    import graft.operators.TaxiQueries
-    val starts = rides.filter(col("isStart"))
-      .select(expr("rideId div 2").as("pair_id"), col("rowtime").as("start_rt"))
-      .withWatermark("start_rt", watermark)
-    val ends = rides.filter(!col("isStart"))
-      .select(expr("rideId div 2").as("end_pair_id"), col("rowtime").as("end_rt"))
-      .filter(col("end_pair_id") % TaxiQueries.PairEndDropMod =!= TaxiQueries.PairEndDropRem)
-      .withWatermark("end_rt", watermark)
-    starts.join(ends,
-        col("pair_id") === col("end_pair_id") &&
-          col("end_rt") >= col("start_rt") - expr(s"INTERVAL ${maxRideMs / 1000} SECONDS") &&
-          col("end_rt") <= col("start_rt") + expr(s"INTERVAL ${maxRideMs / 1000} SECONDS"),
+  def pairStartEndOuter(rides: DataFrame): DataFrame =
+    pairJoin(rides, col("end_pair_id") % TaxiQueries.PairEndDropMod =!= TaxiQueries.PairEndDropRem,
         "leftOuter")
       .select(col("pair_id"),
         unix_millis(col("start_rt")).as("start_ms"),
         coalesce(unix_millis(col("end_rt")), lit(-1L)).as("end_ms"),
         coalesce(unix_millis(col("end_rt")) - unix_millis(col("start_rt")), lit(-1L)).as("gap_ms"),
         col("end_rt").isNotNull.as("matched"))
-  }
 
   /** LATE-DATA AUDIT — the reference's disorder model (bounded random
     * event delay, TaxiRideSource.java:126-134) made OBSERVABLE: Spark
@@ -294,19 +306,16 @@ object StreamingQueries {
     * so keying on rideId would silently swallow the END of any ride shorter
     * than the watermark as a "duplicate".
     */
-  def dedupEvents(rides: DataFrame, watermark: String = "61 seconds"): DataFrame =
-    rides.withWatermark("rowtime", watermark)
+  def dedupEvents(rides: DataFrame): DataFrame =
+    rides.withWatermark("rowtime", Watermark)
       .dropDuplicatesWithinWatermark("rideId", "isStart")
 
-  /** Level-1 of Q4: continuous per-cell departure count (unbounded keyed
-    * agg; update-mode changelog = Flink's upsert stream on key `cell`).
+  /** Level 1 of Q4: per-cell departure count (in a stream, an unbounded
+    * keyed agg whose update-mode changelog is Flink's upsert stream on key
+    * `cell`).
     */
   def q4Level1(rides: DataFrame): DataFrame =
-    rides
-      .filter(col("isStart") && Taxi.inNyc(col("startLon"), col("startLat")))
-      .select(col("rideId"), Taxi.toCellId(col("startLon"), col("startLat")).as("cell"))
-      .groupBy("cell")
-      .agg(count(col("rideId")).as("dept_cnt"))
+    TaxiQueries.departures(rides).groupBy("cell").agg(count(col("ride_id")).as("dept_cnt"))
 
   /** Temporal (as-of) table join of a fact STREAM against a frozen SCD2
     * dimension — Flink's `FOR SYSTEM_TIME AS OF` enrichment in its
@@ -979,14 +988,12 @@ object TtlContinuousCount {
   /** rides stream -> per-cell running departure counts with idle TTL
     * (update-style changelog, one row per touched key per batch).
     */
-  def query(rides: DataFrame, ttlMs: Long = 60L * 60 * 1000,
-            watermark: String = "61 seconds"): Dataset[CellCount] = {
+  def query(rides: DataFrame, ttlMs: Long): Dataset[CellCount] = {
     val spark = rides.sparkSession
     import spark.implicits._
-    rides
-      .filter(col("isStart") && Taxi.inNyc(col("startLon"), col("startLat")))
-      .withWatermark("rowtime", watermark)
-      .select(Taxi.toCellId(col("startLon"), col("startLat")).as("cell"), col("rowtime"))
+    TaxiQueries.departures(rides)
+      .withWatermark("rowtime", StreamingQueries.Watermark)
+      .select(col("cell"), col("rowtime"))
       .as[Keyed]
       .groupByKey(_.cell)
       .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.EventTimeTimeout())(count(ttlMs))
@@ -1047,11 +1054,8 @@ object OverWindowState {
   def q3Streaming(rides: DataFrame, windowMs: Long = WindowMs): Dataset[Annotated] = {
     val spark = rides.sparkSession
     import spark.implicits._
-    rides
-      .filter(col("isStart") && Taxi.inNyc(col("startLon"), col("startLat")))
-      .select(col("rideId").as("rideId"),
-        Taxi.toCellId(col("startLon"), col("startLat")).as("cell"),
-        unix_millis(col("rowtime")).as("deptTimeMs"))
+    TaxiQueries.departures(rides)
+      .select(col("ride_id").as("rideId"), col("cell"), unix_millis(col("rowtime")).as("deptTimeMs"))
       .as[Departure]
       .groupByKey(_.cell)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
@@ -1125,13 +1129,13 @@ object FunnelStream {
   }
 
   /** events stream (user_id, ts TIMESTAMP, event_type) -> per-user funnel
-    * snapshots in update mode; `delay` is the watermark bound.
+    * snapshots in update mode, under the demo watermark.
     */
-  def funnelStream(events: DataFrame, delay: String = "61 seconds"): Dataset[FunnelUpdate] = {
+  def funnelStream(events: DataFrame): Dataset[FunnelUpdate] = {
     val spark = events.sparkSession
     import spark.implicits._
     events
-      .withWatermark("ts", delay)
+      .withWatermark("ts", StreamingQueries.Watermark)
       .filter(col("event_type").isin("view", "click", "purchase"))
       // keep the watermarked ts column itself: event-time timeout requires
       // the stateful op's input to carry the watermark column

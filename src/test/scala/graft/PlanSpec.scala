@@ -76,6 +76,19 @@ class PlanSpec extends SparkSpec {
       "START/END pairing must be a keyed join")
   }
 
+  test("batch entries of the shared bounded/unbounded queries plan no watermark") {
+    // the shared forms declare watermarks; on a batch frame the analyzer
+    // must drop them, so each batch entry plans as the plain query
+    val entries = Seq("q1_tumble", "q4_cnt_freq", "q6_sliding", "q7_session",
+      "q8_pair_join", "q8_pair_outer")
+    entries.foreach { id =>
+      val analyzed = SparkEntry.queries(id)(spark, Sf0001).queryExecution.analyzed
+      assert(analyzed.collectFirst {
+          case w: org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark => w
+        }.isEmpty, s"$id keeps an EventTimeWatermark:\n$analyzed")
+    }
+  }
+
   test("q3_over_recent windows over the FULL cell id (no coarse-bucket parallelism cap)") {
     val p = plan(TaxiQueries.q3OverRecent(spark, Sf0001))
     assert(p.contains("RangeFrame"), s"OVER frame missing:\n${p.take(800)}")

@@ -836,6 +836,32 @@ class StorageSpec extends SparkSpec {
     } finally { s2.sql("DROP TABLE IF EXISTS mt_fp_t"); () }
   }
 
+  test("bucketedJoin rebuilds its bucketed layout when a source file is rewritten in place") {
+    import spark.implicits._
+    val src = Files.createTempDirectory("bkt_src")
+    Seq("orders", "lineitem").foreach(n => Files.copy(
+      java.nio.file.Paths.get(Sf0001, s"$n.parquet"), src.resolve(s"$n.parquet")))
+    def read(n: String) = spark.read.parquet(src.resolve(s"$n.parquet").toString)
+    def counts(df: org.apache.spark.sql.DataFrame) =
+      df.select("o_orderpriority", "n_orders", "n_items").as[(String, Long, Long)]
+        .collect().sortBy(_._1).toList
+    def bucketed() = counts(graft.operators.Relational.bucketedJoin(spark, src.toString))
+    try {
+      val before = bucketed()
+      // rewrite orders.parquet in place, keeping every other order: the
+      // dir name is unchanged, its content is not
+      val half = Files.createTempDirectory("bkt_half").resolve("orders.parquet")
+      read("orders").filter(col("o_orderkey") % 2 === 0).write.parquet(half.toString)
+      Files.delete(src.resolve("orders.parquet"))
+      Files.move(half, src.resolve("orders.parquet"))
+      val expected = counts(read("orders").join(read("lineitem"), col("o_orderkey") === col("l_orderkey"))
+        .groupBy("o_orderpriority")
+        .agg(countDistinct(col("o_orderkey")).as("n_orders"), count(lit(1)).as("n_items")))
+      assert(expected !== before)
+      assert(bucketed() === expected, "bucketedJoin served the layout of the old orders.parquet")
+    } finally dropTables("graft_bkt_orders", "graft_bkt_lineitem")
+  }
+
   test("ModelTables: a failure between group writes leaves the whole group stale") {
     import graft.core.ModelTables
     val s2 = spark.newSession()

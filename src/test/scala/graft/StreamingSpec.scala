@@ -685,6 +685,59 @@ class StreamingSpec extends SparkSpec {
     assert(pairs === List((0L, 12L * 60 * 1000)), s"got $pairs")
   }
 
+  test("streaming Q7 sessionizes millisecond rowtimes, as the batch query does") {
+    val input = MemoryStream[(Long, Boolean, Timestamp, Timestamp, Float, Float, Float, Float, Short)](spark)
+    val rides = input.toDF().toDF("rideId", "isStart", "startTime", "endTime",
+        "startLon", "startLat", "endLon", "endLat", "passengerCnt")
+      .withColumn("rowtime", when(col("isStart"), col("startTime")).otherwise(col("endTime")))
+    val q = StreamingQueries.q7Session(rides).writeStream
+      .format("memory").queryName("q7_ms_stream").outputMode(OutputMode.Append())
+      .option("checkpointLocation", Files.createTempDirectory("q7msck").toString)
+      .start()
+    // two same-cell departures 30 min + 500 µs apart: in microseconds the
+    // second starts after the first session's end, in milliseconds exactly
+    // at it, and Spark merges sessions that touch
+    val departures = Seq(ride(1, "2013-01-01 00:00:00"), ride(2, "2013-01-01 00:30:00.0005"))
+    input.addData(departures.head)
+    q.processAllAvailable()
+    input.addData(departures(1))
+    q.processAllAvailable()
+    input.addData(ride(3, "2013-01-01 03:00:00")) // watermark closes the session
+    q.processAllAvailable()
+    q.stop()
+    val mainCell = graft.functions.Taxi.toCellIdScalar(-73.99f, 40.75f)
+    def sessions(df: org.apache.spark.sql.DataFrame) =
+      df.select("cell", "sess_start", "sess_end", "n_dept")
+        .as[(Int, Long, Long, Long)].collect().filter(_._1 == mainCell).sortBy(_._2).toList
+    val t0 = Timestamp.valueOf("2013-01-01 00:00:00").getTime
+    val batch = sessions(StreamingQueries.q7Session(ridesDf(departures)))
+    assert(batch === List((mainCell, t0, t0 + 2 * TaxiQueries.SessionGapMs, 2L)))
+    assert(sessions(spark.table("q7_ms_stream")) === batch)
+  }
+
+  test("streaming Q8 matches a pair whose gap is exactly MaxRideMs in milliseconds") {
+    val input = MemoryStream[(Long, Boolean, Timestamp, Timestamp, Float, Float, Float, Float, Short)](spark)
+    val rides = input.toDF().toDF("rideId", "isStart", "startTime", "endTime",
+        "startLon", "startLat", "endLon", "endLat", "passengerCnt")
+      .withColumn("rowtime", when(col("isStart"), col("startTime")).otherwise(col("endTime")))
+    val q = StreamingQueries.pairStartEnd(rides).writeStream
+      .format("memory").queryName("q8_ms_stream").outputMode(OutputMode.Append())
+      .option("checkpointLocation", Files.createTempDirectory("q8msck").toString)
+      .start()
+    // pair 0: END 2 h + 999 µs after its START — over the bound in
+    // microseconds, exactly MaxRideMs in milliseconds, where the oracle's
+    // `abs(end_ms - start_ms) <= MaxRideMs` matches it
+    val end = ride(1, "2013-01-01 02:00:00.000999")
+    input.addData(ride(0, "2013-01-01 00:00:00"))
+    q.processAllAvailable()
+    input.addData((end._1, false, end._3, end._4, end._5, end._6, end._7, end._8, end._9))
+    q.processAllAvailable()
+    q.stop()
+    val pairs = spark.table("q8_ms_stream")
+      .select("pair_id", "gap_ms").as[(Long, Long)].collect().toList
+    assert(pairs === List((0L, TaxiQueries.MaxRideMs)))
+  }
+
   test("observe() surfaces per-batch pipeline metrics in query progress") {
     val input = MemoryStream[(Long, Boolean, Timestamp, Timestamp, Float, Float, Float, Float, Short)](spark)
     val rides = input.toDF().toDF("rideId", "isStart", "startTime", "endTime",

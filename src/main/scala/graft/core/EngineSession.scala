@@ -20,7 +20,18 @@ import org.apache.spark.sql.SparkSession
   *    (sort-based fallback only past 1M groups/task);
   *  - [[GraftExtensions]] injected, so `float_dot` / `rolling_hash` work
   *    from pure SQL and [[SmallFinalSort]] is active in every session
-  *    built here.
+  *    built here;
+  *  - artifact isolation off. Every streaming query runs on a clone of its
+  *    session, with a new session UUID; with isolation on, each UUID gets
+  *    its own executor classloader, and as Spark's codegen cache is keyed
+  *    on (classloader, code), every query run (each AvailableNow resume)
+  *    compiled all its generated classes again. The engine adds no session
+  *    artifacts (jars, files), so there is nothing to isolate;
+  *  - the `file:` scheme served by [[LocalFs]], which sets permissions and
+  *    reads link status in-process: without the native hadoop library,
+  *    Hadoop's own forks a `chmod` or `readlink` process for each, under
+  *    every checkpoint log entry, state-store file and lake publish. The
+  *    keys take effect when the SparkContext is created.
   */
 object EngineSession {
 
@@ -47,6 +58,8 @@ object EngineSession {
         env("SPARK_GRAFT_LEAF_PARALLELISM", shufflePartitions.toString))
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config(LocalFs.SparkConf.toMap)
       .withExtensions(new GraftExtensions)
   }
 

@@ -62,7 +62,7 @@ object Tables {
       // one, and the footer check above refuses plain INT64 regardless.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // after the conf set: the schema converter reads nanosAsLong
-    val df = readDeclared(spark, path, footers.headOption)
+    val df = readDeclared(spark, Seq(path), footers.headOption)
     df.schema("ts").dataType match {
       case LongType if kinds == Set("NANOS") =>
         df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -77,27 +77,28 @@ object Tables {
     }
   }
 
-  /** `path` (a parquet file or directory tree) read with the schema its
+  /** `paths` (parquet files or directory trees) read with the schema the
     * first data file's footer declares, converted by Spark's own
     * footer-to-schema converter under the session's parquet confs — the
     * schema `spark.read.parquet` would infer without schema merging, minus
     * the one-task Spark job that inference runs to open that same footer.
-    * Nothing is cached: each call lists and opens the footer again. A path
-    * with no data file is read undeclared, so it fails with Spark's own
+    * Nothing is cached: each call lists and opens the footer again. Paths
+    * with no data file are read undeclared, so they fail with Spark's own
     * error.
     */
-  private[graft] def declared(spark: SparkSession, path: String): DataFrame =
-    readDeclared(spark, path, dataFiles(spark, path).headOption.map(footer(spark, _)))
+  private[graft] def declared(spark: SparkSession, paths: String*): DataFrame =
+    readDeclared(spark, paths,
+      paths.iterator.flatMap(dataFiles(spark, _)).nextOption().map(footer(spark, _)))
 
-  private def readDeclared(spark: SparkSession, path: String,
+  private def readDeclared(spark: SparkSession, paths: Seq[String],
       first: Option[org.apache.parquet.hadoop.Footer]): DataFrame = {
     import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
       ParquetToSparkSchemaConverter}
     first match {
       case Some(f) =>
         val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
-        spark.read.schema(ParquetFileFormat.readSchemaFromFooter(f, converter)).parquet(path)
-      case None => spark.read.parquet(path)
+        spark.read.schema(ParquetFileFormat.readSchemaFromFooter(f, converter)).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
     }
   }
 

@@ -367,7 +367,8 @@ object TaxiQueries {
   /** Per-cell activity sessions with a 30-min gap
     * ([[StreamingQueries.q7Session]]); the oracle reproduces Spark's
     * half-open [start, last+gap) contract with lag + cumulative-sum
-    * sessionization over rowtime_ms.
+    * sessionization over rowtime_ms. Sessions that touch merge (as in
+    * Flink), so only a gap strictly above 30 min opens a new one.
     */
   def q7Session(spark: SparkSession, dir: String): DataFrame =
     StreamingQueries.q7Session(Rides.fromEvents(spark, dir)).orderBy("cell", "sess_start")
@@ -376,7 +377,7 @@ object TaxiQueries {
     s"""${Rides.oracleCte}, $oracleDepartures,
        |marked AS (
        |  SELECT cell, rowtime_ms,
-       |    CASE WHEN prev_ms IS NULL OR rowtime_ms - prev_ms >= $SessionGapMs
+       |    CASE WHEN prev_ms IS NULL OR rowtime_ms - prev_ms > $SessionGapMs
        |      THEN 1 ELSE 0 END AS is_new
        |  FROM (
        |    SELECT cell, rowtime_ms,

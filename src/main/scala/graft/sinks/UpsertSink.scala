@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Cast, Expression, GetStructField}
 import scala.collection.concurrent.TrieMap
-import graft.core.DirPublish
+import graft.core.{DirPublish, Tables}
 
 /** Upsert-sink layer reproducing the contract of the reference's
   * ElasticUpsertTableSink (ElasticUpsertTableSink.scala:38-148):
@@ -372,7 +372,9 @@ class ParquetUpsertSink(val path: String, val keyFields: Seq[String],
       DirPublish.readable(fs, new org.apache.hadoop.fs.Path(root, s"bucket=$id")).map(_.toString)
     }
     if (dirs.isEmpty) spark.read.parquet(path).drop("bucket") // preserve the empty-lake error
-    else spark.read.parquet(dirs: _*).drop("bucket") // bucket= is layout, not data
+    // the schema from the first footer, not from Spark's inference job;
+    // bucket= is layout, not data
+    else Tables.declared(spark, dirs: _*).drop("bucket")
   }
 }
 

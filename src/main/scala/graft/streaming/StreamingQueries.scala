@@ -810,7 +810,10 @@ object CascadeQ4 {
             struct(col("new_cnt").as("dept_cnt"), lit(1L).as("d")))).as("m"))
           .where(col("m.dept_cnt").isNotNull)
           .groupBy(col("m.dept_cnt").as("dept_cnt")).agg(sum(col("m.d")).as("d"))
-        val delta = level2.bucketed(moves).limit(TouchedCap + 1)
+        // one partition under the limit: a limit over several runs as
+        // an incremental take, one job for the first partition and
+        // another for the rest
+        val delta = level2.bucketed(moves).coalesce(1).limit(TouchedCap + 1)
           .as[(Long, Long, Int)].collect().toSeq
         val surviving = readMarkers(fs, markers)
         val touched: Option[Seq[Long]] =

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, RangePartitioning, SinglePartition}
 import org.apache.spark.sql.execution.{SortExec, SparkPlan, UnaryExecNode}
@@ -10,7 +7,7 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   ResultQueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
-import graft.core.{EngineSession, Tables}
+import graft.core.Tables
 
 /** The Spark jobs of the reference batch queries, counted with a
   * listener under an engine session (GraftExtensions, and with it
@@ -25,42 +22,6 @@ import graft.core.{EngineSession, Tables}
 class JobBudgetSpec extends SparkSpec {
 
   private val Sf001 = "/root/testdata/sf0.01"
-  private val Tag = "graft.test.jobBudget"
-
-  /** `body` in a fresh EngineSession on the shared SparkContext; the
-    * shared session stays the default afterwards.
-    */
-  private def withEngine[T](body: SparkSession => T): T = {
-    val prior = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try body(EngineSession.create("local[4]", 4))
-    finally {
-      SparkSession.setDefaultSession(prior)
-      SparkSession.setActiveSession(prior)
-    }
-  }
-
-  /** The jobs `body` starts from this thread, once the bus delivered them. */
-  private def jobsOf(s: SparkSession)(body: => Unit): Seq[SparkListenerJobStart] = {
-    val sc = s.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val seen = new ConcurrentLinkedQueue[SparkListenerJobStart]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty(Tag) == tag)) { seen.add(j); () }
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(Tag, tag)
-    try {
-      body
-      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc, 30000)
-    } finally {
-      sc.setLocalProperty(Tag, null)
-      sc.removeSparkListener(listener)
-    }
-    seen.asScala.toSeq
-  }
 
   private def finalPlan(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
     case a: AdaptiveSparkPlanExec => a.executedPlan

@@ -503,6 +503,23 @@ class StorageSpec extends SparkSpec {
       === ((1 to 8).toSet - 3).map(i => (i, i.toLong)) + ((3, 33L)))
   }
 
+  test("a lake snapshot read runs one job: the schema comes from a footer, not inference") {
+    import spark.implicits._
+    import graft.sinks.ParquetUpsertSink
+    val path = Files.createTempDirectory("footerlake").toString + "/store"
+    val sink = new ParquetUpsertSink(path, Seq("cell"), nBuckets = 4)
+    sink.upsert((1 to 12).map(i => (i, i.toLong, s"t$i")).toDF("cell", "cnt", "tag"))
+    // empty the lowest bucket: the first data file sits past an empty dir
+    val low = (1 to 12).groupBy(i => sink.bucketIdsOf(Seq(i).toDF("cell")).head).minBy(_._1)._2
+    sink.upsert(spark.emptyDataset[(Int, Long, String)].toDF("cell", "cnt", "tag"),
+      deletes = low.map(i => (i, 0L, "")).toDF("cell", "cnt", "tag"))
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val jobs = jobsOf(spark) { rows = sink.snapshot(spark).collect() }
+    assert(jobs.length === 1, jobs.flatMap(_.stageInfos.map(_.name)).mkString(", "))
+    assert(rows.map(_.getInt(0)).toSet === (1 to 12).toSet -- low)
+    assert(sink.snapshot(spark).schema === spark.read.parquet(path).drop("bucket").schema)
+  }
+
   test("snapshot reads a bucket's bak copy when a crash tore its publish") {
     import spark.implicits._
     import graft.sinks.ParquetUpsertSink

@@ -11,6 +11,7 @@ import graft.streaming.{CascadeQ4, OverWindowState, StreamingQueries}
 import graft.operators.TaxiQueries
 import graft.sources.Rides
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
 /** Streaming semantics: windowed agg vs batch recompute, late-data
   * watermark behavior, the Q4 cascade's retract/add changelog replay, and
@@ -656,6 +657,34 @@ class StreamingSpec extends SparkSpec {
     val t0 = Timestamp.valueOf("2013-01-01 00:00:00").getTime
     // one closed session: [00:00, 00:05 + 30min), 2 departures
     assert(sessions === List((mainCell, t0, t0 + 5 * 60000 + 30 * 60000, 2L)), s"got $sessions")
+  }
+
+  test("Q7's oracle merges two departures exactly one gap apart, as session_window does") {
+    val dir = Files.createTempDirectory("q7gap")
+    val (sf, out) = (dir.resolve("sf"), dir.resolve("out"))
+    // three departures of one cell (even event ids, one user_id, event_id
+    // % 540 equal): the second exactly 30:00.000 after the first, the
+    // third 1 ms more than the gap after the second
+    val t0 = Timestamp.valueOf("2013-01-01 00:00:00").getTime
+    val gap = TaxiQueries.SessionGapMs
+    Seq((0L, t0), (1080L, t0 + gap), (2160L, t0 + 2 * gap + 1)).toDF("event_id", "ts_ms")
+      .select(col("event_id"), timestamp_millis(col("ts_ms")).as("ts"), lit(7L).as("user_id"),
+        lit("ride").as("event_type"), lit(1.0).as("value"), lit("").as("props"))
+      .coalesce(1).write.parquet(dir.resolve("staged").toString)
+    Files.createDirectories(sf)
+    Files.move(Files.list(dir.resolve("staged")).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get, sf.resolve("events.parquet"))
+    val sessions = SparkEntry.queries("q7_session")(spark, sf.toString)
+    assert(sessions.select("n_dept").as[Long].collect().toSeq === Seq(2L, 1L))
+    sessions.coalesce(1).write.parquet(out.resolve("q7_session").toString)
+    Files.writeString(out.resolve("oracle_sql.json"),
+      new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(
+        java.util.Map.of("q7_session", SparkEntry.oracleSql("q7_session"))))
+    val tool = java.nio.file.Paths.get(sys.props("user.dir"), "tools", "local_verify.py")
+    val log = new StringBuilder
+    val rc = scala.sys.process.Process(Seq("python3", tool.toString, sf.toString, out.toString,
+      "--only", "q7_session")).!(scala.sys.process.ProcessLogger(l => log ++= l + "\n", l => log ++= l + "\n"))
+    assert(rc === 0 && log.toString.contains("PASS q7_session (2 rows)"), log.toString)
   }
 
   test("stream-stream join pairs START and END events within the ride bound") {

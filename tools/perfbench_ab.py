@@ -34,8 +34,11 @@ import sys
 from pathlib import Path
 
 # the per-layer metrics of BENCHMARK.json that --trace summarizes: Spark
-# jobs per op and the build and exec medians
-TRACE_METRICS = ("spark.jobs", "operators.build_ms", "spark.exec_ms")
+# jobs per op, the build and exec medians, and the stream's batch body,
+# state-store commit, offset log and commit log medians
+TRACE_METRICS = ("spark.jobs", "operators.build_ms", "spark.exec_ms",
+                 "streaming.add_batch_ms", "streaming.state_commit_ms",
+                 "streaming.wal_commit_ms", "streaming.commit_offsets_ms")
 
 
 def parse_seeds(spec):

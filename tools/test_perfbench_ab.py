@@ -49,12 +49,12 @@ class FakeRunner:
 
 class PerfbenchAbTest(unittest.TestCase):
 
-    def run_tool(self, runner, seeds="101-110", extra=()):
+    def run_tool(self, runner, seeds="101-110", extra=(), spec=SPEC):
         with tempfile.TemporaryDirectory() as d:
             for side in ("parent", "change"):
                 os.mkdir(os.path.join(d, side))
                 with open(os.path.join(d, side, "BENCHMARK.json"), "w") as f:
-                    json.dump(SPEC, f)
+                    json.dump(spec, f)
             out_json = os.path.join(d, "ab.json")
             out, err = io.StringIO(), io.StringIO()
             with contextlib.redirect_stdout(out), contextlib.redirect_stderr(err):
@@ -149,6 +149,36 @@ class PerfbenchAbTest(unittest.TestCase):
         self.assertEqual(art["summary"]["spark.exec_ms"]["wins"], 0)
         self.assertFalse(art["summary"]["spark.exec_ms"]["gain"])
         self.assertIn("spark.jobs", out)
+
+    def test_trace_compares_the_stream_commit_layers(self):
+        stream = ["streaming.add_batch_ms", "streaming.state_commit_ms",
+                  "streaming.wal_commit_ms", "streaming.commit_offsets_ms"]
+        spec = dict(SPEC, per_layer=SPEC["per_layer"] + [
+            {"name": n, "unit": "ms", "better": "lower"}
+            for n in stream + ["streaming.planning_ms"]])
+
+        def runner(checkout, workload, seed, trace=False):
+            side = os.path.basename(checkout)
+            parent = {"streaming.add_batch_ms": 2520.0, "streaming.state_commit_ms": 418.5,
+                      "streaming.wal_commit_ms": 30.5, "streaming.commit_offsets_ms": 28.5}
+            change = {"streaming.add_batch_ms": 1498.0, "streaming.state_commit_ms": 22.5,
+                      "streaming.wal_commit_ms": 3.0, "streaming.commit_offsets_ms": 2.0}
+            metrics = dict(parent if side == "parent" else change,
+                           **{"spark.jobs": 9.0, "operators.build_ms": 5.0,
+                              "spark.exec_ms": 300.0, "streaming.planning_ms": 50.0})
+            return True, {"correct": True, "attempted": 6, "failed": 0, "metrics": {
+                k: {"value": v + seed % 2, "unit": "ms"} for k, v in metrics.items()}}, ""
+        rc, out, _, art = self.run_tool(runner, seeds="1-4", extra=["--trace"], spec=spec)
+        self.assertEqual(rc, 0)
+        # the four stream layers are summarized; a per-layer metric not in
+        # TRACE_METRICS is not
+        self.assertTrue(set(stream) <= set(art["summary"]))
+        self.assertNotIn("streaming.planning_ms", art["summary"])
+        commit = art["summary"]["streaming.state_commit_ms"]
+        self.assertEqual((commit["parent"]["median"], commit["change"]["median"]), (419.0, 23.0))
+        self.assertEqual(commit["wins"], 4)
+        self.assertTrue(all(art["summary"][n]["gain"] for n in stream))
+        self.assertIn("streaming.commit_offsets_ms", out)
 
     def test_untraced_runs_pass_no_trace_flag(self):
         runner = FakeRunner()  # takes no trace argument
